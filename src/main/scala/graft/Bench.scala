@@ -301,8 +301,8 @@ object Bench {
     // driver box, so offset/commit/state fsyncs measure it, not the stream.
     // Session-conf (not per-gate) because it is measurement placement, not
     // query logic; a production stream always sets an explicit DURABLE
-    // location and never hits this default. r18 A/B (ProbeR18 ckpt):
-    // 5/6 gates faster on medians, total 0.97×.
+    // location and never hits this default. r18 A/B (OPTIMIZATION_r18.md
+    // change 4): 5/6 gates faster on medians, total 0.97×.
     val benchCkptRoot = graft.queries.GateTmp.dir("graft_bench_ckpt")
     spark.conf.set("spark.sql.streaming.checkpointLocation",
       benchCkptRoot.toString)

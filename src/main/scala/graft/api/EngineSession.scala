@@ -10,13 +10,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Extras the reference keeps in its private catalog:
   *   - a primary-key registry (catalog/interface.scala:102) consumed by the
-  *     PK-FK join-reorder rule — Spark has no native PK concept, so it lives
-  *     here as session-scoped metadata.
+  *     PK-FK join-reorder rule — Spark has no native PK concept, so the
+  *     rule keeps it as metadata scoped to the SparkSession.
   */
 final class EngineSession(val spark: SparkSession) {
-
-  /** table name -> primary key columns (reference: CatalogTable.primaryKeys). */
-  private val primaryKeys = TrieMap.empty[String, Seq[String]]
 
   /** named property graphs (reference: CatalogGraphTable/CatalogNodeTable/
     * CatalogEdgeTable, catalog/interface.scala:228-341) — a session-scoped
@@ -27,10 +24,7 @@ final class EngineSession(val spark: SparkSession) {
   // install the PK-FK join-reorder rule (SURVEY §7.6); idempotent on a
   // shared session. Also installable at submit time via
   // spark.sql.extensions=graft.plans.GraftExtensions.
-  if (!spark.experimental.extraOptimizations.contains(graft.plans.PkFkJoinReorder)) {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.PkFkJoinReorder
-  }
+  graft.plans.PkFkJoinReorder.install(spark)
 
   /** SQL entry point (SeccoSession.scala:89-91) — full Spark SQL, a strict
     * superset of the reference's hand-rolled grammar (SURVEY §2.7), plus the
@@ -80,12 +74,11 @@ final class EngineSession(val spark: SparkSession) {
     EngineDataFrame(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), this)
 
   /** Register a table's primary key for the PK-FK join optimizer. */
-  def registerPrimaryKey(table: String, keys: Seq[String]): Unit = {
-    primaryKeys.put(table, keys)
-    graft.plans.PkFkJoinReorder.registerPrimaryKey(table, keys)
-  }
+  def registerPrimaryKey(table: String, keys: Seq[String]): Unit =
+    graft.plans.PkFkJoinReorder.registerPrimaryKey(spark, table, keys)
 
-  def primaryKeyOf(table: String): Option[Seq[String]] = primaryKeys.get(table)
+  def primaryKeyOf(table: String): Option[Seq[String]] =
+    graft.plans.PkFkJoinReorder.primaryKeyOf(spark, table)
 
   def dropTable(name: String): Unit = spark.catalog.dropTempView(name)
 

@@ -59,18 +59,17 @@ object Contamination {
     // the shingle leaves the row only as its 64-bit hash (r19, guide §2.3
     // "shuffle keys, not payloads"): the distinct + self-join only DECIDE
     // on shingle identity — no downstream consumer reads the text — so the
-    // exchanges carry 8 bytes instead of a k-token string. xxhash64 is
-    // collision-free at every shipped SF (oracle-verified exact); at a
-    // 10^12-shingle corpus the expected ~27 collisions perturb a
-    // cross-source overlap REPORT by ~1e-10 relative. `graft.overlap
-    // .hashShingles=false` restores the string path (A/B probes).
-    val hashed = df.sparkSession.conf
-      .get("graft.overlap.hashShingles", "true").toBoolean
-    val sh = explode(Dedup.shingleArray(col(textCol), k)).as("shingle")
-    val ss0 = df.select(col(sourceCol).as("source"), sh)
-    val ss = (if (hashed) ss0.select(col("source"),
-        xxhash64(col("shingle")).as("shingle"))
-      else ss0).distinct()
+    // exchanges carry 8 bytes instead of a k-token string (1.34× fewer
+    // shuffle bytes on q139, VERDICT.md). Tradeoff: two shingles with the
+    // same xxhash64 are one shingle here, which can overstate n_shared (one
+    // source holds each) or understate it (both sources hold both). No
+    // collision occurs at any shipped SF (oracle-verified exact); at a
+    // 10^12-shingle corpus the expected ~27 collisions perturb the report
+    // by ~1e-10 relative.
+    val ss = df.select(col(sourceCol).as("source"),
+        explode(Dedup.shingleArray(col(textCol), k)).as("shingle"))
+      .select(col("source"), xxhash64(col("shingle")).as("shingle"))
+      .distinct()
     val a = ss.select(col("source").as("src1"), col("shingle"))
     val b = ss.select(col("source").as("src2"), col("shingle"))
     a.join(b, Seq("shingle"))

@@ -76,6 +76,12 @@ object Dedup {
   def shingleArray(text: Column, k: Int): Column =
     array_distinct(TextFunctions.tokenNgrams(text, k))
 
+  /** Catalyst size estimate at or under which an input counts as measured
+    * small: [[spread]] repartitions it, and [[editDistanceNearDup]] skips
+    * salting it.
+    */
+  private val SmallInputBytes = BigInt(32L << 20)
+
   /** Distribute a compute-heavy per-row stage when the input is measured
     * small (a small parquet file is ONE split, so tokenize/shingle/hash
     * work would serialize into one task — and AQE's size-based coalescing
@@ -83,25 +89,21 @@ object Dedup {
     * estimate — NOT from `df.rdd.getNumPartitions`, which under AQE
     * materializes the final physical plan and would eagerly execute any
     * upstream shuffle once just to read a partition count. Repartitioning
-    * a ≤cap input is near-free and the explicit count disables AQE
+    * a small input is near-free and the explicit count disables AQE
     * coalescing on the exchange; large or unknown estimates no-op (a big
     * input has many splits; adding a corpus-wide shuffle to "help" it
     * would cost more than it buys). Streaming frames are left untouched.
-    * Cap via `graft.spread.smallInputBytes` (default 32 MB, 0 disables).
+    * "Small" is an estimate of at most [[SmallInputBytes]].
     */
   private[operators] def spread(df: DataFrame, by: Column): DataFrame = {
     if (df.isStreaming) return df
-    val cap = df.sparkSession.conf
-      .get("graft.spread.smallInputBytes", (32L << 20).toString).toLong
-    val small =
-      cap > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
-    if (small)
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallInputBytes)
       // HASH partition on the caller's (unique) id, never round-robin:
       // a column-less repartition locally SORTS every partition first
       // (Spark's retry-determinism rule, sortBeforeRepartition) — on text
-      // rows that sort cost the MinHash gates 26-58% at sf0.1 (probed
-      // round 10, tools/MinhashProbe) while buying nothing; hashing a
-      // unique id distributes identically without touching row order
+      // rows that sort cost the MinHash gates 26-58% at sf0.1 (measured
+      // round 10) while buying nothing; hashing a unique id distributes
+      // identically without touching row order
       df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, by)
     else df
   }
@@ -175,8 +177,7 @@ object Dedup {
       }
     // the shingle+hash expression is the compute-heavy per-row stage —
     // spread it across the session parallelism (no-op at corpus scale).
-    // Measured trade (r10, tools/MinhashProbe at sf0.1, hash-partitioned
-    // spread): q55 1.00× on/off — the shuffle pays for itself exactly;
+    // Measured trade (r10 at sf0.1, hash-partitioned spread): q55 1.00× on/off — the shuffle pays for itself exactly;
     // the incremental paths (q115 1.15×, q119 1.24×) pay it twice (batch
     // AND corpus side) ahead of persist, a ~0.2 s sf0.1-only overhead
     // that vanishes at corpus scale where spread no-ops — kept for the
@@ -1062,17 +1063,15 @@ object Dedup {
       substring(col(textCol), 1, prefixLen).as("key"),
       split_part(col(textCol), lit(" "), lit(1)).as("w1"),
       floor(length(substring(col(textCol), 1, prefixLen)) / bandWidth).as("band"))
-    // salt routing owns its OWN knob (graft.dedup.saltBytes) rather than
-    // borrowing the prefix machinery's: a spec or user pinning the prefix
-    // plan shape with graft.prefix.singleTaskBytes=0 must not silently
-    // force 8× replication on every edit-distance call
-    val saltCap = df.sparkSession.conf
-      .get("graft.dedup.saltBytes", (32L << 20).toString).toLong
-    val measuredSmall = saltCap > 0 &&
-      keyed0.queryExecution.optimizedPlan.stats.sizeInBytes <= saltCap
+    // salt routing does not borrow the prefix machinery's knob: a spec or
+    // user pinning the prefix plan shape with
+    // graft.prefix.singleTaskBytes=0 must not silently force 8×
+    // replication on every edit-distance call
+    val measuredSmall =
+      keyed0.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallInputBytes
     val salt = if (saltFactor > 0) saltFactor
       else if (measuredSmall) 1 else 8
-    // observability, the wcoj.lastRoute pattern
+    // observability, the sim.lastRoute pattern
     df.sparkSession.conf.set("graft.dedup.lastSaltFactor", salt.toString)
     // block-size cap: one windowed count per block (a single shuffle on
     // the block key — the aggregate+semi-join twin pays that shuffle twice)

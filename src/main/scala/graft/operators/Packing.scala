@@ -113,7 +113,7 @@ object Packing {
     val cap = df.sparkSession.conf
       .get("graft.prefix.singleTaskBytes", (32L << 20).toString).toLong
     val small = cap > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
-    // observability, the wcoj.lastRoute pattern: which twin ran last
+    // observability, the sim.lastRoute pattern: which twin ran last
     df.sparkSession.conf.set("graft.prefix.lastRoute",
       if (small) "window" else "distributed")
     small

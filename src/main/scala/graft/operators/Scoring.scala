@@ -55,22 +55,19 @@ object Scoring {
   /** Materialize the tokenized corpus ONCE for the LM operators whose
     * model-building and scoring branches each re-scan and re-tokenize it
     * (guide §5 caching rule: reused ≥ 2×, recompute = the hot tokenize
-    * map; VERDICT r18 #9). Measured by the r19 crossover probe (ProbeR19
-    * lm10, interleaved min-of-3, bigram shape): materialized 0.96× of
-    * rescan at gate scale and 0.90× at the ×10 ScaleCheck-replicated arm —
-    * the win GROWS with scale because every saved branch is a full corpus
-    * pass. `graft.lm.materializeTokens=false` restores branch re-scan (the
-    * right call when the token table exceeds cluster storage — the conf is
-    * the deployment's statement about that).
+    * map; VERDICT r18 #9). Measured by the r19 crossover probe
+    * (OPTIMIZATION_r19.md, lm10: interleaved min-of-3, bigram shape):
+    * materialized 0.96× of rescan at gate scale and 0.90× at the ×10
+    * replicated arm — the win GROWS with scale because every saved branch
+    * is a full corpus pass. Tradeoff: the local checkpoint lives in
+    * executor block storage (memory, spilling to local disk); a token
+    * table larger than that storage spills, and a lost executor loses
+    * blocks the lineage can no longer recompute, failing the query.
     */
   private def lmTokenTable(df: DataFrame, textCol: String,
-      idCol: String): DataFrame = {
-    val t = df.select(col(idCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("toks"))
-    if (df.sparkSession.conf.get("graft.lm.materializeTokens", "true").toBoolean)
-      t.localCheckpoint(true)
-    else t
-  }
+      idCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+      TextFunctions.tokens(col(textCol)).as("toks")).localCheckpoint(true)
 
   def unigramLogLoss(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val toks = lmTokenTable(df, textCol, idCol)
@@ -620,32 +617,16 @@ object Scoring {
     val pairs = df.select(explode(TextFunctions.tokenNgrams(col(textCol), 2)).as("bg"))
       .select(split_part(col("bg"), lit(" "), lit(1)).as("w1"),
         split_part(col("bg"), lit(" "), lit(2)).as("w2"))
-    // total bigram occurrences = Σ cxy over the UNFILTERED aggregate, not a
-    // separate count over `pairs` (r19, guide §2.4): the old scalar branch
-    // re-paid the full scan + tokenize + explode (and q175's spreadScan
-    // exchange) just to count rows the (w1, w2) aggregate had already
-    // consumed; summing the aggregate reuses the same Exchange subtree
-    // (ReusedExchange in the plan) so the corpus feeds bigram work ONCE.
-    val big0 = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("cxy"))
-    val big = big0.where(col("cxy") >= minCount)
+    val big = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("cxy"))
+      .where(col("cxy") >= minCount)
     val uni = df.select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-    // nBig: total bigram occurrences. Two equivalent forms (spec-pinned
-    // equal): the RAW-COUNT branch re-scans the corpus but counts map-side
-    // (per-partition row count, one-row exchange); the SHARED form sums the
-    // unfiltered (w1, w2) aggregate, intending to reuse big0's exchange.
-    // r19 interleaved A/B at sf0.1 (ProbeR19 pmi, min-of-3): shared 1.68 s
-    // vs raw 1.36 s — 0.81×, because the exchange is NOT reused (the plan
-    // dumps plans/r19/q175_pmi_bigrams_pmi{new,legacy}.txt show the nBig
-    // branch duplicating the full explode+aggregate subtree, so the shared
-    // form pays a second (w1,w2) hash aggregate where the raw branch pays a
-    // cheap row count). Default stays on the measured winner; the conf
-    // keeps the shared form probeable at scale-representative fixtures,
-    // where a corpus re-scan dwarfs a vocabulary²-bounded re-aggregation.
-    val nBig = if (df.sparkSession.conf
-        .get("graft.pmi.sharedNBig", "false").toBoolean)
-      big0.agg(coalesce(sum("cxy"), lit(0L)).cast("double").as("nBig"))
-    else pairs.groupBy().agg(count(lit(1)).cast("double").as("nBig"))
+    // nBig: total bigram occurrences, a map-side row count over `pairs`.
+    // Summing the unfiltered (w1, w2) aggregate instead was measured 0.81×
+    // (OPTIMIZATION_r19.md change 11): its exchange is NOT reused, so that
+    // form pays a second (w1, w2) hash aggregate
+    // (plans/r19/q175_pmi_bigrams_pmi{new,legacy}.txt).
+    val nBig = pairs.groupBy().agg(count(lit(1)).cast("double").as("nBig"))
     val scal = uni.agg(sum("c").cast("double").as("nTok")).crossJoin(nBig)
     val scored = big
       .join(uni.select(col("tok").as("w1"), col("c").as("c1")), Seq("w1"))

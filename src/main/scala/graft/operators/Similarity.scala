@@ -25,8 +25,7 @@ object Similarity {
   /** Byte budget for the query-side broadcast in [[cosineTopK]] /
     * [[mutualKnn]]. The query side is small by contract, but the contract
     * is not enforced by the API — so the size is MEASURED before the
-    * broadcast (the WcojJoin.leapfrog complement-budget pattern) and an
-    * over-budget side takes a shuffle-replicated nested-loop join instead:
+    * broadcast and an over-budget side takes a shuffle-replicated nested-loop join instead:
     * same result, no single-executor materialization of the whole side.
     * The route taken is recorded in `graft.sim.lastRoute`
     * ("broadcast" | "shuffle") for observability/specs.
@@ -442,7 +441,7 @@ object Similarity {
     // is empty (struct<>) and each task counts footer row-groups — file
     // metadata, no vector bytes (spec-pinned in
     // "buildIvfIndex sizes the sidecar…"). The persisted-assignment
-    // variant was measured 70% SLOWER at gate scale (ProbeIdxCost A/B:
+    // variant was measured 70% SLOWER at gate scale (README.md A/B:
     // build 2.39 s cached vs 1.42 s read-back — the cache materializes
     // every row incl. vectors a second time), and at a 100 TB build it
     // would double the storage footprint mid-build. Append sizes its

@@ -20,11 +20,11 @@ private[operators] object Skew {
     * enough to matter and the extra shuffles are pure overhead); large or
     * unknown (→ Long.Max) Catalyst estimates salt at [[SaltFactor]].
     * 0 disables the small-route (forces salting) — the spec/ScaleCheck
-    * hook, mirroring `graft.dedup.saltBytes`.
+    * hook.
     */
   val SaltBytesKey = "graft.skew.saltBytes"
 
-  /** Observability (the wcoj/sim lastRoute pattern): the salt factor the
+  /** Observability (the sim.lastRoute pattern): the salt factor the
     * last [[saltedJoin]] actually took — "1" (plain join) or "8".
     */
   val RouteKey = "graft.skew.lastSaltFactor"

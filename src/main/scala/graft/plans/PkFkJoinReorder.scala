@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Project}
@@ -12,9 +12,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * "Optimize PK-FK Join" batch (MarkJoinIntegrityConstraintProperty +
   * OptimizePKFKJoin, optimization/rules/mark.scala:83, join.scala:88-222).
   *
-  * Spark has no primary-key concept, so keys live in [[PkFkJoinReorder
-  * .registerPrimaryKey]] (column-name based, mirroring the reference's
-  * catalog-level `primaryKeys`, catalog/interface.scala:102). The rule
+  * Spark has no primary-key concept, so keys live in a registry scoped to
+  * the rule's SparkSession, written by [[PkFkJoinReorder.registerPrimaryKey]]
+  * (column-name based, mirroring the reference's catalog-level
+  * `primaryKeys`, catalog/interface.scala:102): clearing one session's keys
+  * never touches another's, even a `newSession()` sibling. The rule
   * flattens a tree of condition-bearing inner joins, then greedily rebuilds
   * it left-deep: starting from the largest relation (stats), always
   * preferring an edge whose join keys are a registered primary key of the
@@ -25,19 +27,39 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * equalities over Inner joins with no hints are touched; anything else is
   * left to Catalyst untouched.
   */
-object PkFkJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
+object PkFkJoinReorder {
 
-  /** registered primary keys: column-name sets (e.g. Set("c_custkey")). */
-  private val primaryKeys = TrieMap.empty[String, Set[String]]
+  // table -> primary-key columns, one map per session; weak keys, so a
+  // registry is dropped with its session
+  private val registries =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, Seq[String]]]()
 
-  def registerPrimaryKey(table: String, cols: Seq[String]): Unit =
-    primaryKeys.put(table, cols.map(_.toLowerCase).toSet)
+  private def keysOf(s: SparkSession): TrieMap[String, Seq[String]] =
+    registries.synchronized { registries.computeIfAbsent(s, _ => TrieMap.empty) }
 
-  def clear(): Unit = primaryKeys.clear()
+  /** Add the rule to `s`'s optimizer (idempotent). */
+  def install(s: SparkSession): Unit =
+    if (!s.experimental.extraOptimizations.contains(PkFkJoinReorder(s)))
+      s.experimental.extraOptimizations =
+        s.experimental.extraOptimizations :+ PkFkJoinReorder(s)
+
+  def registerPrimaryKey(s: SparkSession, table: String, cols: Seq[String]): Unit =
+    keysOf(s).put(table, cols): Unit
+
+  def primaryKeyOf(s: SparkSession, table: String): Option[Seq[String]] =
+    keysOf(s).get(table)
+
+  def clear(s: SparkSession): Unit = keysOf(s).clear()
+}
+
+final case class PkFkJoinReorder(session: SparkSession)
+    extends Rule[LogicalPlan] with PredicateHelper {
+
+  private def primaryKeys = PkFkJoinReorder.keysOf(session)
 
   private def isPk(attrs: Seq[Attribute]): Boolean = {
     val names = attrs.map(_.name.toLowerCase).toSet
-    primaryKeys.values.exists(_ == names)
+    primaryKeys.values.exists(_.map(_.toLowerCase).toSet == names)
   }
 
   /** flatten left-deep/bushy inner-join trees into (relations, equi conds).
@@ -169,7 +191,7 @@ object PkFkJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => PkFkJoinReorder)
+    e.injectOptimizerRule(PkFkJoinReorder(_))
     e.injectPlannerStrategy(_ => graft.wcoj.WcojStrategy)
   }
 }

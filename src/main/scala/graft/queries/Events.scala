@@ -303,7 +303,7 @@ object Events {
       // through the router (q186 pattern: the route the router took is
       // asserted in-gate, so a router regression fails correctness). The
       // route is the array Aggregator at EVERY p — measured 1.46× faster
-      // than the column form even at this gate's p = 6 (ProbeHllForms);
+      // than the column form even at this gate's p = 6 (README.md);
       // the committed column-form oracle stays green because the two
       // encodings are bit-identical at p = 6 (spec-asserted).
       // mapWidth: the single-file source scans as ONE partition, so the
@@ -369,8 +369,8 @@ object Events {
       out
     }),
 
-    // STREAM-STREAM interval join (two independent readStreams, symmetric
-    // hash join with watermark-bounded state): every click paired with
+    // STREAM-STREAM interval join (one readStream filtered into two sides,
+    // symmetric hash join with watermark-bounded state): every click paired with
     // the same user's views within ±30 min. Inner matches emit in the
     // micro-batch that completes them — no emission-rule filter in the
     // oracle, the full pair set appears. The time-range predicate is what
@@ -383,18 +383,13 @@ object Events {
       // same rows post-source, so a streaming self-join over one source
       // replaces two independent sources — halving per-micro-batch file
       // listing/offset tracking. Rows, watermarks and emitted pairs are
-      // unchanged (oracle-verified). `graft.q212.sources=two` restores the
-      // r18 shape for A/B.
-      def mkSrc() = graft.Tables.adaptEventTs(
+      // unchanged (oracle-verified).
+      val src = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
-      lazy val sharedSrc = mkSrc()
-      def src() =
-        if (s.conf.get("graft.q212.sources", "shared") == "two") mkSrc()
-        else sharedSrc
-      val clicks = src().filter(col("event_type") === "click")
+      val clicks = src.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
-      val views = src().filter(col("event_type") === "view")
+      val views = src.filter(col("event_type") === "view")
         .select(col("event_id"), col("user_id"), col("ts"))
       val joined = EventStreams.intervalJoin(clicks, views, "user_id",
           toleranceSeconds = 1800, watermark = "0 seconds")
@@ -451,23 +446,16 @@ object Events {
     "q215_stream_outer_interval" -> ((s, d) => {
       val name = s"stream_oivj_${streamGateCounter.incrementAndGet()}"
       val root = GateTmp.dir("graft_oivj")
-      val sent = s"$root/sent"
       try {
         // the corpus streams straight from the test data (no temp-dir
         // copy — at sf0.1 that copy was a full extra write+read of the
         // table, and temp-dir I/O is exactly what made q214's driver
-        // measurement irreproducible); only the SENTINELS live in an
-        // appendable side dir, unioned into each input before the
-        // watermark so they advance it like any other row
-        new java.io.File(sent).mkdirs()
+        // measurement irreproducible); the SENTINELS are appended beside
+        // it and flow through the same source before the watermark, so
+        // they advance it like any other row
         val schema = s.read.parquet(s"$d/events.parquet").schema
         val ev = graft.Tables(s, d).events
           .select("event_id", "user_id", "ts", "event_type")
-        val sentSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType)))
         // SOURCE SHAPE (r19, VERDICT r18 #3): the r11–r18 form built FOUR
         // file-stream sources (per side: the events glob + the sentinel
         // dir, unioned) — and the gate's attribution showed ~2 s of its
@@ -485,39 +473,23 @@ object Events {
         // families. Per-side watermarks are applied post-filter inside
         // intervalJoin exactly as before — row set, watermark semantics
         // and emitted output are unchanged (oracle-verified at every
-        // shipped SF). `graft.q215.sources` restores the old shapes for
-        // A/B: legacy (4 sources) | perside (one ingest-dir source per
-        // side, 2 sources).
-        val srcMode = s.conf.get("graft.q215.sources", "shared")
+        // shipped SF).
         val inDir = s"$root/in"
-        if (srcMode != "legacy") {
-          new java.io.File(inDir).mkdirs()
-          val link = java.nio.file.Paths.get(s"$inDir/events.parquet")
-          val target = java.nio.file.Paths.get(s"$d/events.parquet")
-          try java.nio.file.Files.createSymbolicLink(link, target)
-          catch { case _: UnsupportedOperationException |
-                       _: java.io.IOException =>
-            // filesystems without symlinks fall back to a copy — apparatus
-            // correctness over apparatus speed
-            java.nio.file.Files.copy(target, link): Unit
-          }
+        new java.io.File(inDir).mkdirs()
+        val link = java.nio.file.Paths.get(s"$inDir/events.parquet")
+        val target = java.nio.file.Paths.get(s"$d/events.parquet")
+        try java.nio.file.Files.createSymbolicLink(link, target)
+        catch { case _: UnsupportedOperationException |
+                     _: java.io.IOException =>
+          // filesystems without symlinks fall back to a copy — apparatus
+          // correctness over apparatus speed
+          java.nio.file.Files.copy(target, link): Unit
         }
-        def ingestSrc() = graft.Tables.adaptEventTs(
+        val src = graft.Tables.adaptEventTs(
             s.readStream.schema(schema).parquet(inDir))
           .select("event_id", "user_id", "ts", "event_type")
-        lazy val sharedSrc = ingestSrc()
-        def side(tpe: String) = {
-          val src = srcMode match {
-            case "legacy" => graft.Tables.adaptEventTs(
-                s.readStream.schema(schema)
-                  .option("pathGlobFilter", "events.parquet").parquet(d))
-              .select("event_id", "user_id", "ts", "event_type")
-              .unionByName(s.readStream.schema(sentSchema).parquet(sent))
-            case "perside" => ingestSrc()
-            case _ => sharedSrc
-          }
+        def side(tpe: String) =
           src.filter(col("event_type") === tpe).drop("event_type")
-        }
         // NO sentinel filter inside the streaming plan: a filter that
         // excludes the ghost user is pushed below the watermark operator,
         // so the sentinel rows never reach it and the watermark FREEZES at
@@ -546,18 +518,16 @@ object Events {
             val far = new java.sql.Timestamp(mx.getTime + h * 3600 * 1000)
             val base = Seq((-2 * h, -1L, far, "click"), (-2 * h - 1, -1L, far, "view"))
               .toDF("event_id", "user_id", "ts", "event_type")
-            // ingest-dir modes read sentinels through the EVENTS schema:
+            // the ingest dir reads sentinels through the EVENTS schema:
             // match the observed ts encoding (the nanos-as-long testdata
             // generation stores LongType — write epoch nanos; adaptEventTs
             // round-trips them exactly). Absent columns (value, props)
             // read back as nulls; the 4-column projection drops them.
-            val enc = if (srcMode == "legacy") base
-              else if (schema("ts").dataType ==
-                org.apache.spark.sql.types.LongType)
+            val enc =
+              if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
                 base.withColumn("ts", unix_micros(col("ts")) * 1000L)
               else base
-            enc.write.mode("append")
-              .parquet(if (srcMode == "legacy") sent else inDir)
+            enc.write.mode("append").parquet(inDir)
             q.processAllAvailable()
           }
           // ONE sentinel micro-batch advances the watermark past every real

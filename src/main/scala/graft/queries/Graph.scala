@@ -222,33 +222,35 @@ object Graph {
     }),
 
     // the HyperCube-routed WCOJ under the hard gate: same dense triangle as
-    // q47, but with the broadcast budget forced to 0 so the complement
-    // relation CANNOT be collected — leapfrog's byte-budget check reroutes
-    // the whole join to the full Shares shuffle (leapfrogHyperCube). The
-    // route actually taken is emitted as a column, so a silent fall-back to
-    // the broadcast path hash-mismatches the oracle's 'hypercube' literal.
+    // q47, with the single-cell collapse disabled
+    // (`graft.wcoj.singleCellBytes=0`) so LeapFrogJoinExec must route
+    // through the Shares grid. The route is read off what actually ran —
+    // the executed plan holds the LeapFrogJoin node and the count used more
+    // than one cell — so a silent fall-back to binary joins or to one cell
+    // hash-mismatches the oracle's 'hypercube' literal.
     "q186_wcoj_hypercube" -> ((s, d) => {
-      val prev = s.conf.getOption("graft.wcoj.broadcastBudgetBytes")
-      try {
-        s.conf.set("graft.wcoj.broadcastBudgetBytes", "0")
-        val e = denseEdges(Tables(s, d))
-        // routing happens eagerly inside leapfrog (the complement is
-        // measured before any collect), so lastRoute is set on return
-        val tri = graft.wcoj.WcojJoin.leapfrog(s, Seq(
-            (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-            (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-            (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
-          Seq("a", "b", "c"))
-        val route = s.conf.get("graft.wcoj.lastRoute", "unset")
-        tri.filter(col("a") < col("b") && col("a") < col("c"))
-          .agg(count(lit(1)).as("n_triangles"))
-          .withColumn("route", lit(route))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("graft.wcoj.broadcastBudgetBytes", v)
-          case None => s.conf.unset("graft.wcoj.broadcastBudgetBytes")
-        }
+      val e = denseEdges(Tables(s, d))
+      val tri = graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
+          (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
+          (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
+          (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
+        Seq("a", "b", "c"))
+        .filter(col("a") < col("b") && col("a") < col("c"))
+        .agg(count(lit(1)).as("n_triangles"))
+      val prev = s.conf.getOption("graft.wcoj.singleCellBytes")
+      // the exec reads the conf when its routing runs: count under it
+      val n = try {
+        s.conf.set("graft.wcoj.singleCellBytes", "0")
+        tri.collect()(0).getLong(0) // one row
+      } finally prev match {
+        case Some(v) => s.conf.set("graft.wcoj.singleCellBytes", v)
+        case None => s.conf.unset("graft.wcoj.singleCellBytes")
       }
+      val ran = wcojRouteOf(tri) == "leapfrog"
+      val cells = s.conf.get("graft.wcoj.lastCells", "0").toInt
+      val route = if (!ran) "binary" else if (cells > 1) "hypercube" else "single-cell"
+      import s.implicits._
+      Seq((n, route)).toDF("n_triangles", "route")
     }),
 
     // directed 4-cycle count on the sparse graph — a cyclic query whose join
@@ -612,7 +614,7 @@ object Graph {
          |WHERE e1.src < e1.dst AND e1.src < e2.dst""".stripMargin,
     "q186_wcoj_hypercube" ->
       // count identical to q47; the 'hypercube' literal pins the route the
-      // engine must have taken under the zeroed broadcast budget
+      // engine must have taken with the single-cell collapse disabled
       s"""WITH edges AS ($denseEdgesSql)
          |SELECT count(*) AS n_triangles, 'hypercube' AS route
          |FROM edges e1 JOIN edges e2 ON e1.dst = e2.src

@@ -19,8 +19,8 @@ object Pipeline {
     * for the scale rule): applied only to gates whose scan-stage text map —
     * tokenize / shingle / hash, serialized on the single-row-group bench
     * file — measured as the hot phase in the r18 interleaved A/B probe
-    * (ProbeR18 spread/spread2); flat or negative gates keep the plain scan
-    * and are noted in OPTIMIZATION_r18.md.
+    * (OPTIMIZATION_r18.md change 1, which also lists the flat or negative
+    * gates that keep the plain scan).
     */
   private def docsSpread(s: SparkSession, d: String): DataFrame =
     graft.Tables.spreadScan(Tables(s, d).documents, "doc_id")

@@ -594,10 +594,9 @@ object Relational {
       val t = Tables(s, d)
       import graft.plans.PkFkJoinReorder
       val prevOpts = s.experimental.extraOptimizations
-      if (!prevOpts.contains(PkFkJoinReorder))
-        s.experimental.extraOptimizations = prevOpts :+ PkFkJoinReorder
-      PkFkJoinReorder.registerPrimaryKey("customer", Seq("c_custkey"))
-      PkFkJoinReorder.registerPrimaryKey("nation", Seq("n_nationkey"))
+      PkFkJoinReorder.install(s)
+      PkFkJoinReorder.registerPrimaryKey(s, "customer", Seq("c_custkey"))
+      PkFkJoinReorder.registerPrimaryKey(s, "nation", Seq("n_nationkey"))
       try {
         val j = t.nation
           .join(t.customer, col("c_nationkey") === col("n_nationkey"))
@@ -621,14 +620,14 @@ object Relational {
         // restore the rule list too, not just the PK registry: a rule left
         // installed session-wide re-activates for every later gate the
         // moment anything registers a PK
-        PkFkJoinReorder.clear()
+        PkFkJoinReorder.clear(s)
         s.experimental.extraOptimizations = prevOpts
       }
     }),
 
     // the DIFFERENTIAL PK-FK gate: q218's star shape is one where
     // Catalyst's stats-free ReorderJoin happens to pick the same order as
-    // the PK-FK rule (the ProbeCbo finding), so it proves the rule runs,
+    // the PK-FK rule (recorded in COVERAGE.md), so it proves the rule runs,
     // not that it decides. This CHAIN is written smallest-first
     // (region → nation → supplier → lineitem) — an order stock Catalyst
     // KEEPS (each step already has a join condition) — while the rule must
@@ -641,11 +640,10 @@ object Relational {
       val t = Tables(s, d)
       import graft.plans.PkFkJoinReorder
       val prevOpts = s.experimental.extraOptimizations
-      if (!prevOpts.contains(PkFkJoinReorder))
-        s.experimental.extraOptimizations = prevOpts :+ PkFkJoinReorder
-      PkFkJoinReorder.registerPrimaryKey("region", Seq("r_regionkey"))
-      PkFkJoinReorder.registerPrimaryKey("nation", Seq("n_nationkey"))
-      PkFkJoinReorder.registerPrimaryKey("supplier", Seq("s_suppkey"))
+      PkFkJoinReorder.install(s)
+      PkFkJoinReorder.registerPrimaryKey(s, "region", Seq("r_regionkey"))
+      PkFkJoinReorder.registerPrimaryKey(s, "nation", Seq("n_nationkey"))
+      PkFkJoinReorder.registerPrimaryKey(s, "supplier", Seq("s_suppkey"))
       try {
         val j = t.region
           .join(t.nation, col("n_regionkey") === col("r_regionkey"))
@@ -669,7 +667,7 @@ object Relational {
           // pin rows while the rule is live (the q218 pattern)
           .localCheckpoint(true)
       } finally {
-        PkFkJoinReorder.clear()
+        PkFkJoinReorder.clear(s)
         s.experimental.extraOptimizations = prevOpts
       }
     }),
@@ -745,7 +743,11 @@ object Relational {
         s.conf.set("spark.sql.cbo.enabled", "true")
         def shapeRow(shape: String, sql: String) = {
           val df = s.sql(sql)
-          val est = df.queryExecution.optimizedPlan.stats.rowCount
+          // plan stats read SQLConf.get, the conf of the thread's ACTIVE
+          // session: evaluate them under this gate's session, whichever
+          // session the caller has active
+          val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(
+            s.sessionState.conf)(df.queryExecution.optimizedPlan.stats.rowCount)
           val exact = df.count()
           val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
           (shape, exact, est.isDefined,

@@ -195,7 +195,7 @@ object DocStreams {
     // are bounded and explicitly laid out (the discovery agg collects ≤
     // `buckets` longs; the merge width is pinned to the affected-bucket
     // count for the one-file-per-dir contract) — measured at gate scale:
-    // 4 jobs → 2 and ~40% off the per-refresh wall (ProbeUpsert A/B).
+    // 4 jobs → 2 and ~40% off the per-refresh wall (A/B in README.md).
     // Session-conf save/restore, SERIALIZED per session (ADVICE r16): the
     // streaming path runs on its own cloned session, but a caller sharing
     // one session across concurrent upserts to DIFFERENT tables would race
@@ -234,21 +234,14 @@ object DocStreams {
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tableExists = fs.exists(tableDir)
     // When a table exists the batch feeds two plans (affected-bucket
-    // discovery + merge), but is NOT cached by default: the discovery scan
-    // reads only the key column (column-pruned at the source) and a
-    // foreachBatch micro-batch recomputes deterministically from bounded
-    // source data, so paying a block-store materialization of the full
-    // rows to save that narrow re-read measured ~15% SLOWER per refresh
-    // (A/B in ProbeUpsert). `graft.upsert.cacheBatch=true` restores the
-    // pin for callers whose batch lineage is genuinely expensive. The
-    // FIRST batch has nothing to read back: no discovery job at all — the
-    // initial load is ONE job + publish. try/finally: a table-read or
-    // merge-write failure propagates (and the micro-batch retries), so a
-    // pin never outlives the batch.
-    val pinned0 = batch.withColumn("bucket", bucket)
-    val pinned = if (tableExists && spark.conf.get(
-        "graft.upsert.cacheBatch", "false").toBoolean) pinned0.persist()
-      else pinned0
+    // discovery + merge), but is NOT cached: the discovery scan reads only
+    // the key column (column-pruned at the source) and a foreachBatch
+    // micro-batch recomputes deterministically from bounded source data,
+    // so paying a block-store materialization of the full rows to save
+    // that narrow re-read measured ~15% SLOWER per refresh (A/B recorded
+    // in README.md). The FIRST batch has nothing to read back: no
+    // discovery job at all — the initial load is ONE job + publish.
+    val keyed = batch.withColumn("bucket", bucket)
     // Heal a crashed prior publish BEFORE discovery. The publish loop below
     // drops an in-progress marker while it renames; if the marker survives,
     // some bucket may sit ASIDE (.bucket=N.__old) with its dest missing —
@@ -280,151 +273,149 @@ object DocStreams {
         }
       fs.delete(publishMarker, false)
     }
-    try {
-      // bounded by `buckets`, never by data; collect_set aggregates to ONE
-      // reduce task (a distinct would shuffle the session's full partition
-      // width for a result of ≤`buckets` longs — measured as a visible
-      // share of the per-micro-batch floor)
-      val affected: Seq[Long] =
-        if (!tableExists) Seq.empty
-        else pinned.select("bucket")
-          .agg(collect_set("bucket")).head().getSeq[Long](0)
-      val dataCols = pinned.columns.filterNot(c => c == keyCol || c == "bucket")
-      def tagged(df: DataFrame, priority: Int): DataFrame =
-        df.select(col(keyCol), col("bucket"),
-          struct(
-            col(versionCol).as("_v"), lit(priority).as("_prio"),
-            xxhash64(dataCols.map(col): _*).as("_tie"),
-            struct(dataCols.map(col): _*).as("_row")).as("_m"))
-      // the affected-bucket read stays LAZY and lists ONLY the affected
-      // bucket=N directories (basePath recovers the partition column): a
-      // whole-table read would build a file index over every bucket dir
-      // just to prune most of them — at the 65k-bucket design point that
-      // listing dwarfs the delta itself. |affected| exists() probes
-      // replace it. Because the merge output lands in a sibling temp dir
-      // (below) there is no read-overwrite cycle to break — the old
-      // localCheckpoint pin materialized every current row twice
-      // (checkpoint write + read-back) as a dedicated driver job per
-      // micro-batch. Empty when no affected bucket dir exists yet (first
-      // batch); a read failure on an existing dir propagates so the
-      // micro-batch retries.
-      val affectedDirs = affected
-        .map(b => new org.apache.hadoop.fs.Path(tableDir, s"bucket=$b"))
-        .filter(fs.exists(_)).map(_.toString)
-      // treating "no affected dir" as empty is only safe when the path is
-      // absent, empty, or a real bucket layout (all-new buckets). A path
-      // holding anything ELSE is some other table — merging "against
-      // empty" would silently publish bucket dirs beside it. Early-exit
-      // scan: the first bucket= entry proves the layout without listing
-      // the other 65k dirs.
-      if (affectedDirs.isEmpty && tableExists) {
-        val it = fs.listStatusIterator(tableDir)
-        var bucketSeen = false
-        var alien: Option[String] = None
-        while (!bucketSeen && it.hasNext) {
-          val name = it.next().getPath.getName
-          if (name.startsWith("bucket=")) bucketSeen = true
-          else if (!(name.startsWith("_") || name.startsWith("."))) alien = Some(name)
-        }
-        if (!bucketSeen) alien.foreach { a =>
-          throw new java.io.IOException(
-            s"upsertBatch: $tablePath exists but is not a bucket-partitioned " +
-              s"upsert table (found '$a') — refusing to merge against it")
-        }
+    // bounded by `buckets`, never by data; collect_set aggregates to ONE
+    // reduce task (a distinct would shuffle the session's full partition
+    // width for a result of ≤`buckets` longs — measured as a visible
+    // share of the per-micro-batch floor)
+    val affected: Seq[Long] =
+      if (!tableExists) Seq.empty
+      else keyed.select("bucket")
+        .agg(collect_set("bucket")).head().getSeq[Long](0)
+    val dataCols = keyed.columns.filterNot(c => c == keyCol || c == "bucket")
+    def tagged(df: DataFrame, priority: Int): DataFrame =
+      df.select(col(keyCol), col("bucket"),
+        struct(
+          col(versionCol).as("_v"), lit(priority).as("_prio"),
+          xxhash64(dataCols.map(col): _*).as("_tie"),
+          struct(dataCols.map(col): _*).as("_row")).as("_m"))
+    // the affected-bucket read stays LAZY and lists ONLY the affected
+    // bucket=N directories (basePath recovers the partition column): a
+    // whole-table read would build a file index over every bucket dir
+    // just to prune most of them — at the 65k-bucket design point that
+    // listing dwarfs the delta itself. |affected| exists() probes
+    // replace it. Because the merge output lands in a sibling temp dir
+    // (below) there is no read-overwrite cycle to break — the old
+    // localCheckpoint pin materialized every current row twice
+    // (checkpoint write + read-back) as a dedicated driver job per
+    // micro-batch. Empty when no affected bucket dir exists yet (first
+    // batch); a read failure on an existing dir propagates so the
+    // micro-batch retries.
+    val affectedDirs = affected
+      .map(b => new org.apache.hadoop.fs.Path(tableDir, s"bucket=$b"))
+      .filter(fs.exists(_)).map(_.toString)
+    // treating "no affected dir" as empty is only safe when the path is
+    // absent, empty, or a real bucket layout (all-new buckets). A path
+    // holding anything ELSE is some other table — merging "against
+    // empty" would silently publish bucket dirs beside it. Early-exit
+    // scan: the first bucket= entry proves the layout without listing
+    // the other 65k dirs.
+    if (affectedDirs.isEmpty && tableExists) {
+      val it = fs.listStatusIterator(tableDir)
+      var bucketSeen = false
+      var alien: Option[String] = None
+      while (!bucketSeen && it.hasNext) {
+        val name = it.next().getPath.getName
+        if (name.startsWith("bucket=")) bucketSeen = true
+        else if (!(name.startsWith("_") || name.startsWith("."))) alien = Some(name)
       }
-      // explicit schema (batch columns + the long partition column): the
-      // stored files were written from this exact projection, so inference
-      // would only re-read footers to learn what the caller already knows
-      val current =
-        if (affectedDirs.isEmpty) pinned.limit(0)
-        else spark.read.schema(pinned.schema)
-          .option("basePath", tablePath).parquet(affectedDirs: _*)
-      // ONE shuffle for merge + layout: repartitioning on `bucket` BEFORE the
-      // aggregate both satisfies the groupBy's clustering requirement
-      // (HashPartitioning(bucket) is an expression subset of (key, bucket) —
-      // same bucket ⇒ same task, and bucket is a function of the key) and
-      // leaves the output bucket-aligned for the partitioned write, so each
-      // rewritten bucket directory gets ONE file per micro-batch instead of
-      // one per shuffle task — B small files of compaction debt, not T×B
-      // merge parallelism = the affected-bucket count, not the session
-      // shuffle width: each task is exactly one bucket-dir rewrite (the
-      // file-layout contract — one file per dir holds under ANY bucket-
-      // keyed partitioning), and a 5-bucket delta shouldn't schedule 32
-      // near-empty tasks per micro-batch. The first batch skipped the
-      // discovery job, so it spreads across min(buckets, shuffle width).
-      val mergeParts =
-        if (!tableExists) math.max(1, math.min(buckets,
-          spark.sessionState.conf.numShufflePartitions))
-        else math.max(affected.size, 1)
-      // The batch lineage is evaluated twice when uncached (discovery, then
-      // here). Bucket is a pure function of the key, so under deterministic
-      // replay this filter is a no-op — but if a nondeterministic source
-      // recomputes DIFFERENT keys, an unguarded merge would publish rows
-      // into bucket dirs that were never read, overwriting their stored
-      // rows batch-only. Pinning the merge to the collected affected set
-      // makes the failure mode "a nondeterministic row is dropped this
-      // micro-batch" instead of "a bucket of stored rows is lost". First
-      // batch (no discovery) takes every bucket.
-      val batchSide =
-        if (!tableExists) tagged(pinned, 1)
-        else tagged(pinned, 1).where(col("bucket").isin(affected: _*))
-      val merged = tagged(current, 0).unionByName(batchSide)
-        .repartition(mergeParts, col("bucket"))
-        .groupBy(keyCol, "bucket") // reuses the bucket exchange, no 2nd shuffle
-        .agg(max("_m").as("_m"))   // lexicographic: version, priority, hash
-        .select(col(keyCol) +: col("bucket") +:
-          dataCols.map(c => col(s"_m._row.$c").as(c)): _*)
-      // write-then-publish — 2 driver jobs per refresh micro-batch
-      // (discovery collect + this write; was 3 with the checkpoint
-      // round-trip) and 1 for the initial load: the
-      // merged rows land in a sibling temp dir in one job, then each
-      // rewritten bucket=N dir is published into the table by metadata-only
-      // renames. A crash before the publish loop leaves the table
-      // untouched; per bucket the old dir is renamed ASIDE before the new
-      // one is renamed in and the aside copy deleted LAST, so whole-bucket
-      // dirs are always either old, aside (recoverable), or new — never
-      // gone (a transactional table format is the multi-writer/
-      // multi-bucket-atomic answer; documented, not faked). A crash INSIDE
-      // the loop — between aside and rename-in — leaves the in-progress
-      // marker behind; the retry's heal pass (top of this method) restores
-      // any aside whose dest is missing BEFORE discovery, so the replayed
-      // merge sees the old rows and the retry's publish supersedes the
-      // aside.
-      val tmpDir = new org.apache.hadoop.fs.Path(
-        tableDir.getParent, tableDir.getName + ".__graft_upsert_tmp")
-      fs.delete(tmpDir, true)
-      try {
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(tmpDir.toString)
-        fs.mkdirs(tableDir)
-        fs.create(publishMarker, true).close()
-        fs.listStatus(tmpDir)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          .foreach { s =>
-            val dest = new org.apache.hadoop.fs.Path(tableDir, s.getPath.getName)
-            val aside = new org.apache.hadoop.fs.Path(tableDir,
-              "." + s.getPath.getName + ".__old")
-            fs.delete(aside, true) // stale aside superseded by this publish
-            val destExisted = fs.exists(dest)
-            val hadOld = destExisted && fs.rename(dest, aside)
-            // a false aside-rename with dest still present must NOT fall
-            // through: Hadoop rename onto an existing directory moves the
-            // source INSIDE it, silently nesting bucket=N/bucket=N
-            if (destExisted && !hadOld) throw new java.io.IOException(
-              s"upsertBatch: aside rename $dest -> $aside failed while " +
-                s"$dest still exists — refusing to rename into an occupied dir")
-            try {
-              if (!fs.rename(s.getPath, dest)) throw new java.io.IOException(
-                s"upsertBatch: publish rename ${s.getPath} -> $dest failed")
-            } catch { // restore on THROWN failures too, then fail loudly
-              case e: Throwable =>
-                if (hadOld && !fs.exists(dest)) fs.rename(aside, dest)
-                throw e
-            }
-            if (hadOld) fs.delete(aside, true)
+      if (!bucketSeen) alien.foreach { a =>
+        throw new java.io.IOException(
+          s"upsertBatch: $tablePath exists but is not a bucket-partitioned " +
+            s"upsert table (found '$a') — refusing to merge against it")
+      }
+    }
+    // explicit schema (batch columns + the long partition column): the
+    // stored files were written from this exact projection, so inference
+    // would only re-read footers to learn what the caller already knows
+    val current =
+      if (affectedDirs.isEmpty) keyed.limit(0)
+      else spark.read.schema(keyed.schema)
+        .option("basePath", tablePath).parquet(affectedDirs: _*)
+    // ONE shuffle for merge + layout: repartitioning on `bucket` BEFORE the
+    // aggregate both satisfies the groupBy's clustering requirement
+    // (HashPartitioning(bucket) is an expression subset of (key, bucket) —
+    // same bucket ⇒ same task, and bucket is a function of the key) and
+    // leaves the output bucket-aligned for the partitioned write, so each
+    // rewritten bucket directory gets ONE file per micro-batch instead of
+    // one per shuffle task — B small files of compaction debt, not T×B
+    // merge parallelism = the affected-bucket count, not the session
+    // shuffle width: each task is exactly one bucket-dir rewrite (the
+    // file-layout contract — one file per dir holds under ANY bucket-
+    // keyed partitioning), and a 5-bucket delta shouldn't schedule 32
+    // near-empty tasks per micro-batch. The first batch skipped the
+    // discovery job, so it spreads across min(buckets, shuffle width).
+    val mergeParts =
+      if (!tableExists) math.max(1, math.min(buckets,
+        spark.sessionState.conf.numShufflePartitions))
+      else math.max(affected.size, 1)
+    // The batch lineage is evaluated twice when uncached (discovery, then
+    // here). Bucket is a pure function of the key, so under deterministic
+    // replay this filter is a no-op — but if a nondeterministic source
+    // recomputes DIFFERENT keys, an unguarded merge would publish rows
+    // into bucket dirs that were never read, overwriting their stored
+    // rows batch-only. Pinning the merge to the collected affected set
+    // makes the failure mode "a nondeterministic row is dropped this
+    // micro-batch" instead of "a bucket of stored rows is lost". First
+    // batch (no discovery) takes every bucket.
+    val batchSide =
+      if (!tableExists) tagged(keyed, 1)
+      else tagged(keyed, 1).where(col("bucket").isin(affected: _*))
+    val merged = tagged(current, 0).unionByName(batchSide)
+      .repartition(mergeParts, col("bucket"))
+      .groupBy(keyCol, "bucket") // reuses the bucket exchange, no 2nd shuffle
+      .agg(max("_m").as("_m"))   // lexicographic: version, priority, hash
+      .select(col(keyCol) +: col("bucket") +:
+        dataCols.map(c => col(s"_m._row.$c").as(c)): _*)
+    // write-then-publish — 2 driver jobs per refresh micro-batch
+    // (discovery collect + this write; was 3 with the checkpoint
+    // round-trip) and 1 for the initial load: the
+    // merged rows land in a sibling temp dir in one job, then each
+    // rewritten bucket=N dir is published into the table by metadata-only
+    // renames. A crash before the publish loop leaves the table
+    // untouched; per bucket the old dir is renamed ASIDE before the new
+    // one is renamed in and the aside copy deleted LAST, so whole-bucket
+    // dirs are always either old, aside (recoverable), or new — never
+    // gone (a transactional table format is the multi-writer/
+    // multi-bucket-atomic answer; documented, not faked). A crash INSIDE
+    // the loop — between aside and rename-in — leaves the in-progress
+    // marker behind; the retry's heal pass (top of this method) restores
+    // any aside whose dest is missing BEFORE discovery, so the replayed
+    // merge sees the old rows and the retry's publish supersedes the
+    // aside.
+    val tmpDir = new org.apache.hadoop.fs.Path(
+      tableDir.getParent, tableDir.getName + ".__graft_upsert_tmp")
+    fs.delete(tmpDir, true)
+    try {
+      merged.write.mode("overwrite").partitionBy("bucket").parquet(tmpDir.toString)
+      fs.mkdirs(tableDir)
+      fs.create(publishMarker, true).close()
+      fs.listStatus(tmpDir)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+        .foreach { s =>
+          val dest = new org.apache.hadoop.fs.Path(tableDir, s.getPath.getName)
+          val aside = new org.apache.hadoop.fs.Path(tableDir,
+            "." + s.getPath.getName + ".__old")
+          fs.delete(aside, true) // stale aside superseded by this publish
+          val destExisted = fs.exists(dest)
+          val hadOld = destExisted && fs.rename(dest, aside)
+          // a false aside-rename with dest still present must NOT fall
+          // through: Hadoop rename onto an existing directory moves the
+          // source INSIDE it, silently nesting bucket=N/bucket=N
+          if (destExisted && !hadOld) throw new java.io.IOException(
+            s"upsertBatch: aside rename $dest -> $aside failed while " +
+              s"$dest still exists — refusing to rename into an occupied dir")
+          try {
+            if (!fs.rename(s.getPath, dest)) throw new java.io.IOException(
+              s"upsertBatch: publish rename ${s.getPath} -> $dest failed")
+          } catch { // restore on THROWN failures too, then fail loudly
+            case e: Throwable =>
+              if (hadOld && !fs.exists(dest)) fs.rename(aside, dest)
+              throw e
           }
-        fs.delete(publishMarker, false)
-      } finally fs.delete(tmpDir, true): Unit
-    } finally pinned.unpersist(false)
+          if (hadOld) fs.delete(aside, true)
+        }
+      fs.delete(publishMarker, false)
+    } finally fs.delete(tmpDir, true): Unit
   }
 
   /** Per-micro-batch sub-phase timings published by [[ingestDedupStream]],

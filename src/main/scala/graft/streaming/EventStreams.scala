@@ -213,7 +213,7 @@ object EventStreams {
     * max aggregates on EVERY input row (O(m) per row — only one register
     * can change), where the Aggregator computes the row's register index
     * and updates that one slot (O(1) per row). Interleaved min-of-3 on
-    * the sf0.1 streaming gate shape (tools/ProbeHllForms, 2026-08-15):
+    * the sf0.1 streaming gate shape (2026-08-15, recorded in README.md):
     * columns 3.27 s vs array 2.24 s at p = 6 (1.46×), 5.04 s vs 2.16 s at
     * p = 8 (2.34×) — the gap grows with p exactly as the per-row ratio
     * predicts, so there is no small-p regime where the column form wins.

@@ -66,7 +66,6 @@ final case class LeapFrogJoinExec(
     children: Seq[SparkPlan],
     childAttrs: Seq[Seq[String]],
     attrOrder: Seq[String],
-    maxCells: Int,
     override val output: Seq[Attribute]) extends SparkPlan with CodegenSupport {
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -91,7 +90,7 @@ final case class LeapFrogJoinExec(
     */
   @transient private lazy val routed: RDD[(Int, (Int, Array[Long]))] = {
     val sc = sparkContext
-    val cells = if (maxCells > 0) maxCells else sc.defaultParallelism
+    val cells = sc.defaultParallelism
     val ord = order
 
     // children -> RDD[Array[Long]] in global-order column layout; persisted
@@ -109,20 +108,17 @@ final case class LeapFrogJoinExec(
     // one stats pass over the cached inputs (count + per-attribute heavy-
     // hitter sketches), then memory-budgeted skew-aware share choice: the
     // grid grows past the parallelism floor whenever the estimated max cell
-    // payload would outgrow the per-task byte budget. An explicit maxCells
-    // stays a hard user cap (fixed-grid behavior, as before).
-    val skewAware = session.conf.get("graft.wcoj.skewAware", "true").toBoolean
+    // payload would outgrow the per-task byte budget, up to 4096 cells.
     val budget = session.conf.get("graft.wcoj.cellBudgetBytes", (64L << 20).toString).toLong
-    val capConf = session.conf.get("graft.wcoj.maxCellsCap", "4096").toInt
-    val stats = SkewStats.relStats(prepped, skewAware)
-    val cap = if (maxCells > 0) cells else math.max(cells, capConf)
+    val stats = SkewStats.relStats(prepped)
+    val cap = math.max(cells, 4096)
     // measured-small single-cell route: when every relation together fits
     // comfortably in one task (default 4 MB of routed payload), a
     // parallelism-floor grid only buys scheduler overhead — free-attribute
     // replication fans tiny rows into ~32 near-empty cells and the trie
     // work fragments into sub-millisecond tasks (the S7 capped-graph gate's
     // fixed ~0.8 s apparatus). One cell = one co-located enumeration, same
-    // machinery. An explicit maxCells (a user's fixed grid) wins as before.
+    // machinery. `graft.wcoj.singleCellBytes=0` forces the grid.
     //
     // BUT input bytes alone are blind to output cardinality: a cyclic join
     // with tiny inputs can have AGM-large output (the 4-cycle on the
@@ -148,12 +144,11 @@ final case class LeapFrogJoinExec(
       "graft.wcoj.singleCellMaxBindings", (16L << 20).toString).toLong
     // stale-proof the observability conf (ADVICE r15): the bound is only
     // COMPUTED inside the byte-gated branch below, so a query that skips
-    // that branch (big inputs, or an explicit grid) must not leave an
+    // that branch (big inputs, or a forced grid) must not leave an
     // earlier query's bound behind for ScaleCheck to misattribute
     if (session.conf.getOption("graft.wcoj.lastOutputBound").isDefined)
       session.conf.unset("graft.wcoj.lastOutputBound")
-    val smallOutput = maxCells <= 0 &&
-      stats.map(_.bytes).sum <= singleCellBytes && {
+    val smallOutput = stats.map(_.bytes).sum <= singleCellBytes && {
         val agm = graft.plans.FractionalEdgeCover.agmBound(
           ord.toSet, stats.map(s => (s.attrs, s.rows)))
         val bound =
@@ -282,8 +277,7 @@ final case class LeapFrogJoinExec(
 object WcojStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p @ LeapFrogJoinPlan(children, childAttrs, attrOrder, _) =>
-      LeapFrogJoinExec(children.map(planLater), childAttrs, attrOrder,
-        maxCells = 0, p.output) :: Nil
+      LeapFrogJoinExec(children.map(planLater), childAttrs, attrOrder, p.output) :: Nil
     case _ => Nil
   }
 }

@@ -60,71 +60,19 @@ object SkewStats {
 
     /** Lower bound on the heaviest value's count (0 when empty). */
     def maxCount: Long = if (counts.isEmpty) 0L else counts.values.max
-
-    /** The heaviest value's IDENTITY with its count lower bound — so a
-      * consumer summing hot masses across relations can group by the value
-      * (different heavy values hash to different tasks; only same-value
-      * masses co-locate). Deterministic tie-break by smallest key.
-      */
-    def maxEntry: Option[(Long, Long)] =
-      if (counts.isEmpty) None
-      else Some(counts.toSeq.minBy { case (k, c) => (-c, k) })
   }
 
-  /** AccumulatorV2 over one [[MisraGries]] — lets the leading-attribute
-    * skew guard piggyback sketch collection on the routing shuffle's MAP
-    * side: clean inputs pay no extra pass at all (a dedicated stats job
-    * measured as a +20% tax on the whole join), and the value is read
-    * after the shuffle materializes. A retried map task can only
-    * OVERcount, which errs toward the perf-only hypercube reroute, never
-    * toward missing real skew.
+  /** The optimizer's [[HyperCube.RelStat]] for ALL prepared relations in
+    * ONE job: inputs are unioned with a relation tag and aggregated
+    * together. The per-relation form cost one scheduler round-trip per
+    * relation — on an 8-edge pattern over tiny inputs those 8 round-trips
+    * WERE the apparatus floor (StockCompare r14: S7 on the capped graph ran
+    * 2.5× a stock binary plan, most of it fixed overhead). One union job
+    * also materializes every child's cache in a single wave instead of
+    * sequentially. Bytes are the routed-payload estimate: an Array[Long]
+    * row costs 8·width data + ~24 object/header overhead.
     */
-  final class MgAccumulator(k: Int = 32)
-      extends org.apache.spark.util.AccumulatorV2[Long, MisraGries] {
-    private var sk = new MisraGries(k)
-    override def isZero: Boolean = sk.maxCount == 0L
-    override def copy(): MgAccumulator = {
-      val c = new MgAccumulator(k)
-      c.sk = new MisraGries(k).merge(sk)
-      c
-    }
-    override def reset(): Unit = sk = new MisraGries(k)
-    override def add(v: Long): Unit = sk.add(v)
-    override def merge(
-        o: org.apache.spark.util.AccumulatorV2[Long, MisraGries]): Unit =
-      sk.merge(o.value): Unit
-    override def value: MisraGries = sk
-  }
-
-  /** One aggregate pass over prepared rows: (rowCount, per-column sketches). */
-  def collect(rdd: RDD[Array[Long]], width: Int, k: Int = 32): (Long, Array[MisraGries]) =
-    rdd.treeAggregate((0L, Array.fill(width)(new MisraGries(k))))(
-      seqOp = { case ((n, sk), row) =>
-        var i = 0
-        while (i < width) { sk(i).add(row(i)); i += 1 }
-        (n + 1, sk)
-      },
-      combOp = { case ((n1, a), (n2, b)) =>
-        var i = 0
-        while (i < width) { a(i).merge(b(i)); i += 1 }
-        (n1 + n2, a)
-      })
-
-  /** Build the optimizer's [[HyperCube.RelStat]] from a prepared relation.
-    * `skewAware=false` skips the sketches (plain count, uniform model).
-    * Bytes are the routed-payload estimate: an Array[Long] row costs
-    * 8·width data + ~24 object/header overhead.
-    */
-  /** Stats for ALL prepared relations in ONE job: inputs are unioned with
-    * a relation tag and aggregated together. The per-relation form cost one
-    * scheduler round-trip per relation — on an 8-edge pattern over tiny
-    * inputs those 8 round-trips WERE the apparatus floor (StockCompare r14:
-    * S7 on the capped graph ran 2.5× a stock binary plan, most of it fixed
-    * overhead). One union job also materializes every child's cache in a
-    * single wave instead of sequentially.
-    */
-  def relStats(preps: Seq[(Array[String], RDD[Array[Long]])],
-      skewAware: Boolean): Seq[HyperCube.RelStat] = {
+  def relStats(preps: Seq[(Array[String], RDD[Array[Long]])]): Seq[HyperCube.RelStat] = {
     if (preps.isEmpty) return Nil
     val sc = preps.head._2.sparkContext
     val widths = preps.map(_._1.length).toArray
@@ -132,34 +80,29 @@ object SkewStats {
       rdd.map(r => (i, r))
     }.toSeq)
     val zero = (new Array[Long](preps.size),
-      if (skewAware) widths.map(w => Array.fill(w)(new MisraGries(32)))
-      else Array.empty[Array[MisraGries]])
+      widths.map(w => Array.fill(w)(new MisraGries(32))))
     val (counts, sketches) = tagged.treeAggregate(zero)(
       seqOp = { case ((n, sk), (i, row)) =>
         n(i) += 1
-        if (sk.nonEmpty) {
-          var j = 0
-          while (j < row.length) { sk(i)(j).add(row(j)); j += 1 }
-        }
+        var j = 0
+        while (j < row.length) { sk(i)(j).add(row(j)); j += 1 }
         (n, sk)
       },
       combOp = { case ((n1, a), (n2, b)) =>
         var i = 0
         while (i < n1.length) { n1(i) += n2(i); i += 1 }
-        if (a.nonEmpty) {
-          var r = 0
-          while (r < a.length) {
-            var j = 0
-            while (j < a(r).length) { a(r)(j).merge(b(r)(j)); j += 1 }
-            r += 1
-          }
+        var r = 0
+        while (r < a.length) {
+          var j = 0
+          while (j < a(r).length) { a(r)(j).merge(b(r)(j)); j += 1 }
+          r += 1
         }
         (n1, a)
       })
     preps.zipWithIndex.map { case ((attrs, _), i) =>
       val n = counts(i)
       val heavy =
-        if (!skewAware || n == 0) Map.empty[String, Double]
+        if (n == 0) Map.empty[String, Double]
         else attrs.indices.map(j =>
           attrs(j) -> sketches(i)(j).maxCount.toDouble / n).toMap
       HyperCube.RelStat(attrs.toSet, n, n * (8L * attrs.length + 24), heavy)
@@ -242,20 +185,5 @@ object SkewStats {
       }
       if (caps.isEmpty) 1.0 else caps.min
     }.product
-  }
-
-  def relStat(attrs: Array[String], rdd: RDD[Array[Long]],
-      skewAware: Boolean): HyperCube.RelStat = {
-    val width = attrs.length
-    if (!skewAware) {
-      val n = rdd.count()
-      HyperCube.RelStat(attrs.toSet, n, n * (8L * width + 24))
-    } else {
-      val (n, sketches) = collect(rdd, width)
-      val heavy =
-        if (n == 0) Map.empty[String, Double]
-        else attrs.indices.map(i => attrs(i) -> sketches(i).maxCount.toDouble / n).toMap
-      HyperCube.RelStat(attrs.toSet, n, n * (8L * width + 24), heavy)
-    }
   }
 }

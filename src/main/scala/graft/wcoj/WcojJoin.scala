@@ -1,169 +1,17 @@
 package graft.wcoj
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed worst-case-optimal multiway join (SURVEY §7.5 step (b)): the
-  * reference's PullPairExchange + LeapFrogJoin path re-expressed as a
-  * single-attribute Shares partitioning over Spark.
-  *
-  * Partitioning scheme ("Shares-lite"): hash-partition every relation that
-  * contains the FIRST attribute of the global order on that attribute;
-  * broadcast the relations that don't. Each partition then runs the full
-  * LeapFrog enumeration locally — correct because every output binding fixes
-  * a value of the first attribute and therefore lands in exactly one
-  * partition, while broadcast relations are visible everywhere.
-  *
-  * Scale envelope: the broadcast side must fit in executor memory (true for
-  * pattern queries where every relation is a projection of the same edge
-  * table and the edge table fits). [[leapfrog]] measures the complement
-  * before collecting it: when the estimated broadcast payload exceeds
-  * `graft.wcoj.broadcastBudgetBytes` (default 64 MB) it routes the whole
-  * join to [[leapfrogHyperCube]] — the full Shares shuffle with no broadcast
-  * requirement — so no driver collect of an unbounded relation is reachable
-  * by default. The route taken is recorded in the session conf
-  * `graft.wcoj.lastRoute` ("broadcast" | "hypercube") for observability.
-  * Skew on the first attribute behaves like any hash-partitioned hot key;
-  * pick the highest-cardinality attribute first.
-  *
-  * v1 restriction: join attributes must be LongType (graph ids).
+  * reference's PullPairExchange + LeapFrogJoin path as ONE Catalyst operator,
+  * [[LeapFrogJoinExec]] — a HyperCube/Shares shuffle with budgeted,
+  * skew-aware shares (or a single co-located cell when inputs and the
+  * estimated output are measured small), then LeapFrog enumeration per cell.
+  * Every entry point below builds that node; there is no second executor.
   */
 object WcojJoin {
-
-  /** Natural-join `relations` (DataFrame + its attribute names, which must
-    * be Long columns) worst-case-optimally, emitting one row per binding of
-    * `attrOrder`.
-    */
-  def leapfrog(spark: SparkSession, relations: Seq[(DataFrame, Seq[String])],
-      attrOrder: Seq[String], numPartitions: Int = 0): DataFrame = {
-    require(relations.nonEmpty)
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-
-    val order = attrOrder.toArray
-    val first = order.head
-
-    // project each relation to its attrs REORDERED to follow the global
-    // attribute order, as Array[Long] rows
-    def prepared(df: DataFrame, attrs: Seq[String]): (Array[String], org.apache.spark.rdd.RDD[Array[Long]]) = {
-      val sortedAttrs = attrs.sortBy(order.indexOf(_)).toArray
-      val rdd = df.select(sortedAttrs.map(c => col(c).cast(LongType)): _*)
-        .rdd.map(r => Array.tabulate(sortedAttrs.length)(i => r.getLong(i)))
-      (sortedAttrs, rdd)
-    }
-
-    val prep = relations.map { case (df, attrs) => prepared(df, attrs) }
-    val (withFirst, without) = prep.partition(_._1.contains(first))
-    require(withFirst.nonEmpty, s"no relation contains leading attribute $first")
-
-    // the complement is collected to the driver and broadcast, so its size
-    // must be bounded BEFORE the collect: one counting pass over the
-    // (persisted) complement relations, and past the budget the whole join
-    // takes the HyperCube path — one shuffle, zero broadcast requirement
-    if (without.nonEmpty) {
-      without.foreach(_._2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val budget = spark.conf.get(
-        "graft.wcoj.broadcastBudgetBytes", (64L << 20).toString).toLong
-      val complementBytes = without.map { case (attrs, rdd) =>
-        SkewStats.relStat(attrs, rdd, skewAware = false).bytes
-      }.sum
-      if (complementBytes > budget) {
-        without.foreach(_._2.unpersist(blocking = false))
-        spark.conf.set("graft.wcoj.lastRoute", "hypercube")
-        return leapfrogHyperCube(spark, relations, attrOrder, numPartitions)
-      }
-    }
-
-    // broadcast the relations lacking the partitioning attribute (counted
-    // above: under budget; the collect reads the cache, not a second scan)
-    val bc = spark.sparkContext.broadcast(
-      without.map { case (attrs, rdd) =>
-        LeapFrog.Relation(attrs, LeapFrog.sortRows(rdd.collect()))
-      })
-    without.foreach(_._2.unpersist(blocking = false))
-
-    // leading-attribute skew guard: hash-partitioning on the FIRST
-    // attribute alone sends every row of a celebrity leading value to ONE
-    // task — that task then holds (and enumerates against) the hot value's
-    // entire slice of every partitioned relation. The Misra-Gries sketch
-    // rides the routing shuffle's MAP side as an accumulator (zero extra
-    // pass on clean inputs — a dedicated stats job measured +20% on the
-    // whole join) and is checked after the map-side materialization, BEFORE
-    // any enumeration: past `graft.wcoj.cellBudgetBytes` (the same per-cell
-    // budget the Shares optimizer plans under) the whole join reroutes to
-    // the HyperCube grid, which splits the hot value across the OTHER
-    // attributes' share dimensions, and only the shuffle write is wasted —
-    // its map side distributes evenly even under skew, and the drain task
-    // streams-and-discards, so the reroute happens before any hot-task
-    // blow-up can materialize. `graft.wcoj.skewGuard=false` skips the
-    // sketch (known-clean escape hatch); error direction: the MG estimate
-    // is a lower bound and accumulator retries only overcount, so misses
-    // err toward "no skew" and retries toward the perf-only reroute.
-    val cellBudget = spark.conf.get(
-      "graft.wcoj.cellBudgetBytes", (64L << 20).toString).toLong
-    val guardOn = spark.conf.get("graft.wcoj.skewGuard", "true").toBoolean
-    val accs: Seq[SkewStats.MgAccumulator] =
-      if (!guardOn) Seq.empty
-      else withFirst.map { _ =>
-        val a = new SkewStats.MgAccumulator()
-        spark.sparkContext.register(a, "graft.wcoj.leadingMg")
-        a
-      }
-
-    // tag rows with their relation index, then ONE shuffle on hash(first)
-    val partitioner = new HashPartitioner(parts)
-    val tagged = withFirst.zipWithIndex.map { case ((attrs, rdd), idx) =>
-      val firstPos = attrs.indexOf(first)
-      val acc = if (guardOn) accs(idx) else null
-      rdd.map { row =>
-        if (acc != null) acc.add(row(firstPos))
-        (row(firstPos), (idx, row))
-      }
-    }.reduce(_ union _)
-    val routed = tagged.partitionBy(partitioner)
-    // materialize the shuffle (fills the guard accumulators); the consumer
-    // job reuses the shuffle files (skipped stage, no re-count)
-    spark.sparkContext.runJob(routed, (_: Iterator[(Long, (Int, Array[Long]))]) => ())
-    if (guardOn) {
-      // one task holds ONE hash bucket of the first attribute: masses from
-      // different relations co-locate only when their heavy value is the
-      // SAME value, so sum per heavy-value identity and take the max over
-      // values — summing blindly would overestimate a single task's payload
-      // and trigger a spurious (perf-only) reroute.
-      val hotMasses = withFirst.zip(accs).map { case ((attrs, _), acc) =>
-        val sk = acc.value
-        val rowBytes = 8L * attrs.length + 24
-        (sk.maxEntry.map(_._1), sk.maxCount * rowBytes)
-      }
-      val hotTaskBytes = hotMasses.groupBy(_._1)
-        .map { case (_, ms) => ms.map(_._2).sum }.foldLeft(0L)(math.max)
-      if (hotTaskBytes > cellBudget) {
-        bc.destroy() // the complement broadcast never reaches a consumer
-        spark.conf.set("graft.wcoj.lastRoute", "hypercube")
-        return leapfrogHyperCube(spark, relations, attrOrder, numPartitions)
-      }
-    }
-    spark.conf.set("graft.wcoj.lastRoute", "broadcast")
-
-    val attrsByIdx = withFirst.map(_._1).toArray
-    val resultRdd = routed.mapPartitions { it =>
-      val buckets = Array.fill(attrsByIdx.length)(new scala.collection.mutable.ArrayBuffer[Array[Long]]())
-      it.foreach { case (_, (idx, row)) => buckets(idx) += row }
-      val local = attrsByIdx.indices.map { i =>
-        LeapFrog.Relation(attrsByIdx(i), LeapFrog.sortRows(buckets(i).toArray))
-      }
-      val all = local ++ bc.value
-      if (local.exists(_.rows.isEmpty)) Iterator.empty
-      // lazy enumeration, O(depths) state; clone per row because external
-      // Row consumers may retain references
-      else LeapFrog.joinIterator(all, order).map(b => Row.fromSeq(b.clone().toIndexedSeq))
-    }
-
-    val schema = StructType(order.map(a => StructField(a, LongType, nullable = false)))
-    spark.createDataFrame(resultRdd, schema)
-  }
 
   /** The Catalyst-native WCOJ path: builds a [[LeapFrogJoinPlan]] logical
     * node (planned by [[WcojStrategy]] into [[LeapFrogJoinExec]]) so the
@@ -311,89 +159,5 @@ object WcojJoin {
       case DateType | TimestampType | TimestampNTZType => true
       case _ => false
     }
-  }
-
-  /** Full HyperCube/Shares leapfrog: ONE communication round for the whole
-    * n-way join with NO broadcast requirement — each relation's tuples are
-    * replicated only across the grid dimensions of attributes it lacks,
-    * with shares chosen by [[HyperCube.optimalShares]] to minimize that
-    * replication. This is the reference's PullPairExchange capability; use
-    * it when no single attribute covers enough relations for [[leapfrog]]'s
-    * broadcast complement to fit in memory.
-    */
-  def leapfrogHyperCube(spark: SparkSession, relations: Seq[(DataFrame, Seq[String])],
-      attrOrder: Seq[String], maxCells: Int = 0): DataFrame = {
-    require(relations.nonEmpty)
-    val cells = if (maxCells > 0) maxCells else spark.sparkContext.defaultParallelism
-    val order = attrOrder.toArray
-
-    def prep(df: DataFrame, attrs: Seq[String]): (Array[String], org.apache.spark.rdd.RDD[Array[Long]]) = {
-      val sortedAttrs = attrs.sortBy(order.indexOf(_)).toArray
-      val rdd = df.select(sortedAttrs.map(c => col(c).cast(LongType)): _*)
-        .rdd.map(r => Array.tabulate(sortedAttrs.length)(i => r.getLong(i)))
-      (sortedAttrs, rdd)
-    }
-    // persisted: the share optimizer's count AND the routing pass both
-    // consume these — without the persist every input computes twice.
-    val prepped = relations.map { case (df, attrs) =>
-      val (sortedAttrs, rdd) = prep(df, attrs)
-      (sortedAttrs, rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-
-    // one stats pass (count + heavy-hitter sketches; also warms the cache),
-    // then memory-budgeted skew-aware share choice — see LeapFrogJoinExec.
-    val skewAware = spark.conf.get("graft.wcoj.skewAware", "true").toBoolean
-    val budget = spark.conf.get("graft.wcoj.cellBudgetBytes", (64L << 20).toString).toLong
-    val capConf = spark.conf.get("graft.wcoj.maxCellsCap", "4096").toInt
-    val stats = prepped.map { case (attrs, rdd) => SkewStats.relStat(attrs, rdd, skewAware) }
-    val cap = if (maxCells > 0) cells else math.max(cells, capConf)
-    val shares = HyperCube.budgetedShares(order.toSeq, stats, cells, budget, cap).shares
-    val bcShares = spark.sparkContext.broadcast(shares)
-    val nCells = shares.numCells
-
-    // route every tuple to all consistent cells
-    val tagged = prepped.zipWithIndex.map { case ((attrs, rdd), idx) =>
-      val attrIdx = attrs.map(a => order.indexOf(a))
-      rdd.flatMap { row =>
-        val sh = bcShares.value
-        // fixed buckets for owned attributes, free dimensions enumerate
-        val bucket = new Array[Int](order.length)
-        val free = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var j = 0
-        while (j < order.length) { bucket(j) = -1; j += 1 }
-        attrs.indices.foreach { k =>
-          bucket(attrIdx(k)) = sh.bucketOf(attrs(k), row(k))
-        }
-        (0 until order.length).foreach(j => if (bucket(j) < 0) free += j)
-        def cellsFor(fi: Int, acc: Array[Int]): Iterator[Int] =
-          if (fi == free.length) Iterator.single(sh.cellId(acc))
-          else (0 until sh.p(free(fi))).iterator.flatMap { b =>
-            val a2 = acc.clone(); a2(free(fi)) = b; cellsFor(fi + 1, a2)
-          }
-        cellsFor(0, bucket).map(c => (c, (idx, row)))
-      }
-    }.reduce(_ union _)
-
-    val routed = tagged.partitionBy(new HashPartitioner(nCells) {
-      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-    })
-    // materialize the shuffle while inputs are cached, then free the cache;
-    // the consumer job reuses the shuffle files (skipped stage)
-    spark.sparkContext.runJob(routed, (_: Iterator[(Int, (Int, Array[Long]))]) => ())
-    prepped.foreach(_._2.unpersist(blocking = false))
-
-    val attrsByIdx = prepped.map(_._1).toArray
-    val resultRdd = routed.mapPartitions { it =>
-      val buckets = Array.fill(attrsByIdx.length)(new scala.collection.mutable.ArrayBuffer[Array[Long]]())
-      it.foreach { case (_, (idx, row)) => buckets(idx) += row }
-      val local = attrsByIdx.indices.map { i =>
-        LeapFrog.Relation(attrsByIdx(i), LeapFrog.sortRows(buckets(i).toArray))
-      }
-      if (local.exists(_.rows.isEmpty)) Iterator.empty
-      // lazy enumeration, O(depths) state; clone per row for Row consumers
-      else LeapFrog.joinIterator(local, order).map(b => Row.fromSeq(b.clone().toIndexedSeq))
-    }
-    val schema = StructType(order.map(a => StructField(a, LongType, nullable = false)))
-    spark.createDataFrame(resultRdd, schema)
   }
 }

@@ -25,6 +25,17 @@ class RandomDifferentialSpec extends SparkSpec {
   private def canon(df: DataFrame, cols: Seq[String]): Set[Seq[Long]] =
     df.select(cols.map(col): _*).collect().map(r => cols.indices.map(r.getLong)).toSet
 
+  /** The LeapFrog exec forced onto its HyperCube grid (single-cell collapse
+    * off), canonicalized; also asserts the run used more than one cell.
+    */
+  private def viaGrid(rels: Seq[(DataFrame, Seq[String])], cols: Seq[String]): Set[Seq[Long]] = {
+    spark.conf.set("graft.wcoj.singleCellBytes", "0")
+    val got = try canon(WcojJoin.leapfrogCatalyst(spark, rels, cols), cols)
+      finally spark.conf.unset("graft.wcoj.singleCellBytes")
+    assert(spark.conf.get("graft.wcoj.lastCells").toInt > 1, "grid cells")
+    got
+  }
+
   test("4-cycle: naive == bushy GHD == Yannakakis == wcoj-routed == hypercube") {
     // targets the greedy-bushy bag join and the wcoj routing on the exact
     // shape they were built for
@@ -47,8 +58,7 @@ class RandomDifferentialSpec extends SparkSpec {
         assert(canon(MultiwayJoin.join(fixed), outCols) === base, "bushy GHD")
         assert(canon(MultiwayJoin.join(fixed, reduce = true), outCols) === base, "Yannakakis")
         assert(canon(MultiwayJoin.join(fixed, wcoj = true), outCols) === base, "wcoj-routed")
-        assert(canon(WcojJoin.leapfrogHyperCube(spark, fixed, outCols, maxCells = 4), outCols) === base,
-          "hypercube")
+        assert(viaGrid(fixed, outCols) === base, "hypercube")
       }
     }
   }
@@ -194,8 +204,7 @@ class RandomDifferentialSpec extends SparkSpec {
         assert(canon(MultiwayJoin.join(rels, wcoj = true), outCols) === base, "wcoj-routed")
         // hypercube needs SET-semantics inputs (they are: .distinct rows) and
         // an attr order; output arity == all attrs
-        val cube = WcojJoin.leapfrogHyperCube(spark, rels, outCols, maxCells = 4)
-        assert(canon(cube, outCols) === base, "hypercube")
+        assert(viaGrid(rels, outCols) === base, "hypercube")
       }
     }
   }

@@ -79,4 +79,17 @@ class EngineSessionSpec extends SparkSpec {
     assert(card(Seq("x", "y")) === 3L)   // (1,a),(2,a),(2,b)
     assert(card(Seq("x", "y", "z")) === 4L)
   }
+
+  test("q239 reads its CBO estimates under its own session, not the active one") {
+    // plan stats read the ACTIVE session's conf: with a CBO-off session
+    // active on this thread, estimates taken under it come out undefined
+    val other = spark.newSession()
+    other.conf.set("spark.sql.cbo.enabled", "false")
+    org.apache.spark.sql.SparkSession.setActiveSession(other)
+    val rows = try graft.queries.Relational.queries("q239_cbo_estimation")(spark, sf0001)
+        .collect()
+      finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(rows.length === 2)
+    assert(rows.forall(_.getAs[Boolean]("est_defined")), rows.mkString("; "))
+  }
 }

@@ -827,27 +827,6 @@ class SourceOverlapSpec extends graft.SparkSpec {
     // s1 ∩ s2 = {abc, bcd}; s3 shares nothing
     assert(out === Set(("s1", "s2", 2L)))
   }
-
-  test("hash-narrowed shuffle equals the shingle-string path (r19, guide §2.3)") {
-    // the r19 change shuffles xxhash64(shingle) instead of the string; the
-    // report must be value-identical (collisions are 2^-64-rare and the
-    // oracle re-verifies exactness at every shipped SF)
-    val docs = Seq(
-      ("s1", "the quick brown fox jumps over the lazy dog"),
-      ("s2", "the quick brown fox naps under the lazy dog"),
-      ("s3", "a wholly different document with no shared windows at all"),
-      ("s1", "shared tail the lazy dog sleeps"),
-      ("s3", "the quick brown fox")).toDF("source", "text")
-    def run(): Set[(String, String, Long)] =
-      Contamination.sourceOverlap(docs, "text", "source", k = 3)
-        .as[(String, String, Long)].collect().toSet
-    val hashed = run()
-    spark.conf.set("graft.overlap.hashShingles", "false")
-    val strings = try run()
-      finally spark.conf.unset("graft.overlap.hashShingles")
-    assert(hashed === strings)
-    assert(hashed.nonEmpty)
-  }
 }
 
 class TrigramPplSpec extends graft.SparkSpec {
@@ -2314,24 +2293,5 @@ class PmiBigramsSpec extends graft.SparkSpec {
         "text", minCount = 5, topK = 10)
       .select("w1").as[String].collect()
     assert(!out.contains("rare"))
-  }
-
-  test("shared-aggregate nBig equals the raw-occurrence count (r19, guide §2.4)") {
-    // nBig = Σ cxy over the unfiltered (w1, w2) aggregate ≡ the raw bigram
-    // occurrence count the old scalar branch re-scanned the corpus for —
-    // every output row (pmi included) must be bit-identical under both
-    val docs = Seq(
-      (1L, (Seq.fill(6)("hong kong") ++ (1 to 6)
-        .flatMap(i => Seq("the", s"w$i"))).mkString(" ")),
-      (2L, "hong kong hong kong the w1 the w2 extra tokens here"))
-      .toDF("id", "text")
-    def run(): Set[(Long, String, String, Long, Double)] =
-      Scoring.pmiBigrams(docs, "text", minCount = 3, topK = 10)
-        .as[(Long, String, String, Long, Double)].collect().toSet
-    val shared = run()
-    spark.conf.set("graft.pmi.sharedNBig", "false")
-    val raw = try run() finally spark.conf.unset("graft.pmi.sharedNBig")
-    assert(shared === raw)
-    assert(shared.nonEmpty)
   }
 }

@@ -255,9 +255,9 @@ object ScaleCheck {
     // copy) have exactly factor × the base triangle count, so a
     // worst-case-optimal plan must grow near-linearly — a binary-join
     // plan's intermediate (all 2-paths) grows the same way here, but the
-    // check pins the LeapFrog node's own scaling and that the measured
-    // route (broadcast complement vs HyperCube) flips on the byte budget,
-    // not on luck.
+    // check pins the LeapFrog node's own scaling and prints the cell count
+    // the exec chose (one co-located cell while measured small, a Shares
+    // grid past it).
     {
       val base = graft.Tables(spark, sfDir).orders
         .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
@@ -269,15 +269,15 @@ object ScaleCheck {
               (col("dst") + col("__rep") * 1000L).as("dst")))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val n = graft.wcoj.WcojJoin.leapfrog(spark,
+        val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
           Seq("a", "b", "c")).count()
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_triangle          x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs route=" +
-          spark.conf.get("graft.wcoj.lastRoute", "?"))
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs cells=" +
+          spark.conf.get("graft.wcoj.lastCells", "?"))
       }
     }
 
@@ -344,45 +344,6 @@ object ScaleCheck {
       }
     }
 
-    // skew-guard TAX on clean inputs: the same triangle join, guard on vs
-    // off (min-of-3, alternated order), at the DEFAULT 64 MB cell budget
-    // on unskewed data — the guard must not flip (route stays broadcast)
-    // and its cost must stay a small fraction of the join. Since r13 the
-    // Misra-Gries sketch rides the routing shuffle's map side as an
-    // accumulator instead of a dedicated stats job: measured tax fell from
-    // +20% (extra-pass design) to ≤~3%, within run-to-run noise.
-    {
-      val base = graft.Tables(spark, sfDir).orders
-        .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      for (factor <- Seq(1, 10, 50)) {
-        val edges = (if (factor == 1) base
-          else base.crossJoin(spark.range(factor).select(col("id").as("__rep")))
-            .select((col("src") + col("__rep") * 1000L).as("src"),
-              (col("dst") + col("__rep") * 1000L).as("dst")))
-          .localCheckpoint(true)
-        def run(): Long = graft.wcoj.WcojJoin.leapfrog(spark,
-          Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-            (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-            (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
-          Seq("a", "b", "c")).count()
-        val nWarm = run()
-        var onSecs = Double.MaxValue; var offSecs = Double.MaxValue
-        for (i <- 1 to 3; on <- if (i % 2 == 0) Seq(true, false) else Seq(false, true)) {
-          spark.conf.set("graft.wcoj.skewGuard", on.toString)
-          val t0 = System.nanoTime(); val n = run()
-          require(n == nWarm, s"guard changed the answer: $n != $nWarm")
-          val s = (System.nanoTime() - t0) / 1e9
-          if (on) onSecs = math.min(onSecs, s) else offSecs = math.min(offSecs, s)
-        }
-        spark.conf.unset("graft.wcoj.skewGuard")
-        println(f"[scale] wcoj_guard_tax         x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$nWarm%9d on=$onSecs%6.2fs " +
-          f"off=$offSecs%6.2fs tax=${(onSecs / offSecs - 1) * 100}%+5.1f%% route=" +
-          spark.conf.get("graft.wcoj.lastRoute", "?"))
-      }
-    }
-
     // core+tail HYBRID route (r14): a triangle core on a dense synthetic
     // digraph (50k nodes, deg 30 — the binary plan materializes the n·d²
     // ≈ 45M-row path-2 intermediate where WCOJ is triangle-bounded) with
@@ -438,14 +399,13 @@ object ScaleCheck {
       }
     }
 
-    // leading-attribute skew guard: a planted celebrity vertex (half of a
-    // replicated graph's edges re-sourced to one node) makes the raw
-    // leapfrog's single-attribute partitioning concentrate the whole hot
-    // enumeration in one task — the guard must FLIP the route to hypercube
-    // on the measured heavy-hitter mass, while the clean copy stays on the
-    // broadcast path. Run under an explicit 1 MB cell budget (the q186
-    // budget-pinning pattern): the flip condition is mass > budget, so a
-    // small budget demonstrates the same mechanism the 64 MB default
+    // skewed leading attribute: a planted celebrity vertex would put its
+    // whole enumeration in one task under single-attribute hashing. The
+    // exec's skew-aware shares give the hot attribute a small share and
+    // grow the grid until the estimated max cell payload fits the budget;
+    // the check prints time and cells for the clean and the hot copy. Run
+    // under an explicit 1 MB cell budget: the grid grows on mass > budget,
+    // so a small budget demonstrates the same mechanism the 64 MB default
     // applies at 64× the data.
     {
       spark.conf.set("graft.wcoj.cellBudgetBytes", (1L << 20).toString)
@@ -466,15 +426,15 @@ object ScaleCheck {
             (col("id") + 1000000L).as("dst"))))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val n = graft.wcoj.WcojJoin.leapfrog(spark,
+        val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
           Seq("a", "b", "c")).count()
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_skew_guard        hot=$hot%-5s " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs route=" +
-          spark.conf.get("graft.wcoj.lastRoute", "?"))
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs cells=" +
+          spark.conf.get("graft.wcoj.lastCells", "?"))
       }
       spark.conf.unset("graft.wcoj.cellBudgetBytes")
     }

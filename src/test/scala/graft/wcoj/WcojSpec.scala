@@ -170,12 +170,10 @@ class SkewStatsSpec extends SparkSpec {
       Array(if (i % 2 == 0) 42L else i.toLong, i.toLong)
     }
     val rdd = spark.sparkContext.parallelize(rows, 4)
-    val st = SkewStats.relStat(Array("x", "y"), rdd, skewAware = true)
+    val st = SkewStats.relStats(Seq((Array("x", "y"), rdd))).head
     assert(st.rows === 4000L)
     assert(st.heavyFrac("x") > 0.3) // true fraction 0.5, MG lower bound
     assert(st.heavyFrac("y") < 0.05)
-    val off = SkewStats.relStat(Array("x", "y"), rdd, skewAware = false)
-    assert(off.heavyFrac.isEmpty && off.rows === 4000L)
   }
 
   test("relStats (one combined job) == per-relation relStat for every relation") {
@@ -185,23 +183,21 @@ class SkewStatsSpec extends SparkSpec {
     val r2 = sc.parallelize((1 to 500).map(i => Array(i.toLong)), 2)
     val r3 = sc.parallelize(Seq.empty[Array[Long]], 1) // empty relation
     val preps = Seq((Array("x", "y"), r1), (Array("z"), r2), (Array("w"), r3))
-    for (aware <- Seq(true, false)) {
-      val combined = SkewStats.relStats(preps, aware)
-      val single = preps.map { case (a, r) => SkewStats.relStat(a, r, aware) }
-      combined.zip(single).foreach { case (c, s) =>
-        assert(c.attrs === s.attrs)
-        assert(c.rows === s.rows)
-        assert(c.bytes === s.bytes)
-        // sketches are merge-order dependent; both are valid MG lower
-        // bounds — assert the combined one keeps the guarantee instead
-        // of bitwise equality
-        if (aware && c.rows > 0) c.heavyFrac.foreach { case (k, f) =>
-          assert(f >= 0.0 && f <= 1.0, s"$k frac $f")
-        }
+    val combined = SkewStats.relStats(preps)
+    val single = preps.map(p => SkewStats.relStats(Seq(p)).head)
+    combined.zip(single).foreach { case (c, s) =>
+      assert(c.attrs === s.attrs)
+      assert(c.rows === s.rows)
+      assert(c.bytes === s.bytes)
+      // sketches are merge-order dependent; both are valid MG lower
+      // bounds — assert the combined one keeps the guarantee instead
+      // of bitwise equality
+      if (c.rows > 0) c.heavyFrac.foreach { case (k, f) =>
+        assert(f >= 0.0 && f <= 1.0, s"$k frac $f")
       }
-      // the skewed column still reads as skewed through the combined pass
-      if (aware) assert(combined.head.heavyFrac("x") > 0.3)
     }
+    // the skewed column still reads as skewed through the combined pass
+    assert(combined.head.heavyFrac("x") > 0.3)
   }
 
   test("degreeBound is a true output cap and exact on hand-built shapes") {
@@ -338,6 +334,18 @@ class SkewStatsSpec extends SparkSpec {
 class WcojJoinSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Runs `f` with the single-cell collapse off, so LeapFrogJoinExec routes
+    * through the Shares grid; `f` must execute the join (the exec reads the
+    * conf when its routing runs).
+    */
+  private def onGrid[T](f: => T): T = {
+    spark.conf.set("graft.wcoj.singleCellBytes", "0")
+    try f finally spark.conf.unset("graft.wcoj.singleCellBytes")
+  }
+
+  /** Cells the last executed LeapFrogJoinExec routed through. */
+  private def lastCells: Int = spark.conf.get("graft.wcoj.lastCells").toInt
+
   test("distributed triangle equals DataFrame 3-way join") {
     val rnd = new scala.util.Random(42)
     val edges = Seq.fill(400)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
@@ -348,13 +356,14 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val viaWcoj = WcojJoin.leapfrog(spark, Seq(
+    val viaWcoj = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
-      Seq("a", "b", "c"), numPartitions = 4)
-      .as[(Long, Long, Long)].collect().toSet
+      Seq("a", "b", "c"))
+      .as[(Long, Long, Long)].collect().toSet)
 
+    assert(lastCells > 1)
     assert(viaWcoj === viaDf)
     assert(viaWcoj.nonEmpty) // non-vacuous on this density
   }
@@ -377,85 +386,36 @@ class WcojJoinSpec extends SparkSpec {
     assert(viaWcoj.exists(_._1 == 0L)) // the genuine-0 rows DO join
   }
 
-  test("oversized broadcast complement auto-routes to the hypercube path") {
-    // the (b, c) relation lacks the leading attribute a, so the broadcast
-    // path would driver-collect it — with a budget below its size, leapfrog
-    // must take the no-broadcast HyperCube route and agree exactly
-    val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(350)((rnd.nextInt(35).toLong, rnd.nextInt(35).toLong))
-      .distinct.filter(e => e._1 != e._2).toDF("src", "dst")
-    val rels = Seq(
-      (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
-      (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
-      (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c")))
-    def run(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c"), numPartitions = 4)
-        .as[(Long, Long, Long)].collect().toSet
-    try {
-      spark.conf.set("graft.wcoj.broadcastBudgetBytes", "1")
-      val viaCube = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "hypercube")
-      spark.conf.set("graft.wcoj.broadcastBudgetBytes", (64L << 20).toString)
-      val viaBroadcast = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "broadcast")
-      assert(viaCube === viaBroadcast)
-      assert(viaCube.nonEmpty)
-    } finally spark.conf.unset("graft.wcoj.broadcastBudgetBytes")
-  }
-
-  test("celebrity leading vertex trips the skew guard onto the hypercube path") {
-    // a hot leading value: ~85% of edges start at vertex 0, so hashing on
-    // the first attribute alone would serialize that value's whole
-    // enumeration into one task. With a cell budget below the hot slice's
-    // payload the guard must reroute the join to the hypercube grid and
-    // agree exactly with the unguarded broadcast route.
+  test("celebrity leading vertex gets the smallest hypercube share") {
+    // a hot leading value: ~85% of the rows of both relations carrying `a`
+    // hold a = 0, so hashing on `a` cannot split them. The skew-aware
+    // shares must spend the grid on b and c instead, and the rows must
+    // still equal plain binary joins.
     val rnd = new scala.util.Random(13)
-    val hot = Seq.fill(300)((0L, 1L + rnd.nextInt(40).toLong))
-    val cold = Seq.fill(60)((1L + rnd.nextInt(40).toLong, 1L + rnd.nextInt(40).toLong))
-    val edges = (hot ++ cold).distinct.filter(e => e._1 != e._2).toDF("src", "dst")
-    val rels = Seq(
-      (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
-      (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
-      (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c")))
-    def run(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c"), numPartitions = 4)
-        .as[(Long, Long, Long)].collect().toSet
-    try {
-      spark.conf.set("graft.wcoj.cellBudgetBytes", "64")
-      val viaCube = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "hypercube")
-      spark.conf.set("graft.wcoj.cellBudgetBytes", (64L << 20).toString)
-      val viaBroadcast = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "broadcast")
-      assert(viaCube === viaBroadcast)
-      assert(viaCube.nonEmpty)
-    } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
-  }
+    def hot = Seq.fill(300)((0L, 1L + rnd.nextInt(40).toLong))
+    def cold = Seq.fill(60)((1L + rnd.nextInt(40).toLong, 1L + rnd.nextInt(40).toLong))
+    val ab = (hot ++ cold).distinct.toDF("a", "b")
+    val ac = (hot ++ cold).distinct.toDF("a", "c")
+    val bc = cold.distinct.toDF("b", "c")
+    val viaDf = ab.join(bc, "b").join(ac, Seq("a", "c"))
+      .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-  test("skew guard also covers the NO-complement shape (every relation carries the lead)") {
-    // a 2-relation star on `a`: both relations carry the leading attribute,
-    // so the broadcast-budget check never runs — the skew guard is the only
-    // thing standing between a celebrity lead value and a one-task join.
-    val rnd = new scala.util.Random(17)
-    val hot = Seq.fill(400)((0L, 1L + rnd.nextInt(300).toLong))
-    val cold = Seq.fill(80)((1L + rnd.nextInt(40).toLong, 1L + rnd.nextInt(40).toLong))
-    val edges = (hot ++ cold).distinct.filter(e => e._1 != e._2).toDF("src", "dst")
-    val rels = Seq(
-      (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
-      (edges.select($"src".as("a"), $"dst".as("c")), Seq("a", "c")))
-    def run(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c"), numPartitions = 4)
-        .as[(Long, Long, Long)].collect().toSet
-    try {
-      spark.conf.set("graft.wcoj.cellBudgetBytes", "64")
-      val viaCube = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "hypercube")
-      spark.conf.set("graft.wcoj.cellBudgetBytes", (64L << 20).toString)
-      val viaBroadcast = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "broadcast")
-      assert(viaCube === viaBroadcast)
-      assert(viaCube.nonEmpty)
-    } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
+    val out = WcojJoin.leapfrogCatalyst(spark,
+      Seq((ab, Seq("a", "b")), (bc, Seq("b", "c")), (ac, Seq("a", "c"))),
+      Seq("a", "b", "c"))
+    // collect THIS Dataset: its executed plan holds the exec that ran
+    val viaWcoj = onGrid(out.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(viaWcoj === viaDf)
+    assert(viaWcoj.nonEmpty)
+
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val shares = Aqe.collect(out.queryExecution.executedPlan) {
+      case e: LeapFrogJoinExec => e.chosen
+    }.flatten.head.shares
+    def p(attr: String) = shares.p(shares.attrs.indexOf(attr))
+    assert(shares.numCells === lastCells && lastCells > 1)
+    assert(p("a") < p("b") && p("a") < p("c"), shares.p.mkString(","))
   }
 
   test("hypercube triangle equals DataFrame 3-way join (no broadcast side)") {
@@ -468,13 +428,14 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val viaCube = WcojJoin.leapfrogHyperCube(spark, Seq(
+    val viaCube = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
-      Seq("a", "b", "c"), maxCells = 8)
-      .as[(Long, Long, Long)].collect().toSet
+      Seq("a", "b", "c"))
+      .as[(Long, Long, Long)].collect().toSet)
 
+    assert(lastCells > 1)
     assert(viaCube === viaDf)
     assert(viaCube.nonEmpty)
   }
@@ -597,10 +558,13 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("d")), Seq("d", "a"))
       .select("a", "b", "c", "d").as[(Long, Long, Long, Long)].collect().toSet
 
-    val viaLf = WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c", "d"),
-      numPartitions = 4).as[(Long, Long, Long, Long)].collect().toSet
-    val viaCube = WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c", "d"),
-      maxCells = 8).as[(Long, Long, Long, Long)].collect().toSet
+    // both exec routes: the default (output-aware, may collapse to one
+    // cell) and the forced grid
+    def run() = WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c", "d"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    val viaLf = run()
+    val viaCube = onGrid(run())
+    assert(lastCells > 1)
 
     assert(viaLf === viaDf)
     assert(viaCube === viaDf)
@@ -622,10 +586,11 @@ class WcojJoinSpec extends SparkSpec {
 
     spark.conf.set("graft.wcoj.cellBudgetBytes", "16384")
     try {
-      // maxCells = 0: floor is defaultParallelism, budget growth kicks in
-      val cube = WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c"))
-      assert(cube.rdd.getNumPartitions > spark.sparkContext.defaultParallelism)
-      assert(cube.as[(Long, Long, Long)].collect().toSet === viaDf)
+      // the floor is defaultParallelism; budget growth kicks in past it
+      val cube = onGrid(WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
+        .as[(Long, Long, Long)].collect().toSet)
+      assert(lastCells > spark.sparkContext.defaultParallelism)
+      assert(cube === viaDf)
     } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
   }
 
@@ -639,10 +604,10 @@ class WcojJoinSpec extends SparkSpec {
     val sRows = (1 to 5000).map(_ => Array(skewedB(), uni()))
     val tRows = (1 to 5000).map(_ => Array(uni(), uni()))
     val sc = spark.sparkContext
-    val stats = Seq(
-      SkewStats.relStat(Array("a", "b"), sc.parallelize(rRows, 4), skewAware = true),
-      SkewStats.relStat(Array("b", "c"), sc.parallelize(sRows, 4), skewAware = true),
-      SkewStats.relStat(Array("a", "c"), sc.parallelize(tRows, 4), skewAware = true))
+    val stats = SkewStats.relStats(Seq(
+      (Array("a", "b"), sc.parallelize(rRows, 4)),
+      (Array("b", "c"), sc.parallelize(sRows, 4)),
+      (Array("a", "c"), sc.parallelize(tRows, 4))))
 
     val attrs = Seq("a", "b", "c")
     val aware = HyperCube.optimalSharesStat(attrs, stats, 64).shares
@@ -679,9 +644,10 @@ class WcojJoinSpec extends SparkSpec {
   test("hypercube disconnected join degenerates to a partitioned cross product") {
     val x = Seq(1L, 2L).toDF("x")
     val y = Seq(10L, 20L, 30L).toDF("y")
-    val got = WcojJoin.leapfrogHyperCube(spark,
-        Seq((x, Seq("x")), (y, Seq("y"))), Seq("x", "y"), maxCells = 4)
-      .as[(Long, Long)].collect().toSet
+    val got = onGrid(WcojJoin.leapfrogCatalyst(spark,
+        Seq((x, Seq("x")), (y, Seq("y"))), Seq("x", "y"))
+      .as[(Long, Long)].collect().toSet)
+    assert(lastCells > 1)
     assert(got === (for (a <- Seq(1L, 2L); b <- Seq(10L, 20L, 30L)) yield (a, b)).toSet)
   }
 }
