@@ -334,21 +334,25 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val errors = scala.collection.mutable.Map.empty[String, String]
-    // per-phase decompositions a gate publishes through graft.bench.phases
-    // ("name:secs,name:secs"); recorded once per pass so a slow box shows
+    // each gate runs in its own QueryTrace; its spans (phase seconds) and
+    // numeric attributes (candidate counts, HyperCube cells, ...) are
+    // logged once per pass as "name:value,name:value", so a slow box shows
     // WHICH phase carries a swing inside the committed record itself
     val phaseLog = scala.collection.mutable.Map.empty[String, List[String]]
     def timeOne(name: String): Unit = {
       val fn = SparkEntry.queries(name)
-      spark.conf.unset("graft.bench.phases")
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).count()
+        val (_, trace) = QueryTrace.run(spark)(fn(spark, sfDir).count())
         val dt = (System.nanoTime() - t0) / 1e9
         samples(name) = dt :: samples.getOrElse(name, Nil)
-        spark.conf.getOption("graft.bench.phases").foreach { p =>
-          phaseLog(name) = p :: phaseLog.getOrElse(name, Nil)
-        }
+        val phases = trace.spans.map { case (k, secs) =>
+            s"$k:${math.rint(secs * 1000) / 1000.0}"
+          } ++ trace.attributes.collect {
+            case (k, v) if v.toDoubleOption.isDefined => s"$k:$v"
+          }
+        if (phases.nonEmpty)
+          phaseLog(name) = phases.mkString(",") :: phaseLog.getOrElse(name, Nil)
       } catch { case e: Throwable => errors(name) = e.getClass.getName }
       // UNTIMED inter-query drain: gates that pin localCheckpoint blocks
       // release them via the weak-ref ContextCleaner, which only fires

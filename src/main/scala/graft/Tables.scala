@@ -50,13 +50,17 @@ object Tables {
     * (single file, small crawl slice), where moving the rows once is
     * strictly cheaper than computing serially. `graft.scan.spreadWidth`
     * overrides the target width (`0` disables, for A/B probes).
+    *
+    * The width is read from `df.rdd` on every call, never cached on the
+    * plan: a parquet path's plan stays the same when its files are
+    * rewritten, so a cached width goes stale.
     */
   def spreadScan(df: DataFrame, key: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     val target = spreadWidthConf(spark)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    if (target <= 0 || scanWidth(df) * 2 > target) df
+    if (target <= 0 || df.rdd.getNumPartitions * 2 > target) df
     else df.repartition(target, col(key))
   }
 
@@ -72,28 +76,6 @@ object Tables {
           s"graft.scan.spreadWidth must be an integer or 'auto', got '$n'")
       }
     }
-
-  /** The frame's partition count via `df.rdd`, CACHED on the canonicalized
-    * analyzed plan (ADVICE r18: the raw `df.rdd` read forces physical
-    * planning + RDD conversion of the scan on the driver per invocation —
-    * harmless per gate, measurable on a driver handling thousands of
-    * concurrent queries over the same tables, where every invocation of a
-    * given table scan re-derives the same width). Bounded: cleared past
-    * 256 entries (a handful of distinct scans exist per workload).
-    */
-  private val scanWidthCache = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]()
-  private def scanWidth(df: DataFrame): Int = {
-    val key = df.queryExecution.analyzed.canonicalized
-    val cached = scanWidthCache.get(key)
-    if (cached != 0) cached
-    else {
-      val n = df.rdd.getNumPartitions
-      if (scanWidthCache.size > 256) scanWidthCache.clear()
-      scanWidthCache.put(key, n)
-      n
-    }
-  }
 
   /** [[spreadScan]]'s width rule for STREAMING sources, where the batch
     * partition inspection above is unavailable (`.rdd` on a streaming frame

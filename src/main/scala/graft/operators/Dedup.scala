@@ -190,7 +190,7 @@ object Dedup {
     * all bands shuffle once in a single join whose key carries the band
     * index; collisions only form within a band.
     */
-  private def lshBands(base: DataFrame, perms: Seq[Perm], bandSize: Int): DataFrame = {
+  private[operators] def lshBands(base: DataFrame, perms: Seq[Perm], bandSize: Int): DataFrame = {
     // all K signature mins in ONE native-expression pass over the tid array
     // (the HOF chain — K × transform+array_min — walks it K times)
     val sigs = base.select(col("doc_id"),
@@ -588,52 +588,17 @@ object Dedup {
       idCol, threshold, perms, bandSize)
   }
 
-  /** Work-profile diagnostics from [[incrementalCore]] invocations, as
-    * `label:number` strings (the [[graft.streaming.DocStreams]] phase-log
-    * format), computed only under `graft.dedup.diagnostics=true` and
-    * drained by the caller. Exists to close the r15 open question on the
-    * q115/q119/q214 family: the tripwire caught intermittent 2–8× swings
-    * in the LSH band-join phase that wall-clock alone cannot attribute —
-    * MORE WORK (a hot band key exploding the candidate join in that
-    * pass's store slice) reads identically to SAME WORK SLOWER (GC or
-    * box contention during a 239-gate run). Two tiers:
-    * `graft.dedup.diagnostics` emits the candidate-pair counts
-    * (observe-collected INSIDE the main execution — zero extra jobs) plus
-    * JVM GC seconds; `graft.dedup.diagnosticsBands` adds the per-band
-    * histogram (hottest-band mass + count cross-checks), one real extra
-    * job for probe tooling — on deterministic inputs it is a constant of
-    * (data, scheme), so the per-pass gate record doesn't re-measure it.
-    * The counts are pure functions of the inputs, so across passes of one
-    * deterministic gate they CANNOT move — any time swing at flat counts
-    * is proven environmental, and moving counts point at the exact band
-    * skew the [[Salting]] machinery would cap.
+  /** Inside a [[graft.QueryTrace]], also records the candidate-pair counts
+    * of the two band joins as `cand_corpus` and `cand_batch`. They are pure
+    * functions of the inputs, so a wall-clock swing at flat counts is
+    * environmental, and moving counts point at the band skew the
+    * [[Salting]] machinery would cap.
     */
-  private val incrementalDiag = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.ConcurrentLinkedQueue[String]]()
-
-  /** Drain the work profile for ONE producer key (ADVICE r16): the queue
-    * is keyed the same way [[graft.streaming.DocStreams]]'s phase log is —
-    * concurrent streams over different stores set
-    * `graft.dedup.diagKey = <store path>` on their own (cloned) session
-    * and drain their own key, so neither attributes the other's candidate
-    * counts to its own cycle. Direct/batch callers on a session without
-    * the conf produce and drain the default "" key.
-    */
-  def drainIncrementalDiag(key: String = ""): Seq[String] =
-    Option(incrementalDiag.remove(key))
-      .map(q => q.toArray(Array.empty[String]).toSeq).getOrElse(Nil)
-
-  private def jvmGcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-
   private def incrementalCore(batch: DataFrame, bBase0: DataFrame,
       cBase0: DataFrame, idCol: String, threshold: Double,
       perms: Seq[Perm], bandSize: Int): DataFrame = {
-    val diagOn = batch.sparkSession.conf
-      .get("graft.dedup.diagnostics", "false").toBoolean
+    val spark = batch.sparkSession
+    val traced = graft.QueryTrace.active(spark)
     val bBase = bBase0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cBase = cBase0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bBands = lshBands(bBase, perms, bandSize)
@@ -645,10 +610,8 @@ object Dedup {
     // where a count()-based first cut re-paid the store-side signature
     // pass per invocation (measured 0.7–1.0 s/cycle at sf0.1, ~30% of the
     // very gates under investigation)
-    val obsCorpus = if (diagOn) Some(new org.apache.spark.sql.Observation())
-      else None
-    val obsBatch = if (diagOn) Some(new org.apache.spark.sql.Observation())
-      else None
+    val obsCorpus, obsBatch =
+      if (traced) Some(new org.apache.spark.sql.Observation()) else None
     def observed(df: DataFrame, obs: Option[org.apache.spark.sql.Observation]) =
       obs.map(o => df.observe(o, count(lit(1)).as("cand"))).getOrElse(df)
 
@@ -671,95 +634,29 @@ object Dedup {
       .select(col("doc2").as("dup_id")).distinct()
 
     val dropped = vsCorpus.unionByName(withinBatch).distinct()
-    // GC delta brackets exactly the real dedup work (the localCheckpoint
-    // materializes the whole chain); the diag aggregations below run AFTER
-    // the bracket so they don't pollute their own measurement. Cumulative
-    // collector time covers the full local[N] JVM — on a cluster this is
-    // driver GC only, but the swing under investigation is a local-mode
-    // bench artifact.
-    val gc0 = if (diagOn) jvmGcMillis else 0L
-    // spill/peak-execution-memory bracket beside the GC bracket (VERDICT
-    // r18 #3, guide §5): a dedup wall-time swing at FLAT candidate counts
-    // was previously "environmental by elimination" — spilled-bytes delta
-    // and window-peak memory make memory pressure a RECORDED fact of the
-    // committed phase log instead. Same process-global caveat as the GC
-    // number (see ExecMetrics doc).
-    val sc = batch.sparkSession.sparkContext
-    val spill0 = if (diagOn) graft.ExecMetrics.spilledBytes(sc) else 0L
-    if (diagOn) graft.ExecMetrics.resetWindowPeak(sc)
     val out = batch.select(col(idCol).as("doc_id"))
       .join(dropped, col("doc_id") === col("dup_id"), "left_anti")
       .localCheckpoint(true) // survivors are batch-bound; release the bases now
-    if (diagOn) {
-      val gcSecs = (jvmGcMillis - gc0) / 1000.0
-      val tD0 = System.nanoTime()
-      // the localCheckpoint above completed the observed executions, so
-      // the metrics are already published; the bounded wait only covers
-      // listener-delivery latency. -1 = metric lost (never plausible as a
-      // count), so a harness change that silently breaks observe-through-
-      // checkpoint reads as loud nonsense, not as zero candidates.
-      // the metrics row is read POSITIONALLY: an EMPTY row means the
-      // optimizer eliminated the observed subtree (PropagateEmptyRelation —
-      // the first ingest cycle's empty store), i.e. the true count is 0;
-      // a timeout means the metric was genuinely lost → -1 (loud nonsense)
-      def candOf(obs: Option[org.apache.spark.sql.Observation]): Double =
-        obs.map { o =>
-          try {
-            val row = scala.concurrent.Await
-              .result(o.future, scala.concurrent.duration.Duration(2, "s"))
-            if (row.length == 0) 0.0
-            else if (row.isNullAt(0)) -1.0
-            else row.getLong(0).toDouble
-          } catch { case _: java.util.concurrent.TimeoutException => -1.0 }
-        }.getOrElse(-1.0)
-      val candCorpus = candOf(obsCorpus)
-      val candBatch = candOf(obsBatch)
-      // read the §5 counters AFTER the Observation awaits above — the
-      // futures resolve on query end, by which point the bracket's task-end
-      // events have been through the same listener bus
-      val spillMb = math.rint((graft.ExecMetrics.spilledBytes(sc) - spill0)
-        / 1048576.0 * 10) / 10.0
-      val peakMb = math.rint(graft.ExecMetrics.windowPeakBytes(sc)
-        / 1048576.0 * 10) / 10.0
-      val base = Seq(
-        "cand_corpus" -> candCorpus,
-        "cand_batch" -> candBatch,
-        "gc" -> gcSecs,
-        "spill_mb" -> spillMb,
-        "peak_exec_mb" -> peakMb)
-      // the per-band histogram (hottest-band mass) needs a groupBy the
-      // main flow doesn't have, i.e. a real job re-paying the store-side
-      // signature pass — and on deterministic inputs it is a CONSTANT of
-      // (data, scheme), so the per-pass phase log doesn't need it. Opt in
-      // (probe tooling / specs) via graft.dedup.diagnosticsBands.
-      val bands = if (!batch.sparkSession.conf
-          .get("graft.dedup.diagnosticsBands", "false").toBoolean) Nil
-        else {
-          // ONE job: a left join keeps every batch-side band (corpus
-          // metrics via coalesce-0). nb*(nb-1) summed as a long, halved
-          // driver-side (SQL `/` on longs is true division).
-          val bCnt = bBands.groupBy("band").agg(count(lit(1)).as("nb"))
-          val cCnt = cBands.groupBy("band").agg(count(lit(1)).as("nc"))
-          val prod = col("nb") * coalesce(col("nc"), lit(0L))
-          val st = bCnt.join(cCnt, Seq("band"), "left")
-            .agg(coalesce(sum(prod), lit(0L)),
-              coalesce(max(prod), lit(0L)),
-              coalesce(sum(col("nb") * (col("nb") - 1)), lit(0L)),
-              coalesce(max(col("nb")), lit(0L))).head()
-          Seq("cand_corpus_maxband" -> st.getLong(1).toDouble,
-            "cand_batch_maxband" -> st.getLong(3).toDouble,
-            // cross-checks for the observe counts (same quantities)
-            "cand_corpus_check" -> st.getLong(0).toDouble,
-            "cand_batch_check" -> (st.getLong(2) / 2).toDouble)
-        }
-      val diagSecs = (System.nanoTime() - tD0) / 1e9
-      val diagKey = batch.sparkSession.conf.get("graft.dedup.diagKey", "")
-      val q = incrementalDiag.computeIfAbsent(diagKey,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
-      (base ++ bands :+ ("diag_cost" -> math.rint(diagSecs * 1000) / 1000.0))
-        .foreach { case (k, v) => q.add(s"$k:$v"): Unit }
-      while (q.size > 256) q.poll(): Unit
-    }
+    // the localCheckpoint above completed the observed executions, so the
+    // metrics are already published; the bounded wait only covers
+    // listener-delivery latency. The row is read POSITIONALLY: an EMPTY
+    // row means the optimizer eliminated the observed subtree
+    // (PropagateEmptyRelation — the first ingest cycle's empty store), so
+    // the true count is 0; a lost metric reads -1, loud nonsense rather
+    // than zero candidates.
+    def record(key: String, obs: Option[org.apache.spark.sql.Observation]): Unit =
+      obs.foreach { o =>
+        val cand = try {
+          val row = scala.concurrent.Await
+            .result(o.future, scala.concurrent.duration.Duration(2, "s"))
+          if (row.length == 0) 0.0
+          else if (row.isNullAt(0)) -1.0
+          else row.getLong(0).toDouble
+        } catch { case _: java.util.concurrent.TimeoutException => -1.0 }
+        graft.QueryTrace.record(spark, key, cand)
+      }
+    record("cand_corpus", obsCorpus)
+    record("cand_batch", obsBatch)
     bBase.unpersist(false)
     cBase.unpersist(false)
     out
@@ -1048,7 +945,8 @@ object Dedup {
     *     (saltFactor = 0) routes on Catalyst's size estimate, the
     *     [[Packing.singleTaskOk]] pattern: a measured-small input skips
     *     the S× replication (no block can be hot enough to matter), a
-    *     large or unknown one salts at 8.
+    *     large or unknown one salts at 8. The factor taken is the
+    *     [[graft.QueryTrace]] attribute `dedup.saltFactor`.
     *
     * Verification uses Spark's banded `levenshtein(l, r, threshold)`
     * (O(maxDist·n) early-exit DP, codegen'd; returns −1 past the bound), so
@@ -1071,8 +969,7 @@ object Dedup {
       keyed0.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallInputBytes
     val salt = if (saltFactor > 0) saltFactor
       else if (measuredSmall) 1 else 8
-    // observability, the sim.lastRoute pattern
-    df.sparkSession.conf.set("graft.dedup.lastSaltFactor", salt.toString)
+    graft.QueryTrace.record(df.sparkSession, "dedup.saltFactor", salt)
     // block-size cap: one windowed count per block (a single shuffle on
     // the block key — the aggregate+semi-join twin pays that shuffle twice)
     // — blocks past the cap never reach the pair join

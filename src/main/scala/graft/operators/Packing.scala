@@ -107,14 +107,15 @@ object Packing {
     * bit-identical by the determinism contract (differential-spec-proven).
     * Unknown statistics default to Long.MaxValue, i.e. the distributed
     * path — the safe direction. Set the conf to 0 to force the distributed
-    * shape (the plan-quality and differential specs do).
+    * shape (the plan-quality and differential specs do). The twin taken is
+    * the [[graft.QueryTrace]] attribute `prefix.route` ("window" |
+    * "distributed").
     */
   private[graft] def singleTaskOk(df: DataFrame): Boolean = {
     val cap = df.sparkSession.conf
       .get("graft.prefix.singleTaskBytes", (32L << 20).toString).toLong
     val small = cap > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
-    // observability, the sim.lastRoute pattern: which twin ran last
-    df.sparkSession.conf.set("graft.prefix.lastRoute",
+    graft.QueryTrace.record(df.sparkSession, "prefix.route",
       if (small) "window" else "distributed")
     small
   }

@@ -27,11 +27,10 @@ object Similarity {
     * is not enforced by the API — so the size is MEASURED before the
     * broadcast and an over-budget side takes a shuffle-replicated nested-loop join instead:
     * same result, no single-executor materialization of the whole side.
-    * The route taken is recorded in `graft.sim.lastRoute`
-    * ("broadcast" | "shuffle") for observability/specs.
+    * The route taken is the [[graft.QueryTrace]] attribute `sim.route`
+    * ("broadcast" | "shuffle").
     */
   private val BudgetKey = "graft.sim.broadcastBudgetBytes"
-  private val RouteKey = "graft.sim.lastRoute"
 
   /** The cell join every IVF-confined surface shares: corpus-side rows
     * (assigned/encoded candidates) joined to the probe side on `cent_id`.
@@ -48,10 +47,10 @@ object Similarity {
     *     route goes through [[Skew.saltedJoin]]: corpus rows salted by id,
     *     probe rows replicated, per-task work ÷ saltFactor, result
     *     row-identical (spec-asserted).
-    * Route taken recorded in `graft.sim.lastCellRoute`
-    * ("broadcast" | "salted").
+    * The route taken is the [[graft.QueryTrace]] attribute
+    * `sim.cellRoute` ("broadcast:estimate" | "broadcast:measured" |
+    * "salted").
     */
-  private val CellRouteKey = "graft.sim.lastCellRoute"
   private def confinedCellJoin(corpus: DataFrame, probes: DataFrame,
       corpusId: String, probeBase: DataFrame,
       expansion: Double): DataFrame = {
@@ -78,11 +77,11 @@ object Similarity {
         expansion.max(1.0) <= budget.toDouble
     val fits = estimateFits || measuredBytes(probes) <= budget
     if (fits) {
-      spark.conf.set(CellRouteKey,
+      graft.QueryTrace.record(spark, "sim.cellRoute",
         if (estimateFits) "broadcast:estimate" else "broadcast:measured")
       corpus.join(broadcast(probes), "cent_id" :: Nil)
     } else {
-      spark.conf.set(CellRouteKey, "salted")
+      graft.QueryTrace.record(spark, "sim.cellRoute", "salted")
       Skew.saltedJoin(corpus, probes, Seq("cent_id"), corpusId)
     }
   }
@@ -123,15 +122,15 @@ object Similarity {
     val spark = small.sparkSession
     val budget = spark.conf.get(BudgetKey, (64L << 20).toString).toLong
     if (small.queryExecution.optimizedPlan.stats.sizeInBytes <= budget) {
-      spark.conf.set(RouteKey, "broadcast")
+      graft.QueryTrace.record(spark, "sim.route", "broadcast")
       return big.crossJoin(broadcast(small))
     }
     val bytes = measuredBytes(small)
     if (bytes <= budget) {
-      spark.conf.set(RouteKey, "broadcast")
+      graft.QueryTrace.record(spark, "sim.route", "broadcast")
       big.crossJoin(broadcast(small))
     } else {
-      spark.conf.set(RouteKey, "shuffle")
+      graft.QueryTrace.record(spark, "sim.route", "shuffle")
       big.crossJoin(small.hint("shuffle_replicate_nl"))
     }
   }

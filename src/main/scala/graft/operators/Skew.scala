@@ -24,11 +24,6 @@ private[operators] object Skew {
     */
   val SaltBytesKey = "graft.skew.saltBytes"
 
-  /** Observability (the sim.lastRoute pattern): the salt factor the
-    * last [[saltedJoin]] actually took — "1" (plain join) or "8".
-    */
-  val RouteKey = "graft.skew.lastSaltFactor"
-
   val SaltFactor = 8
 
   /** `left ⋈ right` on `keys`, with each hot key's quadratic work split
@@ -65,7 +60,8 @@ private[operators] object Skew {
     * [[Similarity.mutualKnnIvf]]'s aliased self-join, whose two sides are
     * the identical subtree and share one exchange via ReusedExchange — a
     * rename into l/r projections would compute the assignment twice).
-    * Records the factor in [[RouteKey]].
+    * Records the factor as the [[graft.QueryTrace]] attribute
+    * `skew.saltFactor` ("1" = plain join, or "8").
     */
   def factor(routeOn: Seq[DataFrame]): Int = {
     val spark = routeOn.head.sparkSession
@@ -73,7 +69,7 @@ private[operators] object Skew {
     val small = cap > 0 && routeOn.forall(
       _.queryExecution.optimizedPlan.stats.sizeInBytes <= cap)
     val s = if (small) 1 else SaltFactor
-    spark.conf.set(RouteKey, s.toString)
+    graft.QueryTrace.record(spark, "skew.saltFactor", s)
     s
   }
 

@@ -86,8 +86,7 @@ object MultiwayJoin {
     *   ([[graft.wcoj.WcojJoin.leapfrogAny]]), so a string-keyed cyclic join
     *   keeps the WCOJ speedup instead of silently falling back. Null join
     *   values are filtered (they can never match a natural inner join).
-    *   Acyclic queries fall back to binary joins unchanged;
-    *   `graft.wcoj.hybridCore=false` restores the whole-query one-bag.
+    *   Acyclic queries fall back to binary joins unchanged.
     * @param cardinalityOrder order each cyclic bag's WCOJ attributes by
     *   measured cardinality (within equal coverage): the reference's
     *   `Statistics.fullCardinality`-driven attribute ordering
@@ -124,19 +123,14 @@ object MultiwayJoin {
     // contract) a natural join of sets is a set, so core-bag + binary
     // periphery emits exactly the whole-query distinct bindings.
     // Acyclic full patterns keep the GHD/Yannakakis route below; so do
-    // core bags with ineligible attribute types. Escape hatch
-    // `graft.wcoj.hybridCore=false` forces the r13 whole-query one-bag.
+    // core bags with ineligible attribute types.
     if (wcoj && {
       val attrSets = relations.map(_._2.toSet)
       !JoinHyperGraph.isAcyclic(attrSets)
     }) {
       val spark = relations.head._1.sparkSession
       val attrSets = relations.map(_._2.toSet)
-      val hybridOn =
-        spark.conf.getOption("graft.wcoj.hybridCore").forall(_.toBoolean)
-      val core =
-        if (hybridOn) JoinHyperGraph.cyclicCoreIds(attrSets)
-        else relations.indices.toSet
+      val core = JoinHyperGraph.cyclicCoreIds(attrSets)
 
       def oneBag(rels: Seq[(DataFrame, Seq[String])]): DataFrame = {
         val attrs = rels.flatMap(_._2).toSet

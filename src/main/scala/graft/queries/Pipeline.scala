@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryTrace, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 
@@ -518,20 +518,14 @@ object Pipeline {
     "q115_incremental_fuzzy" -> ((s, d) => {
       val docs = Tables(s, d).documents
       val snum = expr("CAST(substring(source, 4, 10) AS INT)")
-      // diagnostics published as the gate's phase record (see q214): this
-      // gate tripped the r15 wire at ×1.67 on the driver's run — the
+      // under the bench's trace the dedup records its candidate counts
+      // (this gate tripped the r15 wire at ×1.67 on the driver's run — the
       // counts are deterministic per SF, so the committed record proves
-      // whether a future swing moved the work or just the clock
-      s.conf.set("graft.dedup.diagnostics", "true")
-      try {
-        val res = Dedup.incrementalMinHashDedup(
-            docs.filter(snum >= 10), docs.filter(snum < 10),
-            "text", "doc_id", threshold = 0.3, portableIds = true)
-          .orderBy("doc_id")
-        val diag = Dedup.drainIncrementalDiag()
-        if (diag.nonEmpty) s.conf.set("graft.bench.phases", diag.mkString(","))
-        res
-      } finally s.conf.unset("graft.dedup.diagnostics")
+      // whether a future swing moved the work or just the clock)
+      Dedup.incrementalMinHashDedup(
+          docs.filter(snum >= 10), docs.filter(snum < 10),
+          "text", "doc_id", threshold = 0.3, portableIds = true)
+        .orderBy("doc_id")
     }),
 
     // the signature-STORE path of q115: corpus signatures are written to a
@@ -548,20 +542,12 @@ object Pipeline {
       // the FromStore result is eagerly pinned (localCheckpoint inside), so
       // the store files are fully consumed by return — delete them here
       // rather than leaking one store per invocation into tmp.
-      // Diagnostics as in q115 (this gate tripped the r15 wire at ×1.79).
-      s.conf.set("graft.dedup.diagnostics", "true")
-      try {
-        val res = Dedup.incrementalMinHashDedupFromStore(
-            docs.filter(snum >= 10), s.read.parquet(dir.toString),
-            "text", "doc_id", threshold = 0.3, portableIds = true)
-          .orderBy("doc_id")
-        val diag = Dedup.drainIncrementalDiag()
-        if (diag.nonEmpty) s.conf.set("graft.bench.phases", diag.mkString(","))
-        res
-      } finally {
-        s.conf.unset("graft.dedup.diagnostics")
-        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      }
+      // Candidate counts as in q115 (this gate tripped the r15 wire at ×1.79).
+      try Dedup.incrementalMinHashDedupFromStore(
+          docs.filter(snum >= 10), s.read.parquet(dir.toString),
+          "text", "doc_id", threshold = 0.3, portableIds = true)
+        .orderBy("doc_id")
+      finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }),
 
     // the FULL rolling-crawl ingest loop (DocStreams.ingestDedupStream),
@@ -577,56 +563,34 @@ object Pipeline {
       val snum = expr("CAST(substring(source, 4, 10) AS INT)")
       val root = GateTmp.dir("graft_ingest")
       val (src, store, out) = (s"$root/src", s"$root/store", s"$root/out")
-      // per-phase wall clock, published via graft.bench.phases so the bench
-      // record itself carries the decomposition (r13: a consistent ~3×
-      // cross-box swing on this gate could only be localized by a separate
-      // probe run; now every BENCH_rN shows WHICH cycle carries it)
-      val marks = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      var tPhase = System.nanoTime()
-      def mark(n: String): Unit = {
-        marks += n -> (System.nanoTime() - tPhase) / 1e9
-        tPhase = System.nanoTime()
-      }
-      // work-profile diagnostics ride into each cycle's phase record
-      // (candidate-pair counts, hottest-band mass, GC secs): the r15
-      // driver run swung this gate's cycle-2 dedup 3.7→28.9 s between
-      // passes and the wall clock alone couldn't say whether the work
-      // itself moved — set BEFORE the stream starts (foreachBatch runs
-      // on a session cloned at start)
-      s.conf.set("graft.dedup.diagnostics", "true")
+      // per-cycle wall clock as spans of the caller's QueryTrace, so the
+      // bench record itself carries the decomposition (r13: a consistent
+      // ~3× cross-box swing on this gate could only be localized by a
+      // separate probe run; now every BENCH_rN shows WHICH cycle carries
+      // it). The stream, started inside the trace, adds each micro-batch's
+      // sub-steps and candidate counts (b<N>_store_read, b<N>_dedup, ...).
+      def span[T](n: String)(body: => T): T = QueryTrace.span(s, n)(body)
       try {
-        docs.filter(snum < 7).write.mode("append").parquet(src)
-        val q = graft.streaming.DocStreams.ingestDedupStream(
-          s.readStream.schema(docs.schema).parquet(src), store, out,
-          s"$root/ckpt", threshold = 0.3, portableIds = true)
+        val q = span("setup") {
+          docs.filter(snum < 7).write.mode("append").parquet(src)
+          graft.streaming.DocStreams.ingestDedupStream(
+            s.readStream.schema(docs.schema).parquet(src), store, out,
+            s"$root/ckpt", threshold = 0.3, portableIds = true)
+        }
         try {
-          mark("setup")
-          q.processAllAvailable()
-          mark("cycle1")
-          docs.filter(snum >= 7 && snum < 14).write.mode("append").parquet(src)
-          q.processAllAvailable()
-          mark("cycle2")
-          docs.filter(snum >= 14).write.mode("append").parquet(src)
-          q.processAllAvailable()
-          mark("cycle3")
+          span("cycle1")(q.processAllAvailable())
+          span("cycle2") {
+            docs.filter(snum >= 7 && snum < 14).write.mode("append").parquet(src)
+            q.processAllAvailable()
+          }
+          span("cycle3") {
+            docs.filter(snum >= 14).write.mode("append").parquet(src)
+            q.processAllAvailable()
+          }
         } finally q.stop()
-        val res = s.read.parquet(out).select("doc_id").orderBy("doc_id")
-          .localCheckpoint(true)
-        mark("readback")
-        // fold the per-micro-batch sub-phases (store read / band-join dedup /
-        // publish / signature append, published by ingestDedupStream) into
-        // the gate's phase record: cycle N's swing is now attributable to a
-        // specific sub-step inside the committed bench JSON itself
-        val subPhases = graft.streaming.DocStreams.drainIngestPhases(store)
-        val sub = if (subPhases.isEmpty) "" else "," + subPhases.mkString(",")
-        s.conf.set("graft.bench.phases", marks.map { case (n, v) =>
-          s"$n:${math.rint(v * 1000) / 1000.0}"
-        }.mkString(",") + sub)
-        res
-      } finally {
-        s.conf.unset("graft.dedup.diagnostics")
-        org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-      }
+        span("readback")(s.read.parquet(out).select("doc_id").orderBy("doc_id")
+          .localCheckpoint(true))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }),
 
     // CDC latest-wins upsert sink (DocStreams.upsertStream) — the crawl-
@@ -1728,10 +1692,10 @@ object Pipeline {
         s.conf.set("graft.sim.broadcastBudgetBytes", "0")
         val e = Tables(s, d).embeddings
         // routing happens eagerly inside budgetedCross (the side is
-        // measured at plan build), so lastRoute is set on return
-        val top = Similarity.cosineTopK(e.filter(col("vec_id") < 5), e,
-          "embedding", "vec_id", k = 10)
-        val route = s.conf.get("graft.sim.lastRoute", "unset")
+        // measured at plan build), so the trace holds the route on return
+        val (top, trace) = QueryTrace.run(s)(Similarity.cosineTopK(
+          e.filter(col("vec_id") < 5), e, "embedding", "vec_id", k = 10))
+        val route = trace.get("sim.route").getOrElse("unset")
         top.withColumn("route", lit(route)).orderBy("query_id", "rank")
       } finally {
         prev match {

@@ -418,22 +418,6 @@ object DocStreams {
     } finally fs.delete(tmpDir, true): Unit
   }
 
-  /** Per-micro-batch sub-phase timings published by [[ingestDedupStream]],
-    * keyed by store path (concurrent streams over different stores don't
-    * interleave). Drained — not just read — so one gate invocation's record
-    * never bleeds into the next. Capped per store (oldest dropped): a
-    * long-running production stream nobody drains must not grow driver
-    * memory without bound (ADVICE r15) — 512 entries keeps ~2 cycles' worth
-    * at the current ~8 marks/micro-batch, far more than any drain needs.
-    */
-  private val MaxPhaseEntries = 512
-  private val ingestPhaseLog = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.ConcurrentLinkedQueue[String]]()
-
-  def drainIngestPhases(storePath: String): Seq[String] =
-    Option(ingestPhaseLog.remove(storePath))
-      .map(q => q.toArray(Array.empty[String]).toSeq).getOrElse(Nil)
-
   def ingestDedupStream(docs: DataFrame, storePath: String, outPath: String,
       checkpointPath: String, threshold: Double,
       textCol: String = "text", idCol: String = "doc_id",
@@ -444,22 +428,14 @@ object DocStreams {
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // per-micro-batch sub-phase wall clock, accumulated in a process-
-        // level log (foreachBatch runs on the stream's CLONED session — a
-        // session-conf write would never reach the caller) so a bench gate
-        // can fold it into its published phase record: the r14 cross-box
-        // q214 swing localized to the store-grown cycles but the cycle
-        // number alone could not say WHICH part (store read, dedup band
-        // join, output publish, signature append) carried it
-        var tPhase = System.nanoTime()
-        def mark(n: String): Unit = {
-          val secs = (System.nanoTime() - tPhase) / 1e9
-          tPhase = System.nanoTime()
-          val q = ingestPhaseLog.computeIfAbsent(storePath,
-            _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
-          q.add(s"b${batchId}_$n:${math.rint(secs * 1000) / 1000.0}")
-          while (q.size > MaxPhaseEntries) q.poll(): Unit
-        }
+        // per-micro-batch sub-steps as spans of the caller's QueryTrace
+        // (the micro-batch thread inherits it when the stream starts inside
+        // one): the r14 cross-box q214 swing localized to the store-grown
+        // cycles, but the cycle number alone could not say WHICH part
+        // (store read, dedup band join, output publish, signature append)
+        // carried it
+        def span[T](n: String)(body: => T): T =
+          graft.QueryTrace.span(spark, s"b${batchId}_$n")(body)
         // the batch feeds two plans (the dedup probe and the survivor
         // semi-join) — CACHE it rather than eagerly checkpoint: the first
         // action populates the block store as a side effect of work it was
@@ -474,33 +450,26 @@ object DocStreams {
           // any other store read failure propagates and the micro-batch
           // retries ([[parquetIfExists]]) instead of silently skipping
           // dedup against all prior history.
-          val store = parquetIfExists(spark, storePath)
+          val store = span("store_read")(parquetIfExists(spark, storePath)
             .getOrElse(Dedup.signatureStore(pinned.limit(0), textCol, idCol,
-              shingle, portableIds))
-          mark("store_read")
-          // key this stream's work profile by its store path (ADVICE r16):
-          // the conf lives on the stream's CLONED session, so concurrent
-          // streams over different stores each produce into — and drain —
-          // their own diag queue instead of interleaving in a global one
-          spark.conf.set("graft.dedup.diagKey", storePath)
-          val survivors = Dedup.incrementalMinHashDedupFromStore(
+              shingle, portableIds)))
+          def dedup() = Dedup.incrementalMinHashDedupFromStore(
             pinned, store, textCol, idCol, threshold,
             shingle = shingle, portableIds = portableIds)
-          mark("dedup") // eager inside (batch-bound pin): the band join ran
-          // under graft.dedup.diagnostics (inherited from the caller's
-          // session at stream start) the dedup also measured its own work
-          // profile — candidate-pair counts, hottest-band mass, GC time —
-          // which rides into this cycle's phase record so a swing in the
-          // dedup wall clock above is attributable INSIDE the committed
-          // bench JSON: flat counts + moving time = environmental; moving
-          // counts = band skew (r16 directive #1). diag_cost (also
-          // emitted) is the instrument's own price, included in the
-          // mark("dedup") time it explains.
-          Dedup.drainIncrementalDiag(storePath).foreach { kv =>
-            val q = ingestPhaseLog.computeIfAbsent(storePath,
-              _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
-            q.add(s"b${batchId}_$kv")
-            while (q.size > MaxPhaseEntries) q.poll(): Unit
+          // eager inside (batch-bound pin): the band join runs here. Under a
+          // trace, a nested one keeps this batch's candidate counts apart
+          // from the other batches' as b<N>_cand_corpus / b<N>_cand_batch:
+          // flat counts + moving time = environmental; moving counts =
+          // band skew
+          val survivors = span("dedup") {
+            if (!graft.QueryTrace.active(spark)) dedup()
+            else {
+              val (s, t) = graft.QueryTrace.run(spark)(dedup())
+              t.attributes.foreach { case (k, v) =>
+                graft.QueryTrace.record(spark, s"b${batchId}_$k", v)
+              }
+              s
+            }
           }
           // survivors is eagerly pinned inside the dedup (batch-bound ids),
           // so kept's lineage is cache blocks + that pin — the store append
@@ -511,11 +480,9 @@ object DocStreams {
               pinned(idCol) === survivors("doc_id"), "left_semi")
             .persist()
           try {
-            kept.write.mode("append").parquet(outPath)
-            mark("publish")
-            Dedup.signatureStore(kept, textCol, idCol, shingle, portableIds)
-              .write.mode("append").parquet(storePath)
-            mark("sig_append")
+            span("publish")(kept.write.mode("append").parquet(outPath))
+            span("sig_append")(Dedup.signatureStore(kept, textCol, idCol,
+              shingle, portableIds).write.mode("append").parquet(storePath))
           } finally kept.unpersist(false)
         } finally pinned.unpersist(false)
         ()

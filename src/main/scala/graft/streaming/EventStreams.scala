@@ -196,16 +196,9 @@ object EventStreams {
       est.as("est_distinct"))
   }
 
-  /** Route key recording which register encoding [[windowedDistinctHllAuto]]
-    * chose on its last call ("columns" | "array") — the q186/q200
-    * observability pattern, spec-pinned.
-    */
-  val HllFormKey = "graft.hll.lastForm"
-
   /** ONE entry point over both register encodings, up to the state
     * ceiling p ≤ 14. Callers pick precision; the encoding is an
-    * implementation detail this router owns (route recorded under
-    * [[HllFormKey]]).
+    * implementation detail this router owns.
     *
     * The route is ALWAYS the array-register Aggregator
     * ([[windowedDistinctHllArray]]), and the choice is measured, not
@@ -226,7 +219,6 @@ object EventStreams {
       windowLength: String, watermark: Option[String] = None,
       p: Int = 6, mapWidth: Option[Int] = None): DataFrame = {
     require(p >= 2 && p <= 14, s"p must be in [2, 14], got $p")
-    events.sparkSession.conf.set(HllFormKey, "array")
     windowedDistinctHllArray(events, keyCol, windowLength, watermark, p,
       mapWidth)
   }

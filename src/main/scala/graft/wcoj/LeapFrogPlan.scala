@@ -142,26 +142,22 @@ final case class LeapFrogJoinExec(
       session.conf.get("graft.wcoj.singleCellBytes", (4L << 20).toString).toLong
     val bindingBudget = session.conf.get(
       "graft.wcoj.singleCellMaxBindings", (16L << 20).toString).toLong
-    // stale-proof the observability conf (ADVICE r15): the bound is only
-    // COMPUTED inside the byte-gated branch below, so a query that skips
-    // that branch (big inputs, or a forced grid) must not leave an
-    // earlier query's bound behind for ScaleCheck to misattribute
-    if (session.conf.getOption("graft.wcoj.lastOutputBound").isDefined)
-      session.conf.unset("graft.wcoj.lastOutputBound")
+    // trace attributes: `wcoj.outputBound` (only when the byte gate let
+    // the estimate run) and `wcoj.cells`
     val smallOutput = stats.map(_.bytes).sum <= singleCellBytes && {
         val agm = graft.plans.FractionalEdgeCover.agmBound(
           ord.toSet, stats.map(s => (s.attrs, s.rows)))
         val bound =
           if (agm <= bindingBudget.toDouble) agm
           else math.min(agm, SkewStats.degreeBound(prepped, ord.toSeq))
-        session.conf.set("graft.wcoj.lastOutputBound",
-          math.min(bound, Long.MaxValue.toDouble).toLong.toString)
+        graft.QueryTrace.record(session, "wcoj.outputBound",
+          math.min(bound, Long.MaxValue.toDouble).toLong)
         bound <= bindingBudget.toDouble
       }
     val sized =
       if (smallOutput) HyperCube.optimalSharesStat(ord.toSeq, stats, 1)
       else HyperCube.budgetedShares(ord.toSeq, stats, cells, budget, cap)
-    session.conf.set("graft.wcoj.lastCells", sized.shares.numCells.toString)
+    graft.QueryTrace.record(session, "wcoj.cells", sized.shares.numCells)
     chosen = Some(sized)
     val shares = sized.shares
     val bcShares = sc.broadcast(shares)

@@ -16,6 +16,15 @@ object GraftSqlBridge {
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** Listener-bus access for [[graft.QueryTrace]]: the bus is private to
+    * Spark's package.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  def postListenerEvent(sc: org.apache.spark.SparkContext,
+      e: org.apache.spark.scheduler.SparkListenerEvent): Unit = sc.listenerBus.post(e)
+
   def exprOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 

@@ -30,9 +30,10 @@ class RandomDifferentialSpec extends SparkSpec {
     */
   private def viaGrid(rels: Seq[(DataFrame, Seq[String])], cols: Seq[String]): Set[Seq[Long]] = {
     spark.conf.set("graft.wcoj.singleCellBytes", "0")
-    val got = try canon(WcojJoin.leapfrogCatalyst(spark, rels, cols), cols)
+    val (got, trace) = try QueryTrace.run(spark)(
+        canon(WcojJoin.leapfrogCatalyst(spark, rels, cols), cols))
       finally spark.conf.unset("graft.wcoj.singleCellBytes")
-    assert(spark.conf.get("graft.wcoj.lastCells").toInt > 1, "grid cells")
+    assert(trace("wcoj.cells").toInt > 1, "grid cells")
     got
   }
 

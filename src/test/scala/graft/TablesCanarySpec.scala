@@ -94,4 +94,20 @@ class TablesCanarySpec extends SparkSpec {
     try assert(Tables.spreadScan(docs, "doc_id") eq docs)
     finally spark.conf.unset("graft.scan.spreadWidth")
   }
+
+  test("spreadScan re-reads the width after the files are rewritten") {
+    // a parquet path's analyzed plan does not change when its files are
+    // rewritten, so a width cached on that plan went stale
+    val dir = java.nio.file.Files.createTempDirectory("spread_rewrite").toString
+    val width = spark.sparkContext.defaultParallelism
+    try {
+      spark.range(100).coalesce(1).write.mode("overwrite").parquet(dir)
+      val narrow = spark.read.parquet(dir)
+      assert(Tables.spreadScan(narrow, "id") ne narrow)
+      spark.range(100).repartition(2 * width).write.mode("overwrite").parquet(dir)
+      val wide = spark.read.parquet(dir)
+      assert(wide.rdd.getNumPartitions * 2 > width, "precondition: the rewrite is wide")
+      assert(Tables.spreadScan(wide, "id") eq wide)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }

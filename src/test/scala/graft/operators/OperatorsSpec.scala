@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{QueryTrace, SparkSpec}
 
 class AsofJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -216,6 +216,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incrementalCore diagnostics: off by default, deterministic work profile when on") {
+    // the work profile is recorded into the calling thread's QueryTrace:
+    // "on" is running inside one, "off" is running outside any
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta")
@@ -225,94 +227,83 @@ class DedupSpec extends SparkSpec {
       (11L, "a wholly novel document about spark engines and nothing else"),
       (12L, "a wholly novel document about spark engines and nothing else")
     ).toDF("doc_id", "text")
-    // default: no diagnostics computed, nothing to drain
-    Dedup.incrementalMinHashDedup(batch, corpus, "text", "doc_id", 0.5).count()
-    assert(Dedup.drainIncrementalDiag().isEmpty)
-    def profile(): Map[String, Double] = {
-      Dedup.incrementalMinHashDedup(batch, corpus, "text", "doc_id", 0.5).count()
-      val d = Dedup.drainIncrementalDiag()
-        .map { kv => val i = kv.lastIndexOf(':')
-          kv.take(i) -> kv.drop(i + 1).toDouble }.toMap
-      d
-    }
-    spark.conf.set("graft.dedup.diagnostics", "true")
-    try {
-      val d1 = profile()
-      assert(d1.keySet === Set("cand_corpus", "cand_batch", "gc",
-        "spill_mb", "peak_exec_mb", "diag_cost"))
-      // the §5 bracket (r19, VERDICT r18 #3): spill is a delta (≥ 0) and
-      // the window peak saw at least one task of the dedup's own jobs
-      assert(d1("spill_mb") >= 0.0)
-      assert(d1("peak_exec_mb") >= 0.0)
-      // doc 10 is an exact dup of corpus doc 1 → they share every band, so
-      // the vs-corpus band join emits at least one candidate; 11/12 are an
-      // exact within-batch pair likewise. -1 would mean the observe metric
-      // was lost (observe-through-localCheckpoint broke).
-      assert(d1("cand_corpus") >= 1.0 && d1("cand_batch") >= 1.0)
-      // the counts are pure functions of the inputs — the whole point: a
-      // wall-clock swing at FLAT counts is proven environmental
-      val d2 = profile()
-      Seq("cand_corpus", "cand_batch").foreach(k => assert(d1(k) === d2(k), k))
-      // the opt-in band-histogram tier adds the hottest-band mass, and its
-      // job-computed totals must agree with the observe-collected ones
-      spark.conf.set("graft.dedup.diagnosticsBands", "true")
-      val d3 = profile()
-      assert(d3.keySet === d1.keySet ++ Set("cand_corpus_maxband",
-        "cand_batch_maxband", "cand_corpus_check", "cand_batch_check"))
-      // spill/peak are environmental (unlike the counts) — present, not
-      // value-pinned
-      assert(d3("cand_corpus_check") === d1("cand_corpus"))
-      assert(d3("cand_batch_check") === d1("cand_batch"))
-      assert(d3("cand_corpus_maxband") >= 1.0 &&
-        d3("cand_corpus_maxband") <= d3("cand_corpus"))
-      assert(d3("cand_batch_maxband") >= 2.0) // the 11/12 pair in one bucket
-      // an EMPTY corpus side optimizes the observed band join away
-      // entirely (PropagateEmptyRelation) — the count must read as the
-      // true 0, not as the metric-lost -1 (the first ingest cycle's shape)
-      spark.conf.unset("graft.dedup.diagnosticsBands")
-      Dedup.incrementalMinHashDedup(batch, corpus.limit(0),
-        "text", "doc_id", 0.5).count()
-      val dEmpty = Dedup.drainIncrementalDiag()
-        .map { kv => val i = kv.lastIndexOf(':')
-          kv.take(i) -> kv.drop(i + 1).toDouble }.toMap
-      assert(dEmpty("cand_corpus") === 0.0)
-      assert(dEmpty("cand_batch") >= 1.0)
-    } finally {
-      spark.conf.unset("graft.dedup.diagnostics")
-      spark.conf.unset("graft.dedup.diagnosticsBands")
-    }
-    assert(Dedup.drainIncrementalDiag().isEmpty) // drained, not re-readable
+    def counts(c: org.apache.spark.sql.DataFrame): Map[String, String] =
+      QueryTrace.run(spark)(
+        Dedup.incrementalMinHashDedup(batch, c, "text", "doc_id", 0.5).count()
+      )._2.attributes.toMap
+    val c1 = counts(corpus)
+    assert(c1.keySet === Set("cand_corpus", "cand_batch"))
+    // doc 10 is an exact dup of corpus doc 1 → they share every band, so
+    // the vs-corpus band join emits at least one candidate; 11/12 are an
+    // exact within-batch pair likewise. -1 would mean the observe metric
+    // was lost (observe-through-localCheckpoint broke).
+    assert(c1("cand_corpus").toDouble >= 1.0 && c1("cand_batch").toDouble >= 1.0)
+    // the counts are pure functions of the inputs — the whole point: a
+    // wall-clock swing at FLAT counts is proven environmental
+    assert(counts(corpus) === c1)
+    // cross-check against a band histogram: Σ nb·nc over the bands both
+    // sides share, and Σ nb·(nb − 1) / 2 within the batch
+    def bands(df: org.apache.spark.sql.DataFrame) = Dedup.lshBands(
+      Dedup.signatureStore(df, "text", "doc_id"), Dedup.DefaultPerms, 4)
+      .groupBy("band").agg(count(lit(1)).as("n"))
+    val (nb, nc) = (bands(batch), bands(corpus).withColumnRenamed("n", "nc"))
+    assert(c1("cand_corpus").toDouble.toLong ===
+      nb.join(nc, "band").agg(sum(col("n") * col("nc"))).head().getLong(0))
+    assert(c1("cand_batch").toDouble.toLong ===
+      nb.agg(sum(col("n") * (col("n") - 1))).head().getLong(0) / 2)
+    // an EMPTY corpus side optimizes the observed band join away
+    // entirely (PropagateEmptyRelation) — the count must read as the
+    // true 0, not as the metric-lost -1 (the first ingest cycle's shape)
+    val cEmpty = counts(corpus.limit(0))
+    assert(cEmpty("cand_corpus").toDouble === 0.0)
+    assert(cEmpty("cand_batch").toDouble >= 1.0)
+    // outside a trace nothing is recorded — not even into a trace open on
+    // another thread at the same time (this thread is built before it)
+    val untraced = new Thread(() =>
+      Dedup.incrementalMinHashDedup(batch, corpus, "text", "doc_id", 0.5).count(): Unit)
+    val (_, other) = QueryTrace.run(spark) { untraced.start(); untraced.join() }
+    assert(other.attributes.isEmpty)
   }
 
   test("incrementalCore diagnostics are keyed per producer: streams do not interleave profiles") {
-    // ADVICE r16: two concurrent ingest streams (different stores) used to
-    // share one global diag queue, so each drain attributed the other
-    // stream's work profile to its own cycle. The queue is now keyed by
-    // graft.dedup.diagKey (set per stream session to the store path).
+    // two producers dedup at the same time, each inside its own trace: each
+    // trace holds exactly its own producer's counts, as if it ran alone
     val corpus = Seq((1L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    val batch = Seq((10L, "the quick brown fox jumps over the lazy dog"))
+    val batchA = Seq((10L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    spark.conf.set("graft.dedup.diagnostics", "true")
-    try {
-      spark.conf.set("graft.dedup.diagKey", "/stores/a")
-      Dedup.incrementalMinHashDedup(batch, corpus, "text", "doc_id", 0.5).count()
-      spark.conf.set("graft.dedup.diagKey", "/stores/b")
-      Dedup.incrementalMinHashDedup(batch, corpus, "text", "doc_id", 0.5).count()
-      // the default drain sees NEITHER keyed producer's entries
-      assert(Dedup.drainIncrementalDiag().isEmpty)
-      val a = Dedup.drainIncrementalDiag("/stores/a")
-      val b = Dedup.drainIncrementalDiag("/stores/b")
-      assert(a.nonEmpty && b.nonEmpty)
-      assert(a.exists(_.startsWith("cand_corpus:")))
-      // each key drains exactly its own producer's entries, once
-      assert(a.size === b.size)
-      assert(Dedup.drainIncrementalDiag("/stores/a").isEmpty)
-      assert(Dedup.drainIncrementalDiag("/stores/b").isEmpty)
-    } finally {
-      spark.conf.unset("graft.dedup.diagnostics")
-      spark.conf.unset("graft.dedup.diagKey")
+    val batchB = Seq(
+      (20L, "a wholly novel document about spark engines and nothing else"),
+      (21L, "a wholly novel document about spark engines and nothing else")
+    ).toDF("doc_id", "text")
+    def counts(b: org.apache.spark.sql.DataFrame): Map[String, String] =
+      QueryTrace.run(spark)(
+        Dedup.incrementalMinHashDedup(b, corpus, "text", "doc_id", 0.5).count()
+      )._2.attributes.toMap
+    val (aloneA, aloneB) = (counts(batchA), counts(batchB))
+    // A shares every band with the corpus and has no within-batch pair;
+    // B is the other way round — so an interleaving would show
+    assert(aloneA("cand_corpus").toDouble >= 1.0 && aloneA("cand_batch").toDouble === 0.0)
+    assert(aloneB("cand_corpus").toDouble === 0.0 && aloneB("cand_batch").toDouble >= 1.0)
+    // both traces open before either producer runs
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val producers = Seq("a" -> batchA, "b" -> batchB).map { case (k, b) =>
+      new Thread(() =>
+        try {
+          val (_, t) = QueryTrace.run(spark) {
+            barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+            Dedup.incrementalMinHashDedup(b, corpus, "text", "doc_id", 0.5).count()
+          }
+          seen.put(k, t.attributes.toMap): Unit
+        } catch { case e: Throwable => errors.add(e): Unit })
     }
+    producers.foreach(_.start())
+    producers.foreach(_.join(120000))
+    assert(errors.isEmpty, errors)
+    assert(seen.get("a") === aloneA)
+    assert(seen.get("b") === aloneB)
   }
 
   test("signature-store dedup equals the recompute path through a parquet round-trip") {
@@ -2077,14 +2068,15 @@ class MutualKnnSpec extends graft.SparkSpec {
   test("over-budget query side takes the shuffle route, same result") {
     val prev = spark.conf.getOption("graft.sim.broadcastBudgetBytes")
     try {
+      def run() = QueryTrace.run(spark)(Similarity.mutualKnn(twoClusters,
+        "embedding", "vec_id", k = 3)
+        .select("a", "b", "cos").as[(Long, Long, Double)].collect().toSet)
       spark.conf.set("graft.sim.broadcastBudgetBytes", "1")
-      val shuffled = Similarity.mutualKnn(twoClusters, "embedding", "vec_id", k = 3)
-        .select("a", "b", "cos").as[(Long, Long, Double)].collect().toSet
-      assert(spark.conf.get("graft.sim.lastRoute") === "shuffle")
+      val (shuffled, viaShuffle) = run()
+      assert(viaShuffle("sim.route") === "shuffle")
       spark.conf.set("graft.sim.broadcastBudgetBytes", (64L << 20).toString)
-      val bcast = Similarity.mutualKnn(twoClusters, "embedding", "vec_id", k = 3)
-        .select("a", "b", "cos").as[(Long, Long, Double)].collect().toSet
-      assert(spark.conf.get("graft.sim.lastRoute") === "broadcast")
+      val (bcast, viaBroadcast) = run()
+      assert(viaBroadcast("sim.route") === "broadcast")
       assert(shuffled === bcast)
     } finally {
       prev match {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.QueryTrace
 
 /** The hot-cell hazard in the confined quadratic surfaces: one dense IVF
   * cell / k-means cluster (a mode-collapsed or near-dup-heavy corpus puts
@@ -40,16 +41,16 @@ class SkewSaltSpec extends graft.SparkSpec {
       col("embedding").as("v1"))
     val r = hotCell.select(lit(0L).as("blk"), col("vec_id").as("id2"),
       col("embedding").as("v2"))
+    def run() = QueryTrace.run(spark)(Skew.saltedJoin(l, r, Seq("blk"), "id1")
+      .select("id1", "id2").as[(Long, Long)].collect().toSet)
     val plain = withConf(Skew.SaltBytesKey, Long.MaxValue.toString) {
-      val out = Skew.saltedJoin(l, r, Seq("blk"), "id1")
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      assert(spark.conf.get(Skew.RouteKey) === "1")
+      val (out, trace) = run()
+      assert(trace("skew.saltFactor") === "1")
       out
     }
     val salted = forcedSalt {
-      val out = Skew.saltedJoin(l, r, Seq("blk"), "id1")
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      assert(spark.conf.get(Skew.RouteKey) === Skew.SaltFactor.toString)
+      val (out, trace) = run()
+      assert(trace("skew.saltFactor") === Skew.SaltFactor.toString)
       out
     }
     assert(salted === plain)
@@ -76,9 +77,9 @@ class SkewSaltSpec extends graft.SparkSpec {
         .as[(Long, Long, Double)].collect().toSet
     }
     val salted = forcedSalt {
-      val out = Similarity.mutualKnnIvf(hotCell, "embedding", "vec_id", k = 3)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(spark.conf.get(Skew.RouteKey) === Skew.SaltFactor.toString)
+      val (out, trace) = QueryTrace.run(spark)(Similarity.mutualKnnIvf(
+        hotCell, "embedding", "vec_id", k = 3).as[(Long, Long, Double)].collect().toSet)
+      assert(trace("skew.saltFactor") === Skew.SaltFactor.toString)
       out
     }
     assert(salted === plain)
@@ -103,19 +104,17 @@ class SkewSaltSpec extends graft.SparkSpec {
 
   test("ivf cell join: broadcast-small probes broadcast; over-budget probes salt") {
     val q = hotCell.filter(col("vec_id") < 5)
-    val viaBroadcast = Similarity.ivfTopK(q, hotCell, "embedding", "vec_id",
-        k = 4, centroidMod = 100, probes = 2)
+    def run() = QueryTrace.run(spark)(Similarity.ivfTopK(q, hotCell,
+        "embedding", "vec_id", k = 4, centroidMod = 100, probes = 2)
       .select("query_id", "vec_id", "cos", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(spark.conf.get("graft.sim.lastCellRoute").startsWith("broadcast"))
+      .as[(Long, Long, Double, Int)].collect().toSet)
+    val (viaBroadcast, bcast) = run()
+    assert(bcast("sim.cellRoute").startsWith("broadcast"))
     val viaSalt = withConf("graft.sim.broadcastBudgetBytes", "0") {
       forcedSalt {
-        val out = Similarity.ivfTopK(q, hotCell, "embedding", "vec_id",
-            k = 4, centroidMod = 100, probes = 2)
-          .select("query_id", "vec_id", "cos", "rank")
-          .as[(Long, Long, Double, Int)].collect().toSet
-        assert(spark.conf.get("graft.sim.lastCellRoute") === "salted")
-        assert(spark.conf.get(Skew.RouteKey) === Skew.SaltFactor.toString)
+        val (out, trace) = run()
+        assert(trace("sim.cellRoute") === "salted")
+        assert(trace("skew.saltFactor") === Skew.SaltFactor.toString)
         out
       }
     }
@@ -128,14 +127,14 @@ class SkewSaltSpec extends graft.SparkSpec {
       (i, (0 until 8).map(j => ((i * 7 + j * 3) % 11).toFloat / 10f))
     }.toDF("vec_id", "embedding")
     val q = e.filter(col("vec_id") < 3)
-    def run() = Similarity.ivfPqTopK(q, e, "embedding", "vec_id", k = 5,
-        centroidMod = 50, probes = 2, m = 4, codebook = 8, iters = 2)
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val viaBroadcast = run()
+    def run() = QueryTrace.run(spark)(Similarity.ivfPqTopK(q, e, "embedding",
+        "vec_id", k = 5, centroidMod = 50, probes = 2, m = 4, codebook = 8, iters = 2)
+      .as[(Long, Long, Double, Int)].collect().toSet)
+    val (viaBroadcast, _) = run()
     val viaSalt = withConf("graft.sim.broadcastBudgetBytes", "0") {
       forcedSalt {
-        val out = run()
-        assert(spark.conf.get("graft.sim.lastCellRoute") === "salted")
+        val (out, trace) = run()
+        assert(trace("sim.cellRoute") === "salted")
         out
       }
     }
@@ -153,10 +152,11 @@ class SkewSaltSpec extends graft.SparkSpec {
       (i, (0 until 8).map(j => ((i * 7 + j * 3) % 11).toFloat / 10f))
     }.toDF("vec_id", "embedding")
     val q = e.filter(col("vec_id") < 3)
-    val out = Similarity.ivfPqTopK(q, e, "embedding", "vec_id", k = 5,
-      centroidMod = 50, probes = 2, m = 4, codebook = 8, iters = 2)
-    assert(out.count() > 0)
-    assert(spark.conf.get("graft.sim.lastCellRoute") === "broadcast:measured")
+    val (n, trace) = QueryTrace.run(spark)(Similarity.ivfPqTopK(q, e,
+      "embedding", "vec_id", k = 5, centroidMod = 50, probes = 2, m = 4,
+      codebook = 8, iters = 2).count())
+    assert(n > 0)
+    assert(trace("sim.cellRoute") === "broadcast:measured")
   }
 
   test("embeddingNearDup pair set is salt-invariant on a single hot block") {

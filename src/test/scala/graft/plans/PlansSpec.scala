@@ -284,20 +284,6 @@ class CardinalityOrderSpec extends SparkSpec {
       val hybrid = MultiwayJoin.join(rels, wcoj = true)
       assert(hybrid.queryExecution.executedPlan.toString.contains("LeapFrogJoin"))
       assert(hybrid.count() > 0)
-      // and with the hybrid planner OFF (r13 one-bag semantics) the
-      // nullable tail makes the whole-query one-bag ineligible: the plan
-      // must keep a binary join (the tail never enters a trie) — it falls
-      // to the GHD route, which may still WCOJ the eligible triangle BAG
-      spark.conf.set("graft.wcoj.hybridCore", "false")
-      try {
-        val oneBag = MultiwayJoin.join(rels, wcoj = true)
-        val p1 = oneBag.queryExecution.executedPlan.toString
-        assert(Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")
-          .exists(p1.contains),
-          "a nullable tail must keep the whole-query one-bag unreachable")
-        assert(!p1.contains("[a, b, c, d]"),
-          "the tail attribute must never appear in a trie attribute order")
-      } finally spark.conf.unset("graft.wcoj.hybridCore")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 

@@ -32,6 +32,14 @@ class DocStreamsSpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
+  /** Appends `df` to a running stream's source directory as ONE file. A
+    * multi-file append becomes visible one file at a time, so the stream
+    * can take it as two micro-batches — and the within-batch lower-id rule
+    * then sees two batches where the test means one.
+    */
+  private def land(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("append").parquet(dir)
+
   private def ids(path: String): Set[Long] =
     spark.read.parquet(path).select("doc_id").as[Long].collect().toSet
 
@@ -51,9 +59,8 @@ class DocStreamsSpec extends SparkSpec {
         // batch 2: 3 near-dups batch-1's doc 1 (dropped VIA THE STORE —
         // doc 1 is in no streaming state), 4 is fresh, 5 near-dups 4
         // within the batch (higher id drops)
-        docs(3L -> nearDup("steps"), 4L -> third,
-            5L -> third.replace("decades", "generations"))
-          .write.mode("append").parquet(src)
+        land(docs(3L -> nearDup("steps"), 4L -> third,
+            5L -> third.replace("decades", "generations")), src)
         q.processAllAvailable()
         assert(ids(out) === Set(1L, 2L, 4L))
         assert(ids(store) === Set(1L, 2L, 4L))
@@ -116,7 +123,7 @@ class DocStreamsSpec extends SparkSpec {
       try {
         q.processAllAvailable()
         for (sl <- slices.tail) {
-          docs(sl: _*).write.mode("append").parquet(s"$root/src")
+          land(docs(sl: _*), s"$root/src")
           q.processAllAvailable()
         }
       } finally q.stop()
@@ -217,7 +224,7 @@ class DocStreamsSpec extends SparkSpec {
         assert(tableRows(table) === Set((1L, 1, "a1"), (2L, 1, "b1"), (3L, 1, "c1")))
         val before = bucketFiles(table)
         // batch 2 touches only doc 2 (new version) and doc 4 (insert)
-        upds((2L, 2, "b2"), (4L, 1, "d1")).write.mode("append").parquet(src)
+        land(upds((2L, 2, "b2"), (4L, 1, "d1")), src)
         q.processAllAvailable()
         assert(tableRows(table) ===
           Set((1L, 1, "a1"), (2L, 2, "b2"), (3L, 1, "c1"), (4L, 1, "d1")))

@@ -374,10 +374,8 @@ class EventStreamsSpec extends SparkSpec {
     // must still coincide exactly with the column form (shared committed
     // oracle), which the bit-identity test below pins value-for-value
     val auto6 = rows(EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 6))
-    assert(spark.conf.get(EventStreams.HllFormKey) === "array")
     assert(auto6 === rows(EventStreams.windowedDistinctHll(df, "user_id", "1 hour", p = 6)))
     val auto10 = rows(EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 10))
-    assert(spark.conf.get(EventStreams.HllFormKey) === "array")
     assert(auto10 === rows(EventStreams.windowedDistinctHllArray(df, "user_id", "1 hour", p = 10)))
     intercept[IllegalArgumentException] {
       EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 15)

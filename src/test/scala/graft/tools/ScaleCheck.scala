@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryTrace
+
 /** Measured scale-up check: replicates the sf0.1 documents corpus N× (ids
   * offset per replica, text perturbed with a replica token so dedup
   * operators keep real work) and runs the scale-routed operators at each
@@ -56,50 +58,48 @@ object ScaleCheck {
         .repartition(32).localCheckpoint(true)
     }
 
-    def t(name: String, factor: Int, route: => String)(f: => Long): Unit = {
+    // `route` reads the route off the trace of the timed run
+    def t(name: String, factor: Int, route: QueryTrace => String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
-      val n = f
+      val (n, trace) = QueryTrace.run(spark)(f)
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale] $name%-22s x$factor%-3d rows_in=${n0 * factor}%8d " +
-        f"out=$n%9d time=$secs%7.2fs route=${route}")
+        f"out=$n%9d time=$secs%7.2fs route=${route(trace)}")
     }
+    def attr(key: String)(trace: QueryTrace): String = trace.get(key).getOrElse("?")
 
     for (factor <- Seq(1, 10, 50)) {
       val docs = scaled(factor)
-      t("interleave", factor,
-        spark.conf.get("graft.prefix.lastRoute", "?")) {
+      t("interleave", factor, attr("prefix.route")) {
         graft.operators.Sampling.interleaveBySource(
           docs.select("doc_id", "source"), "source", "doc_id").count()
       }
-      t("token_quota", factor,
-        spark.conf.get("graft.prefix.lastRoute", "?")) {
+      t("token_quota", factor, attr("prefix.route")) {
         graft.operators.Packing.tokenQuota(docs, "source", "doc_id",
           graft.functions.TextFunctions.tokenCount(col("text")), 100000L).count()
       }
-      t("edit_near_dup", factor,
-        "salt=" + spark.conf.get("graft.dedup.lastSaltFactor", "?")) {
+      t("edit_near_dup", factor, "salt=" + attr("dedup.saltFactor")(_)) {
         graft.operators.Dedup.editDistanceNearDup(
           docs, "text", "doc_id", prefixLen = 40, maxDist = 10).count()
       }
-      t("containment", factor, "df-capped") {
+      t("containment", factor, _ => "df-capped") {
         graft.operators.Dedup.shingleContainment(
           docs, "text", "doc_id", k = 5, threshold = 0.6, maxDf = 50).count()
       }
-      t("minhash_lsh", factor, "banded") {
+      t("minhash_lsh", factor, _ => "banded") {
         graft.operators.Dedup.minHashLsh(
           docs, "text", "doc_id", threshold = 0.7).count()
       }
       // vocab grows linearly with the factor (every token suffixed _rep):
       // the drift join/aggregate must track it, never the corpus square
-      t("token_drift", factor, "heap-topN") {
+      t("token_drift", factor, _ => "heap-topN") {
         graft.operators.Scoring.tokenDrift(
           docs.filter(col("doc_id") % 2 === 0),
           docs.filter(col("doc_id") % 2 === 1), "text", topN = 20).count()
       }
       // two global distributed ranks + an id join; the prefix twins flip
       // with the same statistic the other prefix consumers use
-      t("rank_blend", factor,
-        spark.conf.get("graft.prefix.lastRoute", "?")) {
+      t("rank_blend", factor, attr("prefix.route")) {
         graft.operators.Scoring.rankBlend(
           docs.withColumn("n_chars", length(col("text"))), "doc_id",
           Seq("chars" -> col("n_chars"),
@@ -178,12 +178,11 @@ object ScaleCheck {
             col("embedding"))
           .repartition(32).localCheckpoint(true)
       val t0 = System.nanoTime()
-      val n = graft.operators.Similarity.sq8TopK(
-        emb.filter(col("vec_id") < 5), emb, "embedding", "vec_id", k = 10).count()
+      val (n, trace) = QueryTrace.run(spark)(graft.operators.Similarity.sq8TopK(
+        emb.filter(col("vec_id") < 5), emb, "embedding", "vec_id", k = 10).count())
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale] sq8_topk               x$factor%-3d rows_in=${e0 * factor}%8d " +
-        f"out=$n%9d time=$secs%7.2fs route=" +
-        spark.conf.get("graft.sim.lastRoute", "?"))
+        f"out=$n%9d time=$secs%7.2fs route=${attr("sim.route")(trace)}")
     }
 
     // IVF-confined vector paths under BOTH corpus shapes: "uniform"
@@ -231,22 +230,21 @@ object ScaleCheck {
       // the whole replica set
       val cap = (2 * e0).toInt
       val t0 = System.nanoTime()
-      val n = graft.operators.Similarity.mutualKnnIvf(emb, "embedding",
-        "vec_id", k = 5, centroidMod = 100, probes = 2, maxCell = cap).count()
+      val (n, knn) = QueryTrace.run(spark)(graft.operators.Similarity.mutualKnnIvf(
+        emb, "embedding", "vec_id", k = 5, centroidMod = 100, probes = 2,
+        maxCell = cap).count())
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale] mutual_knn_ivf/$shape%-8s x$factor%-3d " +
         f"rows_in=${e0 * factor}%8d out=$n%9d time=$secs%7.2fs " +
-        f"maxcell=$mc%7d cap=$cap salt=" +
-        spark.conf.get("graft.skew.lastSaltFactor", "?"))
+        f"maxcell=$mc%7d cap=$cap salt=${attr("skew.saltFactor")(knn)}")
       val t1 = System.nanoTime()
-      val n2 = graft.operators.Similarity.ivfPqTopK(
+      val (n2, pq) = QueryTrace.run(spark)(graft.operators.Similarity.ivfPqTopK(
         emb.filter(col("vec_id") < 5), emb, "embedding", "vec_id", k = 10,
-        centroidMod = 100, probes = 2, m = 8, codebook = 16, iters = 2).count()
+        centroidMod = 100, probes = 2, m = 8, codebook = 16, iters = 2).count())
       val secs2 = (System.nanoTime() - t1) / 1e9
       println(f"[scale] ivfpq_topk/$shape%-8s     x$factor%-3d " +
         f"rows_in=${e0 * factor}%8d out=$n2%9d time=$secs2%7.2fs " +
-        f"maxcell=$mc%7d route=" +
-        spark.conf.get("graft.sim.lastCellRoute", "?"))
+        f"maxcell=$mc%7d route=${attr("sim.cellRoute")(pq)}")
     }
     spark.conf.unset("graft.skew.saltBytes")
 
@@ -269,15 +267,15 @@ object ScaleCheck {
               (col("dst") + col("__rep") * 1000L).as("dst")))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
-          Seq("a", "b", "c")).count()
+          Seq("a", "b", "c")).count())
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_triangle          x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs cells=" +
-          spark.conf.get("graft.wcoj.lastCells", "?"))
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs " +
+          f"cells=${attr("wcoj.cells")(trace)}")
       }
     }
 
@@ -347,12 +345,12 @@ object ScaleCheck {
     // core+tail HYBRID route (r14): a triangle core on a dense synthetic
     // digraph (50k nodes, deg 30 — the binary plan materializes the n·d²
     // ≈ 45M-row path-2 intermediate where WCOJ is triangle-bounded) with
-    // two LARGE non-nullable tail relations scaled by the factor. Three
+    // two LARGE non-nullable tail relations scaled by the factor. Two
     // routes compared min-of-2: the hybrid (core as ONE LeapFrog bag,
-    // tails as hash joins) must beat BOTH the r13 whole-query one-bag
-    // (which range-sorts every tail row into tries — its cost grows with
-    // the factor) and the pure binary GHD (which pays the path-2 cube, a
-    // constant core penalty). Measured r14: x10 hybrid 4.4s / onebag 8.9s
+    // tails as hash joins) must beat the pure binary GHD (which pays the
+    // path-2 cube, a constant core penalty). Measured r14, with the r13
+    // whole-query one-bag (range-sorts every tail row into tries; its
+    // escape hatch is gone) as a third arm: x10 hybrid 4.4s / onebag 8.9s
     // / binary 5.9s; x50 hybrid 5.2s / onebag 34.8s / binary 6.9s.
     {
       val nodes = 50000L
@@ -375,27 +373,23 @@ object ScaleCheck {
           (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")),
           (cdTail, Seq("c", "d")), (deTail, Seq("d", "e")))
-        def run(wcoj: Boolean, hybrid: Boolean): (Long, Double) = {
-          spark.conf.set("graft.wcoj.hybridCore", hybrid.toString)
+        def run(wcoj: Boolean): (Long, Double) = {
           val t0 = System.nanoTime()
           val n = graft.plans.MultiwayJoin.join(rels(), wcoj = wcoj)
             .groupBy("a").agg(count(lit(1)).as("cnt")).count()
-          spark.conf.unset("graft.wcoj.hybridCore")
           (n, (System.nanoTime() - t0) / 1e9)
         }
-        val arms = Seq("hybrid" -> (true, true), "onebag" -> (true, false),
-          "binary" -> (false, true))
+        val arms = Seq("hybrid" -> true, "binary" -> false)
         val best = scala.collection.mutable.Map.empty[String, Double]
         var out = -1L
-        for (i <- 1 to 2; (name, (w, h)) <- if (i % 2 == 0) arms.reverse else arms) {
-          val (n, s) = run(w, h)
+        for (i <- 1 to 2; (name, w) <- if (i % 2 == 0) arms.reverse else arms) {
+          val (n, s) = run(w)
           require(out == -1L || n == out, s"route $name changed the answer")
           out = n
           best(name) = math.min(best.getOrElse(name, Double.MaxValue), s)
         }
         println(f"[scale] wcoj_coretail_hybrid   x$factor%-3d out=$out%9d " +
-          f"hybrid=${best("hybrid")}%6.2fs onebag=${best("onebag")}%6.2fs " +
-          f"binary=${best("binary")}%6.2fs")
+          f"hybrid=${best("hybrid")}%6.2fs binary=${best("binary")}%6.2fs")
       }
     }
 
@@ -426,15 +420,15 @@ object ScaleCheck {
             (col("id") + 1000000L).as("dst"))))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
-          Seq("a", "b", "c")).count()
+          Seq("a", "b", "c")).count())
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_skew_guard        hot=$hot%-5s " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs cells=" +
-          spark.conf.get("graft.wcoj.lastCells", "?"))
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs " +
+          f"cells=${attr("wcoj.cells")(trace)}")
       }
       spark.conf.unset("graft.wcoj.cellBudgetBytes")
     }
@@ -456,23 +450,22 @@ object ScaleCheck {
           (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (edges.select(col("src").as("c"), col("dst").as("d")), Seq("c", "d")),
           (edges.select(col("src").as("d"), col("dst").as("a")), Seq("d", "a")))
-        def run(forceSingle: Boolean): (Long, Double, String) = {
+        def run(forceSingle: Boolean): (Long, Double, QueryTrace) = {
           if (forceSingle)
             spark.conf.set("graft.wcoj.singleCellMaxBindings", Long.MaxValue.toString)
           val t0 = System.nanoTime()
-          val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark, rels(),
-            Seq("a", "b", "c", "d")).count()
-          val cells = spark.conf.get("graft.wcoj.lastCells", "?")
+          val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.leapfrogCatalyst(
+            spark, rels(), Seq("a", "b", "c", "d")).count())
           spark.conf.unset("graft.wcoj.singleCellMaxBindings")
-          (n, (System.nanoTime() - t0) / 1e9, cells)
+          (n, (System.nanoTime() - t0) / 1e9, trace)
         }
-        val (nG, tG, cellsG) = run(forceSingle = false)
-        val (nS, tS, cellsS) = run(forceSingle = true)
+        val (nG, tG, routed) = run(forceSingle = false)
+        val (nS, tS, single) = run(forceSingle = true)
         require(nG == nS, "routing changed the answer")
         println(f"[scale] wcoj_highout_4cycle    V=$v%-4d edges=${v * (v - 1)}%6d " +
-          f"out=$nG%10d routed=${tG}%6.2fs(cells=$cellsG) " +
-          f"forced_single=${tS}%6.2fs(cells=$cellsS) " +
-          f"bound=${spark.conf.get("graft.wcoj.lastOutputBound", "?")}")
+          f"out=$nG%10d routed=${tG}%6.2fs(cells=${attr("wcoj.cells")(routed)}) " +
+          f"forced_single=${tS}%6.2fs(cells=${attr("wcoj.cells")(single)}) " +
+          f"bound=${attr("wcoj.outputBound")(routed)}")
       }
     }
 

@@ -2,7 +2,7 @@ package graft.wcoj
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{QueryTrace, SparkSpec}
 import LeapFrog.Relation
 
 class LeapFrogSpec extends AnyFunSuite {
@@ -246,42 +246,42 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
       (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
-    def countRows(): Long =
-      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count()
+    def countRows(): (Long, QueryTrace) = QueryTrace.run(spark)(
+      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count())
     try {
       spark.conf.set("graft.wcoj.singleCellMaxBindings", "1000")
-      val viaGrid = countRows()
-      assert(spark.conf.get("graft.wcoj.lastCells").toInt > 1,
+      val (viaGrid, grid) = countRows()
+      assert(grid("wcoj.cells").toInt > 1,
         "estimated-large output must keep the parallel grid")
-      assert(spark.conf.get("graft.wcoj.lastOutputBound").toLong > 1000L)
+      assert(grid("wcoj.outputBound").toLong > 1000L)
       spark.conf.set("graft.wcoj.singleCellMaxBindings", (16L << 20).toString)
-      val viaSingle = countRows()
-      assert(spark.conf.get("graft.wcoj.lastCells").toInt === 1)
+      val (viaSingle, single) = countRows()
+      assert(single("wcoj.cells").toInt === 1)
       assert(viaGrid === viaSingle) // routing is a pure execution change
       assert(viaGrid > 0L)
     } finally spark.conf.unset("graft.wcoj.singleCellMaxBindings")
   }
 
-  test("lastOutputBound is cleared when routing skips the byte-gated estimate") {
+  test("a trace that skips the byte-gated estimate holds no output bound") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    // ADVICE r15: the bound is only computed inside the byte-gated branch,
-    // so a query routed past it (inputs over singleCellBytes) must not
-    // leave an earlier query's bound for ScaleCheck to misattribute
+    // the bound is only computed inside the byte-gated branch, so a query
+    // routed past it (inputs over singleCellBytes) reports none — never
+    // an earlier query's
     val edges = (for { u <- 0 until 20; v <- 0 until 20; if u != v }
       yield (u.toLong, v.toLong)).toDF("src", "dst")
     def rels() = Seq(
       (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
       (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
-    def run(): Long = WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count()
+    def run(): QueryTrace = QueryTrace.run(spark)(
+      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count())._2
     try {
-      run(): Unit // defaults: byte gate passes, bound computed
-      assert(spark.conf.getOption("graft.wcoj.lastOutputBound").isDefined)
+      // defaults: byte gate passes, bound computed
+      assert(run().get("wcoj.outputBound").isDefined)
       spark.conf.set("graft.wcoj.singleCellBytes", "1") // byte gate fails
-      run(): Unit
-      assert(spark.conf.getOption("graft.wcoj.lastOutputBound").isEmpty,
-        "stale bound survived a routing decision that never computed one")
+      assert(run().get("wcoj.outputBound").isEmpty,
+        "a bound in a trace whose routing never computed one")
     } finally spark.conf.unset("graft.wcoj.singleCellBytes")
   }
 
@@ -302,10 +302,11 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     try {
       spark.conf.set("graft.wcoj.singleCellMaxBindings", "5000")
-      WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c")).count(): Unit
-      assert(spark.conf.get("graft.wcoj.lastCells").toInt === 1,
+      val (_, trace) = QueryTrace.run(spark)(
+        WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c")).count())
+      assert(trace("wcoj.cells").toInt === 1,
         "degree bound (n) is under budget — the collapse must still fire")
-      assert(spark.conf.get("graft.wcoj.lastOutputBound").toLong <= 5000L)
+      assert(trace("wcoj.outputBound").toLong <= 5000L)
     } finally spark.conf.unset("graft.wcoj.singleCellMaxBindings")
   }
 
@@ -336,15 +337,15 @@ class WcojJoinSpec extends SparkSpec {
 
   /** Runs `f` with the single-cell collapse off, so LeapFrogJoinExec routes
     * through the Shares grid; `f` must execute the join (the exec reads the
-    * conf when its routing runs).
+    * conf when its routing runs). Also returns the cells it routed through.
     */
-  private def onGrid[T](f: => T): T = {
+  private def onGrid[T](f: => T): (T, Int) = {
     spark.conf.set("graft.wcoj.singleCellBytes", "0")
-    try f finally spark.conf.unset("graft.wcoj.singleCellBytes")
+    try {
+      val (out, trace) = QueryTrace.run(spark)(f)
+      (out, trace("wcoj.cells").toInt)
+    } finally spark.conf.unset("graft.wcoj.singleCellBytes")
   }
-
-  /** Cells the last executed LeapFrogJoinExec routed through. */
-  private def lastCells: Int = spark.conf.get("graft.wcoj.lastCells").toInt
 
   test("distributed triangle equals DataFrame 3-way join") {
     val rnd = new scala.util.Random(42)
@@ -356,14 +357,14 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val viaWcoj = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
+    val (viaWcoj, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
       Seq("a", "b", "c"))
       .as[(Long, Long, Long)].collect().toSet)
 
-    assert(lastCells > 1)
+    assert(cells > 1)
     assert(viaWcoj === viaDf)
     assert(viaWcoj.nonEmpty) // non-vacuous on this density
   }
@@ -404,8 +405,8 @@ class WcojJoinSpec extends SparkSpec {
       Seq((ab, Seq("a", "b")), (bc, Seq("b", "c")), (ac, Seq("a", "c"))),
       Seq("a", "b", "c"))
     // collect THIS Dataset: its executed plan holds the exec that ran
-    val viaWcoj = onGrid(out.collect())
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val (collected, cells) = onGrid(out.collect())
+    val viaWcoj = collected.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaWcoj === viaDf)
     assert(viaWcoj.nonEmpty)
 
@@ -414,7 +415,7 @@ class WcojJoinSpec extends SparkSpec {
       case e: LeapFrogJoinExec => e.chosen
     }.flatten.head.shares
     def p(attr: String) = shares.p(shares.attrs.indexOf(attr))
-    assert(shares.numCells === lastCells && lastCells > 1)
+    assert(shares.numCells === cells && cells > 1)
     assert(p("a") < p("b") && p("a") < p("c"), shares.p.mkString(","))
   }
 
@@ -428,14 +429,14 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val viaCube = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
+    val (viaCube, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
       Seq("a", "b", "c"))
       .as[(Long, Long, Long)].collect().toSet)
 
-    assert(lastCells > 1)
+    assert(cells > 1)
     assert(viaCube === viaDf)
     assert(viaCube.nonEmpty)
   }
@@ -563,8 +564,8 @@ class WcojJoinSpec extends SparkSpec {
     def run() = WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c", "d"))
       .as[(Long, Long, Long, Long)].collect().toSet
     val viaLf = run()
-    val viaCube = onGrid(run())
-    assert(lastCells > 1)
+    val (viaCube, cells) = onGrid(run())
+    assert(cells > 1)
 
     assert(viaLf === viaDf)
     assert(viaCube === viaDf)
@@ -587,9 +588,9 @@ class WcojJoinSpec extends SparkSpec {
     spark.conf.set("graft.wcoj.cellBudgetBytes", "16384")
     try {
       // the floor is defaultParallelism; budget growth kicks in past it
-      val cube = onGrid(WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
+      val (cube, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
         .as[(Long, Long, Long)].collect().toSet)
-      assert(lastCells > spark.sparkContext.defaultParallelism)
+      assert(cells > spark.sparkContext.defaultParallelism)
       assert(cube === viaDf)
     } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
   }
@@ -644,10 +645,10 @@ class WcojJoinSpec extends SparkSpec {
   test("hypercube disconnected join degenerates to a partitioned cross product") {
     val x = Seq(1L, 2L).toDF("x")
     val y = Seq(10L, 20L, 30L).toDF("y")
-    val got = onGrid(WcojJoin.leapfrogCatalyst(spark,
+    val (got, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark,
         Seq((x, Seq("x")), (y, Seq("y"))), Seq("x", "y"))
       .as[(Long, Long)].collect().toSet)
-    assert(lastCells > 1)
+    assert(cells > 1)
     assert(got === (for (a <- Seq(1L, 2L); b <- Seq(10L, 20L, 30L)) yield (a, b)).toSet)
   }
 }
