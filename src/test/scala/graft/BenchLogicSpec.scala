@@ -1,262 +1,97 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench harness's own guard logic — the r14 regression shipped
-  * because the harness compared only totals, so the guards themselves are
-  * part of the product's measurement contract and need specs like any
-  * operator:
-  *   - [[Bench.anchorBasis]] must classify the two MEASURED r15 windows
-  *     correctly (the coherent rerun on min, the bimodal morning run on
-  *     median — where the min-normalized total was a nonsense 157 s vs
-  *     128 by median);
-  *   - [[Bench.regressionsVsPrev]] must fire on a ×1.5+ anchor-normalized
-  *     gate, honor the 0.05 s prior floor and the error exclusion, and
-  *     normalize across the two records' differing anchor ratios.
+/** Pins the bench harness's own output logic: the compact summary line
+  * a reader parses out of a stdout tail, and the one step from a run's
+  * pass times and failures to both stdout lines.
   */
 class BenchLogicSpec extends AnyFunSuite {
 
-  private val refs = Map("anchor_scan_agg" -> 0.144,
-    "anchor_bcast_join" -> 0.084, "anchor_shuffle_join" -> 0.369)
-
-  test("anchorBasis: the measured r15 coherent window stays on the min basis") {
-    // mins/medians/maxes reconstructed from the committed r15 record's
-    // per-anchor fields (min, med, spread=(max-min)/min)
-    val samples = Map(
-      "anchor_scan_agg" -> List(0.1998, 0.2272, 0.1998 * 1.579),
-      "anchor_bcast_join" -> List(0.1276, 0.138, 0.1276 * 1.995),
-      "anchor_shuffle_join" -> List(0.4502, 0.4691, 0.4502 * 1.54))
-    val (basis, ratio) = Bench.anchorBasis(samples, refs)
-    assert(basis === "min")
-    assert(math.abs(ratio - 1.303) < 0.01)
-  }
-
-  test("anchorBasis: the measured r15 bimodal window flips to the median basis") {
-    val samples = Map(
-      "anchor_scan_agg" -> List(0.1576, 0.2185, 0.1576 * 2.163),
-      "anchor_bcast_join" -> List(0.1005, 0.1594, 0.1005 * 2.841),
-      "anchor_shuffle_join" -> List(0.4123, 0.4449, 0.4123 * 1.72))
-    val (basis, ratio) = Bench.anchorBasis(samples, refs)
-    assert(basis === "median")
-    // median-based ratio ≈ 0.823 / 0.597 ≈ 1.38, the number that made the
-    // bimodal run's normalized total agree with the coherent one
-    assert(math.abs(ratio - 1.378) < 0.02)
-  }
-
-  test("regressionsVsPrev: fires on x1.5+, honors the floor, errors, and cross-ratio normalization") {
-    val prev = """{"metric":"total","value":9.9,"anchor_ratio":1.2,""" +
-      """"queries":{"q_slow":1.2,"q_flat":1.2,"q_tiny":0.04,""" +
-      """"q_err":1.0,"q_gone":2.0},"errors":{}}"""
-    val times = Map(
-      "q_slow" -> 2.0,  // prevNorm 1.0, curNorm 2.0 → ×2.0: FIRES
-      "q_flat" -> 1.1,  // prevNorm 1.0, curNorm 1.1 → ×1.1: quiet
-      "q_tiny" -> 0.2,  // ×5 but prior 0.04 < 0.05 floor: quiet
-      "q_err" -> 9.0,   // errored this run: quiet
-      "q_new" -> 5.0)   // not in prev: quiet
-    val out = Bench.regressionsVsPrev(prev, times, _ == "q_err", curRatio = 1.0)
-    assert(out.map(_._1) === Seq("q_slow"))
-    val (_, prevNorm, curNorm, ratio) = out.head
-    assert(math.abs(prevNorm - 1.0) < 1e-9) // 1.2 / 1.2
-    assert(math.abs(curNorm - 2.0) < 1e-9)
-    assert(math.abs(ratio - 2.0) < 1e-9)
-    // a slow current WINDOW (curRatio 2.0) must suppress the false alarm:
-    // same raw times, but normalized they are flat
-    assert(Bench.regressionsVsPrev(prev, times, _ == "q_err", curRatio = 2.0).isEmpty)
-    // and a record with no queries block contributes nothing
-    assert(Bench.regressionsVsPrev("{}", times, _ => false, 1.0).isEmpty)
-    // the suspect-detection threshold (r17 confirm pass) widens the net
-    // below the x1.5 flagging wire: x1.45 is a suspect at 1.35, not a flag
-    val nearWire = Map("q_flat" -> 1.45)
-    assert(Bench.regressionsVsPrev(prev, nearWire, _ => false, 1.0).isEmpty)
-    assert(Bench.regressionsVsPrev(prev, nearWire, _ => false, 1.0,
-      threshold = 1.35).map(_._1) === Seq("q_flat"))
-  }
-
-  test("anchorBasis: one hiccup sample on one anchor does not flip the basis (r16)") {
-    // measured r16 window: scan spread 2.28 from a single bad sample while
-    // the other anchors ran tight (0.61 / 0.36) — the old MEAN spread
-    // (1.08) flipped to the median basis and normalized a 158 s run to a
-    // nonsense 82 s; the median per-anchor spread (0.61) keeps min
-    val samples = Map(
-      "anchor_scan_agg" -> List(0.18, 0.2668, 0.18 * 3.275),
-      "anchor_bcast_join" -> List(0.1123, 0.18, 0.1123 * 1.607),
-      "anchor_shuffle_join" -> List(0.5321, 0.7113, 0.5321 * 1.362))
-    val (basis, ratio) = Bench.anchorBasis(samples, refs)
-    assert(basis === "min")
-    assert(math.abs(ratio - 1.381) < 0.01)
-  }
-
-  test("regressionsVsPrev: parses scientific-notation prior times correctly") {
-    // ADVICE r15: [0-9.]+ read 5E-1 as 5 — a ×4 real regression on a
-    // half-second gate would then look like ×0.4 and stay silent
-    val prev = """{"anchor_ratio":1.0,"queries":{"q_sci":5E-1,"q_neg":8.5E-4}}"""
-    val out = Bench.regressionsVsPrev(prev, Map("q_sci" -> 2.0, "q_neg" -> 0.04),
-      _ => false, curRatio = 1.0)
-    assert(out.map(_._1) === Seq("q_sci"))
-    val (_, prevNorm, _, ratio) = out.head
-    assert(math.abs(prevNorm - 0.5) < 1e-9)
-    assert(math.abs(ratio - 4.0) < 1e-9)
-    // q_neg: prior 8.5e-4 is under the 0.05 s floor — quiet even though the
-    // raw ratio is ×47 (the OLD parse read it as 8.5 and was quiet for the
-    // wrong reason; this pins the right one)
-  }
-
-  test("confirmedRegressions: window scatter clears on confirm, a real regression survives (r17)") {
-    // shaped like the r16 record's adjudicated entries: gates detected at
-    // ×1.53–2.07 whose confirm re-measure lands back in band → CLEARED
-    // (reported with detect/confirm values, not flagged); one synthetic
-    // true regression whose confirm reproduces the slowdown → CONFIRMED
-    val prev = """{"anchor_ratio":1.0,"queries":{"q_scatter_a":1.0,""" +
-      """"q_scatter_b":2.0,"q_real":1.0,"q_flat":1.0},"sf":"/x/sf0.1"}"""
-    val detect = Map(
-      "q_scatter_a" -> 1.53, // ×1.53 at detection (an r16-record entry shape)
-      "q_scatter_b" -> 4.14, // ×2.07
-      "q_real" -> 2.2,       // ×2.2
-      "q_flat" -> 1.05)
-    // confirm samples: scatter gates recover (min drops under the wire),
-    // the real regression reproduces (min stays ×1.5+)
-    val fin = Map(
-      "q_scatter_a" -> 1.1,  // confirm 1.1 → final ratio ×1.1
-      "q_scatter_b" -> 2.6,  // confirm 2.6 → ×1.3
-      "q_real" -> 2.1,       // confirm 2.1 → still ×2.1
-      "q_flat" -> 1.05)
-    val (confirmed, cleared) =
-      Bench.confirmedRegressions(prev, detect, fin, _ => false, 1.0)
-    assert(confirmed.map(_.name) === Seq("q_real"))
-    assert(math.abs(confirmed.head.ratio - 2.1) < 1e-9)
-    // raw times ride in the entry (VERDICT r17 #2) and the raw growth
-    // (1.0 -> 2.1, x2.1 >= 1.25) machine-adjudicates as a PLAN regression
-    assert(math.abs(confirmed.head.prevRaw - 1.0) < 1e-9)
-    assert(math.abs(confirmed.head.curRaw - 2.1) < 1e-9)
-    assert(confirmed.head.cls === "plan")
-    assert(cleared.map(_._1).sorted === Seq("q_scatter_a", "q_scatter_b"))
-    val a = cleared.find(_._1 == "q_scatter_a").get
-    assert(math.abs(a._3 - 1.53) < 1e-9) // detect-time norm, documented
-    assert(math.abs(a._4 - 1.1) < 1e-9)  // confirm-time norm
-    // no prev gates block → nothing confirmed, nothing cleared
-    assert(Bench.confirmedRegressions("{}", detect, fin, _ => false, 1.0)
-      === ((Nil, Nil)))
-  }
-
-  test("regressionClass: the q178-shaped leverage flap is machine-adjudicated, a raw 2x is plan (r18)") {
-    // VERDICT r17 #2: the committed r17 record's one confirmed entry
-    // (q178_grouping_id x1.51) was raw-FLAT across all fourteen same-day
-    // windows — a small gate that doesn't scale with the anchors crosses
-    // the x1.5 wire whenever a fast window meets a slow baseline. That
-    // adjudication was README prose re-derived by hand each round; now
-    // it is a field. The exact committed shape: prev_norm 0.134 (raw
-    // 0.176 at prev ratio 1.317), cur_norm 0.201 (raw 0.201 at ratio
-    // 1.0) → normalized x1.51, raw x1.14 < 1.25 → leverage.
-    val prev = """{"anchor_ratio":1.317,"queries":{"q_lev":0.176,""" +
-      """"q_plan":0.5},"sf":"/x/sf0.1"}"""
-    val times = Map("q_lev" -> 0.201, "q_plan" -> 1.1)
-    val (confirmed, _) =
-      Bench.confirmedRegressions(prev, times, times, _ => false, 1.0)
-    val byName = confirmed.map(r => r.name -> r).toMap
-    assert(byName("q_lev").cls === "leverage")
-    assert(byName("q_lev").ratio > 1.5)
-    assert(math.abs(byName("q_lev").prevRaw - 0.176) < 1e-9)
-    assert(math.abs(byName("q_lev").curRaw - 0.201) < 1e-9)
-    // a genuine raw doubling is a plan regression even when the
-    // normalized ratio is identical in magnitude
-    assert(byName("q_plan").cls === "plan")
-    // the pure classifier wire sits at x1.25 raw
-    assert(Bench.regressionClass(1.0, 1.24) === "leverage")
-    assert(Bench.regressionClass(1.0, 1.26) === "plan")
-    assert(Bench.regressionClass(0.0, 1.0) === "plan") // no prior: not leverage
-  }
-
-  test("gateMedianRatioVsPrev: median over overlapping gates >= 0.2 s, basis-robust (r17)") {
-    // prev record at ratio 1.2 (its gates' norms = raw/1.2); current run
-    // at ratio 1.0. Overlap floor: prev NORM >= 0.2 s.
-    val prev = """{"anchor_ratio":1.2,"queries":{"qa":1.2,"qb":2.4,""" +
-      """"qc":0.12,"qd":1.2,"qe":6.0,"q_err":1.2},"sf":"/x/sf0.1"}"""
-    val times = Map(
-      "qa" -> 1.0,  // prevNorm 1.0 → ratio 1.0
-      "qb" -> 2.2,  // prevNorm 2.0 → 1.1
-      "qc" -> 0.5,  // prevNorm 0.1 < 0.2 floor → excluded
-      "qd" -> 0.9,  // → 0.9
-      "qe" -> 6.0,  // prevNorm 5.0 → 1.2
-      "q_err" -> 9.0) // errored → excluded
-    val Some((med, n)) = Bench.gateMedianRatioVsPrev(prev, times,
-      _ == "q_err", curRatio = 1.0): @unchecked
-    assert(n === 4)
-    // sorted ratios (0.9, 1.0, 1.1, 1.2) → median (upper) 1.1
-    assert(math.abs(med - 1.1) < 1e-9)
-    // the statistic is ANCHOR-NORMALIZED on both sides: a uniformly slow
-    // current window (curRatio 2.0) must not read as a regression
-    val Some((med2, _)) = Bench.gateMedianRatioVsPrev(prev,
-      times.view.mapValues(_ * 2).toMap, _ == "q_err", 2.0): @unchecked
-    assert(math.abs(med2 - med) < 1e-9)
-    assert(Bench.gateMedianRatioVsPrev("{}", times, _ => false, 1.0).isEmpty)
-  }
-
-  test("volatileDefault: the min-of-3 list is the r18 measured state (entry/exit rule applied)") {
-    // VERDICT r16 #4: the list must be a measured state with an exit
-    // criterion, not a ratchet. r18 ran the BenchSpread tool over the
-    // three r17-code full windows: 6 members measured < 1.3x and left
-    // (q43 1.12, q76 1.26, q95 1.12, q96 1.11, q167 1.23, and q242
-    // 1.296 on its third window — the r17 carry, now adjudicated); 8
-    // stayed at >= 1.3x. This pins the count and spot-membership so
-    // additions/removals must re-run the measurement (see the rule and
-    // audit record at the definition).
-    assert(Bench.volatileDefault.size === 8)
-    assert(Bench.volatileDefault("q214_ingest_crawl")) // 2.37x, stays
-    assert(Bench.volatileDefault("q231_ivfsq8_adaptive")) // 1.63x, stays
-    assert(!Bench.volatileDefault("q242_ivf_drift_rebuild")) // 1.296, exited on window 3
-    assert(!Bench.volatileDefault("q43_wcc")) // 1.12x, exited
-    assert(!Bench.volatileDefault("q216_cdc_upsert")) // exited r17
-  }
-
-  test("sfMatches: requires a recorded sf and normalizes only the trailing slash") {
-    val rec = """{"value":1.0,"sf":"/root/testdata/sf0.1"}"""
-    assert(Bench.sfMatches(rec, "/root/testdata/sf0.1"))
-    assert(Bench.sfMatches(rec, "/root/testdata/sf0.1/"))
-    assert(!Bench.sfMatches(rec, "/root/testdata/sf0.01"))
-    // a record MISSING the field is never compared (the old forall matched it)
-    assert(!Bench.sfMatches("""{"value":1.0}""", "/root/testdata/sf0.1"))
-  }
+  private val mapper = new ObjectMapper()
 
   test("compactSummary: fits the driver's tail, keeps the slowest gates, says what it omitted") {
-    // VERDICT r18 #1: the driver parses only a ~2000-char stdout tail; the
-    // 240-gate map is ~6 KB, so the compact line packs the SLOWEST gates
-    // into the budget and declares the omission in-band.
+    // a stdout-tail reader sees only ~2000 chars; the 240-gate map is
+    // ~6 KB, so the compact line packs the SLOWEST gates into the budget
+    // and declares the omission in-band.
     val times = (1 to 240).map(i => f"q${i}_gate_name_of_usual_len" -> i * 0.01).toMap
     val line = Bench.compactSummary(times.values.sum, times, Map.empty,
-      Some(1.128), "min", runs = 2, sfDir = "/root/testdata/sf0.1")
+      runs = 2, sfDir = "/data/sf0.1")
     assert(line.length <= 1800, s"line is ${line.length} chars")
     assert(line.startsWith("""{"metric":"total","value":"""))
-    assert(line.endsWith(""","sf":"/root/testdata/sf0.1"}"""))
+    assert(line.endsWith(""","sf":"/data/sf0.1"}"""))
     // the very slowest gate is always present; the very fastest never is
     // (240 entries cannot fit — the omission count must be exact)
     assert(line.contains("\"q240_gate_name_of_usual_len\":2.4"))
     assert(!line.contains("\"q1_gate_name_of_usual_len\":"))
-    val omitted = """"queries_omitted":(\d+)""".r
-      .findFirstMatchIn(line).get.group(1).toInt
-    val kept = """"q\d+_gate_name_of_usual_len":""".r
-      .findAllMatchIn(line).size
-    assert(kept + omitted === 240)
-    assert(line.contains(""""anchor_ratio":1.128"""))
-    assert(line.contains(""""total_anchor_normalized":"""))
-    assert(line.contains(""""full_queries_in":"bench_out.json""""))
-    // balanced braces — the line must be one complete JSON object
-    assert(line.count(_ == '{') === line.count(_ == '}'))
+    // the line is one complete JSON object
+    val tree = mapper.readTree(line)
+    assert(tree.get("queries").size + tree.get("queries_omitted").asInt === 240)
+    assert(tree.get("full_queries_in").asText === "bench_out.json")
   }
 
   test("compactSummary: a small suite fits whole, zero omitted; error storms degrade to a count") {
     val times = Map("q1_agg" -> 0.1, "q2_filter" -> 0.2)
     val line = Bench.compactSummary(0.3, times, Map("q3_x" -> "Boom"),
-      None, "none", runs = 2, sfDir = "/x")
+      runs = 2, sfDir = "/x")
     assert(line.contains(""""queries":{"q1_agg":0.1,"q2_filter":0.2}"""))
     assert(line.contains(""""queries_omitted":0"""))
     assert(line.contains(""""errors":{"q3_x":"Boom"}"""))
     assert(line.contains(""""n_queries":3"""))
-    assert(!line.contains("anchor_ratio")) // no normalization off-sf0.1
     val storm = (1 to 100).map(i => s"q${i}_e" -> "SomeLongExceptionClassName").toMap
-    val line2 = Bench.compactSummary(0.3, times, storm, None, "none", 2, "/x")
+    val line2 = Bench.compactSummary(0.3, times, storm, 2, "/x")
     assert(line2.length <= 1800)
     assert(line2.contains(""""errors":"see bench_out.json""""))
     assert(line2.contains(""""n_errors":100"""))
+  }
+
+  test("report: a gate that fails on a later pass is counted once, as an error") {
+    // q_a timed 0.5 s on pass 1 and threw on pass 2. Summing samples and
+    // errors separately counted it twice (n_queries 3 for 2 gates) and
+    // listed its pass-1 time while the full record said -1.
+    val (record, summary) = Bench.report(
+      samples = Map("q_a" -> Seq(0.5), "q_b" -> Seq(0.25, 0.2)),
+      errors = Map("q_a" -> "java.lang.RuntimeException"),
+      phases = Map.empty, runs = 2, sfDir = "/x", env = Map.empty)
+    val s = mapper.readTree(summary)
+    assert(s.get("n_queries").asInt === 2)
+    assert(s.get("n_errors").asInt === 1)
+    assert(!s.get("queries").has("q_a"))
+    assert(s.get("queries").get("q_b").asDouble === 0.2)
+    assert(s.get("value").asDouble === 0.2)
+    val r = mapper.readTree(record)
+    assert(r.get("queries").get("q_a").asInt === -1)
+    assert(r.get("queries").get("q_b").asDouble === 0.2)
+    assert(r.get("value").asDouble === 0.2)
+  }
+
+  test("report: the full record is one JSON object with per-pass phases and env") {
+    val pass = (jobs: Long) => scala.collection.immutable.ListMap[String, Any](
+      "cycle1" -> 0.12, "wcoj.cells" -> 4L, "jobs" -> jobs, "tasks" -> 8L,
+      "task_s" -> 0.3, "spill_bytes" -> 0L, "peak_exec_bytes" -> 1024L)
+    val odd = "a \"quoted\" \\ path\twith\u0001control"
+    val (record, _) = Bench.report(
+      samples = Map("q47_wcoj_triangle" -> Seq(1.5, 1.25)),
+      errors = Map("q9_broken" -> odd),
+      phases = Map("q47_wcoj_triangle" -> Seq(pass(3L), pass(2L))),
+      runs = 2, sfDir = "/x/sf0.001",
+      env = Map("tmp_base" -> "/dev/shm", "tmp_free_bytes" -> 7L))
+    val r = mapper.readTree(record)
+    val fields = r.fieldNames().asScala.toList
+    assert(fields === List("metric", "value", "unit", "queries", "errors",
+      "runs", "env", "phases", "sf"))
+    assert(r.get("value").asDouble === 1.25)
+    assert(r.get("errors").get("q9_broken").asText === odd)
+    val passes = r.get("phases").get("q47_wcoj_triangle")
+    assert(passes.size === 2)
+    assert(passes.get(0).get("jobs").asLong === 3L)
+    assert(passes.get(1).get("jobs").asLong === 2L)
+    assert(passes.get(1).fieldNames().asScala.toList ===
+      pass(2L).keys.toList)
+    assert(r.get("env").get("tmp_base").asText === "/dev/shm")
   }
 
   test("SessionDefaults carries the promoted engine confs for every entry point") {

@@ -61,44 +61,4 @@ class ReadmeCanarySpec extends AnyFunSuite {
     assert(math.abs(value - total) < 0.1,
       f"README pins the bench record at $total%.1f s but bench_out.json holds $value%.1f s")
   }
-
-  test("README documents the r17 tripwire confirm pass and the min-of-3 entry/exit rule") {
-    // VERDICT r16 #3/#4: the tripwire requires persistence (a confirm
-    // re-measure) before flagging, and the min-of-3 list carries an
-    // entry/exit rule with a pinned gate count. README must say both —
-    // and the count it pins must BE the code's.
-    assert(readme.contains("confirm"),
-      "README no longer documents the tripwire confirm pass")
-    val pinned = raw"min-of-3 list holds\s+(\d+)\s+gates".r
-      .findFirstMatchIn(readme).map(_.group(1).toInt)
-    assert(pinned.contains(Bench.volatileDefault.size),
-      s"README pins the min-of-3 list at ${pinned.getOrElse("<missing>")} " +
-        s"gates but Bench.volatileDefault holds ${Bench.volatileDefault.size} — " +
-        "re-run the spread measurement and update both in one commit")
-    assert(readme.contains("gate_median_ratio_vs_prev"),
-      "README must quote the machine-computed round-over-round field")
-  }
-
-  test("README's anchor-basis thresholds match Bench.anchorBasis's boundary behavior") {
-    // r15 shipped README saying the median basis engages at "≥ 1.3× the
-    // mins" while Bench used 1.15 — and the measured bimodal window
-    // (1.228) fell exactly between them, so the stale sentence
-    // re-documented the bug the calibration commit fixed. Pin BOTH the
-    // README text and the detector's actual flip points.
-    assert(readme.contains("≥ 1.15× the mins"),
-      "README no longer documents the 1.15 median-basis threshold")
-    assert(!raw"≥ 1\.3× the mins".r.findFirstIn(readme).isDefined,
-      "README still carries the stale 1.3 threshold sentence")
-    val refs = Map("anchor_scan_agg" -> 0.144,
-      "anchor_bcast_join" -> 0.084, "anchor_shuffle_join" -> 0.369)
-    // three samples per anchor with medSum/minSum = f and avg spread = s
-    def win(f: Double, s: Double) = refs.keys.map { k =>
-      k -> List(0.2, 0.2 * f, 0.2 * (1 + s))
-    }.toMap
-    assert(Bench.anchorBasis(win(1.16, 0.85), refs)._1 === "median")
-    assert(Bench.anchorBasis(win(1.14, 0.85), refs)._1 === "min",
-      "median-ratio threshold drifted below the documented 1.15")
-    assert(Bench.anchorBasis(win(1.16, 0.75), refs)._1 === "min",
-      "spread threshold drifted below the documented 0.8")
-  }
 }
