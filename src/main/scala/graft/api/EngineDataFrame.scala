@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.expr
 
+import graft.Rounds
+
 /** DataFrame façade with the reference's user-facing API
   * (SeccoDataFrame.scala:48-314). Deliberate semantics kept from the
   * reference, documented where they differ from SQL intuition:
@@ -107,8 +109,9 @@ final case class EngineDataFrame(df: DataFrame, session: EngineSession) {
     wrap(other.df.unionByName(df.join(other.df.select(keyCols.map(org.apache.spark.sql.functions.col): _*), keyCols, "left_anti")))
 
   /** Fixed-round iteration — the reference's `Recursion(plan, round)` /
-    * `Iterative` operators (graphOperators.scala:189, unaryOperators.scala:298).
-    * Lineage is truncated each round (SURVEY §7.3 iterative-state risk).
+    * `Iterative` operators (graphOperators.scala:189, unaryOperators.scala:298),
+    * run by [[graft.Rounds]]: lineage is truncated each round (SURVEY §7.3
+    * iterative-state risk).
     *
     * Storage contract: each round's materialized blocks are RELEASED once
     * the following round materializes, so a `step` closure must not retain
@@ -117,19 +120,7 @@ final case class EngineDataFrame(df: DataFrame, session: EngineSession) {
     */
   def iterate(rounds: Int)(step: EngineDataFrame => EngineDataFrame): EngineDataFrame = {
     require(rounds >= 0)
-    var cur = this
-    var i = 0
-    while (i < rounds) {
-      val next = wrap(step(cur).df.localCheckpoint(true))
-      // the eager checkpoint has fully materialized `next`, so the previous
-      // round's blocks are dead — release them or storage grows linearly
-      // with rounds for the app lifetime. Round 0's input is the caller's
-      // frame (possibly their own checkpoint): never released here.
-      if (i > 0) org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(cur.df)
-      cur = next
-      i += 1
-    }
-    cur
+    wrap(Rounds.run(df, rounds)((d, _) => step(wrap(d)).df))
   }
 
   /** Iterate to fixpoint with a round cap — `WITH RECURSIVE(n)` CTE
@@ -137,22 +128,10 @@ final case class EngineDataFrame(df: DataFrame, session: EngineSession) {
     * no change (same row multiset) or after `maxRounds`.
     */
   def iterateToFixpoint(maxRounds: Int)(step: EngineDataFrame => EngineDataFrame): EngineDataFrame = {
-    var cur = wrap(df.localCheckpoint(true))
-    var i = 0
-    var done = false
-    while (i < maxRounds && !done) {
-      val next = wrap(step(cur).df.localCheckpoint(true))
-      val changed = next.df.exceptAll(cur.df).limit(1).count() +
-        cur.df.exceptAll(next.df).limit(1).count()
-      // the change check was this round's last read of `cur` — release its
-      // blocks (every `cur` here was checkpointed by this loop, round 0
-      // included, so nothing of the caller's is touched)
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(cur.df)
-      done = changed == 0
-      cur = next
-      i += 1
+    val same = Rounds.After { (prev, next) =>
+      next.exceptAll(prev).limit(1).count() + prev.exceptAll(next).limit(1).count() == 0
     }
-    cur
+    wrap(Rounds.run(df, maxRounds, same, pinInit = true)((d, _) => step(wrap(d)).df))
   }
 
   /* == actions (SeccoDataFrame.scala:59-117) == */

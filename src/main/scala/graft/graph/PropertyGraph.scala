@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Rounds
 import PatternParser._
 
 /** Property graph over two DataFrames — the reference's `SeccoGraphFrame`
@@ -138,7 +139,7 @@ final case class PropertyGraph(
     pattern(p).createOrReplaceTempView(name)
 
   /** Pregel-style message passing (SeccoGraphFrame.scala:104-146), rounds
-    * unrolled as a driver loop (the reference wraps in Recursion(plan, round)).
+    * unrolled by [[graft.Rounds]] (the reference wraps in Recursion(plan, round)).
     *
     * Expression vocabulary, all Spark SQL strings:
     *   - `initialMessage`: over vertex columns → initial `state`
@@ -147,9 +148,7 @@ final case class PropertyGraph(
     *   - `mergeFunction`: aggregate over `msg` grouped by destination → `newState`
     *   - `updateFunction`: over `state`, `newState` (null when no message) → next `state`
     *
-    * Returns (id, state). Lineage is truncated every round via
-    * localCheckpoint — the iterative-plan blowup risk called out in
-    * SURVEY §7.3.
+    * Returns (id, state), checkpointed every round.
     */
   def messagePassing(
       message: String,
@@ -158,31 +157,19 @@ final case class PropertyGraph(
       initialMessage: Option[String] = None,
       round: Int = 1): DataFrame = {
     require(round >= 1, "number of round should be greater or equal than 1")
-    val edgesBySrc = edges
-      .withColumnRenamed(srcCol, "__src").withColumnRenamed(dstCol, "__dst")
-      .repartition(col("__src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var state = vertices
+    val init = vertices
       .select(col(idCol).as("id"), expr(initialMessage.getOrElse("null")).as("state"))
-    var i = 0
-    while (i < round) {
-      val msgs = edgesBySrc
-        .join(state.withColumnRenamed("id", "__src"), Seq("__src"))
-        .select(col("__dst").as("id"), expr(message).as("msg"))
-      val merged = msgs.groupBy("id").agg(expr(mergeFunction).as("newState"))
-      val next = state
-        .join(merged, Seq("id"), "left")
-        .select(col("id"), expr(updateFunction).as("state"))
-        .localCheckpoint(true)
-      // the eager checkpoint was the last read of the previous round's
-      // blocks — release them (round 0's state derives from the caller's
-      // vertices, never released here)
-      if (i > 0) org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(state)
-      state = next
-      i += 1
+    persisted(edges.withColumnRenamed(srcCol, "__src").withColumnRenamed(dstCol, "__dst")
+        .repartition(col("__src"))) { edgesBySrc =>
+      Rounds.run(init, round) { (state, _) =>
+        val msgs = edgesBySrc
+          .join(state.withColumnRenamed("id", "__src"), Seq("__src"))
+          .select(col("__dst").as("id"), expr(message).as("msg"))
+        val merged = msgs.groupBy("id").agg(expr(mergeFunction).as("newState"))
+        state.join(merged, Seq("id"), "left")
+          .select(col("id"), expr(updateFunction).as("state"))
+      }
     }
-    edgesBySrc.unpersist(false)
-    state
   }
 
   /** Directed 3-cycle count — the reference's flagship subgraph query S1
@@ -247,116 +234,76 @@ final case class PropertyGraph(
 
   /** PageRank, fixed iterations (reference benchmark I1,
     * benchmark/testcases/graphAnalytic.scala:11-75): contributions along
-    * out-edges, damping 0.85, dangling nodes keep the base term.
+    * out-edges, damping 0.85, dangling nodes keep the base term. The
+    * uniform-teleport case of [[personalizedPageRank]].
     */
-  def pageRank(iterations: Int, damping: Double = 0.85): DataFrame = {
-    val nodes = vertices.select(col(idCol).as("id"))
-    val outDeg = edges.groupBy(col(srcCol).as("id")).agg(count(lit(1)).as("deg"))
-    val ranked = nodes.join(outDeg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"), lit(1.0).as("rank"))
-    val e = edges.select(col(srcCol).as("id"), col(dstCol).as("dst"))
-      .repartition(col("id")).persist(StorageLevel.MEMORY_AND_DISK)
-    var state = ranked
-    var i = 0
-    while (i < iterations) {
-      val contribs = e.join(state.filter(col("deg") > 0), Seq("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("contrib"))
-      val sums = contribs.groupBy("id").agg(sum("contrib").as("contrib"))
-      val next = state.join(sums, Seq("id"), "left")
-        .select(col("id"), col("deg"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .localCheckpoint(true)
-      // prior round's checkpoint blocks are dead once `next` materializes
-      if (i > 0) org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(state)
-      state = next
-      i += 1
-    }
-    e.unpersist(false)
-    state.select(col("id"), col("rank"))
-  }
+  def pageRank(iterations: Int, damping: Double = 0.85): DataFrame =
+    randomWalk(iterations, damping, teleport = lit(1.0))
 
   /** Personalized PageRank: random walks restart at the `sources` set
     * instead of uniformly — rank becomes proximity TO the seeds, the
     * "related entities" / seed-expansion primitive (find documents
     * topically near a trusted set, accounts near known-bad ones). Same
-    * per-round shape as [[pageRank]] (one contrib join + one aggregate per
-    * round, rank state checkpointed); only the teleport vector differs:
+    * per-round shape as [[pageRank]]; only the teleport vector differs:
     * mass (1−d)/|S| re-enters at the seeds each round and nowhere else, and
     * the walk starts there too.
     */
   def personalizedPageRank(iterations: Int, sources: Seq[Long],
       damping: Double = 0.85): DataFrame = {
     require(sources.nonEmpty, "personalized PageRank needs at least one seed")
-    val teleport = when(col("id").isInCollection(sources),
-      lit(1.0 / sources.size)).otherwise(lit(0.0))
+    randomWalk(iterations, damping, teleport = when(col("id").isInCollection(sources),
+      lit(1.0 / sources.size)).otherwise(lit(0.0)))
+  }
+
+  /** Rank by `iterations` rounds of one contrib join + one aggregate; the
+    * walk starts at, and (1−d) of the mass re-enters at, `teleport` (a
+    * per-vertex weight over column `id`).
+    */
+  private def randomWalk(iterations: Int, damping: Double, teleport: Column): DataFrame = {
     val nodes = vertices.select(col(idCol).as("id"))
     val outDeg = edges.groupBy(col(srcCol).as("id")).agg(count(lit(1)).as("deg"))
     val ranked = nodes.join(outDeg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
-        teleport.as("rank"))
-    val e = edges.select(col(srcCol).as("id"), col(dstCol).as("dst"))
-      .repartition(col("id")).persist(StorageLevel.MEMORY_AND_DISK)
-    var state = ranked
-    var i = 0
-    while (i < iterations) {
-      val contribs = e.join(state.filter(col("deg") > 0), Seq("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("contrib"))
-      val sums = contribs.groupBy("id").agg(sum("contrib").as("contrib"))
-      val next = state.join(sums, Seq("id"), "left")
-        .select(col("id"), col("deg"),
-          (lit(1.0 - damping) * teleport +
-            lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .localCheckpoint(true)
-      if (i > 0) org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(state)
-      state = next
-      i += 1
-    }
-    e.unpersist(false)
-    state.select(col("id"), col("rank"))
+      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"), teleport.as("rank"))
+    persisted(edges.select(col(srcCol).as("id"), col(dstCol).as("dst"))
+        .repartition(col("id"))) { e =>
+      Rounds.run(ranked, iterations) { (state, _) =>
+        val contribs = e.join(state.filter(col("deg") > 0), Seq("id"))
+          .select(col("dst").as("id"), (col("rank") / col("deg")).as("contrib"))
+        val sums = contribs.groupBy("id").agg(sum("contrib").as("contrib"))
+        state.join(sums, Seq("id"), "left")
+          .select(col("id"), col("deg"),
+            (lit(1.0 - damping) * teleport +
+              lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
+      }
+    }.select(col("id"), col("rank"))
   }
 
   /** Connected components by iterative hash-min label propagation over the
     * undirected edge set (reference benchmark I2 "WCC"). Runs to
-    * convergence; `maxIterations` bounds the loop.
+    * convergence; `maxIterations` bounds the loop. The rounds run go to the
+    * query's [[graft.QueryTrace]] as `rounds`.
     *
     * @param pointerJump also adopt label(label(v)) each round, composing
     *   propagation paths: O(log diameter) rounds instead of O(diameter) at
     *   the cost of one extra join per round. Defaults ON, but ADAPTIVE: the
-    *   first `pointerJumpAfter` rounds run plain hash-min, and jumping only
-    *   engages if the graph has not converged by then. Small-diameter graphs
-    *   (the common social/web case) converge inside the plain prefix and
-    *   never pay the extra join; long-path graphs (road networks, chains)
-    *   switch to composition and finish in O(log diameter) rounds — each
-    *   Spark round is a full shuffle barrier, so round count dominates at
-    *   scale.
-    * @param pointerJumpAfter first round index at which label composition
-    *   engages (only with `pointerJump`); 0 jumps from the start.
+    *   first [[PropertyGraph.PointerJumpAfter]] rounds run plain hash-min,
+    *   and jumping only engages if the graph has not converged by then.
+    *   Small-diameter graphs (the common social/web case) converge inside
+    *   the plain prefix and never pay the extra join; long-path graphs (road
+    *   networks, chains) switch to composition and finish in
+    *   O(log diameter) rounds — each Spark round is a full shuffle barrier,
+    *   so round count dominates at scale.
     */
-  def connectedComponents(maxIterations: Int = 50, pointerJump: Boolean = true,
-      pointerJumpAfter: Int = 3): DataFrame =
-    connectedComponentsWithRounds(maxIterations, pointerJump, pointerJumpAfter)._1
-
-  /** [[connectedComponents]] plus the number of rounds actually run —
-    * observability for specs and convergence telemetry.
-    */
-  def connectedComponentsWithRounds(maxIterations: Int = 50,
-      pointerJump: Boolean = true, pointerJumpAfter: Int = 3): (DataFrame, Int) = {
-    val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .distinct()
-      .repartition(col("a")).persist(StorageLevel.MEMORY_AND_DISK)
-    var state = vertices.select(col(idCol).as("id"), col(idCol).cast("long").as("component"))
-      .localCheckpoint(true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val nbrMin = und.join(state.withColumnRenamed("id", "a"), Seq("a"))
-        .groupBy(col("b").as("id")).agg(min("component").as("nbrComponent"))
-      val relaxed = state.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("component").as("prev"),
-          least(col("component"), coalesce(col("nbrComponent"), col("component"))).as("c1"))
-      val stepped =
-        if (!pointerJump || i < pointerJumpAfter)
+  def connectedComponents(maxIterations: Int = 50, pointerJump: Boolean = true): DataFrame =
+    persisted(undirected) { und =>
+      Rounds.run(vertices.select(col(idCol).as("id"), col(idCol).cast("long").as("component")),
+          maxIterations, unchanged("component"), pinInit = true) { (state, i) =>
+        val nbrMin = und.join(state.withColumnRenamed("id", "a"), Seq("a"))
+          .groupBy(col("b").as("id")).agg(min("component").as("nbrComponent"))
+        val relaxed = state.join(nbrMin, Seq("id"), "left")
+          .select(col("id"), col("component").as("prev"),
+            least(col("component"), coalesce(col("nbrComponent"), col("component"))).as("c1"))
+        if (!pointerJump || i < PropertyGraph.PointerJumpAfter)
           relaxed.select(col("id"), col("prev"), col("c1").as("component"))
         else {
           // label(label(v)): component labels are always vertex ids, so the
@@ -366,25 +313,8 @@ final case class PropertyGraph(
             .select(col("id"), col("prev"),
               least(col("c1"), coalesce(col("jump"), col("c1"))).as("component"))
         }
-      // carry the previous label through the checkpoint so ONE job both
-      // materializes the round and returns the changed count: the lazy
-      // checkpoint is fully persisted by the all-partition aggregate (a
-      // limit(1).count could skip partitions, leaving live lineage), and
-      // the separate per-round count job — half of each round's job
-      // overhead, which dominates at small scale — disappears.
-      val next = stepped.localCheckpoint(false)
-      val changed = next.agg(count(when(col("component") =!= col("prev"), 1)))
-        .head().getLong(0)
-      // every `state` here is loop-checkpointed (round 0 included) and was
-      // last read while materializing `next` — release its blocks
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(state)
-      state = next.select("id", "component")
-      converged = changed == 0
-      i += 1
-    }
-    und.unpersist(false)
-    (state, i)
-  }
+      }
+    }.select("id", "component")
 
   /** Synchronous label-propagation community detection, deterministic:
     * labels start as vertex ids; each round every vertex adopts its
@@ -394,42 +324,33 @@ final case class PropertyGraph(
     * and keeps the output a pure function of the graph, which is what lets
     * the DuckDB oracle unroll the identical rounds. Per round: one shuffle
     * on the undirected edge join + one (vertex, label) count — the same
-    * envelope as a round of [[connectedComponentsWithRounds]].
+    * envelope as a round of [[connectedComponents]].
     */
   def labelPropagation(rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .distinct()
-      .repartition(col("a")).persist(StorageLevel.MEMORY_AND_DISK)
-    var state = vertices.select(col(idCol).as("id"), col(idCol).cast("long").as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val counts = und.join(state.withColumnRenamed("id", "a"), Seq("a"))
-        .groupBy(col("b").as("id"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      // the round winner (cnt DESC, lbl ASC) as a lexicographic struct max
-      // — a map-side-combinable aggregate instead of a per-id window, which
-      // costs a sort of every (id, lbl) pair each round; negating the label
-      // turns "smallest label" into the max ordering. Semantics identical
-      // to row_number()=1 over (cnt DESC, lbl ASC): counts are exact longs,
-      // so (cnt, -lbl) pairs are totally ordered with no rounding ties.
-      val winners = counts
-        .groupBy("id")
-        .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("id"), (-col("m.nl")).as("newLbl"))
-      // per-round truncation is load-bearing, not just a deep-plan guard:
-      // state feeds BOTH sides of the join (directly, and inside winners'
-      // counts), so a lazy chain would re-derive each round's state twice
-      // per successor — 2^rounds blowup. Materializing keeps every round
-      // executed exactly once.
-      val next = state.join(winners, Seq("id"), "left")
-        .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(state)
-      state = next
-    }
-    und.unpersist(false)
-    state.select(col("id"), col("lbl").as("community"))
+    // the initial state is pinned and every round checkpointed: state feeds
+    // BOTH sides of the join (directly, and inside winners' counts), so a
+    // lazy chain would re-derive each round's state twice per successor —
+    // 2^rounds blowup. Materializing keeps every round executed exactly once.
+    persisted(undirected) { und =>
+      Rounds.run(vertices.select(col(idCol).as("id"), col(idCol).cast("long").as("lbl")),
+          rounds, pinInit = true) { (state, _) =>
+        val counts = und.join(state.withColumnRenamed("id", "a"), Seq("a"))
+          .groupBy(col("b").as("id"), col("lbl")).agg(count(lit(1)).as("cnt"))
+        // the round winner (cnt DESC, lbl ASC) as a lexicographic struct max
+        // — a map-side-combinable aggregate instead of a per-id window, which
+        // costs a sort of every (id, lbl) pair each round; negating the label
+        // turns "smallest label" into the max ordering. Semantics identical
+        // to row_number()=1 over (cnt DESC, lbl ASC): counts are exact longs,
+        // so (cnt, -lbl) pairs are totally ordered with no rounding ties.
+        val winners = counts
+          .groupBy("id")
+          .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
+          .select(col("id"), (-col("m.nl")).as("newLbl"))
+        state.join(winners, Seq("id"), "left")
+          .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
+      }
+    }.select(col("id"), col("lbl").as("community"))
   }
 
   /** k-core decomposition by iterative peeling: repeatedly drop vertices
@@ -443,37 +364,31 @@ final case class PropertyGraph(
     */
   def kCore(k: Int, maxRounds: Int = 15): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .distinct()
-      .repartition(col("a")).persist(StorageLevel.MEMORY_AND_DISK)
-    var keep = vertices.select(col(idCol).as("id")).localCheckpoint(true)
-    var n = keep.count()
-    var round = 0
-    var converged = n == 0
-    while (!converged && round < maxRounds) {
-      val next = und
-        .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-        .groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("id")
-        .localCheckpoint(false)
-      // count() scans every partition, so it materializes the lazy
-      // checkpoint AND returns the survivor count in one job per round
+    var n = -1L // vertices the previous round kept
+    // count() scans every partition, so it materializes the lazy checkpoint
+    // AND returns the survivor count in one job per round
+    val peeled = Rounds.Scan { (prev, next) =>
+      if (n < 0) n = prev.count()
       val m = next.count()
-      converged = m == n
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(keep)
-      keep = next
+      val same = m == n
       n = m
-      round += 1
+      same
     }
-    und.unpersist(false)
     // the contract is the FIXPOINT — returning a non-converged superset
     // silently (deep-peeling graphs like long paths shrink by O(1) per
     // round) would be a wrong answer, so fail loudly instead
-    if (!converged) throw new IllegalStateException(
+    val notConverged = () => new IllegalStateException(
       s"kCore(k=$k) did not converge within $maxRounds rounds ($n vertices still shrinking); raise maxRounds")
-    keep
+    persisted(undirected) { und =>
+      Rounds.run(vertices.select(col(idCol).as("id")), maxRounds, peeled,
+          pinInit = true, notConverged = Some(notConverged)) { (keep, _) =>
+        und
+          .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
+          .groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select("id")
+      }
+    }
   }
 
   /** Single-source shortest paths over unit edge weights (reference benchmark
@@ -481,38 +396,48 @@ final case class PropertyGraph(
     */
   def sssp(source: Column, weightExpr: Option[String] = None, maxIterations: Int = 50): DataFrame = {
     val w = weightExpr.map(expr).getOrElse(lit(1.0))
-    val e = edges.select(col(srcCol).as("id"), col(dstCol).as("dst"), w.cast("double").as("w"))
-      .repartition(col("id")).persist(StorageLevel.MEMORY_AND_DISK)
-    var state = vertices.select(col(idCol).as("id"),
-      when(col(idCol) === source, 0.0).otherwise(lit(Double.PositiveInfinity)).as("dist"))
-      .localCheckpoint(true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val relax = e.join(state.filter(col("dist") =!= Double.PositiveInfinity), Seq("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      // previous distance rides along so the convergence check scans the
-      // checkpointed round instead of re-joining against the old state
-      // one job per round: lazy checkpoint materialized by the full-scan
-      // changed-count aggregate (see connectedComponentsWithRounds)
-      val next = state.join(relax, Seq("id"), "left")
-        .select(col("id"), col("dist").as("prev"),
-          least(col("dist"), coalesce(col("cand"), col("dist"))).as("dist"))
-        .localCheckpoint(false)
-      val changed = next.agg(count(when(col("dist") =!= col("prev"), 1)))
-        .head().getLong(0)
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(state)
-      state = next.select("id", "dist")
-      converged = changed == 0
-      i += 1
-    }
-    e.unpersist(false)
-    state
+    persisted(edges.select(col(srcCol).as("id"), col(dstCol).as("dst"), w.cast("double").as("w"))
+        .repartition(col("id"))) { e =>
+      Rounds.run(vertices.select(col(idCol).as("id"),
+          when(col(idCol) === source, 0.0).otherwise(lit(Double.PositiveInfinity)).as("dist")),
+          maxIterations, unchanged("dist"), pinInit = true) { (state, _) =>
+        val relax = e.join(state.filter(col("dist") =!= Double.PositiveInfinity), Seq("id"))
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
+          .groupBy("id").agg(min("cand").as("cand"))
+        state.join(relax, Seq("id"), "left")
+          .select(col("id"), col("dist").as("prev"),
+            least(col("dist"), coalesce(col("cand"), col("dist"))).as("dist"))
+      }
+    }.select("id", "dist")
+  }
+
+  /** The edge set in both directions, deduplicated, as (a, b) partitioned by a. */
+  private def undirected: DataFrame =
+    edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
+      .distinct()
+      .repartition(col("a"))
+
+  /** A [[graft.Rounds.Scan]] test for rounds that carry their previous value
+    * of `c` as `prev`: one full-scan job counts the vertices that changed.
+    */
+  private def unchanged(c: String): Rounds.Stop = Rounds.Scan { (_, next) =>
+    next.agg(count(when(col(c) =!= col("prev"), 1))).head().getLong(0) == 0
+  }
+
+  /** `body` over `df` persisted, unpersisted when `body` returns or throws. */
+  private def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(p) finally p.unpersist(false)
   }
 }
 
 object PropertyGraph {
+  /** Rounds of plain hash-min before [[PropertyGraph.connectedComponents]]
+    * engages pointer jumping.
+    */
+  private val PointerJumpAfter = 3
+
   /** Lift an edge list to a graph; vertex set derived from edge endpoints
     * (SeccoDataFrame.toGraph, SeccoDataFrame.scala:312-314).
     */

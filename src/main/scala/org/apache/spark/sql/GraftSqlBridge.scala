@@ -29,26 +29,19 @@ object GraftSqlBridge {
     classic.ExpressionUtils.expression(c)
 
   /** The persisted RDD backing a (local)checkpointed Dataset — None when the
-    * plan is not a checkpoint leaf. Iterative driver loops use it to release
-    * a finished round's storage blocks once the next round is materialized;
-    * without that, per-round `localCheckpoint(true)` blocks accumulate for
-    * the application lifetime.
+    * plan is not a checkpoint leaf (deliberately NOT a deep collect, which
+    * could reach a checkpoint the caller owns).
     */
-  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.execution.LogicalRDD
-    // a checkpoint leaf, possibly under the state-narrowing projection the
-    // iterative loops apply (`next.select(...)`) — deliberately NOT a deep
-    // collect, which could reach a checkpoint the caller owns
+  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     logicalPlan(df) match {
-      case lr: LogicalRDD => Some(lr.rdd)
-      case Project(_, lr: LogicalRDD) => Some(lr.rdd)
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
       case _ => None
     }
-  }
 
   /** Unpersist the checkpoint blocks behind `df` (no-op for non-checkpoint
-    * plans; never throws — cleanup must not fail the query).
+    * plans; never throws — cleanup must not fail the query). Round loops
+    * ([[graft.Rounds]]) release a finished round's blocks with it once the
+    * next round is materialized.
     */
   def releaseCheckpoint(df: DataFrame): Unit =
     checkpointRdd(df).foreach { r =>

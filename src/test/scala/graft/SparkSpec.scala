@@ -17,4 +17,14 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** Persisted RDDs in the block store, polled until async unpersists bring
+    * the count to at most `expected` or about 4 s pass.
+    */
+  def storedRdds(expected: Int): Int = {
+    def n(): Int = spark.sparkContext.getRDDStorageInfo.length
+    var tries = 0
+    while (n() > expected && tries < 40) { Thread.sleep(100); tries += 1 }
+    n()
+  }
 }

@@ -111,33 +111,39 @@ class PropertyGraphSpec extends SparkSpec {
     // round — every round is a shuffle barrier, so this IS the scale story
     val chain = (1L until 32L).map(i => (i, i + 1)).toDF("src", "dst")
     val g = PropertyGraph.fromEdges(chain)
-    val (ccJump, roundsJump) = g.connectedComponentsWithRounds(maxIterations = 40)
-    val (ccPlain, roundsPlain) =
-      g.connectedComponentsWithRounds(maxIterations = 40, pointerJump = false)
-    assert(ccJump.as[(Long, Long)].collect().toMap ===
-      ccPlain.as[(Long, Long)].collect().toMap)
-    assert(roundsPlain > 15)  // O(diameter)
-    assert(roundsJump <= 10)  // O(log diameter)
+    val (ccJump, jump) = graft.QueryTrace.run(spark)(
+      g.connectedComponents(maxIterations = 40).as[(Long, Long)].collect().toMap)
+    val (ccPlain, plain) = graft.QueryTrace.run(spark)(
+      g.connectedComponents(maxIterations = 40, pointerJump = false)
+        .as[(Long, Long)].collect().toMap)
+    assert(ccJump === ccPlain)
+    assert(plain("rounds").toInt > 15)  // O(diameter)
+    assert(jump("rounds").toInt <= 10)  // O(log diameter)
   }
 
   test("iterative graph loops release prior rounds' checkpoint blocks") {
-    // 20+ rounds of plain hash-min on a path graph: without per-round
-    // release, every round's localCheckpoint stays in the block store for
-    // the application lifetime
-    val baseline = spark.sparkContext.getRDDStorageInfo.length
-    val chain = (1L until 32L).map(i => (i, i + 1)).toDF("src", "dst")
-    val g = PropertyGraph.fromEdges(chain)
-    val (cc, rounds) =
-      g.connectedComponentsWithRounds(maxIterations = 40, pointerJump = false)
-    assert(cc.collect().length === 32)
-    assert(rounds > 15)
-    // async unpersist: poll until the store settles near baseline; the
-    // final round's checkpoint (the returned frame's backing) may remain
-    var tries = 0
-    def n(): Int = spark.sparkContext.getRDDStorageInfo.length
-    while (n() > baseline + 1 && tries < 40) { Thread.sleep(100); tries += 1 }
-    assert(n() <= baseline + 1,
-      s"${n()} persisted RDDs after $rounds rounds (baseline $baseline)")
+    // several rounds of each loop (20+ of plain hash-min on a path graph):
+    // without per-round release, every round's checkpoint stays in the
+    // block store for the application lifetime
+    val chain = PropertyGraph.fromEdges((1L until 32L).map(i => (i, i + 1)).toDF("src", "dst"))
+    val loops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (() => chain.connectedComponents(maxIterations = 40, pointerJump = false)),
+      "pageRank" -> (() => chain.pageRank(6)),
+      "personalizedPageRank" -> (() => chain.personalizedPageRank(6, Seq(1L))),
+      "sssp" -> (() => chain.sssp(lit(1L))),
+      "labelPropagation" -> (() => chain.labelPropagation(6)),
+      "kCore" -> (() => chain.kCore(2, maxRounds = 40)),
+      "messagePassing" -> (() => chain.messagePassing("1", "sum(msg)", "coalesce(newState, 0)", Some("0"), round = 6)))
+    for ((name, loop) <- loops) {
+      val baseline = spark.sparkContext.getRDDStorageInfo.length
+      val (rows, trace) = graft.QueryTrace.run(spark)(loop().collect().length)
+      assert(rows === (if (name == "kCore") 0 else 32), name)
+      val rounds = trace("rounds").toInt
+      assert(rounds >= 6, s"$name ran $rounds rounds")
+      // the final round's checkpoint (the returned frame's backing) may remain
+      assert(storedRdds(baseline + 1) <= baseline + 1,
+        s"$name: persisted RDDs after $rounds rounds (baseline $baseline)")
+    }
   }
 
   test("trianglesPerVertex counts cycle membership per vertex") {
@@ -198,10 +204,14 @@ class PropertyGraphSpec extends SparkSpec {
     // a 12-vertex path peels two endpoints per round: 5 rounds to empty
     // under k=2; a cap of 2 must throw, not silently return extra vertices
     val path = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    val baseline = spark.sparkContext.getRDDStorageInfo.length
     val e = intercept[IllegalStateException] {
       PropertyGraph.fromEdges(path).kCore(2, maxRounds = 2)
     }
     assert(e.getMessage.contains("did not converge"))
+    // the failed run's last round is released, not left to a later GC
+    assert(storedRdds(baseline) <= baseline,
+      s"persisted RDDs after a failed kCore (baseline $baseline)")
     // with enough rounds the true (empty) 2-core comes back
     assert(PropertyGraph.fromEdges(path).kCore(2).count() === 0L)
   }
