@@ -152,6 +152,7 @@ object Bench {
             } ++ ListMap("jobs" -> work.jobs, "tasks" -> work.tasks,
               "task_s" -> r3(work.taskSeconds),
               "spill_bytes" -> work.spilledBytes,
+              "shuffle_bytes" -> work.shuffleBytes,
               "peak_exec_bytes" -> work.peakExecutionBytes))
       } catch { case e: Throwable => errors(name) = e.getClass.getName }
       // UNTIMED inter-query drain: gates that pin localCheckpoint blocks

@@ -29,7 +29,7 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 final class QueryTrace private (sc: SparkContext) {
   private val attrs = mutable.LinkedHashMap.empty[String, String]
   private val spanLog = mutable.ArrayBuffer.empty[(String, Double)]
-  private val jobs, tasks, runMs, spilled, peakExec = new AtomicLong
+  private val jobs, tasks, runMs, spilled, shuffled, peakExec = new AtomicLong
   @volatile private var open = true
 
   def apply(key: String): String = attrs.synchronized(attrs(key))
@@ -47,17 +47,18 @@ final class QueryTrace private (sc: SparkContext) {
   def totals: QueryTrace.Totals = {
     GraftSqlBridge.drainListenerBus(sc)
     QueryTrace.Totals(jobs.get, tasks.get, runMs.get / 1e3, spilled.get,
-      peakExec.get)
+      shuffled.get, peakExec.get)
   }
 }
 
 object QueryTrace {
 
   /** `taskSeconds` is executor run time; `spilledBytes` is disk spill;
-    * `peakExecutionBytes` is the largest per-task peak execution memory.
+    * `shuffleBytes` is shuffle data written; `peakExecutionBytes` is the
+    * largest per-task peak execution memory.
     */
   final case class Totals(jobs: Long, tasks: Long, taskSeconds: Double,
-      spilledBytes: Long, peakExecutionBytes: Long)
+      spilledBytes: Long, shuffleBytes: Long, peakExecutionBytes: Long)
 
   /** The SparkContext local property that carries the current trace's id.
     * Spark copies local properties into the threads it starts from a
@@ -159,6 +160,7 @@ object QueryTrace {
         Option(e.taskMetrics).foreach { m =>
           t.runMs.addAndGet(m.executorRunTime)
           t.spilled.addAndGet(m.diskBytesSpilled)
+          t.shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           t.peakExec.accumulateAndGet(m.peakExecutionMemory, (a, b) => math.max(a, b))
         }
       }

@@ -1,16 +1,24 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver-generated TPC-H-ish parquet tables (TESTDATA.md).
   *
-  * Scale notes: `spark.read.parquet` gives Catalyst a relation with file
-  * statistics, so filter/column pushdown reaches the scan. At 100 TB the same
-  * call works on a directory of thousands of files; nothing here assumes a
-  * single file.
+  * Scale notes: every table goes through [[Tables.read]], which gives
+  * Catalyst a file relation with statistics, so filter and column pushdown
+  * reach the scan. It resolves each path's schema once per JVM rather than
+  * once per query: the memo is keyed on the path's file listing and the
+  * inference confs, holds at most 128 paths, and keeps the schema, never
+  * the relation ([[Tables.read]] says why). At 100 TB the same call works
+  * on a directory of thousands of files; nothing here assumes a single
+  * file.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   /** events.ts has shipped in two parquet encodings across driver testdata
     * generations: TIMESTAMP(NANOS) — which Spark cannot read natively, so
@@ -35,6 +43,85 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  /** The parquet data at `path`, read with a memoised schema.
+    *
+    * `spark.read.parquet(path)` without a schema starts a Spark job that
+    * reads the parquet footers to infer one, about 35 ms even for a tiny
+    * table, and a query pays it once per table it reads. Here the schema is
+    * inferred once and reused through `spark.read.schema(s).parquet(path)`,
+    * which starts no job.
+    *
+    * The memo key is the path, the sorted (file, modification time, length)
+    * of its leaf files from one driver-side listing, and the session confs
+    * that change what inference returns ([[InferenceConfs]]). Rewriting the
+    * files or reading under other confs therefore infers again. Because the
+    * key holds everything inference depends on, the memo is JVM-wide: a
+    * service that gives each client its own session (`newSession()`) would
+    * otherwise infer every table once more per session.
+    *
+    * Only the schema is kept, not the resolved relation: a relation's
+    * `InMemoryFileIndex` caches its file listing, so a kept relation would
+    * go stale when a caller rewrites its own path.
+    *
+    * One entry per path, replaced when the listing changes; at most
+    * [[MaxPaths]] paths, least recently read dropped first (gates write a
+    * fresh temp directory per run). Inference runs outside the memo's
+    * lock, so a slow footer read never blocks another path. A path that
+    * cannot be listed (missing, a glob) takes the plain read, so its
+    * caller sees Spark's own error.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    listing(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        schemas.synchronized(Option(schemas.get(path))) match {
+          case Some((`key`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemas.synchronized(schemas.put(path, (key, df.schema)))
+            df
+        }
+    }
+
+  /** Session confs that change the schema parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private val MaxPaths = 128
+
+  private final case class Listing(files: Seq[(String, Long, Long)],
+      confs: Seq[Option[String]])
+
+  /** path -> (the listing its schema was inferred under, the schema), in
+    * access order for the eviction.
+    */
+  private val schemas = new java.util.LinkedHashMap[String, (Listing, StructType)](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, (Listing, StructType)]): Boolean =
+      size > MaxPaths
+  }
+
+  private def listing(spark: SparkSession, path: String): Option[Listing] =
+    try {
+      val p = new Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getModificationTime, f.getLen))
+      }
+      Some(Listing(files.result().sorted, InferenceConfs.map(spark.conf.getOption)))
+    } catch { case NonFatal(_) => None }
+
   /** Spread a NARROW scan across the cluster before an expensive per-row
     * stage (tokenize / shingle / hash maps): parquet splits cannot subdivide
     * a row group, so a table laid out as few large row groups serializes its
@@ -48,8 +135,8 @@ object Tables {
     * thousands of files), this is the identity and no shuffle is added; the
     * repartition only engages when the source is narrower than the cluster
     * (single file, small crawl slice), where moving the rows once is
-    * strictly cheaper than computing serially. `graft.scan.spreadWidth`
-    * overrides the target width (`0` disables, for A/B probes).
+    * strictly cheaper than computing serially. The target width is the
+    * cluster's `defaultParallelism`.
     *
     * The width is read from `df.rdd` on every call, never cached on the
     * plan: a parquet path's plan stays the same when its files are
@@ -57,37 +144,21 @@ object Tables {
     */
   def spreadScan(df: DataFrame, key: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    val target = spreadWidthConf(spark)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    if (target <= 0 || df.rdd.getNumPartitions * 2 > target) df
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions * 2 > target) df
     else df.repartition(target, col(key))
   }
 
-  /** `graft.scan.spreadWidth` parsed with a descriptive failure (ADVICE
-    * r18: a malformed value used to throw a bare NumberFormatException
-    * that never named the conf). None = "auto".
-    */
-  private def spreadWidthConf(spark: SparkSession): Option[Int] =
-    spark.conf.get("graft.scan.spreadWidth", "auto") match {
-      case "auto" => None
-      case n => try Some(n.toInt) catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.scan.spreadWidth must be an integer or 'auto', got '$n'")
-      }
-    }
-
   /** [[spreadScan]]'s width rule for STREAMING sources, where the batch
     * partition inspection above is unavailable (`.rdd` on a streaming frame
-    * throws): `Some(defaultParallelism)` under the same
-    * `graft.scan.spreadWidth` conf (`0` disables). The CALLER owns the
-    * knowledge that its source is narrower than the cluster — a file-stream
-    * over a single small file here; a wide deployment (many files/topic
-    * partitions per trigger) should pass None and keep the map on the scan.
+    * throws): `Some(defaultParallelism)`, None on a one-core cluster. The
+    * CALLER owns the knowledge that its source is narrower than the
+    * cluster — a file-stream over a single small file here; a wide
+    * deployment (many files/topic partitions per trigger) should pass None
+    * and keep the map on the scan.
     */
   def streamSpreadWidth(spark: SparkSession): Option[Int] =
-    spreadWidthConf(spark)
-      .orElse(Some(spark.sparkContext.defaultParallelism)).filter(_ > 1)
+    Some(spark.sparkContext.defaultParallelism).filter(_ > 1)
 
   /** Normalize the `ts` column to TimestampType whichever of the known
     * parquet encodings the driver's generator emitted (see [[Tables.events]]

@@ -60,7 +60,7 @@ final class EngineSession(val spark: SparkSession) {
    * output, programmatic ingestion + a text DataLoader); Spark natively
    * provides them, surfaced here for facade completeness. == */
 
-  def readParquet(path: String): EngineDataFrame = EngineDataFrame(spark.read.parquet(path), this)
+  def readParquet(path: String): EngineDataFrame = EngineDataFrame(graft.Tables.read(spark, path), this)
   def readCsv(path: String, header: Boolean = true, inferSchema: Boolean = true): EngineDataFrame =
     EngineDataFrame(spark.read.option("header", header).option("inferSchema", inferSchema).csv(path), this)
   def readJson(path: String): EngineDataFrame = EngineDataFrame(spark.read.json(path), this)

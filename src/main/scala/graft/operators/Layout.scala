@@ -218,7 +218,7 @@ object Layout {
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       if (files.length <= nOut) None // already compact: leave untouched
       else {
-        val pinned = spark.read.parquet(p.toString).localCheckpoint(true)
+        val pinned = graft.Tables.read(spark, p.toString).localCheckpoint(true)
         pinned.coalesce(nOut).write.mode("overwrite").parquet(p.toString)
         org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(pinned)
         Some((rel(p), files.length, nOut))

@@ -445,7 +445,7 @@ object Similarity {
     // every row incl. vectors a second time), and at a 100 TB build it
     // would double the storage footprint mid-build. Append sizes its
     // delta the same footer-level way (moved files only).
-    val sizes = spark.read.parquet(path)
+    val sizes = graft.Tables.read(spark, path)
       .groupBy(col("cent_id").cast("long").as("cent_id"))
       .agg(count(lit(1)).as("cell_n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -568,7 +568,7 @@ object Similarity {
       path: String, idx: DataFrame, mod: Int): DataFrame = {
     val sidecar = new org.apache.hadoop.fs.Path(s"$path/_centroids")
     val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sidecar)) spark.read.parquet(sidecar.toString)
+    if (fs.exists(sidecar)) graft.Tables.read(spark, sidecar.toString)
     else idx.filter(col("vec_id") % mod === 0)
       .select(col("vec_id").as("cent_id"), col("vec").as("cv0"))
   }
@@ -644,7 +644,7 @@ object Similarity {
     }
     val (exData, _) = inFlightExclusions(fs, rootP)
     val idx =
-      if (exData.isEmpty) spark.read.parquet(path)
+      if (exData.isEmpty) graft.Tables.read(spark, path)
       else {
         // rare path (a manifest exists): read an explicit file list with
         // the excluded dest files dropped; basePath keeps the cent_id
@@ -942,7 +942,7 @@ object Similarity {
     val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(sidecar),
       s"appendIvfIndex: $path predates the _centroids sidecar — rebuild once with buildIvfIndex")
-    val cents = spark.read.parquet(sidecar.toString)
+    val cents = graft.Tables.read(spark, sidecar.toString)
     // the delta must BE the store's vector space: same element type
     // (nullability-insensitive — the parquet round-trip flips containsNull)
     // and (sampled) dimension as the frozen centroids — a mismatched delta
@@ -1602,7 +1602,7 @@ object Similarity {
     */
   def sq8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, vecCol: String, idCol: String, k: Int): DataFrame = {
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = graft.Tables.read(spark, s"$path/stats")
     require(stats.columns.contains("sq8_dims"),
       s"sq8TopKFromIndex: $path is not a graft SQ8 index (no scheme column)")
     // enforce the scheme: a query batch from a different model would
@@ -1616,7 +1616,7 @@ object Similarity {
     require(qdims.forall(_ == dims),
       s"sq8TopKFromIndex: query dims ${qdims.mkString(",")} != index dims " +
         s"$dims — wrong embedding model for this index")
-    val deq = spark.read.parquet(s"$path/codes")
+    val deq = graft.Tables.read(spark, s"$path/codes")
       .crossJoin(broadcast(stats))
       .select(col("vec_id"), sq8Dequantize(col("codes")).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))

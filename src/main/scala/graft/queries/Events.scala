@@ -29,7 +29,7 @@ object Events {
     "q132_stream_sessionize" -> ((s, d) => {
       import s.implicits._
       val name = s"stream_sessionize_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       val stream = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
@@ -57,7 +57,7 @@ object Events {
     // double sum would expose.
     "q141_stream_windowed" -> ((s, d) => {
       val name = s"stream_windowed_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       val stream = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
@@ -296,7 +296,7 @@ object Events {
     // replays the ESTIMATES bit-for-bit, not just an error bound.
     "q210_stream_distinct_hll" -> ((s, d) => {
       val name = s"stream_hll_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       val stream = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
@@ -336,7 +336,7 @@ object Events {
     // replays all 1024 registers and the array-ordered Σ2^-M fold.
     "q211_stream_hll_p10" -> ((s, d) => {
       val name = s"stream_hllp10_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       val stream = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
@@ -371,7 +371,7 @@ object Events {
     // match) — the piece a 100 TB-per-day dual-stream correlation needs.
     "q212_stream_interval_join" -> ((s, d) => {
       val name = s"stream_ivj_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       // ONE shared source (r19, the q215 shape): both sides filter the
       // same rows post-source, so a streaming self-join over one source
       // replaces two independent sources — halving per-micro-batch file
@@ -409,12 +409,12 @@ object Events {
     // watermark and every row emits.
     "q213_stream_enrich" -> ((s, d) => {
       val name = s"stream_enrich_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       val stream = graft.Tables.adaptEventTs(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
         .select("event_id", "user_id", "value")
-      val dim = s.read.parquet(s"$d/customer.parquet")
+      val dim = graft.Tables(s, d).customer
         .select(col("c_custkey").as("user_id"), col("c_name"),
           col("c_mktsegment"))
       val q = EventStreams.enrich(stream, dim, Seq("user_id"))
@@ -446,7 +446,7 @@ object Events {
         // measurement irreproducible); the SENTINELS are appended beside
         // it and flow through the same source before the watermark, so
         // they advance it like any other row
-        val schema = s.read.parquet(s"$d/events.parquet").schema
+        val schema = graft.Tables.read(s, s"$d/events.parquet").schema
         val ev = graft.Tables(s, d).events
           .select("event_id", "user_id", "ts", "event_type")
         // SOURCE SHAPE (r19, VERDICT r18 #3): the r11–r18 form built FOUR

@@ -544,7 +544,7 @@ object Pipeline {
       // rather than leaking one store per invocation into tmp.
       // Candidate counts as in q115 (this gate tripped the r15 wire at ×1.79).
       try Dedup.incrementalMinHashDedupFromStore(
-          docs.filter(snum >= 10), s.read.parquet(dir.toString),
+          docs.filter(snum >= 10), Tables.read(s, dir.toString),
           "text", "doc_id", threshold = 0.3, portableIds = true)
         .orderBy("doc_id")
       finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -588,7 +588,7 @@ object Pipeline {
             q.processAllAvailable()
           }
         } finally q.stop()
-        span("readback")(s.read.parquet(out).select("doc_id").orderBy("doc_id")
+        span("readback")(Tables.read(s, out).select("doc_id").orderBy("doc_id")
           .localCheckpoint(true))
       } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }),
@@ -614,7 +614,7 @@ object Pipeline {
       try {
         cycle(1, snum < 14).write.mode("append").parquet(src)
         val q = graft.streaming.DocStreams.upsertStream(
-          s.readStream.schema(s.read.parquet(src).schema).parquet(src),
+          s.readStream.schema(Tables.read(s, src).schema).parquet(src),
           table, ckpt, "doc_id", "version", buckets = 8)
         try {
           q.processAllAvailable()
@@ -623,7 +623,7 @@ object Pipeline {
           cycle(3, snum >= 14 || snum < 3).write.mode("append").parquet(src)
           q.processAllAvailable()
         } finally q.stop()
-        s.read.parquet(table)
+        Tables.read(s, table)
           .select(col("doc_id"), col("bucket").cast("long").as("bucket"),
             col("version"), md5(col("text")).as("content_hash"))
           .orderBy("doc_id").localCheckpoint(true)
@@ -655,7 +655,7 @@ object Pipeline {
         require(graft.operators.Layout.compactPartitions(
             s, table, 128L << 20).isEmpty,
           "re-compaction of a compact table must be a no-op")
-        s.read.parquet(table)
+        Tables.read(s, table)
           .select(col("doc_id"), col("grp").cast("long").as("grp"),
             md5(col("text")).as("content_hash"))
           .orderBy("doc_id").localCheckpoint(true)
@@ -1185,7 +1185,7 @@ object Pipeline {
     // pipeline's, which DuckDB recomputes from the table.
     "q100_stream_curation" -> ((s, d) => {
       val name = s"stream_curation_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
+      val schema = Tables.read(s, s"$d/documents.parquet").schema
       // the file source wants a directory: stream the sf dir, glob-filtered
       // to the documents table
       val stream = s.readStream.schema(schema)
@@ -1492,8 +1492,8 @@ object Pipeline {
         Similarity.buildIvfIndex(h1, "embedding", "vec_id", dir.toString,
           centroidMod = 100)
         Similarity.appendIvfIndex(s, dir.toString, h2, "embedding", "vec_id")
-        val idx = s.read.parquet(dir.toString)
-        val frozen = s.read.parquet(s"$dir/_centroids")
+        val idx = Tables.read(s, dir.toString)
+        val frozen = Tables.read(s, s"$dir/_centroids")
           .select(col("cent_id").as("fc"))
         val stat = idx.agg(count(lit(1)).as("n_idx"),
           sum(when(col("vec_id") % 3 === 0, 1L).otherwise(0L)).as("n_app"))
@@ -1566,8 +1566,8 @@ object Pipeline {
           massFrac = 0.1)
         val r2 = Similarity.ivfRecallCheck(s, dir.toString, driftQ,
           "embedding", "vec_id", k = 10, massFrac = 0.1)
-        val nIdx = s.read.parquet(dir.toString).count()
-        val recentered = s.read.parquet(s"$dir/_centroids")
+        val nIdx = Tables.read(s, dir.toString).count()
+        val recentered = Tables.read(s, s"$dir/_centroids")
           .filter(col("cent_id") >= 1000L).count() > 0
         import s.implicits._
         Seq((nIdx, r0 >= 0.9, r1 <= 0.7 && rebuilt, recentered, r2 >= 0.9))
@@ -1901,7 +1901,7 @@ object Pipeline {
     // deterministic; the set is — the q100 rule).
     "q205_stream_near_dedup" -> ((s, d) => {
       val name = s"stream_near_dedup_${streamGateCounter.incrementAndGet()}"
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
+      val schema = Tables.read(s, s"$d/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
         .withColumn("ts", expr("timestamp_seconds(1704067200 + doc_id % 300)"))

@@ -176,7 +176,7 @@ object DocStreams {
       }
       found
     }
-    if (fs.exists(p) && hasDataFile) Some(spark.read.parquet(path)) else None
+    if (fs.exists(p) && hasDataFile) Some(graft.Tables.read(spark, path)) else None
   }
 
   def upsertBatch(batch: DataFrame, tablePath: String, keyCol: String,

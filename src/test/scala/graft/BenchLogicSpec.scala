@@ -71,7 +71,8 @@ class BenchLogicSpec extends AnyFunSuite {
   test("report: the full record is one JSON object with per-pass phases and env") {
     val pass = (jobs: Long) => scala.collection.immutable.ListMap[String, Any](
       "cycle1" -> 0.12, "wcoj.cells" -> 4L, "jobs" -> jobs, "tasks" -> 8L,
-      "task_s" -> 0.3, "spill_bytes" -> 0L, "peak_exec_bytes" -> 1024L)
+      "task_s" -> 0.3, "spill_bytes" -> 0L, "shuffle_bytes" -> 2048L,
+      "peak_exec_bytes" -> 1024L)
     val odd = "a \"quoted\" \\ path\twith\u0001control"
     val (record, _) = Bench.report(
       samples = Map("q47_wcoj_triangle" -> Seq(1.5, 1.25)),
@@ -91,6 +92,7 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(passes.get(1).get("jobs").asLong === 2L)
     assert(passes.get(1).fieldNames().asScala.toList ===
       pass(2L).keys.toList)
+    assert(passes.get(1).get("shuffle_bytes").asLong === 2048L)
     assert(r.get("env").get("tmp_base").asText === "/dev/shm")
   }
 

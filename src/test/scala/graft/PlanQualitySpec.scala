@@ -277,8 +277,14 @@ class PlanQualitySpec extends SparkSpec {
 
   test("runtime Bloom-filter pruning reaches the fact side of a shuffle join") {
     val es = graft.api.EngineSession(spark)
+    // every conf this test sets goes back to its prior value (or unset), so
+    // later suites on the shared session plan under the defaults
+    val touched = Seq("spark.sql.optimizer.runtime.bloomFilter.enabled",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val prior = touched.map(k => k -> spark.conf.getOption(k))
     es.enableRuntimeFiltering(applicationSideThreshold = "1B", creationSideThreshold = "100MB")
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // force a shuffle join so the filter has a scan worth pruning
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -290,9 +296,9 @@ class PlanQualitySpec extends SparkSpec {
       assert(plan.toLowerCase.contains("bloomfilter") || plan.contains("might_contain"),
         s"no runtime bloom filter injected:\n$plan")
       joined.collect() // the filtered plan still executes correctly
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

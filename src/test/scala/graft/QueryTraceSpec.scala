@@ -116,12 +116,14 @@ class QueryTraceSpec extends SparkSpec {
         QueryTrace.record(spark, "late", 1)
         QueryTrace.span(spark, "late")(())
       })
-      spark.range(100).count()
+      spark.range(100).repartition(2).count()
     }
     assert(n === 100L)
     assert(trace("k") === "outer")
     val totals = trace.totals
     assert(totals.jobs >= 1L && totals.tasks >= 1L && totals.taskSeconds >= 0.0)
+    // the repartition writes every row through the shuffle
+    assert(totals.shuffleBytes > 0L)
     assert(QueryTrace.registered(spark) === 0)
     assert(spark.sparkContext.getLocalProperty(QueryTrace.Property) === null)
     late.start(); late.join()

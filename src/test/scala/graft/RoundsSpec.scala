@@ -8,21 +8,18 @@ import graft.graph.PropertyGraph
 class RoundsSpec extends SparkSpec {
 
   test("every iterative loop runs a pinned number of Spark jobs per round") {
-    // a fresh session: job counts depend on runtime confs (runtime Bloom
-    // filters, broadcast threshold) that other suites change on the shared one
-    val session = spark.newSession()
-    import session.implicits._
+    import spark.implicits._
     // (rounds, jobs) of `body`: the rounds its loop recorded in the trace
     // and the Spark jobs it ran, its final action included
     def traced(body: => Long): (Int, Long) = {
-      val (_, t) = QueryTrace.run(session)(body)
+      val (_, t) = QueryTrace.run(spark)(body)
       (t("rounds").toInt, t.totals.jobs)
     }
     val g = PropertyGraph(Seq(1L, 2L, 3L, 4L).toDF("id"),
       Seq((1L, 2L), (2L, 1L), (2L, 3L), (1L, 3L), (4L, 1L)).toDF("src", "dst"))
     def path(n: Long) =
       PropertyGraph.fromEdges((1L until n).map(i => (i, i + 1)).toDF("src", "dst"))
-    val one = EngineSession(session).createDatasetFromSparkSQL(Seq(1L).toDF("x"))
+    val one = EngineSession(spark).createDatasetFromSparkSQL(Seq(1L).toDF("x"))
     def upTo(cap: Long)(d: EngineDataFrame) =
       d.copy(df = d.df.selectExpr(s"least(x + 1, ${cap}L) AS x"))
     def indegree(rounds: Int) =

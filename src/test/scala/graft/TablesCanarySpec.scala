@@ -72,7 +72,7 @@ class TablesCanarySpec extends SparkSpec {
       3L -> 1700009876543210L, 4L -> 1700001111222333L))
   }
 
-  test("spreadScan widens a narrow scan, is the identity when wide/disabled") {
+  test("spreadScan widens a narrow scan, is the identity when wide") {
     // r18: parquet splits cannot subdivide a row group, so a single-file
     // table serializes its scan-stage map on one core; spreadScan hash-
     // repartitions ONLY when the scan carries < half the cluster width.
@@ -89,10 +89,6 @@ class TablesCanarySpec extends SparkSpec {
     // already-wide input: identity (the 100 TB posture — no extra shuffle)
     val wide = docs.repartition(spark.sparkContext.defaultParallelism * 2)
     assert(Tables.spreadScan(wide, "doc_id") eq wide)
-    // conf "0" disables (the A/B probe arm)
-    spark.conf.set("graft.scan.spreadWidth", "0")
-    try assert(Tables.spreadScan(docs, "doc_id") eq docs)
-    finally spark.conf.unset("graft.scan.spreadWidth")
   }
 
   test("spreadScan re-reads the width after the files are rewritten") {
@@ -109,5 +105,83 @@ class TablesCanarySpec extends SparkSpec {
       assert(wide.rdd.getNumPartitions * 2 > width, "precondition: the rewrite is wide")
       assert(Tables.spreadScan(wide, "id") eq wide)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+
+  test("Tables.read sees a new schema after its path is rewritten") {
+    val dir = tempDir("tables_rewrite")
+    try {
+      spark.range(3).write.mode("overwrite").parquet(dir)
+      assert(Tables.read(spark, dir).columns.toSeq == Seq("id"))
+      spark.range(3).selectExpr("id", "'a' AS tag")
+        .write.mode("overwrite").parquet(dir)
+      val again = Tables.read(spark, dir)
+      assert(again.columns.toSeq == Seq("id", "tag"))
+      assert(again.where("tag = 'a'").count() === 3L)
+    } finally deleteDir(dir)
+  }
+
+  test("Tables.read infers again under confs that change the schema") {
+    val path = "fixtures/tsenc_nanos/events.parquet"
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    def session(nanosAsLong: Boolean) = {
+      val s = spark.newSession()
+      s.conf.set(conf, nanosAsLong.toString)
+      s
+    }
+    val (asLong, native) = (session(true), session(false))
+    // TIMESTAMP(NANOS) either reads as a long or, when Spark cannot read
+    // it natively, fails: in both cases the memo must give what an
+    // uncached read gives under the same session
+    def ts(read: => org.apache.spark.sql.DataFrame): Either[Class[_], DataType] =
+      scala.util.Try(read.schema("ts").dataType).toEither.left.map(_.getClass)
+    assert(ts(Tables.read(asLong, path)) == Right(LongType))
+    val plain = ts(native.read.parquet(path))
+    assert(plain != Right(LongType))
+    assert(ts(Tables.read(native, path)) == plain)
+    assert(ts(Tables.read(asLong, path)) == Right(LongType))
+  }
+
+  test("a table read again starts no Spark job") {
+    Tables(spark, sf0001).lineitem // the schema is inferred at most once per JVM
+    val (lineitem, trace) = QueryTrace.run(spark)(Tables(spark, sf0001).lineitem)
+    assert(trace.totals.jobs === 0L)
+    assert(lineitem.columns.head == "l_orderkey")
+  }
+
+  test("Tables.read of a missing path raises the error spark.read.parquet does") {
+    val dir = tempDir("tables_missing")
+    try {
+      val missing = s"$dir/absent.parquet"
+      val plain = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(missing))
+      val memo = intercept[org.apache.spark.sql.AnalysisException](Tables.read(spark, missing))
+      assert(memo.getClass == plain.getClass)
+      assert(memo.getMessage == plain.getMessage)
+    } finally deleteDir(dir)
+  }
+
+  test("Tables.read from two threads at once gives equal schemas") {
+    val dir = tempDir("tables_threads")
+    try {
+      spark.range(5).selectExpr("id", "id * 2.0 AS x", "'v' AS s")
+        .write.mode("overwrite").parquet(dir)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val reads = Seq.fill(2)(pool.submit(() => {
+          start.await()
+          Tables.read(spark, dir).schema
+        }))
+        start.countDown()
+        val Seq(a, b) = reads.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+        assert(a == b)
+        assert(a == spark.read.parquet(dir).schema)
+      } finally pool.shutdown()
+    } finally deleteDir(dir)
   }
 }
