@@ -192,7 +192,7 @@ object Clustering {
     // l2sqNative truncates to the shorter array, so a ragged/short vector
     // would score ~0 on its missing dimensions and silently land in the
     // wrong cluster (and corrupt the centroid means) — force every row to
-    // the fitted dimension instead, same guard as Similarity.pqTopK
+    // the fitted dimension instead, same guard as Similarity.topK with Pq
     // (a codegen'd predicate over the pinned blocks, evaluated per scan)
     val vecs = pinned.filter(assert_true(size(col("v")) === dim,
       lit(s"kmeans: vector dimension must be $dim for every row")).isNull)

@@ -9,21 +9,26 @@ import graft.functions.VectorFunctions._
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column.
   *
-  * Two paths:
-  *   - [[cosineTopK]]: exact brute force — broadcast the (small) query set,
-  *     score every candidate, per-query top-k via window. The baseline, and
-  *     the right answer whenever |queries| is small: one scan, no N² blow-up.
-  *   - [[bucketedTopK]]: sign-LSH bucketed — candidates pruned to the query's
-  *     bucket before scoring. The scale path: the candidate side shrinks
-  *     ~2^bits× at the cost of recall.
+  * [[Similarity.topK]] is the one top-k operator. It has two stages,
+  * partition-level pruning and then local exact ranking, and three
+  * arguments pick what each stage does:
+  *   - a [[Similarity.Coarse]] filter decides which candidates each query
+  *     scores: all of them, its IVF cells, its LSH bucket, or a shortlist
+  *     ranked on a vector prefix;
+  *   - a [[Similarity.Code]] decides what a candidate is scored from: the
+  *     float vector, its SQ8 reconstruction or its PQ byte codes;
+  *   - a [[Similarity.Source]] says where the candidates live: a frame, or
+  *     a store built once by [[Similarity.buildIvfIndex]] or
+  *     [[Similarity.buildSq8Index]].
   *
-  * Similarities are rounded to 6 dp before ranking so ordering is stable
-  * across engines (ties broken by candidate id).
+  * Each code owns one score column. Scores are rounded to 6 dp before
+  * ranking so ordering is stable across engines, and one window ranks them
+  * per query with ties broken by candidate id.
   */
 object Similarity {
 
-  /** Byte budget for the query-side broadcast in [[cosineTopK]] /
-    * [[mutualKnn]]. The query side is small by contract, but the contract
+  /** Byte budget for the query-side broadcast of [[budgetedCross]] and
+    * [[confinedCellJoin]]. The query side is small by contract, but the contract
     * is not enforced by the API — so the size is MEASURED before the
     * broadcast and an over-budget side takes a shuffle-replicated nested-loop join instead:
     * same result, no single-executor materialization of the whole side.
@@ -31,6 +36,9 @@ object Similarity {
     * ("broadcast" | "shuffle").
     */
   private val BudgetKey = "graft.sim.broadcastBudgetBytes"
+
+  private def budgetBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.get(BudgetKey, (64L << 20).toString).toLong
 
   /** The cell join every IVF-confined surface shares: corpus-side rows
     * (assigned/encoded candidates) joined to the probe side on `cent_id`.
@@ -55,7 +63,7 @@ object Similarity {
       corpusId: String, probeBase: DataFrame,
       expansion: Double): DataFrame = {
     val spark = corpus.sparkSession
-    val budget = spark.conf.get(BudgetKey, (64L << 20).toString).toLong
+    val budget = budgetBytes(spark)
     // two tiers, the budgetedCross pattern — with tier 1 reading the RAW
     // query frame (`probeBase`), not the probe lineage: the lineage is a
     // post-crossJoin plan whose Catalyst estimate is a byte product, so it
@@ -86,15 +94,6 @@ object Similarity {
     }
   }
 
-  /** Cross-join `small` onto `big`, broadcasting only when `small` fits
-    * the budget. Two tiers so plan CONSTRUCTION stays cheap in the common
-    * case: when Catalyst's own size estimate is already within budget the
-    * broadcast is taken with no job at all (the estimate is what Spark's
-    * autoBroadcastJoinThreshold itself trusts); only a suspicious estimate
-    * (over budget or unknown → Long.Max) pays one exact measuring scan of
-    * the small side — actual array lengths, not a schema guess — before
-    * deciding. The big side is never touched.
-    */
   /** Exact byte measurement of a (small by contract) frame: actual array
     * lengths, not a schema guess — ONE aggregation job over the frame.
     * Shared by the two-tier routes ([[budgetedCross]],
@@ -118,9 +117,18 @@ object Similarity {
     df.agg(coalesce(sum(rowBytes), lit(0L)).as("b")).head().getLong(0)
   }
 
+  /** Cross-join `small` onto `big`, broadcasting only when `small` fits
+    * the budget. Two tiers so plan CONSTRUCTION stays cheap in the common
+    * case: when Catalyst's own size estimate is already within budget the
+    * broadcast is taken with no job at all (the estimate is what Spark's
+    * autoBroadcastJoinThreshold itself trusts); only a suspicious estimate
+    * (over budget or unknown → Long.Max) pays one exact measuring scan of
+    * the small side — actual array lengths, not a schema guess — before
+    * deciding. The big side is never touched.
+    */
   private def budgetedCross(big: DataFrame, small: DataFrame): DataFrame = {
     val spark = small.sparkSession
-    val budget = spark.conf.get(BudgetKey, (64L << 20).toString).toLong
+    val budget = budgetBytes(spark)
     if (small.queryExecution.optimizedPlan.stats.sizeInBytes <= budget) {
       graft.QueryTrace.record(spark, "sim.route", "broadcast")
       return big.crossJoin(broadcast(small))
@@ -133,6 +141,325 @@ object Similarity {
       graft.QueryTrace.record(spark, "sim.route", "shuffle")
       big.crossJoin(small.hint("shuffle_replicate_nl"))
     }
+  }
+
+  /** Which candidates a query scores: the pruning stage of [[topK]]. */
+  sealed abstract class Coarse(val name: String)
+
+  /** Every candidate. The corpus is crossed with the query side, which is
+    * broadcast when it fits the byte budget ([[budgetedCross]]). The
+    * baseline, and the right answer whenever |queries| is small: one scan,
+    * no N² blow-up.
+    */
+  case object Exhaustive extends Coarse("exhaustive")
+
+  /** The two IVF filters: the cells of the centroids with ids ≡ 0 mod
+    * `centroidMod`.
+    */
+  sealed abstract class IvfCoarse(name: String) extends Coarse(name) {
+    def centroidMod: Int
+  }
+
+  /** IVF (inverted-file) cells, the production ANN shape. A deterministic
+    * centroid subset (ids ≡ 0 mod `centroidMod` — swap for k-means offline)
+    * partitions the corpus into cells, each candidate assigned to its
+    * max-cosine centroid; a query scores only the cells of its `probes`
+    * nearest centroids. Candidate-side work per query drops from O(N) to
+    * O(probes · N / |centroids|); both assignment joins broadcast the small
+    * centroid set, so the corpus is scanned exactly twice regardless of
+    * query count. With `probes` ≥ |centroids| nothing is pruned and the
+    * result equals [[Exhaustive]]'s bit for bit (spec-asserted).
+    */
+  final case class Ivf(centroidMod: Int = 100, probes: Int = 2)
+      extends IvfCoarse("ivf")
+
+  /** IVF cells probed by candidate MASS ([[nearestCellsByMass]]): each
+    * query probes its nearest cells until `massFrac` of the corpus is
+    * covered. A fixed probe count is the decay class q184/q198
+    * demonstrated — the probed fraction shrinks as the corpus grows its
+    * centroid subset (the q198 fixed-probe overlap decayed 42→23 of 50
+    * across shipped SFs) — which is fatal for an index built once and
+    * queried for months. Probing to a mass target keeps the scanned
+    * fraction, and with it the recall envelope, stable across scale
+    * (q231, q238).
+    */
+  final case class IvfMass(centroidMod: Int = 100, massFrac: Double = 0.25)
+      extends IvfCoarse("ivf-mass")
+
+  /** Sign-LSH buckets: exact ranking within the query's bucket. The
+    * candidate side shrinks ~2^bits× at the cost of recall.
+    */
+  final case class Lsh(bits: Int = 8) extends Coarse("lsh")
+
+  /** Matryoshka-style shortlist: rank every candidate by cosine over only
+    * the first `dims` dimensions (MRL-trained embeddings front-load
+    * information, so the prefix is a usable coarse score), keep a per-query
+    * shortlist, then rank ONLY the shortlist with the full score. The
+    * standard funnel: full-corpus work touches `dims/d` of the bytes,
+    * exact work touches `shortlist/N` of the corpus. Both stages are
+    * deterministic, so the funnel — shortlist boundary included — replays
+    * exactly on any engine; with `shortlist` ≥ N the result equals
+    * [[Exhaustive]]'s bit for bit (spec-asserted).
+    */
+  final case class Prefix(dims: Int, shortlist: Int) extends Coarse("prefix")
+
+  /** What a candidate is scored from: the ranking stage of [[topK]]. */
+  sealed abstract class Code(val name: String)
+
+  /** The float vectors, scored by `cos` (descending). */
+  case object Float extends Code("float")
+
+  /** Asymmetric scalar quantization: candidates are compressed to one byte
+    * per dimension against per-dimension corpus [min, max] ([[sq8Stats]])
+    * — 4× smaller than float32, the memory move that lets an in-memory ANN
+    * corpus grow 4× — while queries stay full precision (quantizing only
+    * the stored side costs far less recall than quantizing both). Scoring
+    * runs against the DEQUANTIZED reconstruction ([[sq8Codes]] →
+    * [[sq8Dequantize]]) by `cos`, so the whole chain — codes included — is
+    * replayable by any engine. IVF cells are assigned on the
+    * reconstruction too (the FAISS `IVF…,SQ8` shape), so the scan pipeline
+    * touches only stats + codes. At 64 dims of synthetic data the
+    * quantizer is near-lossless (spec-asserted top-1 agreement); the IVF
+    * pruning loss on top is certified under the q198 envelope gate.
+    */
+  case object Sq8 extends Code("sq8")
+
+  /** Product quantization with asymmetric distance: candidates are
+    * compressed to `m` one-byte codes by per-subspace k-means codebooks,
+    * queries build their `m × codebook` distance lookup tables ONCE each
+    * (on the small broadcast side), and scoring a candidate is `m` table
+    * lookups instead of a `dim`-float loop — at 100 TB the scan carries
+    * bytes, not embeddings. Scored by `dist`, the PQ-approximate squared L2
+    * (ascending). Deterministic end to end (kmeans init/ties + 6-dp
+    * rounding + id tie-break). IVF cells are assigned on the raw vector, so
+    * with [[Ivf]] the two scale bounds COMPOSE (FAISS's IVFPQ, minus
+    * residual encoding, which would couple every codebook to its cell):
+    * per-query candidate work is O(probes · N / |cells|) and per-pair cost
+    * is independent of dimensionality. The IVF pruning loss against the
+    * unpruned PQ ranking is certified under the q188 envelope gate.
+    */
+  final case class Pq(m: Int = 8, codebook: Int = 16, iters: Int = 3)
+      extends Code("pq")
+
+  /** Where the candidates live. */
+  sealed abstract class Source(val name: String)
+
+  /** A candidate frame with the same id and vector columns as the queries. */
+  final case class Frame(candidates: DataFrame) extends Source("frame")
+
+  /** A [[buildIvfIndex]] store, queried with the corpus never rescanned:
+    * the centroids, the centroid mod and the cell sizes come from the
+    * store, and the stored cells replace the assignment join. The coarse
+    * filter must name the store's `centroidMod`. Bit-identical to the
+    * frame form under the same probing rule (spec-asserted; q187 pins the
+    * round trip as invisible).
+    */
+  final case class IvfStore(path: String) extends Source("ivf-store")
+
+  /** A [[buildSq8Index]] store: codes dequantize against the broadcast
+    * one-row stats, so the float corpus is never rescanned. Bit-identical
+    * to the frame form (spec-asserted; q197 hash-matches the stored path
+    * against the same replayed oracle as q192).
+    */
+  final case class Sq8Store(path: String) extends Source("sq8-store")
+
+  /** An [[IvfStore]] already opened by the caller, so [[ivfRecallCheck]]
+    * ranks both sides off one open of the store.
+    */
+  private final case class OpenedIvfStore(path: String, idx: DataFrame,
+      mod: Int) extends Source("ivf-store")
+
+  /** Top-k candidates per query: (query_id, vec_id, cos | dist, rank), rank
+    * 1..k. The combination run is the [[graft.QueryTrace]] attribute
+    * `sim.ann` ("coarse/code/source", e.g. "ivf-mass/sq8/frame").
+    * Supported: on a frame, [[Exhaustive]], [[Ivf]] and [[IvfMass]] with
+    * any code, and [[Lsh]] and [[Prefix]] with [[Float]]; on an
+    * [[IvfStore]], [[Ivf]] and [[IvfMass]] with [[Float]]; on an
+    * [[Sq8Store]], [[Exhaustive]] with [[Sq8]]. Any other combination is
+    * refused by name.
+    */
+  def topK(queries: DataFrame, source: Source, vecCol: String, idCol: String,
+      k: Int, coarse: Coarse = Exhaustive, code: Code = Float): DataFrame = {
+    val spark = queries.sparkSession
+    val ann = s"${coarse.name}/${code.name}/${source.name}"
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val probeBase = queries.select(col(idCol), col(vecCol))
+    val pairs = (coarse, code, source) match {
+      case (Exhaustive | _: IvfCoarse, _, Frame(cands)) =>
+        val c = coded(code, queries, cands, vecCol, idCol, ann)
+        val cq = c.queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+        coarse match {
+          case ivf: IvfCoarse =>
+            val cents = c.cands.filter(col(idCol) % ivf.centroidMod === 0)
+              .select(col(idCol).as("cent_id"), col(vecCol).as("cv0"))
+            val assigned = nearestCells(c.corpus, cents, "vec_id", "cv", 1)
+            val probed = probeCells(ivf, cents, cq,
+              assigned.groupBy("cent_id").agg(count(lit(1)).as("cell_n")))
+            confinedCellJoin(c.scan(assigned), c.probe(probed), "vec_id",
+              probeBase, expansion(ivf, code, cents.count().toDouble))
+          case _ => budgetedCross(c.scan(c.corpus), c.probe(cq))
+        }
+      case (ivf: IvfCoarse, Float, IvfStore(path)) =>
+        val (idx, mod) = openIvfIndex(spark, path, "Similarity.topK")
+        storePairs(ann, ivf, OpenedIvfStore(path, idx, mod), q, probeBase)
+      case (ivf: IvfCoarse, Float, store: OpenedIvfStore) =>
+        storePairs(ann, ivf, store, q, probeBase)
+      case (Exhaustive, Sq8, Sq8Store(path)) =>
+        val stats = graft.Tables.read(spark, s"$path/stats")
+        require(stats.columns.contains("sq8_dims"),
+          s"sq8TopKFromIndex: $path is not a graft SQ8 index (no scheme column)")
+        // enforce the scheme: a query batch from a different model would
+        // otherwise score over min(query, index) dims and return plausible
+        // but wrong rankings. One bounded collect each — the stats table is
+        // one row, and the distinct-dims scan touches only the (small by
+        // contract) query side.
+        val dims = stats.select("sq8_dims").head().getInt(0)
+        val qdims = queries.select(size(col(vecCol)).as("d")).distinct()
+          .collect().map(_.getInt(0))
+        require(qdims.forall(_ == dims),
+          s"sq8TopKFromIndex: query dims ${qdims.mkString(",")} != index dims " +
+            s"$dims — wrong embedding model for this index")
+        budgetedCross(graft.Tables.read(spark, s"$path/codes")
+          .crossJoin(broadcast(stats))
+          .select(col("vec_id"), sq8Dequantize(col("codes")).as("cv")), q)
+      case (Lsh(bits), Float, Frame(cands)) =>
+        vecs(cands, idCol, vecCol).withColumn("bucket", signBucket(col("cv"), bits))
+          .join(broadcast(q.withColumn("bucket", signBucket(col("qv"), bits))),
+            "bucket" :: Nil)
+      case (Prefix(dims, shortlist), Float, Frame(cands)) =>
+        require(dims >= 1, s"prefixDims must be >= 1, got $dims")
+        require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
+        val c = vecs(cands, idCol, vecCol)
+        // coarse pass: the corpus-sized surfaces carry ONLY the prefix slice
+        // (that is the funnel's byte saving) and the shortlist window
+        // shuffles three narrow columns — never a full vector
+        val short = ranked(budgetedCross(
+              c.select(col("vec_id"), slice(col("cv"), 1, dims).as("cv")),
+              q.select(col("query_id"), slice(col("qv"), 1, dims).as("qv")))
+            .select(col("query_id"), col("vec_id"), score(Float)),
+            shortlist, order(Float))
+          .select("query_id", "vec_id")
+        // rerank fetch: full vectors touch only |Q|·shortlist rows; both
+        // fetch joins are plain equi-joins — Catalyst broadcasts them when
+        // they fit (the common case) and an over-budget query set degrades
+        // to a shuffle instead of a forced driver materialization
+        c.join(short, "vec_id" :: Nil).join(q, "query_id" :: Nil)
+      case _ => throw new IllegalArgumentException(
+        s"Similarity.topK: unsupported combination $ann (coarse/code/source)")
+    }
+    graft.QueryTrace.record(spark, "sim.ann", ann)
+    ranked(pairs.select(col("query_id"), col("vec_id"), score(code)), k,
+      order(code))
+  }
+
+  /** One code's view of a frame source: the (possibly checked) query and
+    * candidate frames, the (vec_id, cv) `corpus` that cell assignment sees,
+    * and the maps from corpus rows and (query_id, qv, …) rows to the rows
+    * the code's score column reads.
+    */
+  private final case class Coded(queries: DataFrame, cands: DataFrame,
+      corpus: DataFrame, scan: DataFrame => DataFrame,
+      probe: DataFrame => DataFrame)
+
+  private def coded(code: Code, queries: DataFrame, cands: DataFrame,
+      vecCol: String, idCol: String, who: String): Coded =
+    code match {
+      case Float =>
+        Coded(queries, cands, vecs(cands, idCol, vecCol), identity, identity)
+      case Sq8 =>
+        Coded(queries, cands, sq8Reconstructed(cands, vecCol, idCol),
+          identity, identity)
+      case Pq(m, codebook, iters) =>
+        val fit = PqFit(queries, cands, vecCol, idCol, m, codebook, iters, who)
+        // candidates: all m nearest-codeword indexes in ONE fused pass (same
+        // rounding/tie rules as Clustering's assign — PqCodes replicates the
+        // round-9 + first-min chain bit-for-bit); the unfused chain was m×cb
+        // generated loops whose janino compile time dominated the whole
+        // query at every data scale. Queries: the per-query ADC tables —
+        // dists from the query's j-th sub-vector to every codeword,
+        // computed once per query row and broadcast with it.
+        Coded(fit.qs, fit.cands, vecs(fit.cands, idCol, vecCol),
+          _.withColumn("codes", graft.functions.NativeExpressions
+            .pqCodesNative(col("cv"), fit.books, 9)).drop("cv"),
+          _.withColumn("qtab", graft.functions.NativeExpressions
+            .pqAdcTableNative(col("qv"), fit.books)).drop("qv"))
+    }
+
+  /** (vec_id, cv): a candidate frame's ids and vectors. */
+  private def vecs(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
+
+  /** The one score column of a code. */
+  private def score(code: Code): Column = code match {
+    case Pq(m, _, _) => round(adcDist(m), 6).as("dist")
+    case _ => round(cosine(col("qv"), col("cv")), 6).as("cos")
+  }
+
+  /** The order a code's score ranks by. */
+  private def order(code: Code): Column = code match {
+    case _: Pq => col("dist").asc
+    case _ => col("cos").desc
+  }
+
+  /** rank ≤ k per query over (query_id, vec_id, score) by `order`, ties by
+    * candidate id — the one ranking window every top-k surface shares.
+    */
+  private def ranked(scored: DataFrame, k: Int, order: Column): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(order, col("vec_id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** (query_id, qv, cent_id): the cells each query probes. */
+  private def probeCells(ivf: IvfCoarse, cents: DataFrame, q: DataFrame,
+      cellSizes: => DataFrame): DataFrame = ivf match {
+    case Ivf(_, probes) => nearestCells(q, cents, "query_id", "qv", probes)
+    case IvfMass(_, massFrac) =>
+      nearestCellsByMass(q, cents, cellSizes, "query_id", "qv", massFrac)
+  }
+
+  /** How many probe rows one query becomes, the factor the cell join scales
+    * the query frame's estimate by before trusting it to broadcast.
+    */
+  private def expansion(ivf: IvfCoarse, code: Code, nCells: => Double): Double =
+    (ivf, code) match {
+      // non-derivable for PQ: each probe row swaps its raw vector for an
+      // m×codebook ADC table (10-100× the vector at small dims), so the
+      // base estimate says nothing about broadcast bytes — always measure
+      case (_, _: Pq) => Double.PositiveInfinity
+      case (Ivf(_, probes), _) => probes
+      // |cells| upper-bounds the probe replication (a query keeps a prefix
+      // of cells) — a count, where r14's MEASURED expansion executed the
+      // whole probed lineage (incl. the corpus assignment) in a dedicated
+      // extra job, pricing the adaptive route at two extra jobs per batch
+      case _ => nCells.max(1.0)
+    }
+
+  /** The IVF stage over an opened [[buildIvfIndex]] store: the stored
+    * cells replace the assignment join, and the centroids come from the
+    * store.
+    */
+  private def storePairs(ann: String, ivf: IvfCoarse, store: OpenedIvfStore,
+      q: DataFrame, probeBase: DataFrame): DataFrame = {
+    val spark = q.sparkSession
+    val OpenedIvfStore(path, idx, mod) = store
+    require(mod == ivf.centroidMod, s"$ann: $path was built with " +
+      s"centroidMod $mod, but the coarse filter names ${ivf.centroidMod}")
+    // the sizes live WITH the store (r15: one plain-file sidecar + append
+    // deltas, parsed driver-side with zero Spark jobs) — recounting them
+    // from the index cost a per-query-batch metadata scan of every file,
+    // which at a 100 TB store is the open cost, not a detail. Legacy
+    // stores (no sidecar) still recount. Only mass probing reads them.
+    lazy val localSizes = storedCellSizes(spark, path).map(_._2)
+    lazy val cellSizes = localSizes
+      .map(m => spark.createDataFrame(m.toSeq.sorted).toDF("cent_id", "cell_n"))
+      .getOrElse(idx.groupBy("cent_id").agg(count(lit(1)).as("cell_n")))
+    val probed = probeCells(ivf, indexCentroids(spark, path, idx, mod), q,
+      cellSizes)
+    // |cells| is already in hand from the sidecar: no probe-side job
+    confinedCellJoin(
+      idx.select(col("vec_id"), col("vec").as("cv"), col("cent_id")),
+      probed, "vec_id", probeBase, expansion(ivf, Float,
+        localSizes.map(_.size.toDouble).getOrElse(cellSizes.count().toDouble)))
   }
 
   /** Mutual k-nearest-neighbor graph: undirected edges (a, b, cos), a < b,
@@ -161,7 +488,7 @@ object Similarity {
 
   /** IVF-cell-confined mutual k-NN — the corpus-scale path. Every vector is
     * assigned to its `probes` nearest cells of a deterministic centroid
-    * subset (ids ≡ 0 mod `centroidMod` — [[ivfTopK]]'s assignment, widened
+    * subset (ids ≡ 0 mod `centroidMod` — [[Ivf]]'s assignment, widened
     * from 1 cell to `probes` so near-boundary pairs still meet); scoring
     * happens only between vectors sharing a probed cell. Per-query top-k
     * and the reciprocity join then run exactly as in [[mutualKnn]].
@@ -237,7 +564,7 @@ object Similarity {
 
   /** rank ≤ k per query over (query_id, vec_id, cos), cos-desc, id-asc. */
   private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
-    rankedTopK(scored, k).select("query_id", "vec_id", "cos")
+    ranked(scored, k, order(Float)).select("query_id", "vec_id", "cos")
 
   /** Reciprocity join: keep (a, b, cos), a < b, iff both directions are in
     * `top` — the (|V|·k)-row edge list joined on its reversed pair.
@@ -250,50 +577,10 @@ object Similarity {
       .select(col("t1.query_id").as("a"), col("t1.vec_id").as("b"),
         col("t1.cos").as("cos"))
 
-  /** Exact top-k: (query_id, vec_id, cos, rank), rank 1..k per query. The
-    * query-side broadcast is byte-budget-guarded (see [[budgetedCross]]).
-    */
-  def cosineTopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = candidates.select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-    val scored = budgetedCross(c, q)
-      .select(col("query_id"), col("vec_id"), round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** IVF (inverted-file) top-k: the production ANN shape. A deterministic
-    * centroid subset (ids ≡ 0 mod `centroidMod` — swap for k-means offline)
-    * partitions the corpus into cells (each candidate assigned to its
-    * max-cosine centroid); a query scores only the cells of its `probes`
-    * nearest centroids. Candidate-side work per query drops from O(N) to
-    * O(probes · N / |centroids|); both assignment joins broadcast the small
-    * centroid set, so the corpus is scanned exactly twice regardless of
-    * query count.
-    */
-  def ivfTopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int, centroidMod: Int = 100, probes: Int = 2): DataFrame = {
-    val cents = candidates.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv0"))
-    val assigned = nearestCells(
-      candidates.select(col(idCol).as("vec_id"), col(vecCol).as("cv")),
-      cents, "vec_id", "cv", 1)
-    val probed = nearestCells(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      cents, "query_id", "qv", probes)
-
-    val scored = confinedCellJoin(assigned, probed, "vec_id",
-        queries.select(col(idCol), col(vecCol)), expansion = probes)
-      .select(col("query_id"), col("vec_id"), round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** Top-`n` IVF cells per row of `vecs` by cosine to the broadcast
     * centroid set: (<idName>, <vecName>, cent_id), ties by centroid id.
-    * Shared by [[ivfTopK]] (n = 1 assignment / n = probes probing),
-    * [[mutualKnnIvf]], and the persisted-index path.
+    * Shared by [[topK]]'s IVF filters (n = 1 assignment / n = probes
+    * probing), [[mutualKnnIvf]], and the index build and append.
     */
   private def nearestCells(vecs: DataFrame, cents: DataFrame,
       idName: String, vecName: String, n: Int): DataFrame = {
@@ -338,58 +625,6 @@ object Similarity {
       .select(idName, vecName, "cent_id")
   }
 
-  /** [[ivfTopK]] with mass-adaptive probing (see [[nearestCellsByMass]]):
-    * each query probes its nearest cells until `massFrac` of the corpus is
-    * covered, so the scanned fraction is scale-stable where a fixed
-    * `probes` decays.
-    */
-  def ivfTopKAdaptive(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int, centroidMod: Int = 100,
-      massFrac: Double = 0.25): DataFrame = {
-    val cents = candidates.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv0"))
-    val assigned = nearestCells(
-      candidates.select(col(idCol).as("vec_id"), col(vecCol).as("cv")),
-      cents, "vec_id", "cv", 1)
-    val cellSizes = assigned.groupBy("cent_id").agg(count(lit(1)).as("cell_n"))
-    val probed = nearestCellsByMass(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      cents, cellSizes, "query_id", "qv", massFrac)
-    // |cells| upper-bounds the probe replication (a query keeps a prefix
-    // of cells) — one candidate-id-column count, where r14's MEASURED
-    // expansion executed the whole probed lineage (incl. the corpus
-    // assignment) in a dedicated extra job
-    val expansion = cents.count().toDouble.max(1.0)
-    val scored = confinedCellJoin(assigned, probed, "vec_id",
-        queries.select(col(idCol), col(vecCol)), expansion = expansion)
-      .select(col("query_id"), col("vec_id"), round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** [[ivfSq8TopK]] with mass-adaptive probing — the scale-stable form of
-    * the q198 envelope's subject.
-    */
-  def ivfSq8TopKAdaptive(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int, centroidMod: Int = 100,
-      massFrac: Double = 0.25): DataFrame = {
-    val cents = candidates.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv0"))
-    val assigned = nearestCells(
-      sq8Reconstructed(candidates, vecCol, idCol), cents, "vec_id", "cv", 1)
-    val cellSizes = assigned.groupBy("cent_id").agg(count(lit(1)).as("cell_n"))
-    val probed = nearestCellsByMass(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      cents, cellSizes, "query_id", "qv", massFrac)
-    // |cells| upper bound instead of the r14 measured-expansion job — see
-    // [[ivfTopKAdaptive]]
-    val expansion = cents.count().toDouble.max(1.0)
-    rankedTopK(confinedCellJoin(assigned, probed, "vec_id",
-        queries.select(col(idCol), col(vecCol)), expansion = expansion)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos")), k)
-  }
-
   /** Build a persisted IVF index at `path`: one parquet table
     * (vec_id, vec, cent_id, ivf_centroid_mod), each candidate assigned to
     * its max-cosine centroid of the deterministic subset ids ≡ 0 mod
@@ -400,7 +635,7 @@ object Similarity {
     * index fails loudly instead of silently mis-probing.
     *
     * The 100 TB shape this enables: the corpus-side assignment (the
-    * expensive two scans of [[ivfTopK]]) is paid ONCE; every later query
+    * expensive two scans of a frame [[Ivf]] query) is paid ONCE; every later query
     * batch reads only its probed cells' rows — partition the store by
     * `cent_id` at write time for cell pruning on the scan.
     */
@@ -464,6 +699,12 @@ object Similarity {
   private val CellSizesFile = "_cellsizes.csv"
   private val CellSizesDeltaDir = "_cellsizes_deltas"
   private val LeaseSuffix = ".__lease"
+
+  /** Writer-lease staleness bound (see [[appendIvfIndex]]), 10 min by
+    * default.
+    */
+  private def leaseTtlMs(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.get("graft.ivf.appendLeaseTtlMs", (10L * 60 * 1000).toString).toLong
 
   /** FILESYSTEM CONTRACT guard for every IVF store WRITER entry point
     * (VERDICT r16 #1). The store's whole transactional story — the
@@ -624,8 +865,7 @@ object Similarity {
     // [[rebuildIvfIndex]] (no live lease — fail with the recovery
     // instruction instead of a bare path-not-found)
     if (!fs.exists(rootP)) {
-      val ttlMs = spark.conf.get("graft.ivf.appendLeaseTtlMs",
-        (10L * 60 * 1000).toString).toLong
+      val ttlMs = leaseTtlMs(spark)
       if (leaseAgeMs(fs, rootP).exists(_ < ttlMs)) throw new java.io.IOException(
         s"$caller: a live writer holds the lease on $path while the " +
           "store root is mid-rename (a rebuildIvfIndex directory swap in " +
@@ -789,8 +1029,7 @@ object Similarity {
     requireAtomicFsScheme(spark, path, caller)
     val rootP = new org.apache.hadoop.fs.Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ttlMs = spark.conf.get("graft.ivf.appendLeaseTtlMs",
-      (10L * 60 * 1000).toString).toLong
+    val ttlMs = leaseTtlMs(spark)
     // a LIVE sibling lease with the store root absent is a rebuild BETWEEN
     // its two renames, not a crash — the crashed-rebuild recovery
     // instruction ("rename a sibling back") would corrupt the in-flight
@@ -1052,8 +1291,9 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     healAppends(spark, path)
 
-  /** Recall of the store's DEFAULT adaptive query path against the exact
-    * ranking over the SAME stored vectors, on a bounded query `sample` —
+  /** Recall of the store's mass-adaptive query path ([[IvfMass]]) against
+    * the exact ranking over the SAME stored vectors, on a bounded query
+    * `sample` —
     * the drift watchdog that completes the rolling-ingest lifecycle
     * (VERDICT r15 #5): [[appendIvfIndex]] deliberately freezes the
     * centroid geometry, which is correct BETWEEN rebuilds, but as appended
@@ -1069,9 +1309,9 @@ object Similarity {
       sample: DataFrame, vecCol: String, idCol: String,
       k: Int = 10, massFrac: Double = 0.25): Double = {
     // ONE store open shared by both rankings (VERDICT r18 #4: the check
-    // previously opened the store twice — here and again inside
-    // ivfTopKFromIndexAdaptive — paying the root/exclusion listing and
-    // sidecar read per open), and ONE action: denominator and hit count
+    // previously opened the store twice — here and again inside the
+    // store query — paying the root/exclusion listing and sidecar read
+    // per open), and ONE action: denominator and hit count
     // come from a single left-join aggregate, so the exact ranking's
     // subtree evaluates once and the old persist + two-count round trip
     // (3 driver actions per check) collapses to 1. Both rankings emit
@@ -1079,11 +1319,11 @@ object Similarity {
     // join matches at most once per exact row — count(__hit) is exactly
     // the old left_semi count.
     val (idx, mod) = openIvfIndex(spark, path, "ivfRecallCheck")
-    val approx = ivfTopKFromIndexAdaptiveOpened(spark, path, idx, mod,
-        sample, vecCol, idCol, k, massFrac)
+    val approx = topK(sample, OpenedIvfStore(path, idx, mod), vecCol, idCol,
+        k, IvfMass(mod, massFrac))
       .select(col("query_id"), col("vec_id"), lit(1).as("__hit"))
-    val exact = cosineTopK(sample,
-        idx.select(col("vec_id").as(idCol), col("vec").as(vecCol)),
+    val exact = topK(sample,
+        Frame(idx.select(col("vec_id").as(idCol), col("vec").as(vecCol))),
         vecCol, idCol, k)
       .select(col("query_id"), col("vec_id"))
     val row = exact.join(approx, Seq("query_id", "vec_id"), "left")
@@ -1132,8 +1372,7 @@ object Similarity {
       // STAGING dir, letting it finish is harmless to the live store;
       // the loss then aborts BEFORE the swap, which is the operation the
       // lease actually protects.
-      val ttlMs = spark.conf.get("graft.ivf.appendLeaseTtlMs",
-        (10L * 60 * 1000).toString).toLong
+      val ttlMs = leaseTtlMs(spark)
       val pulseEvery = math.max(ttlMs / 4, 50L)
       val pulseErr =
         new java.util.concurrent.atomic.AtomicReference[Throwable]()
@@ -1195,141 +1434,6 @@ object Similarity {
     } else (recall, false)
   }
 
-  /** Query a [[buildIvfIndex]] store with the corpus never rescanned — the
-    * assignment join is replaced by the stored cells. Bit-identical to the
-    * direct (non-index) form under the same probing rule (spec-asserted;
-    * the q187 gate pins the round-trip as invisible).
-    *
-    * The DEFAULT probing rule is mass-adaptive (`probes = 0` delegates to
-    * [[ivfTopKFromIndexAdaptive]] with `massFrac`): a fixed probe count is
-    * the exact decay class q184/q198 demonstrated — the probed fraction
-    * shrinks as the index grows, which is fatal for an index built once
-    * and queried for months. Pass `probes > 0` to OPT IN to fixed-count
-    * probing (reproducing a pinned legacy ranking); `massFrac` is ignored
-    * then.
-    */
-  def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vecCol: String, idCol: String,
-      k: Int, probes: Int = 0, massFrac: Double = 0.25): DataFrame = {
-    if (probes <= 0)
-      return ivfTopKFromIndexAdaptive(spark, path, queries, vecCol, idCol,
-        k, massFrac)
-    val (idx, mod) = openIvfIndex(spark, path, "ivfTopKFromIndex")
-    val cents = indexCentroids(spark, path, idx, mod)
-    val probed = nearestCells(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        cents, "query_id", "qv", probes)
-    val scored = confinedCellJoin(
-        idx.select(col("vec_id"), col("vec").as("cv"), col("cent_id")),
-        probed, "vec_id", queries.select(col(idCol), col(vecCol)),
-        expansion = probes)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Mass-adaptive probing over a [[buildIvfIndex]] store — the
-    * scale-stable default for the persisted-index path: per-cell candidate
-    * counts come straight from the STORED assignment (one groupBy over the
-    * index's cent_id column — partition-pruned, no vector is scored and
-    * the assignment is never recomputed), and each query probes its
-    * nearest cells until `massFrac` of the corpus is covered
-    * ([[nearestCellsByMass]]). A fixed probe count shrinks the probed
-    * fraction as the corpus grows its centroid subset (the q198
-    * fixed-probe overlap decayed 42→23 of 50 across shipped SFs); probing
-    * to a mass target keeps the scanned fraction — and the recall
-    * envelope — stable across scale, which is exactly what an index built
-    * ONCE and queried for months needs. Gated q238 (overlap vs the exact
-    * ranking ≥ 50% at every shipped SF, probes chosen by the rule).
-    */
-  def ivfTopKFromIndexAdaptive(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, vecCol: String, idCol: String,
-      k: Int, massFrac: Double = 0.25): DataFrame = {
-    val (idx, mod) = openIvfIndex(spark, path, "ivfTopKFromIndexAdaptive")
-    ivfTopKFromIndexAdaptiveOpened(spark, path, idx, mod, queries, vecCol,
-      idCol, k, massFrac)
-  }
-
-  /** [[ivfTopKFromIndexAdaptive]] against an ALREADY-opened store — so a
-    * caller that opened the index for its own purposes (ivfRecallCheck's
-    * exact side) shares one open/validation instead of paying the
-    * root/exclusion listing and sidecar read twice. Read-only sharing:
-    * both consumers see the same snapshot the single open resolved, which
-    * is strictly more consistent than two opens racing a writer.
-    */
-  private def ivfTopKFromIndexAdaptiveOpened(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idx: DataFrame, mod: Int, queries: DataFrame, vecCol: String,
-      idCol: String, k: Int, massFrac: Double): DataFrame = {
-    val cents = indexCentroids(spark, path, idx, mod)
-    // the sizes live WITH the store (r15: one plain-file sidecar + append
-    // deltas, parsed driver-side with zero Spark jobs) — recounting them
-    // from the index cost a per-query-batch metadata scan of every file,
-    // which at a 100 TB store is the open cost, not a detail. Legacy
-    // stores (no sidecar) still recount.
-    val localSizes = storedCellSizes(spark, path).map(_._2)
-    val cellSizes = localSizes
-      .map(m => spark.createDataFrame(m.toSeq.sorted).toDF("cent_id", "cell_n"))
-      .getOrElse(idx.groupBy("cent_id").agg(count(lit(1)).as("cell_n")))
-    val probed = nearestCellsByMass(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      cents, cellSizes, "query_id", "qv", massFrac)
-    // broadcast-budget expansion bound: a query probes at most every cell,
-    // so |cells| (already in hand from the sidecar, no probe-side job at
-    // all) upper-bounds the replication — r14 instead MEASURED the exact
-    // expansion with a dedicated job over the probed frame, pricing the
-    // adaptive default at two extra Spark jobs per query batch
-    val expansion = localSizes.map(_.size.toDouble)
-      .getOrElse(cellSizes.count().toDouble).max(1.0)
-    val scored = confinedCellJoin(
-        idx.select(col("vec_id"), col("vec").as("cv"), col("cent_id")),
-        probed, "vec_id", queries.select(col(idCol), col(vecCol)),
-        expansion = expansion)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    rankedTopK(scored, k)
-  }
-
-  /** Product-quantization (PQ) top-k with asymmetric distance computation —
-    * the memory-bound ANN shape: candidates are compressed to `m` one-byte
-    * codes by per-subspace k-means codebooks ([[Clustering.kmeansFit]] on
-    * vector slices), queries build their `m × codebook` distance lookup
-    * tables ONCE each (on the small broadcast side), and scoring a
-    * candidate is then `m` table lookups instead of a `dim`-float loop —
-    * at 100 TB the scan carries bytes, not embeddings, and the ranking
-    * join's per-pair work is independent of dimensionality.
-    *
-    * Deterministic end to end (kmeans init/ties + 6-dp distance rounding +
-    * id tie-break). Returns (query_id, vec_id, dist, rank) with `dist` the
-    * PQ-approximate squared L2, rank 1..k ascending.
-    */
-  def pqTopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int,
-      m: Int = 8, codebook: Int = 16, iters: Int = 3): DataFrame = {
-    val fit = PqFit(queries, candidates, vecCol, idCol, m, codebook, iters, "pqTopK")
-
-    // encode: all m nearest-codeword indexes in ONE fused pass (same
-    // rounding/tie rules as Clustering's assign — PqCodes replicates the
-    // round-9 + first-min chain bit-for-bit) — the candidate relation
-    // shrinks to m codes. The unfused chain was m×cb generated loops whose
-    // janino compile time dominated the whole query at every data scale.
-    val encoded = fit.cands.select(col(idCol).as("vec_id"),
-      graft.functions.NativeExpressions.pqCodesNative(
-        col(vecCol), fit.books, 9).as("codes"))
-
-    // per-query ADC tables: dists from the query's j-th sub-vector to every
-    // codeword — computed once per query row, broadcast with it
-    val q = fit.qs.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qtab", graft.functions.NativeExpressions.pqAdcTableNative(
-        col("qv"), fit.books)).drop("qv")
-
-    // score: m lookups per (query, candidate) pair
-    val scored = encoded.crossJoin(broadcast(q))
-      .select(col("query_id"), col("vec_id"), round(adcDist(m), 6).as("dist"))
-    topKByDist(scored, k)
-  }
-
   /** Shared PQ model prep: the dim probe, the per-row dimension guard on
     * BOTH sides (the sliced distances silently truncate to the shorter
     * array, so a ragged vector would score as a spurious near-perfect
@@ -1361,62 +1465,6 @@ object Similarity {
     element_at(element_at(col("qtab"), j + 1), element_at(col("codes"), j + 1) + 1)
   }.reduce(_ + _)
 
-  /** rank ≤ k per query over (query_id, vec_id, dist), dist-asc, id-asc. */
-  private def topKByDist(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("dist").asc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** IVF-PQ top-k — the production composite ANN shape (FAISS's IVFPQ,
-    * minus residual encoding, which would couple every codebook to its
-    * cell): the IVF coarse quantizer confines each query's candidates to
-    * its `probes` nearest cells, and candidates inside those cells are
-    * scored by PQ asymmetric distance — m byte-code lookups against the
-    * query's ADC table. The two scale bounds COMPOSE: per-query candidate
-    * work is O(probes · N / |cells|) (IVF) and per-pair scoring cost is
-    * independent of dimensionality (PQ) — at 100 TB the ranking join
-    * carries cent_id + m bytes per vector, never the embeddings.
-    *
-    * Shares [[pqTopK]]'s fused deterministic codebook fit (corpus-level
-    * codebooks) and [[ivfTopK]]'s deterministic centroid subset. With
-    * `probes` ≥ |cells| nothing is pruned and the result is bit-identical
-    * to [[pqTopK]] (spec-asserted); the approximation envelope vs exact
-    * L2 is certified under the driver gate (q188, the q184 pattern).
-    *
-    * Returns (query_id, vec_id, dist, rank), dist = PQ-approximate
-    * squared L2, rank 1..k ascending (vec_id tie-break).
-    */
-  def ivfPqTopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int,
-      centroidMod: Int = 100, probes: Int = 2,
-      m: Int = 8, codebook: Int = 16, iters: Int = 3): DataFrame = {
-    val fit = PqFit(queries, candidates, vecCol, idCol, m, codebook, iters, "ivfPqTopK")
-
-    val cents = fit.cands.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv0"))
-    val encoded = nearestCells(
-        fit.cands.select(col(idCol).as("vec_id"), col(vecCol).as("cv")),
-        cents, "vec_id", "cv", 1)
-      .select(col("vec_id"), col("cent_id"),
-        graft.functions.NativeExpressions.pqCodesNative(
-          col("cv"), fit.books, 9).as("codes"))
-    val probed = nearestCells(
-        fit.qs.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        cents, "query_id", "qv", probes)
-      .withColumn("qtab", graft.functions.NativeExpressions.pqAdcTableNative(
-        col("qv"), fit.books))
-      .select("query_id", "cent_id", "qtab")
-
-    // expansion is non-derivable here: each probe row swaps its raw vector
-    // for an m×codebook ADC table (10-100× the vector at small dims), so
-    // the base estimate says nothing about broadcast bytes — always measure
-    val scored = confinedCellJoin(encoded, probed, "vec_id",
-        queries.select(col(idCol), col(vecCol)),
-        expansion = Double.PositiveInfinity)
-      .select(col("query_id"), col("vec_id"), round(adcDist(m), 6).as("dist"))
-    topKByDist(scored, k)
-  }
-
   /** All m PQ codebooks fit in lockstep with [[Clustering]]'s deterministic
     * recipe (smallest-id init, 9-dp-rounded index-ordered L2², lowest-index
     * ties, 6-dp means, empty clusters keep previous) but ONE distributed
@@ -1432,7 +1480,7 @@ object Similarity {
       col(vecCol).cast("array<double>").as("v")).localCheckpoint(true)
     val init = pinned.orderBy("vec_id").limit(cb).select("v").collect()
       .map(_.getSeq[Double](0).toArray)
-    require(init.length == cb, s"pqTopK: need at least $cb rows, got ${init.length}")
+    require(init.length == cb, s"Pq: need at least $cb rows, got ${init.length}")
     var books: IndexedSeq[Array[Array[Double]]] =
       (0 until m).map(j => init.map(full => full.slice(j * sub, (j + 1) * sub)))
     for (_ <- 1 to iters) {
@@ -1487,7 +1535,7 @@ object Similarity {
 
   /** Per-dimension corpus [min, max] of `vecCol`, assembled as two
     * broadcast-sized arrays `(mns, mxs)` — the calibration table for
-    * [[sq8TopK]]'s scalar quantizer.
+    * the [[Sq8]] code's scalar quantizer.
     *
     * Scale: `posexplode` multiplies rows by the dimension count, but the
     * groupBy(pos) is map-side combined down to d groups per task before the
@@ -1530,44 +1578,13 @@ object Similarity {
 
   /** (vec_id, cv): the candidate corpus carried through quantize →
     * dequantize against its own one-row broadcast calibration — the
-    * shared front half of [[sq8TopK]] and [[ivfSq8TopK]].
+    * [[Sq8]] code's corpus on a frame, exhaustive or IVF.
     */
   private def sq8Reconstructed(candidates: DataFrame, vecCol: String,
       idCol: String): DataFrame =
     candidates.crossJoin(broadcast(sq8Stats(candidates, vecCol)))
       .select(col(idCol).as("vec_id"),
         sq8Dequantize(sq8Codes(col(vecCol))).as("cv"))
-
-  /** (query_id, vec_id, cos, rank ≤ k) from a scored pair frame — the
-    * rank tail every top-k surface shares (cos desc, id tie-break).
-    */
-  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Asymmetric scalar-quantized (SQ8) top-k: candidates are compressed to
-    * one byte per dimension against per-dimension corpus [min, max]
-    * ([[sq8Stats]]) — 4× smaller than float32, the memory move that lets an
-    * in-memory ANN corpus grow 4× — while queries stay full precision (the
-    * asymmetric-distance convention: quantizing only the stored side costs
-    * far less recall than quantizing both). Scoring runs against the
-    * DEQUANTIZED reconstruction ([[sq8Codes]] → [[sq8Dequantize]]), so the
-    * whole chain — codes included — is replayable by any engine.
-    *
-    * Scale: one corpus-stats pass, then exactly [[cosineTopK]]'s shape —
-    * the 1-row stats and the query set broadcast, candidates scanned once,
-    * per-query top-k window. Recall loss vs exact is certifiable with the
-    * q184 envelope pattern; at 64 dims of synthetic data the quantizer is
-    * near-lossless (spec-asserted top-1 agreement).
-    */
-  def sq8TopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    rankedTopK(budgetedCross(sq8Reconstructed(candidates, vecCol, idCol), q)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos")), k)
-  }
 
   /** Persist an SQ8 index at `path`: `path/stats` holds the ONE-row
     * per-dimension [min,max] calibration (plus `sq8_dims`, the
@@ -1592,125 +1609,5 @@ object Similarity {
       .select(col(idCol).as("vec_id"),
         sq8Codes(col(vecCol)).cast("array<int>").as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** Query a [[buildSq8Index]] store — bit-identical to the direct
-    * [[sq8TopK]] (spec-asserted; the q197 gate hash-matches the stored
-    * path against the SAME fully-replayed DuckDB oracle as q192, so the
-    * round-trip is provably invisible), with the float corpus never
-    * rescanned: codes dequantize against the broadcast one-row stats.
-    */
-  def sq8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vecCol: String, idCol: String, k: Int): DataFrame = {
-    val stats = graft.Tables.read(spark, s"$path/stats")
-    require(stats.columns.contains("sq8_dims"),
-      s"sq8TopKFromIndex: $path is not a graft SQ8 index (no scheme column)")
-    // enforce the scheme: a query batch from a different model would
-    // otherwise score over min(query, index) dims and return plausible
-    // but wrong rankings. One bounded collect each — the stats table is
-    // one row, and the distinct-dims scan touches only the (small by
-    // contract) query side.
-    val dims = stats.select("sq8_dims").head().getInt(0)
-    val qdims = queries.select(size(col(vecCol)).as("d")).distinct()
-      .collect().map(_.getInt(0))
-    require(qdims.forall(_ == dims),
-      s"sq8TopKFromIndex: query dims ${qdims.mkString(",")} != index dims " +
-        s"$dims — wrong embedding model for this index")
-    val deq = graft.Tables.read(spark, s"$path/codes")
-      .crossJoin(broadcast(stats))
-      .select(col("vec_id"), sq8Dequantize(col("codes")).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    rankedTopK(budgetedCross(deq, q)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos")), k)
-  }
-
-  /** IVF + SQ8 composite — the FAISS `IVF…,SQ8` shape: the coarse
-    * quantizer ([[ivfTopK]]'s deterministic centroid subset) prunes the
-    * candidate set to the query's probed cells, and the fine scan runs on
-    * SQ8-dequantized reconstructions instead of float vectors. Cell
-    * assignment happens on the dequantized candidates, so the scan
-    * pipeline touches only stats + codes — at corpus scale the float
-    * embeddings are read exactly once (calibration + encode).
-    *
-    * Approximation envelope: with `probes` ≥ |centroids| the pruning is
-    * void and the result is bit-identical to [[sq8TopK]] (spec-asserted);
-    * the pruning loss at real probe counts is certified under the q198
-    * envelope gate (the q188 pattern, against the UNPRUNED sq8 ranking).
-    */
-  def ivfSq8TopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int, centroidMod: Int = 100,
-      probes: Int = 2): DataFrame = {
-    val cents = candidates.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv0"))
-    val assigned = nearestCells(
-      sq8Reconstructed(candidates, vecCol, idCol), cents, "vec_id", "cv", 1)
-    val probed = nearestCells(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      cents, "query_id", "qv", probes)
-    rankedTopK(confinedCellJoin(assigned, probed, "vec_id",
-        queries.select(col(idCol), col(vecCol)), expansion = probes)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos")), k)
-  }
-
-  /** Matryoshka-style two-stage retrieval: rank every candidate by cosine
-    * over only the first `prefixDims` dimensions (MRL-trained embeddings
-    * front-load information, so the prefix is a usable coarse score), keep
-    * a per-query shortlist, then re-rank ONLY the shortlist with the exact
-    * full-dimension cosine. The standard funnel: full-corpus work touches
-    * `prefixDims/d` of the bytes, exact work touches `shortlist/N` of the
-    * corpus.
-    *
-    * Both stages are deterministic (6-dp rounding + id tie-break), so the
-    * funnel — shortlist boundary included — replays exactly on any engine.
-    * Recall vs single-stage exact is the shortlist's to lose; with
-    * `shortlist` ≥ N it is bit-identical to [[cosineTopK]] (spec-asserted).
-    *
-    * @return (query_id, vec_id, rk, cos) — rk 1..k by exact cosine
-    */
-  def truncatedRerank(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, prefixDims: Int, shortlist: Int,
-      k: Int): DataFrame = {
-    require(prefixDims >= 1, s"prefixDims must be >= 1, got $prefixDims")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = candidates.select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-    // coarse pass: the corpus-sized surfaces carry ONLY the prefix slice
-    // (that is the funnel's byte saving) and the shortlist window shuffles
-    // three narrow columns — never a full vector
-    val coarse = budgetedCross(
-        c.select(col("vec_id"), slice(col("cv"), 1, prefixDims).as("cp")),
-        q.select(col("query_id"), slice(col("qv"), 1, prefixDims).as("qp")))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qp"), col("cp")), 6).as("cos_p"))
-    val wp = Window.partitionBy("query_id").orderBy(col("cos_p").desc, col("vec_id").asc)
-    val short = coarse.withColumn("prk", row_number().over(wp))
-      .filter(col("prk") <= shortlist).select("query_id", "vec_id")
-    // rerank fetch: full vectors touch only |Q|·shortlist rows; both
-    // fetch joins are plain equi-joins — Catalyst broadcasts them when
-    // they fit (the common case) and an over-budget query set degrades to
-    // a shuffle instead of a forced driver materialization
-    val wf = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    c.join(short, "vec_id" :: Nil)
-      .join(q, "query_id" :: Nil)
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("cv")), 6).as("cos"))
-      .withColumn("rk", row_number().over(wf))
-      .filter(col("rk") <= k)
-      .select("query_id", "vec_id", "rk", "cos")
-  }
-
-  /** Sign-LSH top-k: exact ranking *within* the query's bucket. */
-  def bucketedTopK(queries: DataFrame, candidates: DataFrame,
-      vecCol: String, idCol: String, k: Int, bits: Int = 8): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      signBucket(col(vecCol), bits).as("bucket"))
-    val c = candidates.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
-      signBucket(col(vecCol), bits).as("bucket"))
-    val scored = c.join(broadcast(q), "bucket" :: Nil)
-      .select(col("query_id"), col("vec_id"), round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 }

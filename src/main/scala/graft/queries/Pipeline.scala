@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.{QueryTrace, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity.{Frame, Ivf, IvfMass, IvfStore, Lsh, Pq,
+  Prefix, Sq8, Sq8Store}
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard /
@@ -24,6 +26,14 @@ object Pipeline {
     */
   private def docsSpread(s: SparkSession, d: String): DataFrame =
     graft.Tables.spreadScan(Tables(s, d).documents, "doc_id")
+
+  /** The fixed probe count of the IVF envelope gates (q184, q188, q198):
+    * `frac` of the measured centroid cells (ids ≡ 0 mod 100), at least 3 —
+    * one count job. A constant count would shrink the probed fraction as
+    * the corpus grows its centroid subset.
+    */
+  private def probesFor(e: DataFrame, frac: Double): Int =
+    math.max(3, math.ceil(e.filter(col("vec_id") % 100 === 0).count() * frac).toInt)
 
   /* ---------- shared oracle SQL fragments ---------- */
 
@@ -226,22 +236,23 @@ object Pipeline {
     // brute-force cosine top-10 for query vectors vec_id < 5.
     "q58_ann_topk" -> ((s, d) => {
       val e = Tables(s, d).embeddings
-      Similarity.cosineTopK(e.filter(col("vec_id") < 5), e, "embedding", "vec_id", k = 10)
+      Similarity.topK(e.filter(col("vec_id") < 5), Frame(e), "embedding", "vec_id", k = 10)
         .orderBy("query_id", "rank")
     }),
 
     // sign-LSH bucketed top-5 (exact rank within the query's bucket).
     "q59_ann_lsh" -> ((s, d) => {
       val e = Tables(s, d).embeddings
-      Similarity.bucketedTopK(e.filter(col("vec_id") < 5), e, "embedding", "vec_id", k = 5, bits = 8)
+      Similarity.topK(e.filter(col("vec_id") < 5), Frame(e), "embedding", "vec_id", k = 5,
+          Lsh(bits = 8))
         .orderBy("query_id", "rank")
     }),
 
     // IVF ANN: centroid cells (ids ≡ 0 mod 100) + 2-probe search.
     "q61_ann_ivf" -> ((s, d) => {
       val e = Tables(s, d).embeddings
-      Similarity.ivfTopK(e.filter(col("vec_id") < 5), e, "embedding", "vec_id",
-          k = 10, centroidMod = 100, probes = 2)
+      Similarity.topK(e.filter(col("vec_id") < 5), Frame(e), "embedding", "vec_id",
+          k = 10, Ivf(centroidMod = 100, probes = 2))
         .orderBy("query_id", "rank")
     }),
 
@@ -1145,8 +1156,8 @@ object Pipeline {
     // then encodes and scores with the same rounding/tie rules.
     "q97_pq_topk" -> ((s, d) => {
       val emb = Tables(s, d).embeddings
-      graft.operators.Similarity.pqTopK(
-          emb.filter(col("vec_id") < 5), emb, "embedding", "vec_id", k = 10)
+      Similarity.topK(emb.filter(col("vec_id") < 5), Frame(emb), "embedding",
+          "vec_id", k = 10, code = Pq())
         .orderBy("query_id", "rank")
     }),
 
@@ -1400,17 +1411,15 @@ object Pipeline {
     "q184_ivf_recall" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
-      val exact = Similarity.cosineTopK(q, e, "embedding", "vec_id", k = 10)
+      val exact = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10)
         .select(col("query_id"), col("vec_id"))
       // probes scale with the measured cell count (≥ 40% of cells, min 3 —
       // the q188/q198 rule): the r13 full-sf0.1 sweep caught the raw
       // probes = 3 form decaying to 2-4/10 overlap at sf0.1, where 3 of 20
       // cells is 15% of the corpus vs 60% at sf0.01 — the exact fixed-probe
       // decay the mass-adaptive forms (q231/q238) exist to avoid
-      val nCents = e.filter(col("vec_id") % 100 === 0).count()
-      val probes = math.max(3, math.ceil(nCents * 0.4).toInt)
-      val ivf = Similarity.ivfTopK(q, e, "embedding", "vec_id",
-          k = 10, centroidMod = 100, probes = probes)
+      val ivf = Similarity.topK(q, Frame(e), "embedding", "vec_id",
+          k = 10, Ivf(centroidMod = 100, probes = probesFor(e, 0.4)))
         .select(col("query_id"), col("vec_id"))
       exact.join(ivf, Seq("query_id", "vec_id"))
         .groupBy("query_id").agg(count(lit(1)).as("overlap"))
@@ -1446,9 +1455,9 @@ object Pipeline {
     // q119 store-dedup contract. Joining direct and stored results on all
     // four columns: any cos/rank divergence drops a row and store_ok or
     // n_rows breaks against the oracle. Since r14 BOTH arms run the
-    // DEFAULT probing rule — mass-adaptive — so this gate pins the
-    // round-trip contract of the route users actually get (fixed-probe is
-    // opt-in via probes > 0, spec-covered).
+    // mass-adaptive probing rule (IvfMass), so this gate pins the
+    // round-trip contract of the route a long-lived store should take
+    // (fixed-probe Ivf is spec-covered).
     "q187_ivf_index_roundtrip" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
@@ -1456,10 +1465,10 @@ object Pipeline {
       Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
         centroidMod = 100)
       try {
-        val direct = Similarity.ivfTopKAdaptive(q, e, "embedding", "vec_id",
-          k = 10, centroidMod = 100)
-        val stored = Similarity.ivfTopKFromIndex(s, dir.toString, q,
-          "embedding", "vec_id", k = 10)
+        val direct = Similarity.topK(q, Frame(e), "embedding", "vec_id",
+          k = 10, IvfMass(centroidMod = 100))
+        val stored = Similarity.topK(q, IvfStore(dir.toString), "embedding",
+          "vec_id", k = 10, IvfMass(centroidMod = 100))
         // pinned eagerly so the finally-delete below cannot outrun the
         // lazy store read (the q119 pattern)
         direct.join(stored, Seq("query_id", "vec_id", "cos", "rank"))
@@ -1478,7 +1487,7 @@ object Pipeline {
     // stored corpus never rescanned). The delta deliberately contains
     // mod-aligned ids, which must NOT become centroids (the _centroids
     // sidecar freezes the geometry). Gated facts: every query recovers
-    // k rows through the appended store via the DEFAULT adaptive route
+    // k rows through the appended store via the mass-adaptive route
     // (store_ok), and append_ok pins the store content — total rows =
     // corpus rows, every appended row landed in a frozen cell, no
     // phantom centroid appeared.
@@ -1507,8 +1516,8 @@ object Pipeline {
           .select((col("n_idx") === col("n_corpus") &&
             col("n_app") === col("n_delta") &&
             col("n_bad") === 0 && col("n_phantom") === 0).as("append_ok"))
-        val topk = Similarity.ivfTopKFromIndex(s, dir.toString, q,
-          "embedding", "vec_id", k = 10)
+        val topk = Similarity.topK(q, IvfStore(dir.toString), "embedding",
+          "vec_id", k = 10, IvfMass(centroidMod = 100))
         // pinned eagerly so the finally-delete cannot outrun the lazy
         // store read (the q119/q187 pattern)
         topk.groupBy("query_id").agg(count(lit(1)).as("n_rows"))
@@ -1588,12 +1597,12 @@ object Pipeline {
     "q188_ivfpq_envelope" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
-      val nCents = e.filter(col("vec_id") % 100 === 0).count()
-      val probes = math.max(3, math.ceil(nCents / 8.0).toInt)
-      val pq = Similarity.pqTopK(q, e, "embedding", "vec_id", k = 10)
+      val probes = probesFor(e, 1.0 / 8)
+      val pq = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10,
+          code = Pq())
         .select("query_id", "vec_id")
-      val comp = Similarity.ivfPqTopK(q, e, "embedding", "vec_id", k = 10,
-          centroidMod = 100, probes = probes)
+      val comp = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10,
+          Ivf(centroidMod = 100, probes = probes), Pq())
         .select("query_id", "vec_id")
       val hit = pq.join(comp, Seq("query_id", "vec_id"))
         .agg(count(lit(1)).as("n_hit"))
@@ -1654,8 +1663,8 @@ object Pipeline {
     // envelope).
     "q192_sq8_topk" -> ((s, d) => {
       val e = Tables(s, d).embeddings
-      graft.operators.Similarity.sq8TopK(e.filter(col("vec_id") < 5), e,
-          "embedding", "vec_id", k = 10)
+      Similarity.topK(e.filter(col("vec_id") < 5), Frame(e),
+          "embedding", "vec_id", k = 10, code = Sq8)
         .orderBy("query_id", "rank")
     }),
 
@@ -1664,8 +1673,9 @@ object Pipeline {
     // both stages deterministic, so the funnel replays exactly in DuckDB.
     "q193_trunc_rerank" -> ((s, d) => {
       val e = Tables(s, d).embeddings
-      graft.operators.Similarity.truncatedRerank(e.filter(col("vec_id") < 5),
-          e, "embedding", "vec_id", prefixDims = 8, shortlist = 50, k = 10)
+      Similarity.topK(e.filter(col("vec_id") < 5), Frame(e),
+          "embedding", "vec_id", k = 10, Prefix(dims = 8, shortlist = 50))
+        .select(col("query_id"), col("vec_id"), col("rank").as("rk"), col("cos"))
         .orderBy("query_id", "rk")
     }),
 
@@ -1693,8 +1703,8 @@ object Pipeline {
         val e = Tables(s, d).embeddings
         // routing happens eagerly inside budgetedCross (the side is
         // measured at plan build), so the trace holds the route on return
-        val (top, trace) = QueryTrace.run(s)(Similarity.cosineTopK(
-          e.filter(col("vec_id") < 5), e, "embedding", "vec_id", k = 10))
+        val (top, trace) = QueryTrace.run(s)(Similarity.topK(
+          e.filter(col("vec_id") < 5), Frame(e), "embedding", "vec_id", k = 10))
         val route = trace.get("sim.route").getOrElse("unset")
         top.withColumn("route", lit(route)).orderBy("query_id", "rank")
       } finally {
@@ -1726,8 +1736,8 @@ object Pipeline {
       try {
         // pinned eagerly so the finally-delete cannot outrun the lazy
         // store read (the q119/q187 pattern)
-        graft.operators.Similarity.sq8TopKFromIndex(s, dir.toString,
-            e.filter(col("vec_id") < 5), "embedding", "vec_id", k = 10)
+        Similarity.topK(e.filter(col("vec_id") < 5), Sq8Store(dir.toString),
+            "embedding", "vec_id", k = 10, code = Sq8)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -1747,13 +1757,12 @@ object Pipeline {
     "q198_ivfsq8_envelope" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
-      val nCents = e.filter(col("vec_id") % 100 === 0).count()
-      val probes = math.max(3, math.ceil(nCents / 8.0).toInt)
-      val sq = graft.operators.Similarity.sq8TopK(q, e, "embedding",
-          "vec_id", k = 10)
+      val probes = probesFor(e, 1.0 / 8)
+      val sq = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10,
+          code = Sq8)
         .select("query_id", "vec_id")
-      val comp = graft.operators.Similarity.ivfSq8TopK(q, e, "embedding",
-          "vec_id", k = 10, centroidMod = 100, probes = probes)
+      val comp = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10,
+          Ivf(centroidMod = 100, probes = probes), Sq8)
         .select("query_id", "vec_id")
       val hit = sq.join(comp, Seq("query_id", "vec_id"))
         .agg(count(lit(1)).as("n_hit"))
@@ -1772,11 +1781,11 @@ object Pipeline {
     "q231_ivfsq8_adaptive" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
-      val sq = graft.operators.Similarity.sq8TopK(q, e, "embedding",
-          "vec_id", k = 10)
+      val sq = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10,
+          code = Sq8)
         .select("query_id", "vec_id")
-      val comp = graft.operators.Similarity.ivfSq8TopKAdaptive(q, e,
-          "embedding", "vec_id", k = 10, centroidMod = 100, massFrac = 0.25)
+      val comp = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10,
+          IvfMass(centroidMod = 100, massFrac = 0.25), Sq8)
         .select("query_id", "vec_id")
       val hit = sq.join(comp, Seq("query_id", "vec_id"))
         .agg(count(lit(1)).as("n_hit"))
@@ -1801,10 +1810,10 @@ object Pipeline {
       Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
         centroidMod = 100)
       try {
-        val exact = Similarity.cosineTopK(q, e, "embedding", "vec_id", k = 10)
+        val exact = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10)
           .select("query_id", "vec_id")
-        val stored = Similarity.ivfTopKFromIndexAdaptive(s, dir.toString, q,
-            "embedding", "vec_id", k = 10, massFrac = 0.25)
+        val stored = Similarity.topK(q, IvfStore(dir.toString), "embedding",
+            "vec_id", k = 10, IvfMass(centroidMod = 100, massFrac = 0.25))
           .select("query_id", "vec_id")
         val hit = exact.join(stored, Seq("query_id", "vec_id"))
           .agg(count(lit(1)).as("n_hit"))
@@ -2733,7 +2742,7 @@ object Pipeline {
          |FROM tok k JOIN c USING (tok) LEFT JOIN t USING (tok) CROSS JOIN scal s
          |GROUP BY k.doc_id ORDER BY k.doc_id""".stripMargin,
     "q97_pq_topk" -> {
-      // mirrors Similarity.pqTopK (m=8 subspaces over dim 64, codebook 16,
+      // mirrors Similarity.topK with code Pq() (m=8 subspaces over dim 64, codebook 16,
       // 3 Lloyd iterations, k=10, queries = vec_id < 5) in exact lockstep:
       // per-subspace kmeans unrolled as CTEs (the q94 technique), ENCODING
       // against the FINAL codebooks (one assignment round past the last

@@ -8,8 +8,10 @@ class PlanQualitySpec extends SparkSpec {
 
   // the pinned prefix/rank shapes are the DISTRIBUTED ones: disable the
   // measured-small-input routing (Packing.singleTaskOk) that would
-  // otherwise give sf0.001 inputs their plain-window twin
-  spark.conf.set("graft.prefix.singleTaskBytes", "0")
+  // otherwise give sf0.001 inputs their plain-window twin — per test, so
+  // the conf does not outlive this suite on the shared session
+  override def withFixture(test: NoArgTest) =
+    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
 
   private def executedPlan(q: String): String = {
     val df = SparkEntry.queries(q)(spark, sf0001)
@@ -278,16 +280,15 @@ class PlanQualitySpec extends SparkSpec {
   test("runtime Bloom-filter pruning reaches the fact side of a shuffle join") {
     val es = graft.api.EngineSession(spark)
     // every conf this test sets goes back to its prior value (or unset), so
-    // later suites on the shared session plan under the defaults
-    val touched = Seq("spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val prior = touched.map(k => k -> spark.conf.getOption(k))
-    es.enableRuntimeFiltering(applicationSideThreshold = "1B", creationSideThreshold = "100MB")
-    // force a shuffle join so the filter has a scan worth pruning
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    // later suites on the shared session plan under the defaults; the
+    // filter starts switched off, so only enableRuntimeFiltering can inject
+    // it, and the join is forced to shuffle so the filter has a scan worth
+    // pruning
+    withConf("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "10GB",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      es.enableRuntimeFiltering(applicationSideThreshold = "1B", creationSideThreshold = "100MB")
       val t = Tables(spark, sf0001)
       val li = t.lineitem
       val dim = t.orders.filter(org.apache.spark.sql.functions.col("o_orderkey") % 100 === 0)
@@ -296,9 +297,6 @@ class PlanQualitySpec extends SparkSpec {
       assert(plan.toLowerCase.contains("bloomfilter") || plan.contains("might_contain"),
         s"no runtime bloom filter injected:\n$plan")
       joined.collect() // the filtered plan still executes correctly
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

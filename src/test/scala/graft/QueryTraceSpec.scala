@@ -39,10 +39,8 @@ class QueryTraceSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[(Long, Long, Long)] =
     df.select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-  private def withBindingBudget[T](f: => T): T = {
-    spark.conf.set("graft.wcoj.singleCellMaxBindings", "1000")
-    try f finally spark.conf.unset("graft.wcoj.singleCellMaxBindings")
-  }
+  private def withBindingBudget[T](f: => T): T =
+    withConf("graft.wcoj.singleCellMaxBindings" -> "1000")(f)
 
   test("(a) a later query on the session does not overwrite a trace") {
     withBindingBudget {

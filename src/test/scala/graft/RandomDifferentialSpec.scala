@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Similarity
+import graft.operators.Similarity.{Frame, Ivf, Prefix, Sq8}
 import graft.plans.MultiwayJoin
 import graft.wcoj.WcojJoin
 
@@ -29,10 +31,9 @@ class RandomDifferentialSpec extends SparkSpec {
     * off), canonicalized; also asserts the run used more than one cell.
     */
   private def viaGrid(rels: Seq[(DataFrame, Seq[String])], cols: Seq[String]): Set[Seq[Long]] = {
-    spark.conf.set("graft.wcoj.singleCellBytes", "0")
-    val (got, trace) = try QueryTrace.run(spark)(
-        canon(WcojJoin.leapfrogCatalyst(spark, rels, cols), cols))
-      finally spark.conf.unset("graft.wcoj.singleCellBytes")
+    val (got, trace) = withConf("graft.wcoj.singleCellBytes" -> "0")(
+      QueryTrace.run(spark)(
+        canon(WcojJoin.leapfrogCatalyst(spark, rels, cols), cols)))
     assert(trace("wcoj.cells").toInt > 1, "grid cells")
     got
   }
@@ -270,15 +271,9 @@ class RandomDifferentialSpec extends SparkSpec {
         (i, "g" + rnd.nextInt(1 + rnd.nextInt(6)), rnd.nextInt(50).toLong)
       }.toDF("id", "grp", "v")
       def ranks(cap: String): Set[(Long, String, Long)] = {
-        val prev = spark.conf.getOption("graft.prefix.singleTaskBytes")
-        spark.conf.set("graft.prefix.singleTaskBytes", cap)
-        try graft.operators.Packing
+        withConf("graft.prefix.singleTaskBytes" -> cap)(graft.operators.Packing
           .groupRunningTotals(rows, "grp", "id", col("v"), 8)
-          .select("doc_id", "grp", "cum").as[(Long, String, Long)].collect().toSet
-        finally prev match {
-          case Some(v) => spark.conf.set("graft.prefix.singleTaskBytes", v)
-          case None => spark.conf.unset("graft.prefix.singleTaskBytes")
-        }
+          .select("doc_id", "grp", "cum").as[(Long, String, Long)].collect().toSet)
       }
       withClue(s"trial $trial: ") {
         assert(ranks("0") === ranks((32L << 20).toString))
@@ -304,10 +299,11 @@ class RandomDifferentialSpec extends SparkSpec {
         def rows(df: DataFrame) =
           df.select("query_id", "vec_id", "cos", "rank")
             .as[(Long, Long, Double, Int)].collect().toSet
-        val exact = rows(graft.operators.Similarity.cosineTopK(
-          vecs.filter($"vec_id" < 4), vecs, "embedding", "vec_id", 5))
-        val sq = rows(graft.operators.Similarity.sq8TopK(
-          vecs.filter($"vec_id" < 4), vecs, "embedding", "vec_id", 5))
+        val exact = rows(Similarity.topK(
+          vecs.filter($"vec_id" < 4), Frame(vecs), "embedding", "vec_id", 5))
+        val sq = rows(Similarity.topK(
+          vecs.filter($"vec_id" < 4), Frame(vecs), "embedding", "vec_id", 5,
+          code = Sq8))
         assert(sq === exact)
       }
     }
@@ -332,17 +328,17 @@ class RandomDifferentialSpec extends SparkSpec {
         def rows(df: DataFrame) =
           df.select("query_id", "vec_id", "cos")
             .as[(Long, Long, Double)].collect().toSet
-        val sq = rows(graft.operators.Similarity.sq8TopK(
-          q, vecs, "embedding", "vec_id", 4))
-        val comp = rows(graft.operators.Similarity.ivfSq8TopK(
-          q, vecs, "embedding", "vec_id", 4, centroidMod, probes = nCents))
+        val sq = rows(Similarity.topK(
+          q, Frame(vecs), "embedding", "vec_id", 4, code = Sq8))
+        val comp = rows(Similarity.topK(
+          q, Frame(vecs), "embedding", "vec_id", 4,
+          Ivf(centroidMod, probes = nCents), Sq8))
         assert(comp === sq)
-        val exact = rows(graft.operators.Similarity.cosineTopK(
-          q, vecs, "embedding", "vec_id", 4))
-        val fun = rows(graft.operators.Similarity.truncatedRerank(
-            q, vecs, "embedding", "vec_id",
-            prefixDims = 1 + rnd.nextInt(dim), shortlist = n, k = 4)
-          .withColumnRenamed("rk", "rank"))
+        val exact = rows(Similarity.topK(
+          q, Frame(vecs), "embedding", "vec_id", 4))
+        val fun = rows(Similarity.topK(
+          q, Frame(vecs), "embedding", "vec_id", 4,
+          Prefix(dims = 1 + rnd.nextInt(dim), shortlist = n)))
         assert(fun === exact)
       }
     }

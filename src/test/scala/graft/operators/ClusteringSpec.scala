@@ -86,6 +86,7 @@ class ClusteringSpec extends SparkSpec {
 
 class PqSpec extends SparkSpec {
   import spark.implicits._
+  import Similarity.{Frame, Pq, topK}
 
   private lazy val vecs =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -96,7 +97,7 @@ class PqSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
     val k = 10
-    val pq = Similarity.pqTopK(queries, vecs, "embedding", "vec_id", k, m = 16)
+    val pq = topK(queries, Frame(vecs), "embedding", "vec_id", k, code = Pq(m = 16))
       .as[(Long, Long, Double, Int)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
 
@@ -120,9 +121,10 @@ class PqSpec extends SparkSpec {
   }
 
   test("pqTopK is deterministic and emits exactly k ranked rows per query") {
-    val a = Similarity.pqTopK(queries, vecs, "embedding", "vec_id", 5)
+    val a = topK(queries, Frame(vecs), "embedding", "vec_id", 5, code = Pq())
       .orderBy("query_id", "rank").collect().toSeq
-    val b = Similarity.pqTopK(queries, vecs.repartition(13), "embedding", "vec_id", 5)
+    val b = topK(queries, Frame(vecs.repartition(13)), "embedding", "vec_id", 5,
+      code = Pq())
       .orderBy("query_id", "rank").collect().toSeq
     assert(a === b)
     assert(a.groupBy(_.getLong(0)).forall(_._2.map(_.getInt(3)).sorted == Seq(1, 2, 3, 4, 5)))
@@ -131,7 +133,7 @@ class PqSpec extends SparkSpec {
   test("pqTopK rejects a dimension that does not split into subspaces") {
     val odd = Seq((0L, Seq(1f, 2f, 3f))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
-      Similarity.pqTopK(odd, odd, "embedding", "vec_id", 1, m = 2)
+      topK(odd, Frame(odd), "embedding", "vec_id", 1, code = Pq(m = 2))
     }
   }
 
@@ -143,7 +145,8 @@ class PqSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val q = Seq((0L, Seq.fill(8)(1f))).toDF("vec_id", "embedding")
     val e = intercept[Exception] {
-      Similarity.pqTopK(q, ragged, "embedding", "vec_id", 2, m = 2, codebook = 2)
+      topK(q, Frame(ragged), "embedding", "vec_id", 2,
+          code = Pq(m = 2, codebook = 2))
         .collect()
     }
     assert(e.getMessage != null && e.getMessage.contains("dimension"))

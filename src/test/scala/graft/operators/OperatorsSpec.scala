@@ -414,6 +414,8 @@ class DedupSpec extends SparkSpec {
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+  import Similarity.{Frame, Ivf, IvfMass, IvfStore, Lsh, Pq, Prefix, Sq8,
+    Sq8Store, topK}
 
   lazy val vecs = Seq(
     (0L, Seq(1.0f, 0.0f, 0.0f)), (1L, Seq(0.9f, -0.1f, 0.0f)),
@@ -421,7 +423,7 @@ class SimilaritySpec extends SparkSpec {
     .toDF("vec_id", "embedding")
 
   test("cosineTopK ranks self first, antipode last") {
-    val r = Similarity.cosineTopK(vecs.filter($"vec_id" === 0), vecs, "embedding", "vec_id", 4)
+    val r = topK(vecs.filter($"vec_id" === 0), Frame(vecs), "embedding", "vec_id", 4)
       .select("vec_id", "rank").as[(Long, Int)].collect().toMap
     assert(r(0L) === 1) // self similarity 1.0
     assert(r(1L) === 2)
@@ -429,7 +431,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("bucketedTopK only scores same-bucket candidates") {
-    val r = Similarity.bucketedTopK(vecs.filter($"vec_id" === 0), vecs, "embedding", "vec_id", 4, bits = 2)
+    val r = topK(vecs.filter($"vec_id" === 0), Frame(vecs), "embedding", "vec_id", 4, Lsh(bits = 2))
       .select("vec_id").as[Long].collect().toSet
     assert(r.contains(0L) && r.contains(1L)) // bucket 1 (dim0 > 0)
     assert(!r.contains(3L))                  // bucket 0
@@ -446,10 +448,10 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "vec_id", "cos", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
-    val exact = rows(Similarity.cosineTopK(grid.filter($"vec_id" < 2), grid,
+    val exact = rows(topK(grid.filter($"vec_id" < 2), Frame(grid),
       "embedding", "vec_id", 4))
-    val sq = rows(Similarity.sq8TopK(grid.filter($"vec_id" < 2), grid,
-      "embedding", "vec_id", 4))
+    val sq = rows(topK(grid.filter($"vec_id" < 2), Frame(grid),
+      "embedding", "vec_id", 4, code = Sq8))
     assert(sq === exact)
   }
 
@@ -458,8 +460,8 @@ class SimilaritySpec extends SparkSpec {
     val q = e.filter($"vec_id" < 5)
     def top(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val exact = top(Similarity.cosineTopK(q, e, "embedding", "vec_id", 10))
-    val sq = top(Similarity.sq8TopK(q, e, "embedding", "vec_id", 10))
+    val exact = top(topK(q, Frame(e), "embedding", "vec_id", 10))
+    val sq = top(topK(q, Frame(e), "embedding", "vec_id", 10, code = Sq8))
     // 1-byte/dim quantization at 64 dims is near-lossless; require >= 80%
     assert((exact intersect sq).size >= 40, s"overlap ${(exact intersect sq).size}/50")
   }
@@ -470,11 +472,11 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sq8idx_spec")
     try {
       Similarity.buildSq8Index(e, "embedding", "vec_id", dir.toString)
-      val direct = Similarity.sq8TopK(q, e, "embedding", "vec_id", 10)
+      val direct = topK(q, Frame(e), "embedding", "vec_id", 10, code = Sq8)
         .select("query_id", "vec_id", "cos", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
-      val stored = Similarity.sq8TopKFromIndex(spark, dir.toString, q,
-          "embedding", "vec_id", 10)
+      val stored = topK(q, Sq8Store(dir.toString),
+          "embedding", "vec_id", 10, code = Sq8)
         .select("query_id", "vec_id", "cos", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(stored === direct)
@@ -488,9 +490,9 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "vec_id", "cos", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
     // centroidMod 100 over 500 vectors → 5 cells; probes = 5 voids pruning
-    val sq = rows(Similarity.sq8TopK(q, e, "embedding", "vec_id", 10))
-    val comp = rows(Similarity.ivfSq8TopK(q, e, "embedding", "vec_id", 10,
-      centroidMod = 100, probes = 5))
+    val sq = rows(topK(q, Frame(e), "embedding", "vec_id", 10, code = Sq8))
+    val comp = rows(topK(q, Frame(e), "embedding", "vec_id", 10,
+      Ivf(centroidMod = 100, probes = 5), Sq8))
     assert(comp === sq)
   }
 
@@ -501,22 +503,22 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "vec_id", "cos", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
     // covering the full corpus mass voids pruning — bit-identical
-    val sq = rows(Similarity.sq8TopK(q, e, "embedding", "vec_id", 10))
-    val full = rows(Similarity.ivfSq8TopKAdaptive(q, e, "embedding", "vec_id",
-      10, centroidMod = 100, massFrac = 1.0))
+    val sq = rows(topK(q, Frame(e), "embedding", "vec_id", 10, code = Sq8))
+    val full = rows(topK(q, Frame(e), "embedding", "vec_id",
+      10, IvfMass(centroidMod = 100, massFrac = 1.0), Sq8))
     assert(full === sq)
     // a real mass target still returns k rows per query (the first cell is
     // always kept, so no query can end up probing nothing)
-    val confined = Similarity.ivfSq8TopKAdaptive(q, e, "embedding", "vec_id",
-      10, centroidMod = 100, massFrac = 0.25)
+    val confined = topK(q, Frame(e), "embedding", "vec_id",
+      10, IvfMass(centroidMod = 100, massFrac = 0.25), Sq8)
     val perQuery = confined.groupBy("query_id").count()
       .as[(Long, Long)].collect().toMap
     assert(perQuery.size === 5 && perQuery.values.forall(_ == 10))
     // same contract on the float IVF form
-    val exact = Similarity.cosineTopK(q, e, "embedding", "vec_id", 10)
+    val exact = topK(q, Frame(e), "embedding", "vec_id", 10)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val ivfFull = Similarity.ivfTopKAdaptive(q, e, "embedding", "vec_id",
-        10, centroidMod = 100, massFrac = 1.0)
+    val ivfFull = topK(q, Frame(e), "embedding", "vec_id",
+        10, IvfMass(centroidMod = 100, massFrac = 1.0))
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     assert(ivfFull === exact)
   }
@@ -524,26 +526,80 @@ class SimilaritySpec extends SparkSpec {
   test("truncatedRerank with a full-corpus shortlist equals cosineTopK") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val q = e.filter($"vec_id" < 3)
-    val exact = Similarity.cosineTopK(q, e, "embedding", "vec_id", 10)
+    val exact = topK(q, Frame(e), "embedding", "vec_id", 10)
       .select("query_id", "vec_id", "rank", "cos")
       .as[(Long, Long, Int, Double)].collect().toSet
-    val fun = Similarity.truncatedRerank(q, e, "embedding", "vec_id",
-        prefixDims = 8, shortlist = 500, k = 10)
-      .select("query_id", "vec_id", "rk", "cos")
+    val fun = topK(q, Frame(e), "embedding", "vec_id",
+        k = 10, Prefix(dims = 8, shortlist = 500))
+      .select("query_id", "vec_id", "rank", "cos")
       .as[(Long, Long, Int, Double)].collect().toSet
     assert(fun === exact)
+  }
+
+  test("topK combination matrix: void pruning equals exhaustive, sim.ann costs no job, bad combinations are refused") {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val q = e.filter($"vec_id" < 5)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    // centroidMod 100 over 500 vectors → 5 cells: each arm below prunes
+    // nothing, so it must return the exhaustive ranking of its code
+    val voidPruning = Seq(
+      ("ivf/float/frame", Ivf(centroidMod = 100, probes = 5), Similarity.Float),
+      ("ivf-mass/float/frame", IvfMass(centroidMod = 100, massFrac = 1.0),
+        Similarity.Float),
+      ("ivf-mass/pq/frame", IvfMass(centroidMod = 100, massFrac = 1.0), Pq()))
+    for ((ann, coarse, code) <- voidPruning) withClue(s"$ann: ") {
+      val (arm, trace) = QueryTrace.run(spark)(
+        topK(q, Frame(e), "embedding", "vec_id", 10, coarse, code))
+      assert(trace("sim.ann") === ann)
+      val exhaustive = rows(topK(q, Frame(e), "embedding", "vec_id", 10,
+        code = code))
+      assert(exhaustive.size === 50)
+      assert(rows(arm) === exhaustive)
+    }
+    // recording the combination starts no Spark job: building the
+    // exhaustive ranking runs none at all, and building the mass-probed
+    // one runs exactly the centroid count its expansion bound needs
+    val (_, exhaustive) = QueryTrace.run(spark)(
+      topK(q, Frame(e), "embedding", "vec_id", 10))
+    assert(exhaustive("sim.ann") === "exhaustive/float/frame")
+    assert(exhaustive.totals.jobs === 0L)
+    val (_, mass) = QueryTrace.run(spark)(
+      topK(q, Frame(e), "embedding", "vec_id", 10, IvfMass(centroidMod = 100)))
+    val (_, centroidCount) = QueryTrace.run(spark)(e.filter($"vec_id" % 100 === 0)
+      .select($"vec_id".as("cent_id"), $"embedding".as("cv0")).count())
+    assert(mass("sim.ann") === "ivf-mass/float/frame")
+    assert(mass.totals.jobs === centroidCount.totals.jobs)
+    val dir = java.nio.file.Files.createTempDirectory("ann_matrix_spec")
+    try {
+      Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
+        centroidMod = 100)
+      val store = dir.toString
+      val refused: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "filter names 50" -> (() => topK(q, IvfStore(store), "embedding",
+          "vec_id", 10, IvfMass(centroidMod = 50))),
+        "ivf/sq8/sq8-store" -> (() => topK(q, Sq8Store(store), "embedding",
+          "vec_id", 10, Ivf(), Sq8)),
+        "lsh/pq/frame" -> (() => topK(q, Frame(e), "embedding", "vec_id", 10,
+          Lsh(), Pq())),
+        "exhaustive/float/ivf-store" -> (() => topK(q, IvfStore(store),
+          "embedding", "vec_id", 10)))
+      for ((fragment, call) <- refused) withClue(s"$fragment: ") {
+        val err = intercept[IllegalArgumentException](call())
+        assert(err.getMessage.contains(fragment))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("truncatedRerank never surfaces a candidate outside its coarse shortlist") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val q = e.filter($"vec_id" < 3)
-    val cosP = Similarity.cosineTopK(
+    val cosP = topK(
         q.withColumn("embedding", slice($"embedding", 1, 8)),
-        e.withColumn("embedding", slice($"embedding", 1, 8)),
+        Frame(e.withColumn("embedding", slice($"embedding", 1, 8))),
         "embedding", "vec_id", 20)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val fun = Similarity.truncatedRerank(q, e, "embedding", "vec_id",
-        prefixDims = 8, shortlist = 20, k = 10)
+    val fun = topK(q, Frame(e), "embedding", "vec_id",
+        k = 10, Prefix(dims = 8, shortlist = 20))
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     assert(fun.subsetOf(cosP))
   }
@@ -1228,6 +1284,7 @@ class RangeJoinSpec extends graft.SparkSpec {
 
 class MutualKnnSpec extends graft.SparkSpec {
   import spark.implicits._
+  import Similarity.{Frame, Ivf, IvfMass, IvfStore, Pq, Sq8, topK}
 
   test("hub edges are one-directional and die; close pairs survive") {
     val vecs = Seq(
@@ -1287,11 +1344,11 @@ class MutualKnnSpec extends graft.SparkSpec {
     try {
       Similarity.buildIvfIndex(vecs, "embedding", "vec_id", dir.toString,
         centroidMod = 20)
-      val direct = Similarity.ivfTopK(q, vecs, "embedding", "vec_id",
-          k = 5, centroidMod = 20, probes = 2)
+      val direct = topK(q, Frame(vecs), "embedding", "vec_id",
+          k = 5, Ivf(centroidMod = 20, probes = 2))
         .as[(Long, Long, Double, Int)].collect().toSet
-      val stored = Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-          "embedding", "vec_id", k = 5, probes = 2)
+      val stored = topK(q, IvfStore(dir.toString),
+          "embedding", "vec_id", k = 5, Ivf(centroidMod = 20, probes = 2))
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(stored === direct)
       assert(direct.nonEmpty)
@@ -1309,11 +1366,11 @@ class MutualKnnSpec extends graft.SparkSpec {
         centroidMod = 20)
       // same centroid subset, same stored assignment, same mass rule —
       // the index path must be bit-identical to recomputing from vectors
-      val direct = Similarity.ivfTopKAdaptive(q, vecs, "embedding", "vec_id",
-          k = 5, centroidMod = 20, massFrac = 0.4)
+      val direct = topK(q, Frame(vecs), "embedding", "vec_id",
+          k = 5, IvfMass(centroidMod = 20, massFrac = 0.4))
         .as[(Long, Long, Double, Int)].collect().toSet
-      val stored = Similarity.ivfTopKFromIndexAdaptive(spark, dir.toString, q,
-          "embedding", "vec_id", k = 5, massFrac = 0.4)
+      val stored = topK(q, IvfStore(dir.toString),
+          "embedding", "vec_id", k = 5, IvfMass(centroidMod = 20, massFrac = 0.4))
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(stored === direct)
       assert(direct.nonEmpty)
@@ -1336,16 +1393,16 @@ class MutualKnnSpec extends graft.SparkSpec {
         centroidMod = 20)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Double, Int)].collect().toSet
-      val default = rows(Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-        "embedding", "vec_id", k = 5))
-      val adaptive = rows(Similarity.ivfTopKFromIndexAdaptive(spark,
-        dir.toString, q, "embedding", "vec_id", k = 5, massFrac = 0.25))
+      val default = rows(topK(q, IvfStore(dir.toString),
+        "embedding", "vec_id", k = 5, IvfMass(centroidMod = 20)))
+      val adaptive = rows(topK(q, IvfStore(dir.toString),
+        "embedding", "vec_id", k = 5, IvfMass(centroidMod = 20, massFrac = 0.25)))
       assert(default === adaptive)
-      val fixed = rows(Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-        "embedding", "vec_id", k = 5, probes = 3))
+      val fixed = rows(topK(q, IvfStore(dir.toString),
+        "embedding", "vec_id", k = 5, Ivf(centroidMod = 20, probes = 3)))
       // probes = 3 covers ALL cells here — it must equal the exact ranking,
       // proving the fixed path still runs when opted into
-      val exact = rows(Similarity.cosineTopK(q, vecs, "embedding", "vec_id", 5))
+      val exact = rows(topK(q, Frame(vecs), "embedding", "vec_id", 5))
       assert(fixed === exact)
       assert(default.nonEmpty)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -1383,18 +1440,18 @@ class MutualKnnSpec extends graft.SparkSpec {
       // fresh build — instead compare against the direct adaptive path
       // restricted to the same geometry via the store itself
       val q = all.filter($"vec_id" < 4)
-      val viaStore = Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-          "embedding", "vec_id", k = 5)
+      val viaStore = topK(q, IvfStore(dir.toString),
+          "embedding", "vec_id", k = 5, IvfMass(centroidMod = 20))
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(viaStore.nonEmpty)
       // full-coverage probes == exact ranking over the whole corpus: with
       // every cell probed nothing is pruned, so the appended store must
       // recover the true top-k incl. h2 rows
       val frozenN = frozen.size
-      val viaAllCells = Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-          "embedding", "vec_id", k = 5, probes = frozenN)
+      val viaAllCells = topK(q, IvfStore(dir.toString),
+          "embedding", "vec_id", k = 5, Ivf(centroidMod = 20, probes = frozenN))
         .as[(Long, Long, Double, Int)].collect().toSet
-      val exact = Similarity.cosineTopK(q, all, "embedding", "vec_id", 5)
+      val exact = topK(q, Frame(all), "embedding", "vec_id", 5)
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(viaAllCells === exact)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -1420,13 +1477,13 @@ class MutualKnnSpec extends graft.SparkSpec {
       // the query path reads the SIDECAR sizes — same ranking as a store
       // whose sizes were recounted (drop both size artifacts: legacy path)
       val q = all.filter($"vec_id" < 3)
-      val viaSidecar = Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-        "embedding", "vec_id", k = 5).as[(Long, Long, Double, Int)].collect().toSet
+      val viaSidecar = topK(q, IvfStore(dir.toString), "embedding", "vec_id",
+        k = 5, IvfMass(centroidMod = 20)).as[(Long, Long, Double, Int)].collect().toSet
       assert(new java.io.File(s"$dir/_cellsizes.csv").delete())
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(s"$dir/_cellsizes_deltas"))
-      val viaRecount = Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-        "embedding", "vec_id", k = 5).as[(Long, Long, Double, Int)].collect().toSet
+      val viaRecount = topK(q, IvfStore(dir.toString), "embedding", "vec_id",
+        k = 5, IvfMass(centroidMod = 20)).as[(Long, Long, Double, Int)].collect().toSet
       assert(viaSidecar === viaRecount)
       assert(viaSidecar.nonEmpty)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -1513,8 +1570,8 @@ class MutualKnnSpec extends graft.SparkSpec {
         new java.io.File(s"$dir/_centroids"))
       // reads still work (legacy mod-derivation path)
       val q = vecs.filter($"vec_id" < 2)
-      assert(Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-        "embedding", "vec_id", k = 3).count() > 0)
+      assert(topK(q, IvfStore(dir.toString),
+        "embedding", "vec_id", k = 3, IvfMass(centroidMod = 20)).count() > 0)
       val e = intercept[IllegalArgumentException] {
         Similarity.appendIvfIndex(spark, dir.toString,
           vecs.limit(1), "embedding", "vec_id")
@@ -1572,28 +1629,28 @@ class MutualKnnSpec extends graft.SparkSpec {
     }.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivfidx_hb")
     val lease = new java.io.File(s"$dir.__lease")
-    try {
-      Similarity.buildIvfIndex(vecs, "embedding", "vec_id", dir.toString,
-        centroidMod = 20)
-      spark.conf.set("graft.ivf.appendLeaseTtlMs", "400")
-      // writer A holds the lease LONGER than the TTL but heartbeats
-      // between phases — a second writer's acquire must still refuse,
-      // because the mtime (not the acquisition time) carries liveness
-      Similarity.withWriterLeaseForTest(spark, dir.toString, "writerA") { hb =>
-        Thread.sleep(250); hb()
-        Thread.sleep(250); hb() // total hold 500ms > ttl 400ms, still live
-        val e = intercept[IllegalArgumentException] {
-          Similarity.withWriterLeaseForTest(spark, dir.toString, "writerB") {
-            _ => fail("writerB must not acquire over a live heartbeat")
+    withConf("graft.ivf.appendLeaseTtlMs" -> "400") {
+      try {
+        Similarity.buildIvfIndex(vecs, "embedding", "vec_id", dir.toString,
+          centroidMod = 20)
+        // writer A holds the lease LONGER than the TTL but heartbeats
+        // between phases — a second writer's acquire must still refuse,
+        // because the mtime (not the acquisition time) carries liveness
+        Similarity.withWriterLeaseForTest(spark, dir.toString, "writerA") { hb =>
+          Thread.sleep(250); hb()
+          Thread.sleep(250); hb() // total hold 500ms > ttl 400ms, still live
+          val e = intercept[IllegalArgumentException] {
+            Similarity.withWriterLeaseForTest(spark, dir.toString, "writerB") {
+              _ => fail("writerB must not acquire over a live heartbeat")
+            }
           }
+          assert(e.getMessage.contains("another writer holds the lease"))
         }
-        assert(e.getMessage.contains("another writer holds the lease"))
+        assert(!lease.exists(), "lease released after the slow write")
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+        lease.delete()
       }
-      assert(!lease.exists(), "lease released after the slow write")
-    } finally {
-      spark.conf.unset("graft.ivf.appendLeaseTtlMs")
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      lease.delete()
     }
   }
 
@@ -1603,29 +1660,29 @@ class MutualKnnSpec extends graft.SparkSpec {
     }.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivfidx_tok")
     val lease = new java.io.File(s"$dir.__lease")
-    try {
-      Similarity.buildIvfIndex(vecs, "embedding", "vec_id", dir.toString,
-        centroidMod = 20)
-      spark.conf.set("graft.ivf.appendLeaseTtlMs", "100")
-      val e = intercept[java.io.IOException] {
-        Similarity.withWriterLeaseForTest(spark, dir.toString, "writerA") { hb =>
-          Thread.sleep(200) // NO heartbeat: the lease goes stale
-          // writer B legitimately takes the stale lease over and finishes
-          Similarity.withWriterLeaseForTest(spark, dir.toString, "writerB") {
-            _ => ()
+    withConf("graft.ivf.appendLeaseTtlMs" -> "100") {
+      try {
+        Similarity.buildIvfIndex(vecs, "embedding", "vec_id", dir.toString,
+          centroidMod = 20)
+        val e = intercept[java.io.IOException] {
+          Similarity.withWriterLeaseForTest(spark, dir.toString, "writerA") { hb =>
+            Thread.sleep(200) // NO heartbeat: the lease goes stale
+            // writer B legitimately takes the stale lease over and finishes
+            Similarity.withWriterLeaseForTest(spark, dir.toString, "writerB") {
+              _ => ()
+            }
+            // A's next heartbeat detects the loss and aborts BEFORE more I/O
+            val hbErr = intercept[IllegalArgumentException](hb())
+            assert(hbErr.getMessage.contains("lost the writer lease"))
+            // ...and even a body that swallows that still cannot report
+            // success: the exit-path token check fails the write (below)
           }
-          // A's next heartbeat detects the loss and aborts BEFORE more I/O
-          val hbErr = intercept[IllegalArgumentException](hb())
-          assert(hbErr.getMessage.contains("lost the writer lease"))
-          // ...and even a body that swallows that still cannot report
-          // success: the exit-path token check fails the write (below)
         }
+        assert(e.getMessage.contains("taken over mid-write"))
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+        lease.delete()
       }
-      assert(e.getMessage.contains("taken over mid-write"))
-    } finally {
-      spark.conf.unset("graft.ivf.appendLeaseTtlMs")
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      lease.delete()
     }
   }
 
@@ -1713,49 +1770,49 @@ class MutualKnnSpec extends graft.SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfidx_pulse")
     val store = s"$dir/store"
     val lease = new java.io.File(s"$store.__lease")
-    try {
-      Similarity.buildIvfIndex(vecs, "embedding", "vec_id", store,
-        centroidMod = 20)
-      // TTL 1s (pulse every 250ms): far below the multi-second staged
-      // build so the scenario is real, but wide enough that an ordinary
-      // GC/FS stall between pulses cannot let the contender s takeover
-      // race flake the test on a contended box
-      spark.conf.set("graft.ivf.appendLeaseTtlMs", "1000")
-      val rebuildErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val t = new Thread(() =>
-        try Similarity.rebuildIvfIndex(spark, store)
-        catch { case e: Throwable => rebuildErr.set(e) })
-      t.start()
-      var refusals = 0
-      while (t.isAlive) {
-        if (lease.exists()) {
-          try {
-            Similarity.withWriterLeaseForTest(spark, store, "contender") {
-              _ => ()
+    withConf("graft.ivf.appendLeaseTtlMs" -> "1000") {
+      try {
+        Similarity.buildIvfIndex(vecs, "embedding", "vec_id", store,
+          centroidMod = 20)
+        // TTL 1s (pulse every 250ms): far below the multi-second staged
+        // build so the scenario is real, but wide enough that an ordinary
+        // GC/FS stall between pulses cannot let the contender s takeover
+        // race flake the test on a contended box
+        val rebuildErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+        val t = new Thread(() =>
+          try Similarity.rebuildIvfIndex(spark, store)
+          catch { case e: Throwable => rebuildErr.set(e) })
+        t.start()
+        var refusals = 0
+        while (t.isAlive) {
+          if (lease.exists()) {
+            try {
+              Similarity.withWriterLeaseForTest(spark, store, "contender") {
+                _ => ()
+              }
+              // acquisition only legitimately succeeds once the rebuild has
+              // released (raced its final delete) — never while a stale
+              // takeover would have been possible
+            } catch {
+              case e: IllegalArgumentException
+                  if e.getMessage.contains("another writer holds") =>
+                refusals += 1
+              case e: java.io.IOException
+                  if e.getMessage.contains("mid-rename") => refusals += 1
             }
-            // acquisition only legitimately succeeds once the rebuild has
-            // released (raced its final delete) — never while a stale
-            // takeover would have been possible
-          } catch {
-            case e: IllegalArgumentException
-                if e.getMessage.contains("another writer holds") =>
-              refusals += 1
-            case e: java.io.IOException
-                if e.getMessage.contains("mid-rename") => refusals += 1
           }
+          Thread.sleep(60)
         }
-        Thread.sleep(60)
+        t.join()
+        assert(rebuildErr.get() == null,
+          s"rebuild must survive a sub-build TTL via the pulse: ${rebuildErr.get()}")
+        assert(refusals >= 1,
+          "the contender must have been refused at least once mid-rebuild")
+        assert(spark.read.parquet(store).count() === 60L)
+      } finally {
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+        lease.delete()
       }
-      t.join()
-      assert(rebuildErr.get() == null,
-        s"rebuild must survive a sub-build TTL via the pulse: ${rebuildErr.get()}")
-      assert(refusals >= 1,
-        "the contender must have been refused at least once mid-rebuild")
-      assert(spark.read.parquet(store).count() === 60L)
-    } finally {
-      spark.conf.unset("graft.ivf.appendLeaseTtlMs")
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      lease.delete()
     }
   }
 
@@ -1845,14 +1902,13 @@ class MutualKnnSpec extends graft.SparkSpec {
     }
     // the opt-in lifts the refusal: the failure becomes the (expected)
     // missing-filesystem error, not the contract guard
-    spark.conf.set("graft.ivf.extraFsSchemes", "s3a")
-    try {
+    withConf("graft.ivf.extraFsSchemes" -> "s3a") {
       val e = intercept[Throwable] {
         Similarity.appendIvfIndex(spark, "s3a://bucket/ivf", delta,
           "embedding", "vec_id")
       }
       assert(!e.getMessage.contains("ATOMIC create-exclusive"))
-    } finally spark.conf.unset("graft.ivf.extraFsSchemes")
+    }
     // a SCHEME-LESS path resolves against fs.defaultFS, not the local
     // filesystem (ADVICE r17): on a cluster whose defaultFS is an object
     // store, '/data/ivf' must hit the same refusal, not bypass it
@@ -1882,8 +1938,8 @@ class MutualKnnSpec extends graft.SparkSpec {
       Similarity.buildIvfIndex(h1, "embedding", "vec_id", dir.toString,
         centroidMod = 20)
       val q = vecs.filter($"vec_id" < 3)
-      def topk() = Similarity.ivfTopKFromIndex(spark, dir.toString, q,
-        "embedding", "vec_id", k = 5).as[(Long, Long, Double, Int)].collect().toSet
+      def topk() = topK(q, IvfStore(dir.toString), "embedding", "vec_id",
+        k = 5, IvfMass(centroidMod = 20)).as[(Long, Long, Double, Int)].collect().toSet
       val before = topk()
       val sizesBefore = Similarity.storedCellSizesForTest(spark, dir.toString).get
       // simulate an append crashed MID-MOVE: duplicate a real data file
@@ -2030,10 +2086,10 @@ class MutualKnnSpec extends graft.SparkSpec {
   test("adaptive forms return empty on an EMPTY query set instead of throwing") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val none = e.filter($"vec_id" < 0)
-    assert(Similarity.ivfTopKAdaptive(none, e, "embedding", "vec_id",
-      k = 5, centroidMod = 100, massFrac = 0.25).count() === 0L)
-    assert(Similarity.ivfSq8TopKAdaptive(none, e, "embedding", "vec_id",
-      k = 5, centroidMod = 100, massFrac = 0.25).count() === 0L)
+    assert(topK(none, Frame(e), "embedding", "vec_id",
+      k = 5, IvfMass(centroidMod = 100, massFrac = 0.25)).count() === 0L)
+    assert(topK(none, Frame(e), "embedding", "vec_id",
+      k = 5, IvfMass(centroidMod = 100, massFrac = 0.25), Sq8).count() === 0L)
   }
 
   test("a parquet dir without the scheme column is rejected as an index") {
@@ -2041,8 +2097,8 @@ class MutualKnnSpec extends graft.SparkSpec {
     try {
       twoClusters.write.mode("overwrite").parquet(dir.toString)
       val e = intercept[IllegalArgumentException] {
-        Similarity.ivfTopKFromIndex(spark, dir.toString, twoClusters,
-          "embedding", "vec_id", k = 2)
+        topK(twoClusters, IvfStore(dir.toString),
+          "embedding", "vec_id", k = 2, IvfMass())
       }
       assert(e.getMessage.contains("not a graft IVF index"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -2056,34 +2112,26 @@ class MutualKnnSpec extends graft.SparkSpec {
     val q = vecs.filter($"vec_id" < 4)
     // centroidMod = 20 makes 3 cells (ids 0, 20, 40); probes = 3 prunes
     // nothing, so the composite must be bit-identical to plain PQ
-    val pq = Similarity.pqTopK(q, vecs, "embedding", "vec_id", k = 5)
+    val pq = topK(q, Frame(vecs), "embedding", "vec_id", k = 5, code = Pq())
       .as[(Long, Long, Double, Int)].collect().toSet
-    val comp = Similarity.ivfPqTopK(q, vecs, "embedding", "vec_id", k = 5,
-        centroidMod = 20, probes = 3)
+    val comp = topK(q, Frame(vecs), "embedding", "vec_id", k = 5,
+        Ivf(centroidMod = 20, probes = 3), Pq())
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(comp === pq)
     assert(pq.nonEmpty)
   }
 
   test("over-budget query side takes the shuffle route, same result") {
-    val prev = spark.conf.getOption("graft.sim.broadcastBudgetBytes")
-    try {
-      def run() = QueryTrace.run(spark)(Similarity.mutualKnn(twoClusters,
-        "embedding", "vec_id", k = 3)
-        .select("a", "b", "cos").as[(Long, Long, Double)].collect().toSet)
-      spark.conf.set("graft.sim.broadcastBudgetBytes", "1")
-      val (shuffled, viaShuffle) = run()
-      assert(viaShuffle("sim.route") === "shuffle")
-      spark.conf.set("graft.sim.broadcastBudgetBytes", (64L << 20).toString)
-      val (bcast, viaBroadcast) = run()
-      assert(viaBroadcast("sim.route") === "broadcast")
-      assert(shuffled === bcast)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.sim.broadcastBudgetBytes", v)
-        case None => spark.conf.unset("graft.sim.broadcastBudgetBytes")
-      }
-    }
+    def run() = QueryTrace.run(spark)(Similarity.mutualKnn(twoClusters,
+      "embedding", "vec_id", k = 3)
+      .select("a", "b", "cos").as[(Long, Long, Double)].collect().toSet)
+    val (shuffled, viaShuffle) =
+      withConf("graft.sim.broadcastBudgetBytes" -> "1")(run())
+    assert(viaShuffle("sim.route") === "shuffle")
+    val (bcast, viaBroadcast) =
+      withConf("graft.sim.broadcastBudgetBytes" -> (64L << 20).toString)(run())
+    assert(viaBroadcast("sim.route") === "broadcast")
+    assert(shuffled === bcast)
   }
 }
 

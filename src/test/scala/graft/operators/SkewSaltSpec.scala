@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.QueryTrace
+import Similarity.{Frame, Ivf, Pq}
 
 /** The hot-cell hazard in the confined quadratic surfaces: one dense IVF
   * cell / k-means cluster (a mode-collapsed or near-dup-heavy corpus puts
@@ -15,17 +16,8 @@ import graft.QueryTrace
 class SkewSaltSpec extends graft.SparkSpec {
   import spark.implicits._
 
-  private def withConf[A](key: String, value: String)(f: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def forcedSalt[A](f: => A): A =
-    withConf(Skew.SaltBytesKey, "0")(f)
+    withConf(Skew.SaltBytesKey -> "0")(f)
 
   // one HOT cell: every vector points near +x, so the deterministic
   // centroid subset (ids ≡ 0 mod 100 → centroid 0 and 100) assigns
@@ -43,7 +35,7 @@ class SkewSaltSpec extends graft.SparkSpec {
       col("embedding").as("v2"))
     def run() = QueryTrace.run(spark)(Skew.saltedJoin(l, r, Seq("blk"), "id1")
       .select("id1", "id2").as[(Long, Long)].collect().toSet)
-    val plain = withConf(Skew.SaltBytesKey, Long.MaxValue.toString) {
+    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString) {
       val (out, trace) = run()
       assert(trace("skew.saltFactor") === "1")
       out
@@ -72,7 +64,7 @@ class SkewSaltSpec extends graft.SparkSpec {
   }
 
   test("mutualKnnIvf on a hot-cell corpus: salted route, result identical to plain") {
-    val plain = withConf(Skew.SaltBytesKey, Long.MaxValue.toString) {
+    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString) {
       Similarity.mutualKnnIvf(hotCell, "embedding", "vec_id", k = 3)
         .as[(Long, Long, Double)].collect().toSet
     }
@@ -89,7 +81,7 @@ class SkewSaltSpec extends graft.SparkSpec {
   test("semDedup on a hot-cluster corpus: salted route, verdicts identical to plain") {
     // k = 2 clusters over a corpus that is one semantic mode: nearly all
     // rows share a cluster, the exact shape SemDeDup exists for
-    val plain = withConf(Skew.SaltBytesKey, Long.MaxValue.toString) {
+    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString) {
       Dedup.semDedup(hotCell, "embedding", "vec_id", k = 2, iters = 2,
         threshold = 0.9999).as[(Long, Int, Boolean)].collect().toSet
     }
@@ -104,13 +96,13 @@ class SkewSaltSpec extends graft.SparkSpec {
 
   test("ivf cell join: broadcast-small probes broadcast; over-budget probes salt") {
     val q = hotCell.filter(col("vec_id") < 5)
-    def run() = QueryTrace.run(spark)(Similarity.ivfTopK(q, hotCell,
-        "embedding", "vec_id", k = 4, centroidMod = 100, probes = 2)
+    def run() = QueryTrace.run(spark)(Similarity.topK(q, Frame(hotCell),
+        "embedding", "vec_id", k = 4, Ivf(centroidMod = 100, probes = 2))
       .select("query_id", "vec_id", "cos", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet)
     val (viaBroadcast, bcast) = run()
     assert(bcast("sim.cellRoute").startsWith("broadcast"))
-    val viaSalt = withConf("graft.sim.broadcastBudgetBytes", "0") {
+    val viaSalt = withConf("graft.sim.broadcastBudgetBytes" -> "0") {
       forcedSalt {
         val (out, trace) = run()
         assert(trace("sim.cellRoute") === "salted")
@@ -127,11 +119,12 @@ class SkewSaltSpec extends graft.SparkSpec {
       (i, (0 until 8).map(j => ((i * 7 + j * 3) % 11).toFloat / 10f))
     }.toDF("vec_id", "embedding")
     val q = e.filter(col("vec_id") < 3)
-    def run() = QueryTrace.run(spark)(Similarity.ivfPqTopK(q, e, "embedding",
-        "vec_id", k = 5, centroidMod = 50, probes = 2, m = 4, codebook = 8, iters = 2)
+    def run() = QueryTrace.run(spark)(Similarity.topK(q, Frame(e), "embedding",
+        "vec_id", k = 5, Ivf(centroidMod = 50, probes = 2),
+        Pq(m = 4, codebook = 8, iters = 2))
       .as[(Long, Long, Double, Int)].collect().toSet)
     val (viaBroadcast, _) = run()
-    val viaSalt = withConf("graft.sim.broadcastBudgetBytes", "0") {
+    val viaSalt = withConf("graft.sim.broadcastBudgetBytes" -> "0") {
       forcedSalt {
         val (out, trace) = run()
         assert(trace("sim.cellRoute") === "salted")
@@ -152,9 +145,9 @@ class SkewSaltSpec extends graft.SparkSpec {
       (i, (0 until 8).map(j => ((i * 7 + j * 3) % 11).toFloat / 10f))
     }.toDF("vec_id", "embedding")
     val q = e.filter(col("vec_id") < 3)
-    val (n, trace) = QueryTrace.run(spark)(Similarity.ivfPqTopK(q, e,
-      "embedding", "vec_id", k = 5, centroidMod = 50, probes = 2, m = 4,
-      codebook = 8, iters = 2).count())
+    val (n, trace) = QueryTrace.run(spark)(Similarity.topK(q, Frame(e),
+      "embedding", "vec_id", k = 5, Ivf(centroidMod = 50, probes = 2),
+      Pq(m = 4, codebook = 8, iters = 2)).count())
     assert(n > 0)
     assert(trace("sim.cellRoute") === "broadcast:measured")
   }
@@ -163,7 +156,7 @@ class SkewSaltSpec extends graft.SparkSpec {
     val blocked = hotCell.withColumn("blk", lit(1L))
     def run() = Dedup.embeddingNearDup(blocked, "embedding", "vec_id",
       "blk", threshold = 0.999).as[(Long, Long, Double)].collect().toSet
-    val plain = withConf(Skew.SaltBytesKey, Long.MaxValue.toString)(run())
+    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString)(run())
     val salted = forcedSalt(run())
     assert(salted === plain)
     assert(plain.nonEmpty)

@@ -188,14 +188,13 @@ class DocStreamsSpec extends SparkSpec {
     assert(e.getMessage.contains("ATOMIC create-exclusive"))
     assert(e.getMessage.contains("graft.upsert.extraFsSchemes"))
     // the opt-in lifts the refusal (failure becomes missing-filesystem)
-    spark.conf.set("graft.upsert.extraFsSchemes", "s3a")
-    try {
+    withConf("graft.upsert.extraFsSchemes" -> "s3a") {
       val e2 = intercept[Throwable] {
         DocStreams.upsertBatch(upds((1L, 1, "a1")), "s3a://bucket/t",
           "doc_id", "version", buckets = 4)
       }
       assert(!e2.getMessage.contains("ATOMIC create-exclusive"))
-    } finally spark.conf.unset("graft.upsert.extraFsSchemes")
+    }
   }
 
   private def tableRows(path: String): Set[(Long, Int, String)] =

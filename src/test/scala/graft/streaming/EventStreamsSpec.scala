@@ -472,11 +472,10 @@ class EventStreamsSpec extends SparkSpec {
     val gate = graft.SparkEntry.queries("q215_stream_outer_interval")
     def run(): Set[Seq[Any]] = gate(spark, sf0001).collect().map(_.toSeq).toSet
     val viaNoDataBatch = run()
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+    withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val viaFallback = run()
       assert(viaFallback === viaNoDataBatch)
       assert(viaFallback.nonEmpty)
-    } finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    }
   }
 }

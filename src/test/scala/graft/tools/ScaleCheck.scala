@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryTrace
+import graft.operators.Similarity
 
 /** Measured scale-up check: replicates the sf0.1 documents corpus N× (ids
   * offset per replica, text perturbed with a replica token so dedup
@@ -178,8 +179,9 @@ object ScaleCheck {
             col("embedding"))
           .repartition(32).localCheckpoint(true)
       val t0 = System.nanoTime()
-      val (n, trace) = QueryTrace.run(spark)(graft.operators.Similarity.sq8TopK(
-        emb.filter(col("vec_id") < 5), emb, "embedding", "vec_id", k = 10).count())
+      val (n, trace) = QueryTrace.run(spark)(Similarity.topK(
+        emb.filter(col("vec_id") < 5), Similarity.Frame(emb), "embedding", "vec_id",
+        k = 10, code = Similarity.Sq8).count())
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale] sq8_topk               x$factor%-3d rows_in=${e0 * factor}%8d " +
         f"out=$n%9d time=$secs%7.2fs route=${attr("sim.route")(trace)}")
@@ -238,9 +240,10 @@ object ScaleCheck {
         f"rows_in=${e0 * factor}%8d out=$n%9d time=$secs%7.2fs " +
         f"maxcell=$mc%7d cap=$cap salt=${attr("skew.saltFactor")(knn)}")
       val t1 = System.nanoTime()
-      val (n2, pq) = QueryTrace.run(spark)(graft.operators.Similarity.ivfPqTopK(
-        emb.filter(col("vec_id") < 5), emb, "embedding", "vec_id", k = 10,
-        centroidMod = 100, probes = 2, m = 8, codebook = 16, iters = 2).count())
+      val (n2, pq) = QueryTrace.run(spark)(Similarity.topK(
+        emb.filter(col("vec_id") < 5), Similarity.Frame(emb), "embedding", "vec_id",
+        k = 10, Similarity.Ivf(centroidMod = 100, probes = 2),
+        Similarity.Pq(m = 8, codebook = 16, iters = 2)).count())
       val secs2 = (System.nanoTime() - t1) / 1e9
       println(f"[scale] ivfpq_topk/$shape%-8s     x$factor%-3d " +
         f"rows_in=${e0 * factor}%8d out=$n2%9d time=$secs2%7.2fs " +

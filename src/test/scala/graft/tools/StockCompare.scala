@@ -567,8 +567,10 @@ object StockCompare {
         emb, "embedding", "vec_id", dir.toString, centroidMod = 100)
       try {
         report("adaptive index ANN vs exact",
-          graft.operators.Similarity.ivfTopKFromIndex(spark, dir.toString,
-            emb.filter(col("vec_id") < 5), "embedding", "vec_id", k = 10).count(),
+          graft.operators.Similarity.topK(emb.filter(col("vec_id") < 5),
+            graft.operators.Similarity.IvfStore(dir.toString), "embedding",
+            "vec_id", k = 10, graft.operators.Similarity.IvfMass(centroidMod = 100))
+            .count(),
           spark.sql(stockSql(
             """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
               |  FROM parquet.`SFDIR/embeddings.parquet` WHERE vec_id < 5),

@@ -248,18 +248,16 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     def countRows(): (Long, QueryTrace) = QueryTrace.run(spark)(
       WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count())
-    try {
-      spark.conf.set("graft.wcoj.singleCellMaxBindings", "1000")
-      val (viaGrid, grid) = countRows()
-      assert(grid("wcoj.cells").toInt > 1,
-        "estimated-large output must keep the parallel grid")
-      assert(grid("wcoj.outputBound").toLong > 1000L)
-      spark.conf.set("graft.wcoj.singleCellMaxBindings", (16L << 20).toString)
-      val (viaSingle, single) = countRows()
-      assert(single("wcoj.cells").toInt === 1)
-      assert(viaGrid === viaSingle) // routing is a pure execution change
-      assert(viaGrid > 0L)
-    } finally spark.conf.unset("graft.wcoj.singleCellMaxBindings")
+    val (viaGrid, grid) =
+      withConf("graft.wcoj.singleCellMaxBindings" -> "1000")(countRows())
+    assert(grid("wcoj.cells").toInt > 1,
+      "estimated-large output must keep the parallel grid")
+    assert(grid("wcoj.outputBound").toLong > 1000L)
+    val (viaSingle, single) = withConf(
+      "graft.wcoj.singleCellMaxBindings" -> (16L << 20).toString)(countRows())
+    assert(single("wcoj.cells").toInt === 1)
+    assert(viaGrid === viaSingle) // routing is a pure execution change
+    assert(viaGrid > 0L)
   }
 
   test("a trace that skips the byte-gated estimate holds no output bound") {
@@ -276,13 +274,12 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     def run(): QueryTrace = QueryTrace.run(spark)(
       WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count())._2
-    try {
-      // defaults: byte gate passes, bound computed
-      assert(run().get("wcoj.outputBound").isDefined)
-      spark.conf.set("graft.wcoj.singleCellBytes", "1") // byte gate fails
+    // defaults: byte gate passes, bound computed
+    assert(run().get("wcoj.outputBound").isDefined)
+    withConf("graft.wcoj.singleCellBytes" -> "1") { // byte gate fails
       assert(run().get("wcoj.outputBound").isEmpty,
         "a bound in a trace whose routing never computed one")
-    } finally spark.conf.unset("graft.wcoj.singleCellBytes")
+    }
   }
 
   test("degree-capped inputs still collapse to one cell when AGM alone is too loose") {
@@ -300,14 +297,13 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
       (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
-    try {
-      spark.conf.set("graft.wcoj.singleCellMaxBindings", "5000")
+    withConf("graft.wcoj.singleCellMaxBindings" -> "5000") {
       val (_, trace) = QueryTrace.run(spark)(
         WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c")).count())
       assert(trace("wcoj.cells").toInt === 1,
         "degree bound (n) is under budget — the collapse must still fire")
       assert(trace("wcoj.outputBound").toLong <= 5000L)
-    } finally spark.conf.unset("graft.wcoj.singleCellMaxBindings")
+    }
   }
 
   test("single-cell route is a pure execution change: results match the forced grid") {
@@ -323,12 +319,11 @@ class SkewStatsSpec extends SparkSpec {
       WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c"))
         .as[(Long, Long, Long)].collect().toSet
     val viaSingleCell = rows() // tiny input → default 4 MB threshold fires
-    spark.conf.set("graft.wcoj.singleCellBytes", "0") // force the grid
-    try {
+    withConf("graft.wcoj.singleCellBytes" -> "0") { // force the grid
       val viaGrid = rows()
       assert(viaSingleCell === viaGrid)
       assert(viaSingleCell.nonEmpty)
-    } finally spark.conf.unset("graft.wcoj.singleCellBytes")
+    }
   }
 }
 
@@ -339,13 +334,11 @@ class WcojJoinSpec extends SparkSpec {
     * through the Shares grid; `f` must execute the join (the exec reads the
     * conf when its routing runs). Also returns the cells it routed through.
     */
-  private def onGrid[T](f: => T): (T, Int) = {
-    spark.conf.set("graft.wcoj.singleCellBytes", "0")
-    try {
+  private def onGrid[T](f: => T): (T, Int) =
+    withConf("graft.wcoj.singleCellBytes" -> "0") {
       val (out, trace) = QueryTrace.run(spark)(f)
       (out, trace("wcoj.cells").toInt)
-    } finally spark.conf.unset("graft.wcoj.singleCellBytes")
-  }
+    }
 
   test("distributed triangle equals DataFrame 3-way join") {
     val rnd = new scala.util.Random(42)
@@ -585,14 +578,13 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    spark.conf.set("graft.wcoj.cellBudgetBytes", "16384")
-    try {
+    withConf("graft.wcoj.cellBudgetBytes" -> "16384") {
       // the floor is defaultParallelism; budget growth kicks in past it
       val (cube, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
         .as[(Long, Long, Long)].collect().toSet)
       assert(cells > spark.sparkContext.defaultParallelism)
       assert(cube === viaDf)
-    } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
+    }
   }
 
   test("zipf skew: skew-aware shares cut the max routed cell payload") {
