@@ -5,7 +5,6 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints two JSON lines, the full per-gate record and then a compact
@@ -32,18 +31,18 @@ object Bench {
     * per-query seconds greedily packed into `budget` bytes (slowest-first
     * selection = the gates that carry the total; name-sorted in the output
     * for determinism). `queries_omitted` + `full_queries_in` say in-band
-    * that the full map is elsewhere, so a consumer of this line can never
-    * mistake the subset for the suite.
+    * that the full map is in `recordFile`, so a consumer of this line can
+    * never mistake the subset for the suite.
     */
   def compactSummary(total: Double, times: Map[String, Double],
       errors: Map[String, String], runs: Int, sfDir: String,
-      budget: Int = 1800): String = {
+      recordFile: String, budget: Int = 1800): String = {
     val errs: Any = {
       val full = TreeMap.from(errors)
       // an error storm must not evict the per-query payload — fall back
       // to the count (n_errors always carries it)
       if (json.writeValueAsString(full).length <= 400) full
-      else "see bench_out.json"
+      else s"see $recordFile"
     }
     def line(queries: Seq[(String, Double)]): String =
       json.writeValueAsString(ListMap(
@@ -52,7 +51,7 @@ object Bench {
         "n_errors" -> errors.size, "errors" -> errs,
         "queries" -> TreeMap.from(queries),
         "queries_omitted" -> (times.size - queries.size),
-        "full_queries_in" -> "bench_out.json", "sf" -> sfDir))
+        "full_queries_in" -> recordFile, "sf" -> sfDir))
     // greedy slowest-first fill; the empty line carries the widest
     // omitted count, and the first entry needs no comma
     var room = budget - line(Nil).length + 1
@@ -66,13 +65,14 @@ object Bench {
 
   /** The run's two stdout lines, (full record, [[compactSummary]]), from
     * each gate's pass times, the failures, and each gate's per-pass phase
-    * entries. A gate in `errors` failed on some pass: it reads -1 in the
-    * record and is left out of the total and the summary's `queries`,
-    * whatever its other passes measured.
+    * entries; `recordFile` is where the full record is written. A gate in
+    * `errors` failed on some pass: it reads -1 in the record and is left
+    * out of the total and the summary's `queries`, whatever its other
+    * passes measured.
     */
   def report(samples: Map[String, Seq[Double]], errors: Map[String, String],
       phases: Map[String, Seq[Map[String, Any]]], runs: Int, sfDir: String,
-      env: Map[String, Any]): (String, String) = {
+      env: Map[String, Any], recordFile: String): (String, String) = {
     val times = samples.collect { case (k, ss) if !errors.contains(k) => k -> ss.min }
     val total = times.values.sum
     val record = json.writeValueAsString(ListMap(
@@ -82,21 +82,16 @@ object Bench {
       "queries" -> (TreeMap.empty[String, Any] ++ times ++ errors.keys.map(_ -> -1)),
       "errors" -> TreeMap.from(errors), "runs" -> runs, "env" -> env,
       "phases" -> TreeMap.from(phases), "sf" -> sfDir))
-    (record, compactSummary(total, times, errors, runs, sfDir))
+    (record, compactSummary(total, times, errors, runs, sfDir, recordFile))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // engine confs come from the shared SessionDefaults, so the measured
-    // engine is the shipped one; only measurement placement (core count,
-    // UI, shuffle width = cores, tmpfs checkpoint root below) is bench-local
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the shipped session, so the measured engine is the one users get;
+    // only measurement placement (core count, tmpfs checkpoint root below)
+    // is bench-local
+    val spark = graft.api.EngineSession.local(cpus).spark
 
     // default the IMPLICIT streaming checkpoints (gates without an explicit
     // location: q132/q141/q205/q212/q213 + q100) onto the tmpfs-preferring
@@ -168,15 +163,6 @@ object Bench {
     }
     for (_ <- 1 to runs; name <- names if !errors.contains(name)) timeOne(name)
 
-    // which tmp base the gates' checkpoint/store I/O resolved (/dev/shm vs
-    // the java.io.tmpdir fallback) and how much room it had
-    val (tmpBase, tmpFree) = graft.queries.GateTmp.info
-    val (record, summary) = report(samples.toMap, errors.toMap, phases.toMap,
-      runs, sfDir, ListMap("tmp_base" -> tmpBase, "tmp_free_bytes" -> tmpFree))
-    println(record)
-    // the summary is the very last stdout line: a ~2000-char stdout tail
-    // holds it complete, where the full record never fits
-    println(summary)
     // the full record also lands in a file so every per-query time stays
     // machine-readable. The file is RUN-STAMPED by default:
     // `bench_out.json` is the COMMITTED record that README and
@@ -189,6 +175,16 @@ object Bench {
       else s"bench_out_${java.time.LocalDateTime.now()
         .format(java.time.format.DateTimeFormatter
           .ofPattern("yyyyMMdd_HHmmss"))}.json")
+    // which tmp base the gates' checkpoint/store I/O resolved (/dev/shm vs
+    // the java.io.tmpdir fallback) and how much room it had
+    val (tmpBase, tmpFree) = graft.queries.GateTmp.info
+    val (record, summary) = report(samples.toMap, errors.toMap, phases.toMap,
+      runs, sfDir, ListMap("tmp_base" -> tmpBase, "tmp_free_bytes" -> tmpFree),
+      out)
+    println(record)
+    // the summary is the very last stdout line: a ~2000-char stdout tail
+    // holds it complete, where the full record never fits
+    println(summary)
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (record + "\n").getBytes("UTF-8"))
     catch { case e: Exception => System.err.println(s"[bench] write $out failed: $e") }

@@ -17,18 +17,21 @@ package graft
   * S3-family stores (check-then-put create, copy-based rename), where
   * single-writer guarantees and "either old or new survives complete"
   * swap invariants quietly weaken to best-effort. Writers refuse such
-  * schemes loudly; a deployment whose object layer adds the missing
-  * semantics (a consistency/commit layer) opts in per protocol via the
-  * conf key named in the refusal.
+  * schemes loudly. Both guarantees are one property of a filesystem, and
+  * every protocol here needs both, so one session conf opts a scheme in
+  * for all of them: a deployment whose object layer adds the missing
+  * semantics (a consistency/commit layer) lists it, comma-separated, in
+  * [[AtomicSchemesKey]].
   *
   * Spark-managed writes (df.write...) are NOT guarded — Spark's own
   * commit protocols handle object stores; only code doing its OWN
   * create-exclusive/rename needs these semantics.
   */
 object FsContract {
+  val AtomicSchemesKey = "graft.fs.atomicSchemes"
+
   def requireAtomicScheme(spark: org.apache.spark.sql.SparkSession,
-      path: String, caller: String, protocol: String,
-      extraConf: String): Unit = {
+      path: String, caller: String, protocol: String): Unit = {
     // a scheme-less path is resolved by Hadoop against fs.defaultFS, not
     // against the local filesystem — on a cluster whose defaultFS is an
     // object store, '/data/ivf' IS an s3a path and defaulting to 'file'
@@ -40,13 +43,13 @@ object FsContract {
       .orElse(Option(org.apache.hadoop.fs.FileSystem
         .getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme))
       .getOrElse("file").toLowerCase
-    val extra = spark.conf.get(extraConf, "")
+    val extra = spark.conf.get(AtomicSchemesKey, "")
       .split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
     require((Set("file", "hdfs", "viewfs", "local") ++ extra)(scheme),
       s"$caller: $path is on filesystem scheme '$scheme', but $protocol " +
         "requires ATOMIC create-exclusive and ATOMIC rename — guaranteed " +
         "on HDFS/viewfs/local, NOT on S3-family object stores. If this " +
         "store's filesystem provides both (e.g. via a consistency " +
-        s"layer), allow the scheme with spark.conf $extraConf")
+        s"layer), allow the scheme with spark.conf $AtomicSchemesKey")
   }
 }

@@ -22,9 +22,9 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
   *
   * Attributes are strings, like the confs they replace; each is documented
   * where it is recorded (`wcoj.cells`, `wcoj.outputBound`, `sim.ann`,
-  * `sim.route`, `sim.cellRoute`, `skew.saltFactor`, `dedup.saltFactor`,
-  * `prefix.route`, `cand_corpus`, `cand_batch`, `rounds`). A key recorded
-  * twice keeps the later value.
+  * `sim.route`, `sim.cellRoute`, `skew.saltFactor`, `prefix.route`,
+  * `cand_corpus`, `cand_batch`, `rounds`). A key recorded twice keeps the
+  * later value.
   */
 final class QueryTrace private (sc: SparkContext) {
   private val attrs = mutable.LinkedHashMap.empty[String, String]

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-wide session defaults, shared by EVERY entry point — the bench
-  * (graft.Bench), the correctness dump (graft.Verify) and the library facade
-  * (graft.api.EngineSession.local). VERDICT r18 #2: the r18 round proved two
+/** Engine-wide session defaults, applied by the one session builder
+  * (graft.api.EngineSession.local) that every entry point uses — the bench
+  * (graft.Bench), the correctness dump (graft.Verify) and the library
+  * facade. VERDICT r18 #2: the r18 round proved two
   * session confs on the bench session (shuffled-hash join preference,
   * codegen-cache sizing) but left them in Bench.main — so the MEASURED
   * engine was not the SHIPPED engine: a consumer building a session through

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -11,17 +10,11 @@ object Verify {
     // optional 3rd arg: comma-separated query-name subset for fast local
     // iteration (the driver always calls with 2 args = full set)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shared engine defaults (SessionDefaults): the session the oracle
-    // verifies is the session the bench measures and the facade ships —
-    // including the shuffled-hash join preference, so correctness covers
-    // the same plans the perf numbers come from (VERDICT r18 #2)
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the session the oracle verifies is the one the bench measures and
+    // the facade ships, so correctness covers the plans the perf numbers
+    // come from
+    val spark = graft.api.EngineSession.local(cpus).spark
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

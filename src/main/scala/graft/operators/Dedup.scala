@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -63,10 +63,6 @@ object Dedup {
     Perm(11, 23), Perm(13, 31), Perm(17, 41), Perm(19, 47))
   val MinHashMod = 10007L
 
-  /** (doc_id, tok) distinct token pairs — the exploded set representation. */
-  def tokenSet(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).as("doc_id"), explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("tok"))
-
   /** distinct k-token shingles of a document as an array column. Shingles,
     * not unigrams, are what MinHash needs for discrimination: on a corpus
     * with a small shared vocabulary every unigram set is near-identical (this
@@ -76,9 +72,8 @@ object Dedup {
   def shingleArray(text: Column, k: Int): Column =
     array_distinct(TextFunctions.tokenNgrams(text, k))
 
-  /** Catalyst size estimate at or under which an input counts as measured
-    * small: [[spread]] repartitions it, and [[editDistanceNearDup]] skips
-    * salting it.
+  /** Catalyst size estimate at or under which [[spread]] counts an input as
+    * measured small and repartitions it.
     */
   private val SmallInputBytes = BigInt(32L << 20)
 
@@ -124,37 +119,6 @@ object Dedup {
     */
   def portableTokenId(tok: Column): Column =
     conv(substring(md5(tok), 1, 8), 16, 10).cast("long")
-
-  /** Global token dictionary: tok → dense id by lexicographic rank.
-    *
-    * Scale note: ids are assigned by a range-partitioned parallel sort +
-    * per-partition zipWithIndex, NOT a single-partition row_number window —
-    * the same deterministic ranks (identical to the DuckDB oracle's
-    * row_number-over-sorted-tokens), with no global-rank bottleneck. Needed
-    * only when ids must be DENSE ranks (e.g. to feed a matrix/array index);
-    * for dedup prefer hashing the token directly ([[portableTokenId]] or
-    * xxhash64 — minHashLsh uses those and never builds a dictionary).
-    */
-  def tokenDict(tokenSets: DataFrame): DataFrame = {
-    val spark = tokenSets.sparkSession
-    val sorted = tokenSets.select("tok").distinct().orderBy("tok")
-    val withId = sorted.rdd.map(_.getString(0)).zipWithIndex()
-      .map { case (tok, i) => Row(tok, i + 1L) }
-    spark.createDataFrame(withId, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("tok", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("tid", org.apache.spark.sql.types.LongType))))
-  }
-
-  /** K MinHash signature columns sig_0..sig_{k-1} per doc. */
-  def minHashSignatures(df: DataFrame, textCol: String, idCol: String,
-      perms: Seq[Perm] = DefaultPerms): DataFrame = {
-    val ts = tokenSet(df, textCol, idCol)
-    val withTid = ts.join(tokenDict(ts), "tok" :: Nil).select("doc_id", "tid")
-    val aggs = perms.zipWithIndex.map { case (p, i) =>
-      min((col("tid") * p.a + p.b) % MinHashMod).as(s"sig_$i")
-    }
-    withTid.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
 
   /** (doc_id, tids) — the distinct shingle-token-id set per doc, the shared
     * base of every MinHash path. Portable mode streams shingle bytes straight
@@ -592,7 +556,7 @@ object Dedup {
     * of the two band joins as `cand_corpus` and `cand_batch`. They are pure
     * functions of the inputs, so a wall-clock swing at flat counts is
     * environmental, and moving counts point at the band skew the
-    * [[Salting]] machinery would cap.
+    * [[Skew]] machinery would cap.
     */
   private def incrementalCore(batch: DataFrame, bBase0: DataFrame,
       cBase0: DataFrame, idCol: String, threshold: Double,
@@ -935,18 +899,14 @@ object Dedup {
     *     by that many documents carries no near-dup signal — and is DROPPED
     *     before pairing, bounding total work at maxBlock² per block at any
     *     corpus size. Oracle-visible; replicate the cap in comparisons.
-    *   - `saltFactor` (pure execution): the self-join is salted — the left
-    *     side carries a deterministic per-row salt `hash(doc_id) mod S`,
-    *     the right side is replicated S times, the join key grows to
-    *     (w1, band, salt) — so each surviving block's quadratic work splits
-    *     across S tasks of block²/S. Every a<b pair still meets exactly
-    *     once (on the left row's own salt); the pair set is identical
-    *     (spec-asserted), only the task boundaries move. The default
-    *     (saltFactor = 0) routes on Catalyst's size estimate, the
-    *     [[Packing.singleTaskOk]] pattern: a measured-small input skips
-    *     the S× replication (no block can be hot enough to matter), a
-    *     large or unknown one salts at 8. The factor taken is the
-    *     [[graft.QueryTrace]] attribute `dedup.saltFactor`.
+    *   - `saltFactor` (pure execution): the self-join on (w1, band) is
+    *     [[Skew.saltedJoin]] salted by doc id, so each surviving block's
+    *     quadratic work splits across S tasks of block²/S. The pair set is
+    *     identical at every factor (spec-asserted), only the task
+    *     boundaries move. The default (saltFactor = 0) routes on the
+    *     keyed input's size estimate: a measured-small input skips the S×
+    *     replication (no block can be hot enough to matter), a large or
+    *     unknown one salts.
     *
     * Verification uses Spark's banded `levenshtein(l, r, threshold)`
     * (O(maxDist·n) early-exit DP, codegen'd; returns −1 past the bound), so
@@ -961,43 +921,23 @@ object Dedup {
       substring(col(textCol), 1, prefixLen).as("key"),
       split_part(col(textCol), lit(" "), lit(1)).as("w1"),
       floor(length(substring(col(textCol), 1, prefixLen)) / bandWidth).as("band"))
-    // salt routing does not borrow the prefix machinery's knob: a spec or
-    // user pinning the prefix plan shape with
-    // graft.prefix.singleTaskBytes=0 must not silently force 8×
-    // replication on every edit-distance call
-    val measuredSmall =
-      keyed0.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallInputBytes
-    val salt = if (saltFactor > 0) saltFactor
-      else if (measuredSmall) 1 else 8
-    graft.QueryTrace.record(df.sparkSession, "dedup.saltFactor", salt)
     // block-size cap: one windowed count per block (a single shuffle on
     // the block key — the aggregate+semi-join twin pays that shuffle twice)
     // — blocks past the cap never reach the pair join
     val wBlock = org.apache.spark.sql.expressions.Window.partitionBy("w1", "band")
     val keyed = keyed0.withColumn("__bn", count(lit(1)).over(wBlock))
       .where(col("__bn") <= maxBlock).drop("__bn")
-    // the pair join is COMPUTE-bound (a banded DP per candidate), which
-    // AQE's size-based coalescing cannot see — a few hundred KB of keys
-    // coalesce to ONE partition and the whole verify serializes into one
-    // task (measured 2.6 s → 0.5 s at sf0.1). Explicit-count repartition
-    // disables coalescing on these exchanges, declaring the parallelism
-    // the DP work needs; both sides get it so whichever side Spark
-    // streams is distributed.
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val a = keyed.select(col("doc_id").as("a_id"), col("key").as("a_key"),
-        col("w1"), col("band"),
-        pmod(hash(col("doc_id")), lit(salt)).as("salt"))
-      .repartition(parts, col("w1"), col("band"), col("salt"))
+      col("w1"), col("band"))
     val b = keyed.select(col("doc_id").as("b_id"), col("key").as("b_key"),
-        col("w1"), col("band"))
-      .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-      .repartition(parts, col("w1"), col("band"), col("salt"))
+      col("w1"), col("band"))
     // the banded form returns −1 past the bound, so `>= 0` alone IS the
     // "within maxDist" predicate — and it lives directly in the filter so
     // the DP runs ONCE per candidate (an aliased dist column re-evaluates
     // per reference after projection collapse: 2.7 s → 0.9 s at sf0.1);
     // the output projection recomputes it only for the few survivors
-    a.join(b, Seq("w1", "band", "salt"))
+    Skew.saltedJoin(a, b, Seq("w1", "band"), "a_id", saltFactor,
+        routeOn = Seq(keyed0))
       .where(col("a_id") < col("b_id") &&
         levenshtein(col("a_key"), col("b_key"), maxDist) >= 0)
       .select(col("a_id"), col("b_id"),

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Scale levers: `bucketWidthSeconds` trades explode factor (long intervals
   * over narrow buckets) against bucket skew (hot buckets under wide ones) —
   * set it near the median interval length. Hot buckets behave like any
-  * skewed hash-join key: AQE skew split or [[Salting]] apply unchanged.
+  * skewed hash-join key: AQE skew split or [[Skew]] apply unchanged.
   *
   * `keyCols` (present in both inputs) are added to the join key for the
   * keyed variant (per-entity intervals), tightening buckets to per-key.

@@ -543,7 +543,7 @@ object Similarity {
     // identical subtree, so the assignment computes once and the second
     // side rides a ReusedExchange — a rename into l/r projections would
     // pay the crossJoin+window twice.
-    val s = Skew.factor(Seq(df.select(col(idCol), col(vecCol))))
+    val s = Skew.measuredFactor(Seq(df.select(col(idCol), col(vecCol))))
     val scored0 =
       if (s == 1)
         assigned.as("l").join(assigned.as("r"), "cent_id" :: Nil)
@@ -554,7 +554,7 @@ object Similarity {
           col("v").as("qv"))
         val r = assigned.select(col("cent_id"), col("vid").as("vec_id"),
           col("v").as("cv"))
-        Skew.withFactor(l, r, Seq("cent_id"), "query_id", s)
+        Skew.saltedJoin(l, r, Seq("cent_id"), "query_id", factor = s)
           .select(col("query_id"), col("vec_id"),
             round(cosine(col("qv"), col("cv")), 6).as("cos"))
       }
@@ -726,7 +726,8 @@ object Similarity {
     * Rather than discover that in production, writers REFUSE schemes
     * outside the allowlist; a deployment whose object store adds the
     * missing semantics (a consistency/commit layer) can extend it via
-    * the session conf `graft.ivf.extraFsSchemes` (comma-separated).
+    * the session conf `graft.fs.atomicSchemes` (comma-separated,
+    * [[graft.FsContract]]).
     * Readers ([[openIvfIndex]]) are not guarded: they never rename or
     * create, and mid-write visibility is already handled by manifest
     * exclusion.
@@ -736,8 +737,7 @@ object Similarity {
       caller: String): Unit =
     graft.FsContract.requireAtomicScheme(spark, path, caller,
       "the IVF store write protocol (writer lease, sidecar publish, " +
-        "staged append, rebuild dir-swap)",
-      "graft.ivf.extraFsSchemes")
+        "staged append, rebuild dir-swap)")
 
   /** One-file cell-size sidecar: line 1 = the centroid-scheme mod, then
     * `cent_id,count` lines. Written via create-temp + rename so readers
@@ -955,7 +955,7 @@ object Similarity {
     * schemes that do not guarantee atomic create-exclusive and atomic
     * rename (see [[requireAtomicFsScheme]]) — HDFS/viewfs/local pass;
     * S3-family stores need a consistency layer plus the
-    * `graft.ivf.extraFsSchemes` opt-in.
+    * `graft.fs.atomicSchemes` opt-in.
     */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newVecs: DataFrame, vecCol: String, idCol: String): Unit =

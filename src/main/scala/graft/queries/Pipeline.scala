@@ -932,15 +932,17 @@ object Pipeline {
 
     // salted skew join: documents (hot key: 20 sources for the whole
     // corpus — at 100 TB each source key holds TBs) against a per-source
-    // aggregate dim, with the hot key split across `factor` tasks by the
-    // salt. The salt is physical only — the gate proves the result equals
-    // the plain join (integer-only above-average compare: zero FP risk).
+    // aggregate dim, with the hot key split across 8 tasks by the salt
+    // (hash of doc_id). The salt is physical only — the gate proves the
+    // result equals the plain join (integer-only above-average compare:
+    // zero FP risk).
     "q128_salted_join" -> ((s, d) => {
       val docs = Tables(s, d).documents
         .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("len"))
       val dim = docs.groupBy("source")
         .agg(sum("len").as("tot"), count(lit(1)).as("n"))
-      graft.operators.Salting.saltedJoin(docs, dim, "source", factor = 8)
+      graft.operators.Skew.saltedJoin(docs, dim, Seq("source"), "doc_id",
+          factor = 8)
         .select(col("doc_id"), col("source"),
           (col("len") * col("n") > col("tot")).as("above_avg"))
         .orderBy("doc_id")

@@ -188,8 +188,7 @@ object DocStreams {
     // (r17): refuse schemes without atomic create-exclusive + rename
     graft.FsContract.requireAtomicScheme(spark, tablePath, "upsertBatch",
       "the upsert publish protocol (per-bucket aside/rename swap + " +
-        "marker-gated heal)",
-      "graft.upsert.extraFsSchemes")
+        "marker-gated heal)")
     // AQE is pure overhead for this merge: it turns each exchange into its
     // own query-stage job and re-plans between them, but both plans here
     // are bounded and explicitly laid out (the discovery agg collects ≤

@@ -19,7 +19,7 @@ class BenchLogicSpec extends AnyFunSuite {
     // and declares the omission in-band.
     val times = (1 to 240).map(i => f"q${i}_gate_name_of_usual_len" -> i * 0.01).toMap
     val line = Bench.compactSummary(times.values.sum, times, Map.empty,
-      runs = 2, sfDir = "/data/sf0.1")
+      runs = 2, sfDir = "/data/sf0.1", recordFile = "bench_out_20260101_000000.json")
     assert(line.length <= 1800, s"line is ${line.length} chars")
     assert(line.startsWith("""{"metric":"total","value":"""))
     assert(line.endsWith(""","sf":"/data/sf0.1"}"""))
@@ -30,21 +30,21 @@ class BenchLogicSpec extends AnyFunSuite {
     // the line is one complete JSON object
     val tree = mapper.readTree(line)
     assert(tree.get("queries").size + tree.get("queries_omitted").asInt === 240)
-    assert(tree.get("full_queries_in").asText === "bench_out.json")
+    assert(tree.get("full_queries_in").asText === "bench_out_20260101_000000.json")
   }
 
   test("compactSummary: a small suite fits whole, zero omitted; error storms degrade to a count") {
     val times = Map("q1_agg" -> 0.1, "q2_filter" -> 0.2)
     val line = Bench.compactSummary(0.3, times, Map("q3_x" -> "Boom"),
-      runs = 2, sfDir = "/x")
+      runs = 2, sfDir = "/x", recordFile = "/tmp/b.json")
     assert(line.contains(""""queries":{"q1_agg":0.1,"q2_filter":0.2}"""))
     assert(line.contains(""""queries_omitted":0"""))
     assert(line.contains(""""errors":{"q3_x":"Boom"}"""))
     assert(line.contains(""""n_queries":3"""))
     val storm = (1 to 100).map(i => s"q${i}_e" -> "SomeLongExceptionClassName").toMap
-    val line2 = Bench.compactSummary(0.3, times, storm, 2, "/x")
+    val line2 = Bench.compactSummary(0.3, times, storm, 2, "/x", "/tmp/b.json")
     assert(line2.length <= 1800)
-    assert(line2.contains(""""errors":"see bench_out.json""""))
+    assert(line2.contains(""""errors":"see /tmp/b.json""""))
     assert(line2.contains(""""n_errors":100"""))
   }
 
@@ -55,7 +55,8 @@ class BenchLogicSpec extends AnyFunSuite {
     val (record, summary) = Bench.report(
       samples = Map("q_a" -> Seq(0.5), "q_b" -> Seq(0.25, 0.2)),
       errors = Map("q_a" -> "java.lang.RuntimeException"),
-      phases = Map.empty, runs = 2, sfDir = "/x", env = Map.empty)
+      phases = Map.empty, runs = 2, sfDir = "/x", env = Map.empty,
+      recordFile = "/tmp/b.json")
     val s = mapper.readTree(summary)
     assert(s.get("n_queries").asInt === 2)
     assert(s.get("n_errors").asInt === 1)
@@ -79,7 +80,8 @@ class BenchLogicSpec extends AnyFunSuite {
       errors = Map("q9_broken" -> odd),
       phases = Map("q47_wcoj_triangle" -> Seq(pass(3L), pass(2L))),
       runs = 2, sfDir = "/x/sf0.001",
-      env = Map("tmp_base" -> "/dev/shm", "tmp_free_bytes" -> 7L))
+      env = Map("tmp_base" -> "/dev/shm", "tmp_free_bytes" -> 7L),
+      recordFile = "/tmp/b.json")
     val r = mapper.readTree(record)
     val fields = r.fieldNames().asScala.toList
     assert(fields === List("metric", "value", "unit", "queries", "errors",

@@ -633,11 +633,13 @@ class SaltingSpec extends graft.SparkSpec {
   import spark.implicits._
 
   test("salted join equals plain join on skewed data") {
-    // hot key 1 dominates
-    val left = (Seq.fill(500)(1L) ++ (2L to 50L)).map(k => (k, k * 2)).toDF("k", "lv")
+    // hot key 1 dominates; the unique row id spreads it over the salts
+    val left = (Seq.fill(500)(1L) ++ (2L to 50L)).zipWithIndex
+      .map { case (k, i) => (k, k * 2, i.toLong) }.toDF("k", "lv", "id")
     val right = (1L to 50L).map(k => (k, s"r$k")).toDF("k", "rv")
     val plain = left.join(right, "k" :: Nil).collect().map(_.toSeq)
-    val salted = Salting.saltedJoin(left, right, "k", factor = 8).collect().map(_.toSeq)
+    val salted = Skew.saltedJoin(left, right, Seq("k"), "id", factor = 8)
+      .collect().map(_.toSeq)
     assert(salted.toSet === plain.toSet)
     assert(salted.length === plain.length) // multiset: hot-key rows join once each
   }
@@ -645,7 +647,7 @@ class SaltingSpec extends graft.SparkSpec {
   test("salted left join keeps unmatched rows once") {
     val left = Seq((1L, "a"), (9L, "x")).toDF("k", "lv")
     val right = Seq((1L, "r")).toDF("k", "rv")
-    val out = Salting.saltedJoin(left, right, "k", 4, "left").collect()
+    val out = Skew.saltedJoin(left, right, Seq("k"), "lv", 4, "left").collect()
     assert(out.length === 2)
     assert(out.count(_.isNullAt(2)) === 1) // key 9 unmatched exactly once
   }
@@ -654,18 +656,28 @@ class SaltingSpec extends graft.SparkSpec {
     val left = Seq((1L, "a")).toDF("k", "lv")
     val right = Seq((1L, "r"), (2L, "unmatched")).toDF("k", "rv")
     intercept[IllegalArgumentException] {
-      Salting.saltedJoin(left, right, "k", 4, "right")
+      Skew.saltedJoin(left, right, Seq("k"), "lv", 4, "right")
     }
     intercept[IllegalArgumentException] {
-      Salting.saltedJoin(left, right, "k", 4, "full_outer")
+      Skew.saltedJoin(left, right, Seq("k"), "lv", 4, "full_outer")
     }
     // left_semi stays allowed
-    assert(Salting.saltedJoin(left, right, "k", 4, "left_semi").count() === 1)
+    assert(Skew.saltedJoin(left, right, Seq("k"), "lv", 4, "left_semi").count() === 1)
+  }
+
+  test("the salt is a pure function of the left row, so a retried task salts alike") {
+    // a nondeterministic salt (rand) makes the salted shuffle stage
+    // indeterminate: a retried map task may send a row to another salt
+    val left = (1L to 20L).map(k => (k % 3, k)).toDF("k", "id")
+    val right = (0L to 2L).map(k => (k, s"r$k")).toDF("k", "rv")
+    val plan = Skew.saltedJoin(left, right, Seq("k"), "id", factor = 8)
+      .queryExecution.analyzed
+    assert(!plan.exists(_.expressions.exists(!_.deterministic)))
   }
 
   test("hotKeys surfaces the dominant key") {
     val df = (Seq.fill(100)(7L) ++ Seq(1L, 2L, 3L)).toDF("k")
-    val top = Salting.hotKeys(df, "k", 1).collect().head
+    val top = Skew.hotKeys(df, "k", 1).collect().head
     assert(top.getLong(0) === 7L && top.getLong(1) === 100L)
   }
 }
@@ -1898,11 +1910,11 @@ class MutualKnnSpec extends graft.SparkSpec {
         () => Similarity.rebuildIvfIndex(spark, "s3a://bucket/ivf"))) {
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains("ATOMIC create-exclusive"))
-      assert(e.getMessage.contains("graft.ivf.extraFsSchemes"))
+      assert(e.getMessage.contains("graft.fs.atomicSchemes"))
     }
     // the opt-in lifts the refusal: the failure becomes the (expected)
     // missing-filesystem error, not the contract guard
-    withConf("graft.ivf.extraFsSchemes" -> "s3a") {
+    withConf("graft.fs.atomicSchemes" -> "s3a") {
       val e = intercept[Throwable] {
         Similarity.appendIvfIndex(spark, "s3a://bucket/ivf", delta,
           "embedding", "vec_id")

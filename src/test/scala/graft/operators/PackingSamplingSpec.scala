@@ -8,8 +8,10 @@ class PackingSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan
-  spark.conf.set("graft.prefix.singleTaskBytes", "0")
+  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // test, so the conf does not outlive this suite on the shared session
+  override def withFixture(test: NoArgTest) =
+    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
 
   test("packShards distributed prefix sum matches the naive global window") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -127,8 +129,10 @@ class PackingPropertySpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan
-  spark.conf.set("graft.prefix.singleTaskBytes", "0")
+  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // test, so the conf does not outlive this suite on the shared session
+  override def withFixture(test: NoArgTest) =
+    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
 
   test("random docs: distributed == naive for random budgets/partitions; shards monotone") {
     val rnd = new scala.util.Random(42)
@@ -259,8 +263,10 @@ class LengthBucketSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan
-  spark.conf.set("graft.prefix.singleTaskBytes", "0")
+  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // test, so the conf does not outlive this suite on the shared session
+  override def withFixture(test: NoArgTest) =
+    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
   import org.apache.spark.sql.functions._
 
   private def naive(df: org.apache.spark.sql.DataFrame, bucketSize: Int,
@@ -303,8 +309,10 @@ class TokenQuotaSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan
-  spark.conf.set("graft.prefix.singleTaskBytes", "0")
+  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // test, so the conf does not outlive this suite on the shared session
+  override def withFixture(test: NoArgTest) =
+    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
   import org.apache.spark.sql.functions._
 
   test("groupRunningTotals matches the naive group window on random data") {
@@ -361,17 +369,14 @@ class TokenQuotaSpec extends SparkSpec {
     val naive = rows.withColumn("cum", sum(col("v").cast("long")).over(w))
       .select(col("id"), col("grp"), col("cum"))
       .as[(Long, Option[String], Long)].collect().sortBy(_._1).toSeq
-    for (aqe <- Seq("true", "false")) {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      try {
-        for (parts <- Seq(1, 2, 7, 33, 64); inLayout <- Seq(1, 13)) {
-          val dist = Packing.groupRunningTotals(
-              rows.repartition(inLayout), "grp", "id", col("v"), parts)
-            .select("doc_id", "grp", "cum").as[(Long, Option[String], Long)]
-            .collect().sortBy(_._1).toSeq
-          assert(dist === naive, s"aqe=$aqe parts=$parts inLayout=$inLayout")
-        }
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+      for (parts <- Seq(1, 2, 7, 33, 64); inLayout <- Seq(1, 13)) {
+        val dist = Packing.groupRunningTotals(
+            rows.repartition(inLayout), "grp", "id", col("v"), parts)
+          .select("doc_id", "grp", "cum").as[(Long, Option[String], Long)]
+          .collect().sortBy(_._1).toSeq
+        assert(dist === naive, s"aqe=$aqe parts=$parts inLayout=$inLayout")
+      }
     }
     // empty input: no boundaries, no rows, schema intact
     val empty = Packing.groupRunningTotals(
@@ -398,8 +403,10 @@ class StratifiedSplitSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan
-  spark.conf.set("graft.prefix.singleTaskBytes", "0")
+  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // test, so the conf does not outlive this suite on the shared session
+  override def withFixture(test: NoArgTest) =
+    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
   import org.apache.spark.sql.functions._
 
   private lazy val rows = (1L to 237L).map(i => (i, s"lang${i % 4}"))
@@ -474,14 +481,9 @@ class TrainOrderSpec extends SparkSpec {
 class PrefixRoutingSpec extends SparkSpec {
   import spark.implicits._
 
-  // the test JVM shares ONE SparkSession across suites, and the
-  // differential suites pin graft.prefix.singleTaskBytes=0 (forced
-  // distributed) as the convention — so each phase here sets the conf it
-  // needs explicitly and restores the convention afterwards
-  private def withCap[T](v: String)(f: => T): T = {
-    spark.conf.set("graft.prefix.singleTaskBytes", v)
-    try f finally spark.conf.set("graft.prefix.singleTaskBytes", "0")
-  }
+  // each phase here sets the cap it needs explicitly
+  private def withCap[T](v: String)(f: => T): T =
+    withConf("graft.prefix.singleTaskBytes" -> v)(f)
 
   lazy val rows = (1L to 300L).map(i => (i, s"g${i % 3}")).toDF("id", "grp")
 

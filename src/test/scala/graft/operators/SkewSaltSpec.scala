@@ -49,6 +49,21 @@ class SkewSaltSpec extends graft.SparkSpec {
     assert(plain.size === 240 * 240)
   }
 
+  test("the explicit-count exchange survives a child already partitioned on the keys") {
+    // Spark drops a repartition whose child is already hash-partitioned
+    // the same way (here by a window, as edit-distance's block-size cap
+    // does), leaving only an exchange AQE may coalesce to one task; the
+    // salt in the exchange key keeps both explicit exchanges, at S = 1 too
+    val l = hotCell.select(col("vec_id").as("id1"), (col("vec_id") % 5).as("blk"))
+      .withColumn("n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("blk")))
+    val r = hotCell.select(col("vec_id").as("id2"), (col("vec_id") % 5).as("blk"))
+    val df = Skew.saltedJoin(l, r, Seq("blk"), "id1", factor = 1)
+    assert(df.count() === 240L * 48)
+    val plan = df.queryExecution.executedPlan.toString
+    assert("REPARTITION_BY_NUM".r.findAllIn(plan).size === 2, plan)
+  }
+
   test("the salt bounds per-task candidates: every (key, salt) group ≤ ~|cell|/S") {
     // the join hash-partitions on (keys, salt), so one (key, salt) group's
     // pair work is one task's work; replicate the deterministic salt rule

@@ -186,9 +186,9 @@ class DocStreamsSpec extends SparkSpec {
         "doc_id", "version", buckets = 4)
     }
     assert(e.getMessage.contains("ATOMIC create-exclusive"))
-    assert(e.getMessage.contains("graft.upsert.extraFsSchemes"))
+    assert(e.getMessage.contains("graft.fs.atomicSchemes"))
     // the opt-in lifts the refusal (failure becomes missing-filesystem)
-    withConf("graft.upsert.extraFsSchemes" -> "s3a") {
+    withConf("graft.fs.atomicSchemes" -> "s3a") {
       val e2 = intercept[Throwable] {
         DocStreams.upsertBatch(upds((1L, 1, "a1")), "s3a://bucket/t",
           "doc_id", "version", buckets = 4)

@@ -79,7 +79,7 @@ object ScaleCheck {
         graft.operators.Packing.tokenQuota(docs, "source", "doc_id",
           graft.functions.TextFunctions.tokenCount(col("text")), 100000L).count()
       }
-      t("edit_near_dup", factor, "salt=" + attr("dedup.saltFactor")(_)) {
+      t("edit_near_dup", factor, "salt=" + attr("skew.saltFactor")(_)) {
         graft.operators.Dedup.editDistanceNearDup(
           docs, "text", "doc_id", prefixLen = 40, maxDist = 10).count()
       }
