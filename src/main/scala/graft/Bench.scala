@@ -85,6 +85,25 @@ object Bench {
     (record, compactSummary(total, times, errors, runs, sfDir, recordFile))
   }
 
+  /** One gate's entry for one pass in the record's `phases`: its wall
+    * seconds (`s`), its spans (phase seconds), its trace attributes (a
+    * number where the value parses as one, else the string, so routes such
+    * as `prefix.route` and `sim.route` reach the record) and its Spark
+    * work. A per-gate A/B reads a gate's spread across passes and diffs its
+    * routes from these.
+    */
+  def passEntry(seconds: Double, spans: Seq[(String, Double)],
+      attributes: Seq[(String, String)], work: QueryTrace.Totals): ListMap[String, Any] =
+    ListMap[String, Any]("s" -> r3(seconds)) ++
+      spans.map { case (k, secs) => k -> r3(secs) } ++
+      attributes.map { case (k, v) =>
+        k -> v.toLongOption.orElse(v.toDoubleOption).getOrElse(v)
+      } ++ ListMap("jobs" -> work.jobs, "tasks" -> work.tasks,
+        "task_s" -> r3(work.taskSeconds),
+        "spill_bytes" -> work.spilledBytes,
+        "shuffle_bytes" -> work.shuffleBytes,
+        "peak_exec_bytes" -> work.peakExecutionBytes)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -136,19 +155,10 @@ object Bench {
         val (_, trace) = QueryTrace.run(spark)(fn(spark, sfDir).count())
         val dt = (System.nanoTime() - t0) / 1e9
         samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
-        // the pass's spans (phase seconds), numeric attributes (candidate
-        // counts, HyperCube cells, ...) and Spark work; totals waits for
-        // the listener bus, so it is read after the timer stopped
-        val work = trace.totals
-        phases(name) = phases.getOrElse(name, Vector.empty) :+ (
-          ListMap.from(trace.spans.map { case (k, secs) => k -> r3(secs) }) ++
-            trace.attributes.flatMap { case (k, v) =>
-              v.toLongOption.orElse(v.toDoubleOption).map(k -> _)
-            } ++ ListMap("jobs" -> work.jobs, "tasks" -> work.tasks,
-              "task_s" -> r3(work.taskSeconds),
-              "spill_bytes" -> work.spilledBytes,
-              "shuffle_bytes" -> work.shuffleBytes,
-              "peak_exec_bytes" -> work.peakExecutionBytes))
+        // totals waits for the listener bus, so it is read after the timer
+        // stopped
+        phases(name) = phases.getOrElse(name, Vector.empty) :+
+          passEntry(dt, trace.spans, trace.attributes, trace.totals)
       } catch { case e: Throwable => errors(name) = e.getClass.getName }
       // UNTIMED inter-query drain: gates that pin localCheckpoint blocks
       // release them via the weak-ref ContextCleaner, which only fires

@@ -56,4 +56,22 @@ object SessionDefaults {
   /** Apply every engine default to a session builder. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     all.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** Runs `body` with each (key, value) set on the session, then gives
+    * each key back its prior value, or unsets it if it had none. A key
+    * "had none" when it was not set explicitly: `spark.conf.get` would
+    * return a registered key's default, and writing that back would turn
+    * an unset key into a set one.
+    */
+  def withConf[A](spark: SparkSession, pairs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prior = pairs.map { case (k, _) => k -> set.get(k) }
+    try {
+      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -122,36 +122,9 @@ object Tables {
       Some(Listing(files.result().sorted, InferenceConfs.map(spark.conf.getOption)))
     } catch { case NonFatal(_) => None }
 
-  /** Spread a NARROW scan across the cluster before an expensive per-row
-    * stage (tokenize / shingle / hash maps): parquet splits cannot subdivide
-    * a row group, so a table laid out as few large row groups serializes its
-    * whole scan-stage map onto as many cores as it has row groups — at the
-    * bench's single-file tables that is ONE core under a 1–2 s tokenization
-    * map while 31 idle (r18 attribution probe). Hash-repartitioning on the
-    * row key spreads the map at the cost of shuffling the raw rows once.
-    *
-    * Scale-adaptive by inspection, not a constant: when the scan already
-    * carries at least half the cluster's parallelism (the 100 TB case —
-    * thousands of files), this is the identity and no shuffle is added; the
-    * repartition only engages when the source is narrower than the cluster
-    * (single file, small crawl slice), where moving the rows once is
-    * strictly cheaper than computing serially. The target width is the
-    * cluster's `defaultParallelism`.
-    *
-    * The width is read from `df.rdd` on every call, never cached on the
-    * plan: a parquet path's plan stays the same when its files are
-    * rewritten, so a cached width goes stale.
-    */
-  def spreadScan(df: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 > target) df
-    else df.repartition(target, col(key))
-  }
-
-  /** [[spreadScan]]'s width rule for STREAMING sources, where the batch
-    * partition inspection above is unavailable (`.rdd` on a streaming frame
-    * throws): `Some(defaultParallelism)`, None on a one-core cluster. The
+  /** The spread width for STREAMING sources, which [[graft.Small.spread]]
+    * passes through (a streaming frame has no size estimate to route on):
+    * `Some(defaultParallelism)`, None on a one-core cluster. The
     * CALLER owns the knowledge that its source is narrower than the
     * cluster — a file-stream over a single small file here; a wide
     * deployment (many files/topic partitions per trigger) should pass None

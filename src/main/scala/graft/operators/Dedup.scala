@@ -72,43 +72,14 @@ object Dedup {
   def shingleArray(text: Column, k: Int): Column =
     array_distinct(TextFunctions.tokenNgrams(text, k))
 
-  /** Catalyst size estimate at or under which [[spread]] counts an input as
-    * measured small and repartitions it.
-    */
-  private val SmallInputBytes = BigInt(32L << 20)
-
-  /** Distribute a compute-heavy per-row stage when the input is measured
-    * small (a small parquet file is ONE split, so tokenize/shingle/hash
-    * work would serialize into one task — and AQE's size-based coalescing
-    * can't see per-row compute). The decision comes from Catalyst's size
-    * estimate — NOT from `df.rdd.getNumPartitions`, which under AQE
-    * materializes the final physical plan and would eagerly execute any
-    * upstream shuffle once just to read a partition count. Repartitioning
-    * a small input is near-free and the explicit count disables AQE
-    * coalescing on the exchange; large or unknown estimates no-op (a big
-    * input has many splits; adding a corpus-wide shuffle to "help" it
-    * would cost more than it buys). Streaming frames are left untouched.
-    * "Small" is an estimate of at most [[SmallInputBytes]].
-    */
-  private[operators] def spread(df: DataFrame, by: Column): DataFrame = {
-    if (df.isStreaming) return df
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallInputBytes)
-      // HASH partition on the caller's (unique) id, never round-robin:
-      // a column-less repartition locally SORTS every partition first
-      // (Spark's retry-determinism rule, sortBeforeRepartition) — on text
-      // rows that sort cost the MinHash gates 26-58% at sf0.1 (measured
-      // round 10) while buying nothing; hashing a unique id distributes
-      // identically without touching row order
-      df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, by)
-    else df
-  }
-
   /** (doc_id, tok) distinct k-token shingles, exploded form. The shingle
     * build is the compute-heavy stage of every lineage over it
-    * (containment, novelty, contamination, MinHash) — [[spread]] first.
+    * (containment, novelty, contamination, MinHash) — [[graft.Small.spread]]
+    * first.
     */
   def shingleSet(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    spread(df, col(idCol)).select(col(idCol).as("doc_id"), explode(shingleArray(col(textCol), k)).as("tok"))
+    graft.Small.spread(df, idCol)
+      .select(col(idCol).as("doc_id"), explode(shingleArray(col(textCol), k)).as("tok"))
 
   /** Engine-independent 32-bit token id: the first 8 hex digits of md5,
     * read as an integer. Pure map-side (no dictionary build, no shuffle) AND
@@ -146,7 +117,7 @@ object Dedup {
     // AND corpus side) ahead of persist, a ~0.2 s sf0.1-only overhead
     // that vanishes at corpus scale where spread no-ops — kept for the
     // single-split case the cap exists for.
-    spread(df, col(idCol)).select(col(idCol).as("doc_id"), tidsExpr.as("tids"))
+    graft.Small.spread(df, idCol).select(col(idCol).as("doc_id"), tidsExpr.as("tids"))
       .filter(size(col("tids")) > 0)
   }
 

@@ -98,28 +98,6 @@ object Packing {
     * boundary; a NULL boundary component matches only NULL keys). O(p)
     * comparisons per row, whole-stage-codegen friendly, zero shuffles.
     */
-  /** Size-gated routing for the two-phase prefix machinery: when Catalyst's
-    * own size estimate for the input (the statistic Spark's broadcast-join
-    * threshold trusts) fits `graft.prefix.singleTaskBytes` (default 32 MB),
-    * a single-task window is trivially safe and the distributed form's
-    * extra jobs (boundary sample, offsets aggregate, broadcast reattach)
-    * are pure overhead — so callers take their plain-window twin, which is
-    * bit-identical by the determinism contract (differential-spec-proven).
-    * Unknown statistics default to Long.MaxValue, i.e. the distributed
-    * path — the safe direction. Set the conf to 0 to force the distributed
-    * shape (the plan-quality and differential specs do). The twin taken is
-    * the [[graft.QueryTrace]] attribute `prefix.route` ("window" |
-    * "distributed").
-    */
-  private[graft] def singleTaskOk(df: DataFrame): Boolean = {
-    val cap = df.sparkSession.conf
-      .get("graft.prefix.singleTaskBytes", (32L << 20).toString).toLong
-    val small = cap > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
-    graft.QueryTrace.record(df.sparkSession, "prefix.route",
-      if (small) "window" else "distributed")
-    small
-  }
-
   private[graft] def rangeBucketExpr(keyCols: Seq[String],
       boundaries: Seq[Seq[Any]]): org.apache.spark.sql.Column = {
     def keyGt(b: Seq[Any]): org.apache.spark.sql.Column =
@@ -259,6 +237,22 @@ object Packing {
           .cast("long").as("batch_idx"))
   }
 
+  /** Whether a two-phase prefix pass takes its plain-window twin: asked
+    * for one task (`p` <= 1), or the input is small
+    * ([[graft.Small.byEstimate]]), where a single-task window is safe and
+    * the distributed form's extra jobs (boundary sample, offsets
+    * aggregate, broadcast reattach) are pure overhead. The twin is
+    * bit-identical by the determinism contract (differential-spec-proven).
+    * The twin taken is the [[graft.QueryTrace]] attribute `prefix.route`
+    * ("window" | "distributed").
+    */
+  private def windowRoute(rows: DataFrame, p: Int): Boolean = {
+    val window = p <= 1 || graft.Small.byEstimate(rows)
+    graft.QueryTrace.record(rows.sparkSession, "prefix.route",
+      if (window) "window" else "distributed")
+    window
+  }
+
   /** Distributed row_number: `rank` = row_number OVER (PARTITION BY
     * `grpCols` ORDER BY `ordCols`) computed with the grouped two-phase
     * prefix (deterministic range buckets over grp+ord, per-(grp, bucket)
@@ -283,10 +277,10 @@ object Packing {
     val keyCols = grpCols ++ ordCols
     require(!rows.columns.contains("__bkt"),
       "groupedRowNumbers reserves column name __bkt")
-    // measured-small input (or an explicit partitions <= 1): the plain
-    // window IS the definition of the contract — same result, none of the
-    // sample/offsets machinery (see [[singleTaskOk]])
-    if (p <= 1 || singleTaskOk(rows)) {
+    // small input (or an explicit partitions <= 1): the plain window IS
+    // the definition of the contract — same result, none of the
+    // sample/offsets machinery (see [[windowRoute]])
+    if (windowRoute(rows, p)) {
       return rows.withColumn("rank", row_number().over(
         Window.partitionBy(grpCols.map(col): _*).orderBy(ordCols.map(col): _*)))
     }
@@ -341,9 +335,9 @@ object Packing {
     val rows = df
       .select(col(groupCol).as("grp"), col(idCol).as("doc_id"),
         valueExpr.cast("long").as("value"))
-    // measured-small input: the windowed running sum is the contract
-    // itself — skip the bucket/offsets machinery (see [[singleTaskOk]])
-    if (p <= 1 || singleTaskOk(rows)) {
+    // small input: the windowed running sum is the contract itself — skip
+    // the bucket/offsets machinery (see [[windowRoute]])
+    if (windowRoute(rows, p)) {
       return rows.select(col("doc_id"), col("grp").as(groupCol), col("value"),
         sum("value").over(Window.partitionBy("grp").orderBy("doc_id")).as("cum"))
     }

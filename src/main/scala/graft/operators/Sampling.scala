@@ -183,12 +183,11 @@ object Sampling {
       partitions: Int = 0): DataFrame = {
     val rows = df.select(col(groupCol), col(keyCol),
       md5(col(keyCol).cast("string")).as("__h"))
-    // ONE routing decision (Packing.singleTaskOk) covering both prefix
+    // ONE routing decision (graft.Small.byEstimate) covering both prefix
     // passes, made on the input scan's statistics: the second pass's input
     // carries a join whose multiplied size estimate would otherwise force
-    // the distributed shape even for a measured-small corpus
-    val parts =
-      if (graft.operators.Packing.singleTaskOk(rows)) 1 else partitions
+    // the distributed shape even for a small corpus
+    val parts = if (graft.Small.byEstimate(rows)) 1 else partitions
     val ranked = graft.operators.Packing.groupedRowNumbers(
         rows, Seq(groupCol), Seq("__h", keyCol), parts)
       .withColumnRenamed("rank", "__r")
@@ -323,12 +322,10 @@ object Sampling {
     // the routing decision reads the INPUT scan's statistics (the
     // interleaveBySource pattern): the broadcast-join + explode lineage
     // above defeats Catalyst's size estimate, which would force the
-    // distributed shape even for a measured-small corpus — and the
+    // distributed shape even for a small corpus — and the
     // instance count is bounded by epochCap × |df|, so the input statistic
     // is the honest proxy
-    val parts =
-      if (graft.operators.Packing.singleTaskOk(df.select(col(keyCol)))) 1
-      else partitions
+    val parts = if (graft.Small.byEstimate(df.select(col(keyCol)))) 1 else partitions
     val rows = inst.select(col(keyCol), col("rep"),
       md5(concat_ws(":", lit(salt), col(keyCol).cast("string"),
         col("rep").cast("string"))).as("__h"))

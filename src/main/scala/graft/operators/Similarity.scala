@@ -27,19 +27,6 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
-  /** Byte budget for the query-side broadcast of [[budgetedCross]] and
-    * [[confinedCellJoin]]. The query side is small by contract, but the contract
-    * is not enforced by the API — so the size is MEASURED before the
-    * broadcast and an over-budget side takes a shuffle-replicated nested-loop join instead:
-    * same result, no single-executor materialization of the whole side.
-    * The route taken is the [[graft.QueryTrace]] attribute `sim.route`
-    * ("broadcast" | "shuffle").
-    */
-  private val BudgetKey = "graft.sim.broadcastBudgetBytes"
-
-  private def budgetBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get(BudgetKey, (64L << 20).toString).toLong
-
   /** The cell join every IVF-confined surface shares: corpus-side rows
     * (assigned/encoded candidates) joined to the probe side on `cent_id`.
     * Two hazards, two routes:
@@ -47,7 +34,7 @@ object Similarity {
     *     corpus stays in its scan partitioning, so no per-cell task exists
     *     and hot cells cannot serialize anything (the common case: a query
     *     batch probing a big corpus);
-    *   - an over-budget probe side (large query batch, or the corpus
+    *   - a probe side over the [[graft.Small]] cap (large query batch, or the corpus
     *     itself in [[mutualKnnIvf]]'s self-join) must shuffle on the cell
     *     key, where ONE dense cell — nothing bounds |cell|; near-dup-heavy
     *     or mode-collapsed corpora produce exactly that — would land its
@@ -63,91 +50,50 @@ object Similarity {
       corpusId: String, probeBase: DataFrame,
       expansion: Double): DataFrame = {
     val spark = corpus.sparkSession
-    val budget = budgetBytes(spark)
-    // two tiers, the budgetedCross pattern — with tier 1 reading the RAW
-    // query frame (`probeBase`), not the probe lineage: the lineage is a
-    // post-crossJoin plan whose Catalyst estimate is a byte product, so it
-    // would read as over-budget for a 5-row batch and force the measuring
-    // job on every call. The base frame's estimate is real (a scan or a
-    // filter of one) — but what gets BROADCAST is the exploded probe frame,
-    // `expansion`× the base (probes rows per query; the caller knows the
-    // factor), so the estimate is trusted only after scaling by it: a base
-    // just under budget must not smuggle a probes×-replicated frame past
-    // the driver. A non-finite `expansion` (the PQ path, whose per-row ADC
-    // table is not derivable from the base estimate at all) or a scaled
-    // estimate over budget pays ONE exact measuring scan of the probe side
-    // (never the corpus) before broadcasting.
-    // route value records WHICH tier authorized a broadcast
-    // ("broadcast:estimate" | "broadcast:measured") so a spec can pin
-    // that the PQ path never trusts the unscalable estimate
-    val estimateFits = java.lang.Double.isFinite(expansion) &&
-      probeBase.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble *
-        expansion.max(1.0) <= budget.toDouble
-    val fits = estimateFits || measuredBytes(probes) <= budget
-    if (fits) {
-      graft.QueryTrace.record(spark, "sim.cellRoute",
-        if (estimateFits) "broadcast:estimate" else "broadcast:measured")
-      corpus.join(broadcast(probes), "cent_id" :: Nil)
-    } else {
-      graft.QueryTrace.record(spark, "sim.cellRoute", "salted")
-      Skew.saltedJoin(corpus, probes, Seq("cent_id"), corpusId)
+    // the size test reads the RAW query frame (`probeBase`), not the probe
+    // lineage: the lineage is a post-crossJoin plan whose estimate is a
+    // byte product, so it would read as over the cap for a 5-row batch and
+    // force the measuring job on every call. What gets BROADCAST is the
+    // exploded probe frame, `expansion`× the base (probes rows per query),
+    // so the base estimate counts only after scaling by it. A non-finite
+    // `expansion` (the PQ path, whose per-row ADC table is not derivable
+    // from the base estimate) or a scaled estimate over the cap pays ONE
+    // exact measuring scan of the probe side (never the corpus). The route
+    // names the tier that authorized a broadcast, so a spec can pin that
+    // the PQ path never trusts the unscalable estimate.
+    graft.Small.byMeasure(probes, probeBase, expansion) match {
+      case Some(tier) =>
+        graft.QueryTrace.record(spark, "sim.cellRoute", s"broadcast:$tier")
+        corpus.join(broadcast(probes), "cent_id" :: Nil)
+      case None =>
+        graft.QueryTrace.record(spark, "sim.cellRoute", "salted")
+        Skew.saltedJoin(corpus, probes, Seq("cent_id"), corpusId)
     }
   }
 
-  /** Exact byte measurement of a (small by contract) frame: actual array
-    * lengths, not a schema guess — ONE aggregation job over the frame.
-    * Shared by the two-tier routes ([[budgetedCross]],
-    * [[confinedCellJoin]]) whose tier-1 Catalyst estimate came back
-    * suspicious: post-join/crossJoin lineages estimate as byte PRODUCTS,
-    * so a KB-sized probe frame can read as hundreds of MB.
+  /** Cross-join `small` onto `big`, broadcasting only when `small` is
+    * small by [[graft.Small.byMeasure]]: an estimate within the cap costs
+    * no job; a suspicious one (over the cap, or unknown) pays one exact
+    * measuring scan of the small side. The big side is never touched. An
+    * over-cap side takes a shuffle-replicated nested-loop join instead:
+    * same result, no single-executor materialization of the whole side.
+    * The route taken is the [[graft.QueryTrace]] attribute `sim.route`
+    * ("broadcast" | "shuffle").
     */
-  private def measuredBytes(df: DataFrame): Long = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-    val rowBytes = df.schema.fields.map { f =>
-      f.dataType match {
-        case ArrayType(FloatType, _) =>
-          coalesce(size(col(f.name)), lit(0)).cast("long") * 4L + 16L
-        case ArrayType(DoubleType, _) =>
-          coalesce(size(col(f.name)), lit(0)).cast("long") * 8L + 16L
-        case ArrayType(ArrayType(DoubleType, _), _) =>
-          coalesce(size(flatten(col(f.name))), lit(0)).cast("long") * 8L + 32L
-        case _ => lit(16L)
-      }
-    }.reduce(_ + _)
-    df.agg(coalesce(sum(rowBytes), lit(0L)).as("b")).head().getLong(0)
-  }
-
-  /** Cross-join `small` onto `big`, broadcasting only when `small` fits
-    * the budget. Two tiers so plan CONSTRUCTION stays cheap in the common
-    * case: when Catalyst's own size estimate is already within budget the
-    * broadcast is taken with no job at all (the estimate is what Spark's
-    * autoBroadcastJoinThreshold itself trusts); only a suspicious estimate
-    * (over budget or unknown → Long.Max) pays one exact measuring scan of
-    * the small side — actual array lengths, not a schema guess — before
-    * deciding. The big side is never touched.
-    */
-  private def budgetedCross(big: DataFrame, small: DataFrame): DataFrame = {
-    val spark = small.sparkSession
-    val budget = budgetBytes(spark)
-    if (small.queryExecution.optimizedPlan.stats.sizeInBytes <= budget) {
-      graft.QueryTrace.record(spark, "sim.route", "broadcast")
-      return big.crossJoin(broadcast(small))
-    }
-    val bytes = measuredBytes(small)
-    if (bytes <= budget) {
-      graft.QueryTrace.record(spark, "sim.route", "broadcast")
+  private def budgetedCross(big: DataFrame, small: DataFrame): DataFrame =
+    if (graft.Small.byMeasure(small, small).isDefined) {
+      graft.QueryTrace.record(small.sparkSession, "sim.route", "broadcast")
       big.crossJoin(broadcast(small))
     } else {
-      graft.QueryTrace.record(spark, "sim.route", "shuffle")
+      graft.QueryTrace.record(small.sparkSession, "sim.route", "shuffle")
       big.crossJoin(small.hint("shuffle_replicate_nl"))
     }
-  }
 
   /** Which candidates a query scores: the pruning stage of [[topK]]. */
   sealed abstract class Coarse(val name: String)
 
   /** Every candidate. The corpus is crossed with the query side, which is
-    * broadcast when it fits the byte budget ([[budgetedCross]]). The
+    * broadcast when it is small ([[budgetedCross]]). The
     * baseline, and the right answer whenever |queries| is small: one scan,
     * no N² blow-up.
     */
@@ -473,7 +419,7 @@ object Similarity {
     * This is the exact/baseline formulation: score-all + per-query top-k
     * window + a self-join of the (|V|·k)-row edge list on the reversed
     * pair — O(N²) scoring, for bounded inputs only (the broadcast side is
-    * byte-budget-guarded, not assumed small). At corpus scale use
+    * size-guarded, not assumed small). At corpus scale use
     * [[mutualKnnIvf]], which confines scoring to shared IVF cells.
     */
   def mutualKnn(df: DataFrame, vecCol: String, idCol: String, k: Int): DataFrame = {
@@ -534,27 +480,29 @@ object Similarity {
       assigned0.withColumn("__cn", count(lit(1)).over(wCell))
         .where(col("__cn") <= maxCell).drop("__cn")
     }
-    // the self-join is the over-budget case of the cell join by
+    // the self-join is the large case of the cell join by
     // construction (both sides are the corpus) — route it straight through
     // the salt so a dense cell's |cell|² splits across saltFactor tasks.
     // Routing reads the TRUE corpus size (the assignment lineage's own
     // estimate is a crossJoin byte product — uselessly pessimistic). The
-    // measured-small route keeps the ALIASED self-join: both sides are the
+    // small route keeps the ALIASED self-join: both sides are the
     // identical subtree, so the assignment computes once and the second
     // side rides a ReusedExchange — a rename into l/r projections would
     // pay the crossJoin+window twice.
-    val s = Skew.measuredFactor(Seq(df.select(col(idCol), col(vecCol))))
+    val small = graft.Small.byEstimate(df.select(col(idCol), col(vecCol)))
     val scored0 =
-      if (s == 1)
+      if (small) {
+        graft.QueryTrace.record(df.sparkSession, "skew.saltFactor", 1)
         assigned.as("l").join(assigned.as("r"), "cent_id" :: Nil)
           .select(col("l.vid").as("query_id"), col("r.vid").as("vec_id"),
             round(cosine(col("l.v"), col("r.v")), 6).as("cos"))
-      else {
+      } else {
         val l = assigned.select(col("cent_id"), col("vid").as("query_id"),
           col("v").as("qv"))
         val r = assigned.select(col("cent_id"), col("vid").as("vec_id"),
           col("v").as("cv"))
-        Skew.saltedJoin(l, r, Seq("cent_id"), "query_id", factor = s)
+        Skew.saltedJoin(l, r, Seq("cent_id"), "query_id",
+            factor = Skew.SaltFactor)
           .select(col("query_id"), col("vec_id"),
             round(cosine(col("qv"), col("cv")), 6).as("cos"))
       }

@@ -18,14 +18,10 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object Skew {
 
-  /** Measured-small inputs skip the S× replication (no key can be hot
-    * enough to matter and the extra shuffle rows are pure overhead); large
-    * or unknown (→ Long.Max) Catalyst estimates salt at [[SaltFactor]].
-    * 0 disables the small-route (forces salting) — the spec/ScaleCheck
-    * hook.
+  /** The salt factor of a large input; a small one ([[graft.Small]])
+    * takes 1: no key can be hot enough to matter, and the replicated rows
+    * would be pure overhead.
     */
-  val SaltBytesKey = "graft.skew.saltBytes"
-
   val SaltFactor = 8
 
   /** Join types where replicating the right side is multiset-safe: an
@@ -46,10 +42,14 @@ private[graft] object Skew {
     * |key|²/S per task. `leftId` should be (close to) unique: rows sharing
     * an id share a salt.
     *
-    * `factor` > 0 is S as given; 0 decides it from the measured size
-    * ([[measuredFactor]] over `routeOn`, default the join sides
-    * themselves). Either way S is the [[graft.QueryTrace]] attribute
-    * `skew.saltFactor`; S = 1 replicates nothing.
+    * `factor` > 0 is S as given; 0 decides it by size: 1 when every frame
+    * in `routeOn` (default the join sides themselves) is small by
+    * [[graft.Small.byEstimate]], else [[SaltFactor]]. `routeOn` names the
+    * frames whose size decides: join sides are often post-join lineages
+    * whose estimate is a byte product, so a 200-row assignment would look
+    * like hundreds of MB; callers pass the true base frames (a parquet
+    * scan's estimate is real). Either way S is the [[graft.QueryTrace]]
+    * attribute `skew.saltFactor`; S = 1 replicates nothing.
     *
     * Both sides take an explicit-count repartition on the keys plus the
     * salt, at every factor: the per-pair work downstream is compute-bound
@@ -75,10 +75,11 @@ private[graft] object Skew {
         "once per salt; use inner/left/left_semi/left_anti (salt the other " +
         "side for right-skew)")
     val s =
-      if (factor > 0) {
-        graft.QueryTrace.record(left.sparkSession, "skew.saltFactor", factor)
-        factor
-      } else measuredFactor(if (routeOn.nonEmpty) routeOn else Seq(left, right))
+      if (factor > 0) factor
+      else if (graft.Small.byEstimate(
+          (if (routeOn.nonEmpty) routeOn else Seq(left, right)): _*)) 1
+      else SaltFactor
+    graft.QueryTrace.record(left.sparkSession, "skew.saltFactor", s)
     val parts = left.sparkSession.sessionState.conf.numShufflePartitions
     val on = keys :+ "__salt"
     val l = left.withColumn("__salt", pmod(hash(col(leftId)), lit(s)))
@@ -86,25 +87,6 @@ private[graft] object Skew {
     l.repartition(parts, on.map(col): _*)
       .join(r.repartition(parts, on.map(col): _*), on, joinType)
       .drop("__salt")
-  }
-
-  /** The salt factor for inputs of this size: 1 when every frame in
-    * `routeOn` is measured small on [[SaltBytesKey]], else [[SaltFactor]];
-    * recorded as `skew.saltFactor`. `routeOn` names the frames whose size
-    * decides: join sides are often post-join/post-crossJoin lineages whose
-    * Catalyst estimate is a byte PRODUCT (Spark's default join estimation
-    * without CBO stats multiplies the sides), so a 200-row assignment looks
-    * like hundreds of MB and would salt a trivially small input. Callers
-    * pass the true base frames (a parquet scan's estimate is real).
-    */
-  def measuredFactor(routeOn: Seq[DataFrame]): Int = {
-    val spark = routeOn.head.sparkSession
-    val cap = spark.conf.get(SaltBytesKey, (32L << 20).toString).toLong
-    val small = cap > 0 && routeOn.forall(
-      _.queryExecution.optimizedPlan.stats.sizeInBytes <= cap)
-    val s = if (small) 1 else SaltFactor
-    graft.QueryTrace.record(spark, "skew.saltFactor", s)
-    s
   }
 
   /** Top-k hot keys of a column by frequency — use to decide whether

@@ -13,8 +13,6 @@ import graft.streaming.EventStreams
 object Events {
   type Q = (SparkSession, String) => DataFrame
 
-  private val streamGateCounter = new java.util.concurrent.atomic.AtomicInteger
-
   val queries: Map[String, Q] = Map(
     // the STREAMING stateful sessionizer under the driver's gate: a real
     // readStream over the events parquet through flatMapGroupsWithState
@@ -28,24 +26,16 @@ object Events {
     // sum is order-sensitive; session identity and µs boundaries are not).
     "q132_stream_sessionize" -> ((s, d) => {
       import s.implicits._
-      val name = s"stream_sessionize_${streamGateCounter.incrementAndGet()}"
-      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
-      val stream = graft.Tables.adaptEventTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
-      val evts = stream.select("event_id", "user_id", "ts", "value")
-        .as[EventStreams.Evt]
-      val q = EventStreams.withStatePartitions(s, 4) {
-        EventStreams.sessionizeStateful(evts, gapSeconds = 1800)
-          .select("user_id", "session_idx", "n_events", "start", "end")
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).orderBy("user_id", "session_idx")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      val evts = EventStreams.eventsSource(s, d)
+        .select("event_id", "user_id", "ts", "value").as[EventStreams.Evt]
+      EventStreams.drain(s, "stream_sessionize") { name =>
+        EventStreams.withStatePartitions(s, 4) {
+          EventStreams.sessionizeStateful(evts, gapSeconds = 1800)
+            .select("user_id", "session_idx", "n_events", "start", "end")
+            .writeStream.outputMode("append").format("memory")
+            .queryName(name).start()
+        }
+      }(_.orderBy("user_id", "session_idx"))
     }),
     // WATERMARKED streaming tumbling-window aggregation in APPEND mode
     // under the driver gate: only windows the watermark has passed emit,
@@ -56,27 +46,19 @@ object Events {
     // streaming aggregate accumulates in arrival order, which a raw
     // double sum would expose.
     "q141_stream_windowed" -> ((s, d) => {
-      val name = s"stream_windowed_${streamGateCounter.incrementAndGet()}"
-      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
-      val stream = graft.Tables.adaptEventTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
-      val agg = stream
+      val agg = EventStreams.eventsSource(s, d)
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("sum_micros"))
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"), col("sum_micros"))
-      val q = EventStreams.withStatePartitions(s, 4) {
-        agg.writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).orderBy("win_start", "event_type")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      EventStreams.drain(s, "stream_windowed") { name =>
+        EventStreams.withStatePartitions(s, 4) {
+          agg.writeStream.outputMode("append").format("memory")
+            .queryName(name).start()
+        }
+      }(_.orderBy("win_start", "event_type"))
     }),
 
     // hourly tumbling-window aggregate (streaming twin: EventStreams.windowedAgg
@@ -295,11 +277,7 @@ object Events {
     // append-mode under the q141 zero-delay watermark rule; the oracle
     // replays the ESTIMATES bit-for-bit, not just an error bound.
     "q210_stream_distinct_hll" -> ((s, d) => {
-      val name = s"stream_hll_${streamGateCounter.incrementAndGet()}"
-      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
-      val stream = graft.Tables.adaptEventTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
+      val stream = EventStreams.eventsSource(s, d)
       // through the router, whose route is the array Aggregator at EVERY
       // p — measured 1.46× faster than the column form even at this
       // gate's p = 6 (README.md);
@@ -315,18 +293,14 @@ object Events {
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
       val ckpt = GateTmp.dir("graft_ckpt_hll")
-      val q = EventStreams.withStatePartitions(s, 4) {
-        agg.writeStream.outputMode("append").format("memory")
-          .option("checkpointLocation", ckpt.toString)
-          .queryName(name).start()
-      }
-      try q.processAllAvailable() finally {
-        q.stop()
-        org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
-      }
-      val out = s.table(name).orderBy("win_start").localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      try EventStreams.drain(s, "stream_hll") { name =>
+        EventStreams.withStatePartitions(s, 4) {
+          agg.writeStream.outputMode("append").format("memory")
+            .option("checkpointLocation", ckpt.toString)
+            .queryName(name).start()
+        }
+      }(_.orderBy("win_start"))
+      finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }),
 
     // the register HLL past the column-encoding ceiling: p = 10 (1024
@@ -335,11 +309,7 @@ object Events {
     // α, estimates engine-replayed bit-for-bit like q210 — the oracle
     // replays all 1024 registers and the array-ordered Σ2^-M fold.
     "q211_stream_hll_p10" -> ((s, d) => {
-      val name = s"stream_hllp10_${streamGateCounter.incrementAndGet()}"
-      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
-      val stream = graft.Tables.adaptEventTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
+      val stream = EventStreams.eventsSource(s, d)
       // mapWidth: see q210 — same single-partition source, same hot map
       val agg = EventStreams.windowedDistinctHllAuto(stream, "user_id",
         "1 hour", watermark = Some("0 seconds"), p = 10,
@@ -348,18 +318,14 @@ object Events {
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
       val ckpt = GateTmp.dir("graft_ckpt_hll")
-      val q = EventStreams.withStatePartitions(s, 4) {
-        agg.writeStream.outputMode("append").format("memory")
-          .option("checkpointLocation", ckpt.toString)
-          .queryName(name).start()
-      }
-      try q.processAllAvailable() finally {
-        q.stop()
-        org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
-      }
-      val out = s.table(name).orderBy("win_start").localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      try EventStreams.drain(s, "stream_hllp10") { name =>
+        EventStreams.withStatePartitions(s, 4) {
+          agg.writeStream.outputMode("append").format("memory")
+            .option("checkpointLocation", ckpt.toString)
+            .queryName(name).start()
+        }
+      }(_.orderBy("win_start"))
+      finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }),
 
     // STREAM-STREAM interval join (one readStream filtered into two sides,
@@ -370,16 +336,12 @@ object Events {
     // lets the state store EVICT (rows past watermark+tolerance can never
     // match) — the piece a 100 TB-per-day dual-stream correlation needs.
     "q212_stream_interval_join" -> ((s, d) => {
-      val name = s"stream_ivj_${streamGateCounter.incrementAndGet()}"
-      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
       // ONE shared source (r19, the q215 shape): both sides filter the
       // same rows post-source, so a streaming self-join over one source
       // replaces two independent sources — halving per-micro-batch file
       // listing/offset tracking. Rows, watermarks and emitted pairs are
       // unchanged (oracle-verified).
-      val src = graft.Tables.adaptEventTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
+      val src = EventStreams.eventsSource(s, d)
       val clicks = src.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val views = src.filter(col("event_type") === "view")
@@ -393,14 +355,12 @@ object Events {
       // 32×4 HDFS-backed stores is pure per-micro-batch overhead at gate
       // scale (measured 10.2 s → 3.0 s at 4). A production deployment
       // sizes this to state volume, not compute parallelism.
-      val q = EventStreams.withStatePartitions(s, 4) {
-        joined.writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).orderBy("click_id", "view_id").localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      EventStreams.drain(s, "stream_ivj") { name =>
+        EventStreams.withStatePartitions(s, 4) {
+          joined.writeStream.outputMode("append").format("memory")
+            .queryName(name).start()
+        }
+      }(_.orderBy("click_id", "view_id"))
     }),
 
     // stream-static enrichment: each event decorated from the customer
@@ -408,22 +368,16 @@ object Events {
     // threshold — the slowly-changing-dimension shape). Stateless, so no
     // watermark and every row emits.
     "q213_stream_enrich" -> ((s, d) => {
-      val name = s"stream_enrich_${streamGateCounter.incrementAndGet()}"
-      val schema = graft.Tables.read(s, s"$d/events.parquet").schema
-      val stream = graft.Tables.adaptEventTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d))
+      val stream = EventStreams.eventsSource(s, d)
         .select("event_id", "user_id", "value")
       val dim = graft.Tables(s, d).customer
         .select(col("c_custkey").as("user_id"), col("c_name"),
           col("c_mktsegment"))
-      val q = EventStreams.enrich(stream, dim, Seq("user_id"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).orderBy("event_id").localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      EventStreams.drain(s, "stream_enrich") { name =>
+        EventStreams.enrich(stream, dim, Seq("user_id"))
+          .writeStream.outputMode("append").format("memory")
+          .queryName(name).start()
+      }(_.orderBy("event_id"))
     }),
 
     // stream-stream LEFT OUTER interval join — the semantics q212's inner
@@ -437,7 +391,6 @@ object Events {
     // which the emitted set equals the batch LEFT JOIN, which is the
     // oracle. Sentinel rows are filtered out of the output by user_id.
     "q215_stream_outer_interval" -> ((s, d) => {
-      val name = s"stream_oivj_${streamGateCounter.incrementAndGet()}"
       val root = GateTmp.dir("graft_oivj")
       try {
         // the corpus streams straight from the test data (no temp-dir
@@ -495,7 +448,7 @@ object Events {
           .select(col("event_id").as("click_id"),
             col("event_id_r").as("view_id"), col("user_id"),
             col("ts").as("click_ts"), col("ts_r").as("view_ts"))
-        val q = EventStreams.withStatePartitions(s, 4) {
+        def start(name: String) = EventStreams.withStatePartitions(s, 4) {
           // explicit checkpoint on the gate's (tmpfs-preferring) root: the
           // memory sink's implicit temp checkpoint lands on java.io.tmpdir,
           // which on a contended-disk box measures the disk, not the join
@@ -503,7 +456,7 @@ object Events {
             .option("checkpointLocation", s"$root/ckpt")
             .queryName(name).start()
         }
-        try {
+        def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
           q.processAllAvailable()
           val mx = ev.agg(max("ts")).collect()(0).getTimestamp(0) // one row
           import s.implicits._
@@ -544,12 +497,9 @@ object Events {
             q.processAllAvailable()
           }
           if (!evictionBatchRan) writeSentinel(96)
-        } finally q.stop()
-        val out = s.table(name).filter(col("user_id") >= 0)
-          .orderBy("click_id", "view_id")
-          .localCheckpoint(true)
-        s.catalog.dropTempView(name)
-        out
+        }
+        EventStreams.drain(s, "stream_oivj", run)(start)(
+          _.filter(col("user_id") >= 0).orderBy("click_id", "view_id"))
       } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     })
   )

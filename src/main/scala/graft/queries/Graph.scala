@@ -237,15 +237,11 @@ object Graph {
         Seq("a", "b", "c"))
         .filter(col("a") < col("b") && col("a") < col("c"))
         .agg(count(lit(1)).as("n_triangles"))
-      val prev = s.conf.getOption("graft.wcoj.singleCellBytes")
       // the exec reads the conf when its routing runs: count under it
-      val (n, trace) = try {
-        s.conf.set("graft.wcoj.singleCellBytes", "0")
-        QueryTrace.run(s)(tri.collect()(0).getLong(0)) // one row
-      } finally prev match {
-        case Some(v) => s.conf.set("graft.wcoj.singleCellBytes", v)
-        case None => s.conf.unset("graft.wcoj.singleCellBytes")
-      }
+      val (n, trace) =
+        graft.SessionDefaults.withConf(s, "graft.wcoj.singleCellBytes" -> "0") {
+          QueryTrace.run(s)(tri.collect()(0).getLong(0)) // one row
+        }
       val ran = wcojRouteOf(tri) == "leapfrog"
       val cells = trace.get("wcoj.cells").fold(0)(_.toInt)
       val route = if (!ran) "binary" else if (cells > 1) "hypercube" else "single-cell"

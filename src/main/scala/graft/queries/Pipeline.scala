@@ -17,7 +17,7 @@ import graft.operators.Similarity.{Frame, Ivf, IvfMass, IvfStore, Lsh, Pq,
 object Pipeline {
   type Q = (SparkSession, String) => DataFrame
 
-  /** [[graft.Tables.spreadScan]] over the documents table (see that scaladoc
+  /** [[graft.Small.spread]] over the documents table (see that scaladoc
     * for the scale rule): applied only to gates whose scan-stage text map —
     * tokenize / shingle / hash, serialized on the single-row-group bench
     * file — measured as the hot phase in the r18 interleaved A/B probe
@@ -25,7 +25,7 @@ object Pipeline {
     * gates that keep the plain scan).
     */
   private def docsSpread(s: SparkSession, d: String): DataFrame =
-    graft.Tables.spreadScan(Tables(s, d).documents, "doc_id")
+    graft.Small.spread(Tables(s, d).documents, "doc_id")
 
   /** The fixed probe count of the IVF envelope gates (q184, q188, q198):
     * `frac` of the measured centroid cells (ids ≡ 0 mod 100), at least 3 —
@@ -138,8 +138,6 @@ object Pipeline {
        |  * (1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))::DOUBLE / greatest(length(text), 1))
        |  * (0.5 + 0.5 * ${stopRatioSql(TextFunctions.LangProfiles.en)}), 6)""".stripMargin
 
-  private val streamGateCounter = new java.util.concurrent.atomic.AtomicInteger
-
   /* ---------- queries ---------- */
 
   val queries: Map[String, Q] = Map(
@@ -217,7 +215,7 @@ object Pipeline {
     }),
 
     // char-3-gram Jaccard near-dup pairs, blocked on (lang, n_chars).
-    // spreadScan: the char-3-gram explode is the gate's hot map (r18).
+    // docsSpread: the char-3-gram explode is the gate's hot map (r18).
     "q57_ngram_jaccard" -> ((s, d) => {
       Dedup.ngramJaccard(docsSpread(s, d), "text", "doc_id",
           blockCols = Seq("lang", "n_chars"), n = 3, threshold = 0.3)
@@ -1197,7 +1195,6 @@ object Pipeline {
     // the surviving fingerprint SET is not — that set must equal the batch
     // pipeline's, which DuckDB recomputes from the table.
     "q100_stream_curation" -> ((s, d) => {
-      val name = s"stream_curation_${streamGateCounter.incrementAndGet()}"
       val schema = Tables.read(s, s"$d/documents.parquet").schema
       // the file source wants a directory: stream the sf dir, glob-filtered
       // to the documents table
@@ -1213,16 +1210,10 @@ object Pipeline {
       // the same state file traffic and benched 35% slower)
       val curated = graft.streaming.DocStreams.curateStream(stream, minQuality = 0.2)
         .select("fp")
-      val q = curated.writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      // pin the small fp set, then drop the memory-sink table so repeated
-      // invocations (bench passes) don't pin every run's rows for the
-      // session lifetime
-      val out = s.table(name).select("fp").distinct().orderBy("fp")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      graft.streaming.EventStreams.drain(s, "stream_curation") { name =>
+        curated.writeStream.outputMode("append").format("memory")
+          .queryName(name).start()
+      }(_.select("fp").distinct().orderBy("fp"))
     }),
 
     // END-TO-END curation pipeline, composed from the operators above:
@@ -1344,7 +1335,7 @@ object Pipeline {
     // asymmetric shingle containment |A∩B|/|A| ≥ 0.6 over discriminative
     // (df ≤ 50) 5-token shingles — the quote/subset relation Jaccard
     // resemblance misses; inverted-index join, per-shingle work ≤ df².
-    // spreadScan probed and NOT taken here (r18): 0.96× — the gate's cost
+    // docsSpread probed and NOT taken here (r18): 0.96× — the gate's cost
     // is the containment band join, not the scan-stage shingle map.
     "q167_containment" -> ((s, d) => {
       graft.operators.Dedup.shingleContainment(
@@ -1693,27 +1684,20 @@ object Pipeline {
     }),
 
     // the byte-budget broadcast guard under the hard gate: same ranking as
-    // q58, but with the sim broadcast budget forced to 0 so the query side
+    // q58, but with the small-input cap (graft.Small.Key) at 0 so the query side
     // CANNOT be broadcast — budgetedCross must take the shuffle-replicated
     // nested-loop route, and the route actually taken is emitted as a
     // column so a silent fall-back to broadcast hash-mismatches the
     // oracle's 'shuffle' literal (the q186 pattern).
     "q200_ann_shuffle_route" -> ((s, d) => {
-      val prev = s.conf.getOption("graft.sim.broadcastBudgetBytes")
-      try {
-        s.conf.set("graft.sim.broadcastBudgetBytes", "0")
+      graft.SessionDefaults.withConf(s, graft.Small.Key -> "0") {
         val e = Tables(s, d).embeddings
         // routing happens eagerly inside budgetedCross (the side is
-        // measured at plan build), so the trace holds the route on return
+        // sized at plan build), so the trace holds the route on return
         val (top, trace) = QueryTrace.run(s)(Similarity.topK(
           e.filter(col("vec_id") < 5), Frame(e), "embedding", "vec_id", k = 10))
         val route = trace.get("sim.route").getOrElse("unset")
         top.withColumn("route", lit(route)).orderBy("query_id", "rank")
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("graft.sim.broadcastBudgetBytes", v)
-          case None => s.conf.unset("graft.sim.broadcastBudgetBytes")
-        }
       }
     }),
 
@@ -1911,22 +1895,18 @@ object Pipeline {
     // DISTINCT signature set (arrival order within a micro-batch is not
     // deterministic; the set is — the q100 rule).
     "q205_stream_near_dedup" -> ((s, d) => {
-      val name = s"stream_near_dedup_${streamGateCounter.incrementAndGet()}"
       val schema = Tables.read(s, s"$d/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
         .withColumn("ts", expr("timestamp_seconds(1704067200 + doc_id % 300)"))
       val deduped = graft.streaming.DocStreams.simhashDedupStream(stream)
         .select("simhash")
-      val q = graft.streaming.EventStreams.withStatePartitions(s, 4) {
-        deduped.writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).select("simhash").distinct().orderBy("simhash")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
+      graft.streaming.EventStreams.drain(s, "stream_near_dedup") { name =>
+        graft.streaming.EventStreams.withStatePartitions(s, 4) {
+          deduped.writeStream.outputMode("append").format("memory")
+            .queryName(name).start()
+        }
+      }(_.select("simhash").distinct().orderBy("simhash"))
     }),
 
     // cluster-outlier pruning (the LAION/DataComp far-from-centroid noise

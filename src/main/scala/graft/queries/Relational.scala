@@ -686,9 +686,7 @@ object Relational {
         col("o_totalprice")), "cb_orders", Seq("o_custkey"), 8)
       es.writeBucketed(t.customer.select(col("c_custkey"), col("c_mktsegment")),
         "cb_customer", Seq("c_custkey"), 8)
-      val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.SessionDefaults.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = s.table("cb_orders")
           .join(s.table("cb_customer"), col("o_custkey") === col("c_custkey"))
           .groupBy("c_custkey")
@@ -698,7 +696,7 @@ object Relational {
           if (j.queryExecution.executedPlan.toString.contains("Exchange")) "shuffled"
           else "colocated"
         j.withColumn("layout", lit(layout)).localCheckpoint(true)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      }
     }),
 
     // CBO estimation ACCURACY on the reference's controlled-cardinality
@@ -717,7 +715,6 @@ object Relational {
       val t = Tables(s, d)
       val es = new graft.api.EngineSession(s)
       import s.implicits._
-      val prevCbo = s.conf.get("spark.sql.cbo.enabled", "false")
       val tables = Seq(
         ("q239_lineitem", t.lineitem.select("l_orderkey", "l_suppkey", "l_partkey"),
           Seq("l_orderkey", "l_suppkey", "l_partkey")),
@@ -740,19 +737,19 @@ object Relational {
           df.write.mode("overwrite").option("path", s"$root/$n").saveAsTable(n)
           es.analyzeTable(n, cols) // FOR COLUMNS computes row count + NDVs
         }
-        s.conf.set("spark.sql.cbo.enabled", "true")
-        def shapeRow(shape: String, sql: String) = {
-          val df = s.sql(sql)
-          // plan stats read SQLConf.get, the conf of the thread's ACTIVE
-          // session: evaluate them under this gate's session, whichever
-          // session the caller has active
-          val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(
-            s.sessionState.conf)(df.queryExecution.optimizedPlan.stats.rowCount)
-          val exact = df.count()
-          val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
-          (shape, exact, est.isDefined,
-            ratio.exists(r => r >= 0.25 && r <= 4.0))
-        }
+        def shapeRow(shape: String, sql: String) =
+          graft.SessionDefaults.withConf(s, "spark.sql.cbo.enabled" -> "true") {
+            val df = s.sql(sql)
+            // plan stats read SQLConf.get, the conf of the thread's ACTIVE
+            // session: evaluate them under this gate's session, whichever
+            // session the caller has active
+            val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(
+              s.sessionState.conf)(df.queryExecution.optimizedPlan.stats.rowCount)
+            val exact = df.count()
+            val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
+            (shape, exact, est.isDefined,
+              ratio.exists(r => r >= 0.25 && r <= 4.0))
+          }
         // W1 star: fact ⨝ three PK dims on distinct FKs
         val star = shapeRow("star",
           """SELECT * FROM q239_lineitem
@@ -769,7 +766,6 @@ object Relational {
           .toDF("shape", "exact_rows", "est_defined", "within_band")
           .orderBy("shape")
       } finally {
-        s.conf.set("spark.sql.cbo.enabled", prevCbo)
         tables.foreach { case (n, _, _) => s.sql(s"DROP TABLE IF EXISTS $n") }
         org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
       }
@@ -872,10 +868,10 @@ object Relational {
       val es = new graft.api.EngineSession(s)
       val sets = Seq(Seq("l_orderkey"), Seq("l_orderkey", "l_linenumber"),
         Seq("l_returnflag", "l_linestatus"), Seq("l_suppkey"))
-      // spreadScan (r18): the multi-countDistinct plans as an Expand that
+      // Small.spread (r18): the multi-countDistinct plans as an Expand that
       // multiplies the 600 k-row scan ×4 INSIDE the single-task scan stage
       val cards = es.fullCardinality(
-        graft.Tables.spreadScan(t.lineitem, "l_orderkey"), sets)
+        graft.Small.spread(t.lineitem, "l_orderkey"), sets)
       val rows = sets.map(set => (set.mkString(","), cards(set)))
       import s.implicits._
       rows.toDF("attrs", "card").orderBy("attrs")

@@ -202,16 +202,11 @@ object DocStreams {
     // the other, or clobbering a conf set elsewhere in the window. The
     // session's monitor makes the whole toggle window exclusive per
     // session (different sessions still run fully in parallel): a comment
-    // documented this contract before, nothing enforced it. Restore writes
-    // back the pre-toggle EFFECTIVE value — for a registered SQL conf the
-    // public RuntimeConfig API cannot distinguish "unset" from "set to the
-    // default", and the effective semantics are identical either way.
-    val aqeKey = "spark.sql.adaptive.enabled"
+    // documented this contract before, nothing enforced it.
     aqeLockFor(spark).synchronized {
-      val aqeWas = spark.conf.get(aqeKey, "true")
-      spark.conf.set(aqeKey, "false")
-      try upsertBatchNoAqe(batch, tablePath, keyCol, versionCol, buckets)
-      finally spark.conf.set(aqeKey, aqeWas)
+      graft.SessionDefaults.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+        upsertBatchNoAqe(batch, tablePath, keyCol, versionCol, buckets)
+      }
     }
   }
 

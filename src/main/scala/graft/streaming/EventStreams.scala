@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming surface over the `events` table shape
@@ -28,11 +28,41 @@ object EventStreams {
     * commits in parallel across cores can get SLOWER when serialized onto
     * fewer stores (q100 measured 35% slower at n = 8); measure per query.
     */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+    graft.SessionDefaults.withConf(spark,
+      "spark.sql.shuffle.partitions" -> n.toString)(body)
+
+  /** The events table under `d` as a file stream: the sf directory,
+    * glob-filtered to `events.parquet` (the file source wants a
+    * directory), read with the batch table's schema and its `ts`
+    * normalized by [[graft.Tables.adaptEventTs]].
+    */
+  def eventsSource(s: SparkSession, d: String): DataFrame =
+    graft.Tables.adaptEventTs(
+      s.readStream.schema(graft.Tables.read(s, s"$d/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet").parquet(d))
+
+  private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Runs a memory-sink stream and returns what it wrote, pinned.
+    * `start(name)` starts the query into the memory sink `name` (unique per
+    * call, `<prefix>_<n>`); `run` drives it (default: everything available
+    * now); the query stops; `readBack` shapes the sink's table, which a
+    * local checkpoint pins. The query stops and the sink's temp view is
+    * dropped however `run` ends, so a failed stream leaves nothing
+    * registered on the session and repeated passes pin no earlier pass's
+    * rows.
+    */
+  def drain(s: SparkSession, prefix: String,
+      run: StreamingQuery => Unit = _.processAllAvailable())(
+      start: String => StreamingQuery)(
+      readBack: DataFrame => DataFrame): DataFrame = {
+    val name = s"${prefix}_${sinkCounter.incrementAndGet()}"
+    try {
+      val q = start(name)
+      try run(q) finally q.stop()
+      readBack(s.table(name)).localCheckpoint(true)
+    } finally s.catalog.dropTempView(name): Unit
   }
 
   /** Streaming reader over a parquet directory with the events schema. */

@@ -98,6 +98,31 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(r.get("env").get("tmp_base").asText === "/dev/shm")
   }
 
+  test("passEntry: a pass keeps its wall seconds and its string route attributes") {
+    val work = QueryTrace.Totals(jobs = 3, tasks = 8, taskSeconds = 0.31234,
+      spilledBytes = 0, shuffleBytes = 2048, peakExecutionBytes = 1024)
+    val e = Bench.passEntry(1.23456, Seq("cycle1" -> 0.12345),
+      Seq("wcoj.cells" -> "4", "sim.route" -> "shuffle", "prefix.route" -> "window",
+        "cos" -> "0.5"), work)
+    assert(e.keys.toList === List("s", "cycle1", "wcoj.cells", "sim.route",
+      "prefix.route", "cos", "jobs", "tasks", "task_s", "spill_bytes",
+      "shuffle_bytes", "peak_exec_bytes"))
+    assert(e("s") === 1.235)
+    assert(e("cycle1") === 0.123)
+    assert(e("wcoj.cells") === 4L)
+    assert(e("cos") === 0.5)
+    assert(e("sim.route") === "shuffle")
+    assert(e("prefix.route") === "window")
+    assert(e("task_s") === 0.312)
+    // and it reaches the record as JSON of the same types
+    val (record, _) = Bench.report(Map("q" -> Seq(1.23456)), Map.empty,
+      Map("q" -> Seq(e)), runs = 1, sfDir = "/x", env = Map.empty, recordFile = "/tmp/b.json")
+    val pass = mapper.readTree(record).get("phases").get("q").get(0)
+    assert(pass.get("s").asDouble === 1.235)
+    assert(pass.get("sim.route").asText === "shuffle")
+    assert(pass.get("wcoj.cells").isIntegralNumber)
+  }
+
   test("SessionDefaults carries the promoted engine confs for every entry point") {
     // VERDICT r18 #2: the r18 session confs must live in ONE shared home
     // consumed by Bench, Verify and EngineSession — this pins the contents;

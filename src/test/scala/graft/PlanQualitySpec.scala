@@ -7,11 +7,11 @@ package graft
 class PlanQualitySpec extends SparkSpec {
 
   // the pinned prefix/rank shapes are the DISTRIBUTED ones: disable the
-  // measured-small-input routing (Packing.singleTaskOk) that would
+  // measured-small-input routing (graft.Small.byEstimate) that would
   // otherwise give sf0.001 inputs their plain-window twin — per test, so
   // the conf does not outlive this suite on the shared session
   override def withFixture(test: NoArgTest) =
-    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
+    withConf(graft.Small.Key -> "0")(super.withFixture(test))
 
   private def executedPlan(q: String): String = {
     val df = SparkEntry.queries(q)(spark, sf0001)

@@ -271,7 +271,7 @@ class RandomDifferentialSpec extends SparkSpec {
         (i, "g" + rnd.nextInt(1 + rnd.nextInt(6)), rnd.nextInt(50).toLong)
       }.toDF("id", "grp", "v")
       def ranks(cap: String): Set[(Long, String, Long)] = {
-        withConf("graft.prefix.singleTaskBytes" -> cap)(graft.operators.Packing
+        withConf(graft.Small.Key -> cap)(graft.operators.Packing
           .groupRunningTotals(rows, "grp", "id", col("v"), 8)
           .select("doc_id", "grp", "cum").as[(Long, String, Long)].collect().toSet)
       }

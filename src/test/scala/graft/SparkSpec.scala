@@ -23,16 +23,8 @@ trait SparkSpec extends AnyFunSuite {
     * shares one session in one JVM, so a conf a spec leaves set would leak
     * into every later suite.
     */
-  def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prior = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withConf[A](pairs: (String, String)*)(body: => A): A =
+    SessionDefaults.withConf(spark, pairs: _*)(body)
 
   /** Persisted RDDs in the block store, polled until async unpersists bring
     * the count to at most `expected` or about 4 s pass.

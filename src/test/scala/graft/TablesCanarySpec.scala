@@ -72,38 +72,37 @@ class TablesCanarySpec extends SparkSpec {
       3L -> 1700009876543210L, 4L -> 1700001111222333L))
   }
 
-  test("spreadScan widens a narrow scan, is the identity when wide") {
+  test("Small.spread widens a small scan by estimate, is the identity over the cap") {
     // r18: parquet splits cannot subdivide a row group, so a single-file
-    // table serializes its scan-stage map on one core; spreadScan hash-
-    // repartitions ONLY when the scan carries < half the cluster width.
+    // table serializes its scan-stage map on one core; Small.spread hash-
+    // repartitions a scan whose size estimate is within the cap
     val docs = t.documents
-    assert(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
+    val width = spark.sessionState.conf.numShufflePartitions
+    assert(docs.rdd.getNumPartitions < width,
       "precondition: the sf0.001 documents scan must be narrow")
-    val spread = Tables.spreadScan(docs, "doc_id")
-    assert(spread.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
+    val spread = Small.spread(docs, "doc_id")
+    assert(spread.rdd.getNumPartitions === width)
     // values are the table's, untouched (count + id sum — order-free)
     import org.apache.spark.sql.functions._
     val (a, b) = (docs.agg(count(lit(1)), sum("doc_id")).head(),
       spread.agg(count(lit(1)), sum("doc_id")).head())
     assert(a === b)
-    // already-wide input: identity (the 100 TB posture — no extra shuffle)
-    val wide = docs.repartition(spark.sparkContext.defaultParallelism * 2)
-    assert(Tables.spreadScan(wide, "doc_id") eq wide)
+    // over the cap (the 100 TB posture: many splits already): identity
+    withConf(Small.Key -> "0")(assert(Small.spread(docs, "doc_id") eq docs))
+    withConf(Small.Key -> "1")(assert(Small.spread(docs, "doc_id") eq docs))
   }
 
-  test("spreadScan re-reads the width after the files are rewritten") {
-    // a parquet path's analyzed plan does not change when its files are
-    // rewritten, so a width cached on that plan went stale
+  test("Small.spread re-reads the estimate after the files are rewritten") {
+    // each read of the path sizes its files as they are now, so the
+    // decision follows a rewrite instead of keeping the first answer
     val dir = java.nio.file.Files.createTempDirectory("spread_rewrite").toString
-    val width = spark.sparkContext.defaultParallelism
-    try {
+    try withConf(Small.Key -> (64L << 10).toString) {
       spark.range(100).coalesce(1).write.mode("overwrite").parquet(dir)
-      val narrow = spark.read.parquet(dir)
-      assert(Tables.spreadScan(narrow, "id") ne narrow)
-      spark.range(100).repartition(2 * width).write.mode("overwrite").parquet(dir)
-      val wide = spark.read.parquet(dir)
-      assert(wide.rdd.getNumPartitions * 2 > width, "precondition: the rewrite is wide")
-      assert(Tables.spreadScan(wide, "id") eq wide)
+      val small = Tables.read(spark, dir)
+      assert(Small.spread(small, "id") ne small)
+      spark.range(400000).coalesce(1).write.mode("overwrite").parquet(dir)
+      val large = Tables.read(spark, dir)
+      assert(Small.spread(large, "id") eq large)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -2138,10 +2138,10 @@ class MutualKnnSpec extends graft.SparkSpec {
       "embedding", "vec_id", k = 3)
       .select("a", "b", "cos").as[(Long, Long, Double)].collect().toSet)
     val (shuffled, viaShuffle) =
-      withConf("graft.sim.broadcastBudgetBytes" -> "1")(run())
+      withConf(graft.Small.Key -> "1")(run())
     assert(viaShuffle("sim.route") === "shuffle")
     val (bcast, viaBroadcast) =
-      withConf("graft.sim.broadcastBudgetBytes" -> (64L << 20).toString)(run())
+      withConf(graft.Small.Key -> Long.MaxValue.toString)(run())
     assert(viaBroadcast("sim.route") === "broadcast")
     assert(shuffled === bcast)
   }

@@ -8,10 +8,10 @@ class PackingSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // (graft.Small.byEstimate) must not collapse both sides to one plan — per
   // test, so the conf does not outlive this suite on the shared session
   override def withFixture(test: NoArgTest) =
-    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
+    withConf(graft.Small.Key -> "0")(super.withFixture(test))
 
   test("packShards distributed prefix sum matches the naive global window") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -129,10 +129,10 @@ class PackingPropertySpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // (graft.Small.byEstimate) must not collapse both sides to one plan — per
   // test, so the conf does not outlive this suite on the shared session
   override def withFixture(test: NoArgTest) =
-    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
+    withConf(graft.Small.Key -> "0")(super.withFixture(test))
 
   test("random docs: distributed == naive for random budgets/partitions; shards monotone") {
     val rnd = new scala.util.Random(42)
@@ -263,10 +263,10 @@ class LengthBucketSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // (graft.Small.byEstimate) must not collapse both sides to one plan — per
   // test, so the conf does not outlive this suite on the shared session
   override def withFixture(test: NoArgTest) =
-    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
+    withConf(graft.Small.Key -> "0")(super.withFixture(test))
   import org.apache.spark.sql.functions._
 
   private def naive(df: org.apache.spark.sql.DataFrame, bucketSize: Int,
@@ -309,10 +309,10 @@ class TokenQuotaSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // (graft.Small.byEstimate) must not collapse both sides to one plan — per
   // test, so the conf does not outlive this suite on the shared session
   override def withFixture(test: NoArgTest) =
-    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
+    withConf(graft.Small.Key -> "0")(super.withFixture(test))
   import org.apache.spark.sql.functions._
 
   test("groupRunningTotals matches the naive group window on random data") {
@@ -403,10 +403,10 @@ class StratifiedSplitSpec extends SparkSpec {
   import spark.implicits._
   // force the distributed two-phase shape: these suites differential-test
   // it against the naive window twin, so the measured-small-input routing
-  // (Packing.singleTaskOk) must not collapse both sides to one plan — per
+  // (graft.Small.byEstimate) must not collapse both sides to one plan — per
   // test, so the conf does not outlive this suite on the shared session
   override def withFixture(test: NoArgTest) =
-    withConf("graft.prefix.singleTaskBytes" -> "0")(super.withFixture(test))
+    withConf(graft.Small.Key -> "0")(super.withFixture(test))
   import org.apache.spark.sql.functions._
 
   private lazy val rows = (1L to 237L).map(i => (i, s"lang${i % 4}"))
@@ -483,7 +483,7 @@ class PrefixRoutingSpec extends SparkSpec {
 
   // each phase here sets the cap it needs explicitly
   private def withCap[T](v: String)(f: => T): T =
-    withConf("graft.prefix.singleTaskBytes" -> v)(f)
+    withConf(graft.Small.Key -> v)(f)
 
   lazy val rows = (1L to 300L).map(i => (i, s"g${i % 3}")).toDF("id", "grp")
 

@@ -17,7 +17,7 @@ class SkewSaltSpec extends graft.SparkSpec {
   import spark.implicits._
 
   private def forcedSalt[A](f: => A): A =
-    withConf(Skew.SaltBytesKey -> "0")(f)
+    withConf(graft.Small.Key -> "0")(f)
 
   // one HOT cell: every vector points near +x, so the deterministic
   // centroid subset (ids ≡ 0 mod 100 → centroid 0 and 100) assigns
@@ -35,7 +35,7 @@ class SkewSaltSpec extends graft.SparkSpec {
       col("embedding").as("v2"))
     def run() = QueryTrace.run(spark)(Skew.saltedJoin(l, r, Seq("blk"), "id1")
       .select("id1", "id2").as[(Long, Long)].collect().toSet)
-    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString) {
+    val plain = withConf(graft.Small.Key -> Long.MaxValue.toString) {
       val (out, trace) = run()
       assert(trace("skew.saltFactor") === "1")
       out
@@ -79,7 +79,7 @@ class SkewSaltSpec extends graft.SparkSpec {
   }
 
   test("mutualKnnIvf on a hot-cell corpus: salted route, result identical to plain") {
-    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString) {
+    val plain = withConf(graft.Small.Key -> Long.MaxValue.toString) {
       Similarity.mutualKnnIvf(hotCell, "embedding", "vec_id", k = 3)
         .as[(Long, Long, Double)].collect().toSet
     }
@@ -96,7 +96,7 @@ class SkewSaltSpec extends graft.SparkSpec {
   test("semDedup on a hot-cluster corpus: salted route, verdicts identical to plain") {
     // k = 2 clusters over a corpus that is one semantic mode: nearly all
     // rows share a cluster, the exact shape SemDeDup exists for
-    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString) {
+    val plain = withConf(graft.Small.Key -> Long.MaxValue.toString) {
       Dedup.semDedup(hotCell, "embedding", "vec_id", k = 2, iters = 2,
         threshold = 0.9999).as[(Long, Int, Boolean)].collect().toSet
     }
@@ -117,13 +117,11 @@ class SkewSaltSpec extends graft.SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet)
     val (viaBroadcast, bcast) = run()
     assert(bcast("sim.cellRoute").startsWith("broadcast"))
-    val viaSalt = withConf("graft.sim.broadcastBudgetBytes" -> "0") {
-      forcedSalt {
-        val (out, trace) = run()
-        assert(trace("sim.cellRoute") === "salted")
-        assert(trace("skew.saltFactor") === Skew.SaltFactor.toString)
-        out
-      }
+    val viaSalt = forcedSalt {
+      val (out, trace) = run()
+      assert(trace("sim.cellRoute") === "salted")
+      assert(trace("skew.saltFactor") === Skew.SaltFactor.toString)
+      out
     }
     assert(viaSalt === viaBroadcast)
     assert(viaBroadcast.nonEmpty)
@@ -139,12 +137,10 @@ class SkewSaltSpec extends graft.SparkSpec {
         Pq(m = 4, codebook = 8, iters = 2))
       .as[(Long, Long, Double, Int)].collect().toSet)
     val (viaBroadcast, _) = run()
-    val viaSalt = withConf("graft.sim.broadcastBudgetBytes" -> "0") {
-      forcedSalt {
-        val (out, trace) = run()
-        assert(trace("sim.cellRoute") === "salted")
-        out
-      }
+    val viaSalt = forcedSalt {
+      val (out, trace) = run()
+      assert(trace("sim.cellRoute") === "salted")
+      out
     }
     assert(viaSalt === viaBroadcast)
     assert(viaBroadcast.nonEmpty)
@@ -171,7 +167,7 @@ class SkewSaltSpec extends graft.SparkSpec {
     val blocked = hotCell.withColumn("blk", lit(1L))
     def run() = Dedup.embeddingNearDup(blocked, "embedding", "vec_id",
       "blk", threshold = 0.999).as[(Long, Long, Double)].collect().toSet
-    val plain = withConf(Skew.SaltBytesKey -> Long.MaxValue.toString)(run())
+    val plain = withConf(graft.Small.Key -> Long.MaxValue.toString)(run())
     val salted = forcedSalt(run())
     assert(salted === plain)
     assert(plain.nonEmpty)

@@ -478,4 +478,35 @@ class EventStreamsSpec extends SparkSpec {
       assert(viaFallback.nonEmpty)
     }
   }
+
+  test("drain: a stream whose batch throws stops and leaves no temp view behind") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    def memoryStream() =
+      MemoryStream[Int](org.apache.spark.sql.Encoders.scalaInt, spark.sqlContext)
+    val in = memoryStream()
+    in.addData(1, 2, 3)
+    val boom = udf { (i: Int) =>
+      if (i == 2) throw new IllegalStateException("boom")
+      i
+    }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStreams.drain(spark, "stream_boom") { name =>
+        in.toDF().select(boom(col("value")).as("v"))
+          .writeStream.outputMode("append").format("memory")
+          .queryName(name).start()
+      }(identity)
+    }
+    assert(!spark.catalog.listTables().collect()
+      .exists(t => t.isTemporary && t.name.startsWith("stream_boom")))
+    assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith("stream_boom"))))
+    // and a stream that succeeds returns its rows, pinned, with its view gone
+    val ok = memoryStream()
+    ok.addData(3, 1, 2)
+    val out = EventStreams.drain(spark, "stream_ok") { name =>
+      ok.toDF().writeStream.outputMode("append").format("memory")
+        .queryName(name).start()
+    }(_.orderBy("value"))
+    assert(out.as[Int].collect().toSeq === Seq(1, 2, 3))
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("stream_ok")))
+  }
 }

@@ -14,7 +14,7 @@ import graft.operators.Similarity
   *
   * What it demonstrates, beyond the unit-scale bench:
   *   - the routing machinery FLIPS where it should: the prefix twins go
-  *     window → distributed past `graft.prefix.singleTaskBytes`, the
+  *     window → distributed past `graft.singleTaskBytes` (`graft.Small`), the
   *     edit-distance salt engages at 8 past the same statistic;
   *   - wall time grows near-linearly for the df/cap-bounded operators —
   *     the blocked/inverted-index shapes do not go quadratic when the
@@ -218,7 +218,6 @@ object ScaleCheck {
         .withColumn("__rn", row_number().over(w)).where(col("__rn") <= 2)
         .groupBy("cent_id").count().agg(max("count")).head().getLong(0)
     }
-    spark.conf.set("graft.skew.saltBytes", "0")
     for (factor <- Seq(1, 10, 50); shape <- Seq("uniform", "hotcell")) {
       val emb0f = if (factor == 1) emb0
         else emb0.crossJoin(spark.range(factor).select(col("id").as("__rep")))
@@ -232,9 +231,13 @@ object ScaleCheck {
       // the whole replica set
       val cap = (2 * e0).toInt
       val t0 = System.nanoTime()
-      val (n, knn) = QueryTrace.run(spark)(graft.operators.Similarity.mutualKnnIvf(
-        emb, "embedding", "vec_id", k = 5, centroidMod = 100, probes = 2,
-        maxCell = cap).count())
+      // the salted route at every factor; the PQ top-k below keeps the
+      // default cap
+      val (n, knn) = graft.SessionDefaults.withConf(spark, graft.Small.Key -> "0") {
+        QueryTrace.run(spark)(graft.operators.Similarity.mutualKnnIvf(
+          emb, "embedding", "vec_id", k = 5, centroidMod = 100, probes = 2,
+          maxCell = cap).count())
+      }
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale] mutual_knn_ivf/$shape%-8s x$factor%-3d " +
         f"rows_in=${e0 * factor}%8d out=$n%9d time=$secs%7.2fs " +
@@ -249,7 +252,6 @@ object ScaleCheck {
         f"rows_in=${e0 * factor}%8d out=$n2%9d time=$secs2%7.2fs " +
         f"maxcell=$mc%7d route=${attr("sim.cellRoute")(pq)}")
     }
-    spark.conf.unset("graft.skew.saltBytes")
 
     // WCOJ triangle enumeration under DISJOINT-COPY scaling: factor
     // disjoint copies of the dense derived graph (node ids offset per
