@@ -25,12 +25,20 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
   * `sim.route`, `sim.cellRoute`, `skew.saltFactor`, `prefix.route`,
   * `cand_corpus`, `cand_batch`, `rounds`). A key recorded twice keeps the
   * later value.
+  *
+  * A [[QueryTrace.run]] inside another also reports to every enclosing
+  * trace still open: its Spark work counts there too and its records land
+  * there too (a later record still wins); its spans stay its own.
   */
-final class QueryTrace private (sc: SparkContext) {
+final class QueryTrace private (sc: SparkContext, private val id: String,
+    outer: Option[QueryTrace]) {
   private val attrs = mutable.LinkedHashMap.empty[String, String]
   private val spanLog = mutable.ArrayBuffer.empty[(String, Double)]
   private val jobs, tasks, runMs, spilled, shuffled, peakExec = new AtomicLong
   @volatile private var open = true
+
+  /** This trace and the traces around it, innermost first. */
+  private def enclosing: List[QueryTrace] = this :: outer.fold(List.empty[QueryTrace])(_.enclosing)
 
   def apply(key: String): String = attrs.synchronized(attrs(key))
   def get(key: String): Option[String] = attrs.synchronized(attrs.get(key))
@@ -68,29 +76,31 @@ object QueryTrace {
   private[graft] val Property = "graft.trace"
 
   /** Runs `body` under a fresh trace bound to the calling thread. A nested
-    * call starts its own trace; the outer one resumes when it returns.
-    * After return the trace takes no more records.
+    * call starts its own trace, which also reports to the enclosing ones
+    * (see [[QueryTrace]]); the outer one resumes when it returns. After
+    * return the trace takes no more records.
     */
   def run[T](spark: SparkSession)(body: => T): (T, QueryTrace) = {
     val sc = spark.sparkContext
-    val trace = new QueryTrace(sc)
-    val id = java.util.UUID.randomUUID().toString
-    listenerOf(sc).traces.put(id, trace)
+    val trace = new QueryTrace(sc, java.util.UUID.randomUUID().toString, current(spark))
+    listenerOf(sc).traces.put(trace.id, trace)
     val outer = sc.getLocalProperty(Property)
-    sc.setLocalProperty(Property, id)
+    sc.setLocalProperty(Property, trace.id)
     try (body, trace)
     finally {
       sc.setLocalProperty(Property, outer)
       trace.open = false
       // queued behind every event the body's jobs posted: the listener
       // counts those first, then forgets the trace
-      GraftSqlBridge.postListenerEvent(sc, Closed(id))
+      GraftSqlBridge.postListenerEvent(sc, Closed(trace.id))
     }
   }
 
-  /** Sets a route attribute on the calling thread's trace; no-op outside one. */
+  /** Sets a route attribute on the calling thread's trace and the open ones around it. */
   def record(spark: SparkSession, key: String, value: Any): Unit =
-    current(spark).foreach(t => t.attrs.synchronized(t.attrs(key) = value.toString))
+    current(spark).foreach(_.enclosing.filter(_.open).foreach { t =>
+      t.attrs.synchronized(t.attrs(key) = value.toString)
+    })
 
   /** Times `body` as a phase of the calling thread's trace. */
   def span[T](spark: SparkSession, name: String)(body: => T): T = {
@@ -135,7 +145,8 @@ object QueryTrace {
   }
 
   /** Sums task metrics per trace: jobs by their local property, tasks by
-    * the trace their stage was submitted under.
+    * the trace their stage was submitted under; each also into the traces
+    * around that one the listener has not forgotten yet.
     */
   private final class Listener extends SparkListener {
     val traces = new ConcurrentHashMap[String, QueryTrace]()
@@ -145,8 +156,11 @@ object QueryTrace {
       Option(props).flatMap(p => Option(p.getProperty(Property)))
         .flatMap(id => Option(traces.get(id)))
 
+    private def counted(t: QueryTrace): List[QueryTrace] =
+      t.enclosing.filter(o => traces.containsKey(o.id))
+
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      traceOf(e.properties).foreach(_.jobs.incrementAndGet())
+      traceOf(e.properties).foreach(counted(_).foreach(_.jobs.incrementAndGet()))
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       traceOf(e.properties).foreach(stages(e.stageInfo.stageId) = _)
@@ -155,7 +169,7 @@ object QueryTrace {
       stages.remove(e.stageInfo.stageId): Unit
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      stages.get(e.stageId).foreach { t =>
+      stages.get(e.stageId).foreach(counted(_).foreach { t =>
         t.tasks.incrementAndGet()
         Option(e.taskMetrics).foreach { m =>
           t.runMs.addAndGet(m.executorRunTime)
@@ -163,7 +177,7 @@ object QueryTrace {
           t.shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           t.peakExec.accumulateAndGet(m.peakExecutionMemory, (a, b) => math.max(a, b))
         }
-      }
+      })
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case Closed(id) =>

@@ -2,9 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.Rounds
+import graft.{Pin, Rounds}
 import PatternParser._
 
 /** Property graph over two DataFrames — the reference's `SeccoGraphFrame`
@@ -159,7 +158,7 @@ final case class PropertyGraph(
     require(round >= 1, "number of round should be greater or equal than 1")
     val init = vertices
       .select(col(idCol).as("id"), expr(initialMessage.getOrElse("null")).as("state"))
-    persisted(edges.withColumnRenamed(srcCol, "__src").withColumnRenamed(dstCol, "__dst")
+    Pin.cached(edges.withColumnRenamed(srcCol, "__src").withColumnRenamed(dstCol, "__dst")
         .repartition(col("__src"))) { edgesBySrc =>
       Rounds.run(init, round) { (state, _) =>
         val msgs = edgesBySrc
@@ -264,7 +263,7 @@ final case class PropertyGraph(
     val outDeg = edges.groupBy(col(srcCol).as("id")).agg(count(lit(1)).as("deg"))
     val ranked = nodes.join(outDeg, Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"), teleport.as("rank"))
-    persisted(edges.select(col(srcCol).as("id"), col(dstCol).as("dst"))
+    Pin.cached(edges.select(col(srcCol).as("id"), col(dstCol).as("dst"))
         .repartition(col("id"))) { e =>
       Rounds.run(ranked, iterations) { (state, _) =>
         val contribs = e.join(state.filter(col("deg") > 0), Seq("id"))
@@ -295,7 +294,7 @@ final case class PropertyGraph(
     *   so round count dominates at scale.
     */
   def connectedComponents(maxIterations: Int = 50, pointerJump: Boolean = true): DataFrame =
-    persisted(undirected) { und =>
+    Pin.cached(undirected) { und =>
       Rounds.run(vertices.select(col(idCol).as("id"), col(idCol).cast("long").as("component")),
           maxIterations, unchanged("component"), pinInit = true) { (state, i) =>
         val nbrMin = und.join(state.withColumnRenamed("id", "a"), Seq("a"))
@@ -332,7 +331,7 @@ final case class PropertyGraph(
     // BOTH sides of the join (directly, and inside winners' counts), so a
     // lazy chain would re-derive each round's state twice per successor —
     // 2^rounds blowup. Materializing keeps every round executed exactly once.
-    persisted(undirected) { und =>
+    Pin.cached(undirected) { und =>
       Rounds.run(vertices.select(col(idCol).as("id"), col(idCol).cast("long").as("lbl")),
           rounds, pinInit = true) { (state, _) =>
         val counts = und.join(state.withColumnRenamed("id", "a"), Seq("a"))
@@ -379,7 +378,7 @@ final case class PropertyGraph(
     // round) would be a wrong answer, so fail loudly instead
     val notConverged = () => new IllegalStateException(
       s"kCore(k=$k) did not converge within $maxRounds rounds ($n vertices still shrinking); raise maxRounds")
-    persisted(undirected) { und =>
+    Pin.cached(undirected) { und =>
       Rounds.run(vertices.select(col(idCol).as("id")), maxRounds, peeled,
           pinInit = true, notConverged = Some(notConverged)) { (keep, _) =>
         und
@@ -396,7 +395,7 @@ final case class PropertyGraph(
     */
   def sssp(source: Column, weightExpr: Option[String] = None, maxIterations: Int = 50): DataFrame = {
     val w = weightExpr.map(expr).getOrElse(lit(1.0))
-    persisted(edges.select(col(srcCol).as("id"), col(dstCol).as("dst"), w.cast("double").as("w"))
+    Pin.cached(edges.select(col(srcCol).as("id"), col(dstCol).as("dst"), w.cast("double").as("w"))
         .repartition(col("id"))) { e =>
       Rounds.run(vertices.select(col(idCol).as("id"),
           when(col(idCol) === source, 0.0).otherwise(lit(Double.PositiveInfinity)).as("dist")),
@@ -423,12 +422,6 @@ final case class PropertyGraph(
     */
   private def unchanged(c: String): Rounds.Stop = Rounds.Scan { (_, next) =>
     next.agg(count(when(col(c) =!= col("prev"), 1))).head().getLong(0) == 0
-  }
-
-  /** `body` over `df` persisted, unpersisted when `body` returns or throws. */
-  private def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(p) finally p.unpersist(false)
   }
 }
 

@@ -63,35 +63,35 @@ object Bpe {
       .select(col("wc"), array_join(transform(
         sequence(lit(1), length(col("w"))),
         i => concat(lit(Stx), substring_index_char(col("w"), i), lit(Etx))), "").as("s"))
-      .localCheckpoint(true)
 
-    var cur = words
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    for (m <- 1 to merges if !exhausted) {
-      val toks = split(
-        call_function("substring", col("s"), lit(2), length(col("s")) - 2),
-        Etx + Stx)
-      val pairIdx = when(size(toks) > 1, sequence(lit(1), size(toks) - 1))
-        .otherwise(array())
-      val top = cur
-        .select(col("wc"), toks.as("t"), explode(pairIdx).as("i"))
-        .select(col("wc"), element_at(col("t"), col("i")).as("left"),
-          element_at(col("t"), col("i") + 1).as("right"))
-        .groupBy("left", "right").agg(sum("wc").as("n"))
-        .orderBy(col("n").desc, col("left").asc, col("right").asc)
-        .limit(1)
-        .as[(String, String, Long)].collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, n) = top.head
-        out += ((m, l, r, n))
-        cur = cur.select(col("wc"),
-          call_function("replace", col("s"),
-            lit(Stx + l + Etx + Stx + r + Etx), lit(Stx + l + r + Etx)).as("s"))
+    graft.Pin.checkpointed(words) { pinned =>
+      var cur = pinned
+      var exhausted = false
+      for (m <- 1 to merges if !exhausted) {
+        val toks = split(
+          call_function("substring", col("s"), lit(2), length(col("s")) - 2),
+          Etx + Stx)
+        val pairIdx = when(size(toks) > 1, sequence(lit(1), size(toks) - 1))
+          .otherwise(array())
+        val top = cur
+          .select(col("wc"), toks.as("t"), explode(pairIdx).as("i"))
+          .select(col("wc"), element_at(col("t"), col("i")).as("left"),
+            element_at(col("t"), col("i") + 1).as("right"))
+          .groupBy("left", "right").agg(sum("wc").as("n"))
+          .orderBy(col("n").desc, col("left").asc, col("right").asc)
+          .limit(1)
+          .as[(String, String, Long)].collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (l, r, n) = top.head
+          out += ((m, l, r, n))
+          cur = cur.select(col("wc"),
+            call_function("replace", col("s"),
+              lit(Stx + l + Etx + Stx + r + Etx), lit(Stx + l + r + Etx)).as("s"))
+        }
       }
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(words)
     out.toSeq.toDF("merge_idx", "left", "right", "n")
   }
 

@@ -33,7 +33,8 @@ object Clustering {
     */
   def kmeans(df: DataFrame, vecCol: String, idCol: String, k: Int,
       iters: Int): DataFrame =
-    run(df, vecCol, idCol, k, iters, releasePin = false)._1
+    // the pin backs the returned assignment frame, so it is never released
+    run(vectors(df, vecCol, idCol, k, iters).localCheckpoint(true), k, iters)._1
 
   /** Fit only: the final k centroids as driver-side arrays (model state —
     * a few KB — for callers that inline them into further expressions, e.g.
@@ -41,7 +42,7 @@ object Clustering {
     */
   def kmeansFit(df: DataFrame, vecCol: String, idCol: String, k: Int,
       iters: Int): Array[Array[Double]] =
-    run(df, vecCol, idCol, k, iters, releasePin = true)._2
+    graft.Pin.checkpointed(vectors(df, vecCol, idCol, k, iters))(run(_, k, iters)._2)
 
   /** Final centroids in long form: (cluster, pos, val) with `pos` 1-based
     * and `val` rounded to 6 decimals.
@@ -50,7 +51,7 @@ object Clustering {
       iters: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    run(df, vecCol, idCol, k, iters, releasePin = true)._2.zipWithIndex.flatMap { case (c, ci) =>
+    kmeansFit(df, vecCol, idCol, k, iters).zipWithIndex.flatMap { case (c, ci) =>
       c.indices.map(p => (ci, p + 1, c(p)))
     }.toSeq.toDF("cluster", "pos", "val")
   }
@@ -163,23 +164,22 @@ object Clustering {
     (proj, vNow)
   }
 
-  /** @param releasePin free the pinned input's checkpoint blocks before
-    *   returning — for the fit/centroids callers, whose result is
-    *   driver-side model state only. `kmeans` keeps the pin: it backs the
-    *   returned assignment frame.
+  /** (vec_id, v) — the frame the callers pin BEFORE anything reads it:
+    * the init collect, every Lloyd round, and the returned assignment must
+    * all see the same rows, and a non-deterministic upstream (sample/uuid)
+    * re-evaluated between them would otherwise seed the fit with vectors
+    * absent from the data.
     */
-  private def run(df: DataFrame, vecCol: String, idCol: String, k: Int,
-      iters: Int, releasePin: Boolean): (DataFrame, Array[Array[Double]]) = {
+  private def vectors(df: DataFrame, vecCol: String, idCol: String, k: Int,
+      iters: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // Pinned BEFORE anything reads it: the init collect, every Lloyd round,
-    // and the returned assignment must all see the same rows, and a
-    // non-deterministic upstream (sample/uuid) re-evaluated between them
-    // would otherwise seed the fit with vectors absent from the data.
-    val pinned = df.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .localCheckpoint(true)
+    df.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
+  }
 
+  /** Lloyd's rounds over `pinned`, a pinned [[vectors]] frame. */
+  private def run(pinned: DataFrame, k: Int,
+      iters: Int): (DataFrame, Array[Array[Double]]) = {
     // init: model state only — k vectors, not the dataset
     var centroids: Array[Array[Double]] = pinned.orderBy("vec_id").limit(k)
       .select("v").collect()
@@ -217,7 +217,6 @@ object Clustering {
       means.foreach { case (c, p, m) => next(c)(p) = m }
       centroids = next
     }
-    if (releasePin) org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(pinned)
     (assigned.select("vec_id", "cluster"), centroids)
   }
 }

@@ -177,21 +177,15 @@ object Dedup {
     // (doc_id, tids): distinct token-id set per doc, persisted because it
     // feeds both the signature computation and both sides of the
     // verification join. Small relative to the corpus (ids, not text).
-    val base = shingleTids(df, textCol, idCol, shingle, portableIds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val banded = lshBands(base, perms, bandSize)
-    val candidates = banded.select(col("doc_id").as("doc1"), col("band"))
-      .join(banded.select(col("doc_id").as("doc2"), col("band")), "band" :: Nil)
-      .filter(col("doc1") < col("doc2")).select("doc1", "doc2").distinct()
-
-    val result = verifyJaccard(candidates, base, base, threshold)
-    // materialize the (small) verified-pair set eagerly and truncate its
-    // lineage so the persisted intermediate can be released NOW instead of
-    // leaking in long-lived sessions.
-    val out = result.localCheckpoint(true)
-    base.unpersist(false)
-    out
+    graft.Pin.cached(shingleTids(df, textCol, idCol, shingle, portableIds)) { base =>
+      val banded = lshBands(base, perms, bandSize)
+      val candidates = banded.select(col("doc_id").as("doc1"), col("band"))
+        .join(banded.select(col("doc_id").as("doc2"), col("band")), "band" :: Nil)
+        .filter(col("doc1") < col("doc2")).select("doc1", "doc2").distinct()
+      // materialize the (small) verified-pair set eagerly and truncate its
+      // lineage so the persisted intermediate can be released on return
+      verifyJaccard(candidates, base, base, threshold).localCheckpoint(true)
+    }
   }
 
   /** Collapse verified near-dup PAIRS into clusters and pick one keeper per
@@ -208,53 +202,50 @@ object Dedup {
       smallGraphMaxEdges: Long = 500000L): DataFrame = {
     // materialize the (small) pair set once: the component loop derives its
     // vertex set AND per-round edge joins from it — without this the
-    // (typically expensive) pair-generation plan re-executes per derivation
-    val edges = pairs
-      .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
-      .localCheckpoint(true)
-    // adaptive: verified near-dup pair graphs are orders of magnitude
-    // smaller than the corpus (0.1–1% of docs pair up). Below the bound —
-    // which also bounds the collect, ~16 bytes/edge — a driver union-find
-    // replaces 4–8 distributed label-propagation rounds of job overhead;
-    // above it (billions of pairs at 100 TB) the distributed path runs.
-    // Both paths produce identical (doc_id, keep_id) rows (spec-asserted).
-    val nEdges = edges.count() // free: the frame is checkpointed
-    val result = if (nEdges > 0 && nEdges <= smallGraphMaxEdges) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      edges.collect().foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.putIfAbsent(a, a)
-        parent.putIfAbsent(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // min id becomes the root = the keeper
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+    // (typically expensive) pair-generation plan re-executes per derivation.
+    // Both paths below have fully consumed the pinned edges by return (the
+    // collect, or the component loop's eagerly-materialized rounds).
+    graft.Pin.checkpointed(pairs
+        .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))) { edges =>
+      // adaptive: verified near-dup pair graphs are orders of magnitude
+      // smaller than the corpus (0.1–1% of docs pair up). Below the bound —
+      // which also bounds the collect, ~16 bytes/edge — a driver union-find
+      // replaces 4–8 distributed label-propagation rounds of job overhead;
+      // above it (billions of pairs at 100 TB) the distributed path runs.
+      // Both paths produce identical (doc_id, keep_id) rows (spec-asserted).
+      val nEdges = edges.count() // free: the frame is checkpointed
+      if (nEdges > 0 && nEdges <= smallGraphMaxEdges) {
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x // path compression
+          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          r
         }
+        edges.collect().foreach { row =>
+          val (a, b) = (row.getLong(0), row.getLong(1))
+          parent.putIfAbsent(a, a)
+          parent.putIfAbsent(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) { // min id becomes the root = the keeper
+            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+          }
+        }
+        val spark = pairs.sparkSession
+        val rows = parent.keySet().toArray(Array.empty[java.lang.Long])
+          .map(id => org.apache.spark.sql.Row(id.longValue(), find(id)))
+        spark.createDataFrame(
+          spark.sparkContext.parallelize(rows.toIndexedSeq),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("keep_id", org.apache.spark.sql.types.LongType, nullable = false))))
+      } else {
+        graft.graph.PropertyGraph.fromEdges(edges)
+          .connectedComponents()
+          .select(col("id").as("doc_id"), col("component").as("keep_id"))
       }
-      val spark = pairs.sparkSession
-      val rows = parent.keySet().toArray(Array.empty[java.lang.Long])
-        .map(id => org.apache.spark.sql.Row(id.longValue(), find(id)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("keep_id", org.apache.spark.sql.types.LongType, nullable = false))))
-    } else {
-      graft.graph.PropertyGraph.fromEdges(edges)
-        .connectedComponents()
-        .select(col("id").as("doc_id"), col("component").as("keep_id"))
     }
-    // both paths have fully consumed the pinned edges by now (the collect,
-    // or the component loop's eagerly-materialized rounds) — release the
-    // blocks instead of pinning them for the session lifetime
-    org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(edges)
-    result
   }
 
   /** Exact repeated-span statistics — the "deduplicating training data"
@@ -534,67 +525,67 @@ object Dedup {
       perms: Seq[Perm], bandSize: Int): DataFrame = {
     val spark = batch.sparkSession
     val traced = graft.QueryTrace.active(spark)
-    val bBase = bBase0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cBase = cBase0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bBands = lshBands(bBase, perms, bandSize)
-    val cBands = lshBands(cBase, perms, bandSize)
+    graft.Pin.cached(bBase0) { bBase =>
+      graft.Pin.cached(cBase0) { cBase =>
+        val bBands = lshBands(bBase, perms, bandSize)
+        val cBands = lshBands(cBase, perms, bandSize)
 
-    // candidate-pair counts ride INSIDE the band joins via observe (a
-    // CollectMetrics node): the counts are collected by the tasks that were
-    // enumerating those rows anyway — zero extra jobs, zero extra scans —
-    // where a count()-based first cut re-paid the store-side signature
-    // pass per invocation (measured 0.7–1.0 s/cycle at sf0.1, ~30% of the
-    // very gates under investigation)
-    val obsCorpus, obsBatch =
-      if (traced) Some(new org.apache.spark.sql.Observation()) else None
-    def observed(df: DataFrame, obs: Option[org.apache.spark.sql.Observation]) =
-      obs.map(o => df.observe(o, count(lit(1)).as("cand"))).getOrElse(df)
+        // candidate-pair counts ride INSIDE the band joins via observe (a
+        // CollectMetrics node): the counts are collected by the tasks that were
+        // enumerating those rows anyway — zero extra jobs, zero extra scans —
+        // where a count()-based first cut re-paid the store-side signature
+        // pass per invocation (measured 0.7–1.0 s/cycle at sf0.1, ~30% of the
+        // very gates under investigation)
+        val obsCorpus, obsBatch =
+          if (traced) Some(new org.apache.spark.sql.Observation()) else None
+        def observed(df: DataFrame, obs: Option[org.apache.spark.sql.Observation]) =
+          obs.map(o => df.observe(o, count(lit(1)).as("cand"))).getOrElse(df)
 
-    // vs-corpus: candidates keyed (batch doc1, corpus doc2) — ids may
-    // coincide across the two sides, so no ordering filter applies here
-    val vsCorpus = verifyJaccard(
-      observed(bBands.select(col("doc_id").as("doc1"), col("band"))
-        .join(cBands.select(col("doc_id").as("doc2"), col("band")), "band" :: Nil)
-        .select("doc1", "doc2"), obsCorpus).distinct(),
-      bBase, cBase, threshold)
-      .select(col("doc1").as("dup_id")).distinct()
+        // vs-corpus: candidates keyed (batch doc1, corpus doc2) — ids may
+        // coincide across the two sides, so no ordering filter applies here
+        val vsCorpus = verifyJaccard(
+          observed(bBands.select(col("doc_id").as("doc1"), col("band"))
+            .join(cBands.select(col("doc_id").as("doc2"), col("band")), "band" :: Nil)
+            .select("doc1", "doc2"), obsCorpus).distinct(),
+          bBase, cBase, threshold)
+          .select(col("doc1").as("dup_id")).distinct()
 
-    // within-batch: the higher id of each verified pair is the drop
-    val withinBatch = verifyJaccard(
-      observed(bBands.select(col("doc_id").as("doc1"), col("band"))
-        .join(bBands.select(col("doc_id").as("doc2"), col("band")), "band" :: Nil)
-        .filter(col("doc1") < col("doc2")).select("doc1", "doc2"), obsBatch)
-        .distinct(),
-      bBase, bBase, threshold)
-      .select(col("doc2").as("dup_id")).distinct()
+        // within-batch: the higher id of each verified pair is the drop
+        val withinBatch = verifyJaccard(
+          observed(bBands.select(col("doc_id").as("doc1"), col("band"))
+            .join(bBands.select(col("doc_id").as("doc2"), col("band")), "band" :: Nil)
+            .filter(col("doc1") < col("doc2")).select("doc1", "doc2"), obsBatch)
+            .distinct(),
+          bBase, bBase, threshold)
+          .select(col("doc2").as("dup_id")).distinct()
 
-    val dropped = vsCorpus.unionByName(withinBatch).distinct()
-    val out = batch.select(col(idCol).as("doc_id"))
-      .join(dropped, col("doc_id") === col("dup_id"), "left_anti")
-      .localCheckpoint(true) // survivors are batch-bound; release the bases now
-    // the localCheckpoint above completed the observed executions, so the
-    // metrics are already published; the bounded wait only covers
-    // listener-delivery latency. The row is read POSITIONALLY: an EMPTY
-    // row means the optimizer eliminated the observed subtree
-    // (PropagateEmptyRelation — the first ingest cycle's empty store), so
-    // the true count is 0; a lost metric reads -1, loud nonsense rather
-    // than zero candidates.
-    def record(key: String, obs: Option[org.apache.spark.sql.Observation]): Unit =
-      obs.foreach { o =>
-        val cand = try {
-          val row = scala.concurrent.Await
-            .result(o.future, scala.concurrent.duration.Duration(2, "s"))
-          if (row.length == 0) 0.0
-          else if (row.isNullAt(0)) -1.0
-          else row.getLong(0).toDouble
-        } catch { case _: java.util.concurrent.TimeoutException => -1.0 }
-        graft.QueryTrace.record(spark, key, cand)
+        val dropped = vsCorpus.unionByName(withinBatch).distinct()
+        val out = batch.select(col(idCol).as("doc_id"))
+          .join(dropped, col("doc_id") === col("dup_id"), "left_anti")
+          .localCheckpoint(true) // survivors are batch-bound; release the bases now
+        // the localCheckpoint above completed the observed executions, so the
+        // metrics are already published; the bounded wait only covers
+        // listener-delivery latency. The row is read POSITIONALLY: an EMPTY
+        // row means the optimizer eliminated the observed subtree
+        // (PropagateEmptyRelation — the first ingest cycle's empty store), so
+        // the true count is 0; a lost metric reads -1, loud nonsense rather
+        // than zero candidates.
+        def record(key: String, obs: Option[org.apache.spark.sql.Observation]): Unit =
+          obs.foreach { o =>
+            val cand = try {
+              val row = scala.concurrent.Await
+                .result(o.future, scala.concurrent.duration.Duration(2, "s"))
+              if (row.length == 0) 0.0
+              else if (row.isNullAt(0)) -1.0
+              else row.getLong(0).toDouble
+            } catch { case _: java.util.concurrent.TimeoutException => -1.0 }
+            graft.QueryTrace.record(spark, key, cand)
+          }
+        record("cand_corpus", obsCorpus)
+        record("cand_batch", obsBatch)
+        out
       }
-    record("cand_corpus", obsCorpus)
-    record("cand_batch", obsBatch)
-    bBase.unpersist(false)
-    cBase.unpersist(false)
-    out
+    }
   }
 
   /** LCG token hash for SimHash — engine-independent (DuckDB twin uses the

@@ -218,9 +218,9 @@ object Layout {
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       if (files.length <= nOut) None // already compact: leave untouched
       else {
-        val pinned = graft.Tables.read(spark, p.toString).localCheckpoint(true)
-        pinned.coalesce(nOut).write.mode("overwrite").parquet(p.toString)
-        org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(pinned)
+        graft.Pin.checkpointed(graft.Tables.read(spark, p.toString)) {
+          _.coalesce(nOut).write.mode("overwrite").parquet(p.toString)
+        }
         Some((rel(p), files.length, nOut))
       }
     }

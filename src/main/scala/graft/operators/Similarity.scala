@@ -1419,35 +1419,33 @@ object Similarity {
     * pass per iteration: a row computes its m sub-assignments together,
     * one posexplode + groupBy yields every (subspace, cluster, pos) mean,
     * and only m×codebook×sub doubles reach the driver per round. The
-    * pinned input's blocks are released before returning (model-state-only
-    * caller).
+    * result is model state only, so the input is pinned for the fit alone.
     */
   private def fitBooksFused(cands: DataFrame, vecCol: String, idCol: String,
-      m: Int, sub: Int, cb: Int, iters: Int): IndexedSeq[Array[Array[Double]]] = {
-    val pinned = cands.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v")).localCheckpoint(true)
-    val init = pinned.orderBy("vec_id").limit(cb).select("v").collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(init.length == cb, s"Pq: need at least $cb rows, got ${init.length}")
-    var books: IndexedSeq[Array[Array[Double]]] =
-      (0 until m).map(j => init.map(full => full.slice(j * sub, (j + 1) * sub)))
-    for (_ <- 1 to iters) {
-      val jOf = (col("pos0") / sub).cast("int") // 0-based subspace of element
-      val means = pinned.withColumn("cls",
-          graft.functions.NativeExpressions.pqCodesNative(
-            col("v"), (0 until m).map(books(_)), 9))
-        .select(col("cls"), posexplode(col("v")).as(Seq("pos0", "x")))
-        .select(jOf.as("j"), pmod(col("pos0"), lit(sub)).cast("int").as("pos"),
-          element_at(col("cls"), jOf + 1).as("cl"), col("x"))
-        .groupBy("j", "cl", "pos").agg(round(avg("x"), 6).as("mean"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-      val next = books.map(_.map(_.clone())) // empty clusters keep previous
-      means.foreach { case (j, c, p, mv) => next(j)(c)(p) = mv }
-      books = next
+      m: Int, sub: Int, cb: Int, iters: Int): IndexedSeq[Array[Array[Double]]] =
+    graft.Pin.checkpointed(cands.select(col(idCol).as("vec_id"),
+        col(vecCol).cast("array<double>").as("v"))) { pinned =>
+      val init = pinned.orderBy("vec_id").limit(cb).select("v").collect()
+        .map(_.getSeq[Double](0).toArray)
+      require(init.length == cb, s"Pq: need at least $cb rows, got ${init.length}")
+      var books: IndexedSeq[Array[Array[Double]]] =
+        (0 until m).map(j => init.map(full => full.slice(j * sub, (j + 1) * sub)))
+      for (_ <- 1 to iters) {
+        val jOf = (col("pos0") / sub).cast("int") // 0-based subspace of element
+        val means = pinned.withColumn("cls",
+            graft.functions.NativeExpressions.pqCodesNative(
+              col("v"), (0 until m).map(books(_)), 9))
+          .select(col("cls"), posexplode(col("v")).as(Seq("pos0", "x")))
+          .select(jOf.as("j"), pmod(col("pos0"), lit(sub)).cast("int").as("pos"),
+            element_at(col("cls"), jOf + 1).as("cl"), col("x"))
+          .groupBy("j", "cl", "pos").agg(round(avg("x"), 6).as("mean"))
+          .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+        val next = books.map(_.map(_.clone())) // empty clusters keep previous
+        means.foreach { case (j, c, p, mv) => next(j)(c)(p) = mv }
+        books = next
+      }
+      books
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(pinned)
-    books
-  }
 
   /** Per-dimension z-standardization of an embedding column — the
     * feature-prep stage before distance-based ops when dimensions carry
@@ -1550,12 +1548,13 @@ object Similarity {
     // re-run the corpus aggregation inside the codes job, and a source
     // that changed between the two jobs would encode codes against
     // different [min,max] than the stats the store serves to queries
-    val stats = sq8Stats(candidates, vecCol).localCheckpoint(true)
-    stats.withColumn("sq8_dims", size(col("mns")))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    candidates.crossJoin(broadcast(stats))
-      .select(col(idCol).as("vec_id"),
-        sq8Codes(col(vecCol)).cast("array<int>").as("codes"))
-      .write.mode("overwrite").parquet(s"$path/codes")
+    graft.Pin.checkpointed(sq8Stats(candidates, vecCol)) { stats =>
+      stats.withColumn("sq8_dims", size(col("mns")))
+        .write.mode("overwrite").parquet(s"$path/stats")
+      candidates.crossJoin(broadcast(stats))
+        .select(col(idCol).as("vec_id"),
+          sq8Codes(col(vecCol)).cast("array<int>").as("codes"))
+        .write.mode("overwrite").parquet(s"$path/codes")
+    }
   }
 }

@@ -278,29 +278,28 @@ object Events {
     // replays the ESTIMATES bit-for-bit, not just an error bound.
     "q210_stream_distinct_hll" -> ((s, d) => {
       val stream = EventStreams.eventsSource(s, d)
-      // through the router, whose route is the array Aggregator at EVERY
-      // p — measured 1.46× faster than the column form even at this
-      // gate's p = 6 (README.md);
-      // the committed column-form oracle stays green because the two
-      // encodings are bit-identical at p = 6 (spec-asserted).
+      // the array Aggregator, measured 1.46× faster than the column form
+      // even at this gate's p = 6 (README.md); the committed column-form
+      // oracle stays green because the two encodings are bit-identical at
+      // p = 6 (spec-asserted).
       // mapWidth: the single-file source scans as ONE partition, so the
       // md5/register map (the micro-batch's hot 1.8 s, r18 attribution)
       // would serialize on one core; spread it (see Tables.streamSpreadWidth)
-      val agg = EventStreams.windowedDistinctHllAuto(stream, "user_id",
+      val agg = EventStreams.windowedDistinctHllArray(stream, "user_id",
         "1 hour", watermark = Some("0 seconds"), p = 6,
         mapWidth = graft.Tables.streamSpreadWidth(s))
       // explicit checkpoint on the tmpfs-preferring root (the q215
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
-      val ckpt = GateTmp.dir("graft_ckpt_hll")
-      try EventStreams.drain(s, "stream_hll") { name =>
-        EventStreams.withStatePartitions(s, 4) {
-          agg.writeStream.outputMode("append").format("memory")
-            .option("checkpointLocation", ckpt.toString)
-            .queryName(name).start()
-        }
-      }(_.orderBy("win_start"))
-      finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+      GateTmp.within("graft_ckpt_hll") { ckpt =>
+        EventStreams.drain(s, "stream_hll") { name =>
+          EventStreams.withStatePartitions(s, 4) {
+            agg.writeStream.outputMode("append").format("memory")
+              .option("checkpointLocation", ckpt.toString)
+              .queryName(name).start()
+          }
+        }(_.orderBy("win_start"))
+      }
     }),
 
     // the register HLL past the column-encoding ceiling: p = 10 (1024
@@ -311,21 +310,21 @@ object Events {
     "q211_stream_hll_p10" -> ((s, d) => {
       val stream = EventStreams.eventsSource(s, d)
       // mapWidth: see q210 — same single-partition source, same hot map
-      val agg = EventStreams.windowedDistinctHllAuto(stream, "user_id",
+      val agg = EventStreams.windowedDistinctHllArray(stream, "user_id",
         "1 hour", watermark = Some("0 seconds"), p = 10,
         mapWidth = graft.Tables.streamSpreadWidth(s))
       // explicit checkpoint on the tmpfs-preferring root (the q215
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
-      val ckpt = GateTmp.dir("graft_ckpt_hll")
-      try EventStreams.drain(s, "stream_hllp10") { name =>
-        EventStreams.withStatePartitions(s, 4) {
-          agg.writeStream.outputMode("append").format("memory")
-            .option("checkpointLocation", ckpt.toString)
-            .queryName(name).start()
-        }
-      }(_.orderBy("win_start"))
-      finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+      GateTmp.within("graft_ckpt_hll") { ckpt =>
+        EventStreams.drain(s, "stream_hllp10") { name =>
+          EventStreams.withStatePartitions(s, 4) {
+            agg.writeStream.outputMode("append").format("memory")
+              .option("checkpointLocation", ckpt.toString)
+              .queryName(name).start()
+          }
+        }(_.orderBy("win_start"))
+      }
     }),
 
     // STREAM-STREAM interval join (one readStream filtered into two sides,
@@ -391,8 +390,7 @@ object Events {
     // which the emitted set equals the batch LEFT JOIN, which is the
     // oracle. Sentinel rows are filtered out of the output by user_id.
     "q215_stream_outer_interval" -> ((s, d) => {
-      val root = GateTmp.dir("graft_oivj")
-      try {
+      GateTmp.within("graft_oivj") { root =>
         // the corpus streams straight from the test data (no temp-dir
         // copy — at sf0.1 that copy was a full extra write+read of the
         // table, and temp-dir I/O is exactly what made q214's driver
@@ -500,7 +498,7 @@ object Events {
         }
         EventStreams.drain(s, "stream_oivj", run)(start)(
           _.filter(col("user_id") >= 0).orderBy("click_id", "view_id"))
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      }
     })
   )
 

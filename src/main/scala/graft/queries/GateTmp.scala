@@ -36,4 +36,12 @@ object GateTmp {
     */
   def dir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(base, prefix)
+
+  /** `body` over a fresh [[dir]], deleted when `body` returns or throws — a
+    * lazy result must not read the directory after return.
+    */
+  def within[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val d = dir(prefix)
+    try body(d) finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+  }
 }

@@ -544,19 +544,18 @@ object Pipeline {
     "q119_store_dedup" -> ((s, d) => {
       val docs = Tables(s, d).documents
       val snum = expr("CAST(substring(source, 4, 10) AS INT)")
-      val dir = GateTmp.dir("graft_sigstore")
-      Dedup.signatureStore(docs.filter(snum < 10), "text", "doc_id",
-          portableIds = true)
-        .write.mode("overwrite").parquet(dir.toString)
-      // the FromStore result is eagerly pinned (localCheckpoint inside), so
-      // the store files are fully consumed by return — delete them here
-      // rather than leaking one store per invocation into tmp.
-      // Candidate counts as in q115 (this gate tripped the r15 wire at ×1.79).
-      try Dedup.incrementalMinHashDedupFromStore(
-          docs.filter(snum >= 10), Tables.read(s, dir.toString),
-          "text", "doc_id", threshold = 0.3, portableIds = true)
-        .orderBy("doc_id")
-      finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      GateTmp.within("graft_sigstore") { dir =>
+        Dedup.signatureStore(docs.filter(snum < 10), "text", "doc_id",
+            portableIds = true)
+          .write.mode("overwrite").parquet(dir.toString)
+        // the FromStore result is eagerly pinned (localCheckpoint inside), so
+        // the store files are fully consumed before `within` deletes them.
+        // Candidate counts as in q115 (this gate tripped the r15 wire at ×1.79).
+        Dedup.incrementalMinHashDedupFromStore(
+            docs.filter(snum >= 10), Tables.read(s, dir.toString),
+            "text", "doc_id", threshold = 0.3, portableIds = true)
+          .orderBy("doc_id")
+      }
     }),
 
     // the FULL rolling-crawl ingest loop (DocStreams.ingestDedupStream),
@@ -570,16 +569,15 @@ object Pipeline {
     "q214_ingest_crawl" -> ((s, d) => {
       val docs = Tables(s, d).documents
       val snum = expr("CAST(substring(source, 4, 10) AS INT)")
-      val root = GateTmp.dir("graft_ingest")
-      val (src, store, out) = (s"$root/src", s"$root/store", s"$root/out")
-      // per-cycle wall clock as spans of the caller's QueryTrace, so the
-      // bench record itself carries the decomposition (r13: a consistent
-      // ~3× cross-box swing on this gate could only be localized by a
-      // separate probe run; now every BENCH_rN shows WHICH cycle carries
-      // it). The stream, started inside the trace, adds each micro-batch's
-      // sub-steps and candidate counts (b<N>_store_read, b<N>_dedup, ...).
-      def span[T](n: String)(body: => T): T = QueryTrace.span(s, n)(body)
-      try {
+      GateTmp.within("graft_ingest") { root =>
+        val (src, store, out) = (s"$root/src", s"$root/store", s"$root/out")
+        // per-cycle wall clock as spans of the caller's QueryTrace, so the
+        // bench record itself carries the decomposition (r13: a consistent
+        // ~3× cross-box swing on this gate could only be localized by a
+        // separate probe run; now every BENCH_rN shows WHICH cycle carries
+        // it). The stream, started inside the trace, adds each micro-batch's
+        // sub-steps and candidate counts (b<N>_store_read, b<N>_dedup, ...).
+        def span[T](n: String)(body: => T): T = QueryTrace.span(s, n)(body)
         val q = span("setup") {
           docs.filter(snum < 7).write.mode("append").parquet(src)
           graft.streaming.DocStreams.ingestDedupStream(
@@ -599,7 +597,7 @@ object Pipeline {
         } finally q.stop()
         span("readback")(Tables.read(s, out).select("doc_id").orderBy("doc_id")
           .localCheckpoint(true))
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      }
     }),
 
     // CDC latest-wins upsert sink (DocStreams.upsertStream) — the crawl-
@@ -614,13 +612,12 @@ object Pipeline {
     "q216_cdc_upsert" -> ((s, d) => {
       val docs = Tables(s, d).documents
       val snum = expr("CAST(substring(source, 4, 10) AS INT)")
-      val root = GateTmp.dir("graft_upsert")
-      val (src, table, ckpt) = (s"$root/src", s"$root/table", s"$root/ckpt")
-      def cycle(n: Int, f: org.apache.spark.sql.Column) =
-        docs.filter(f).select(col("doc_id"),
-          lit(n).cast("int").as("version"),
-          concat(col("text"), lit(s" [rev $n]")).as("text"))
-      try {
+      GateTmp.within("graft_upsert") { root =>
+        val (src, table, ckpt) = (s"$root/src", s"$root/table", s"$root/ckpt")
+        def cycle(n: Int, f: org.apache.spark.sql.Column) =
+          docs.filter(f).select(col("doc_id"),
+            lit(n).cast("int").as("version"),
+            concat(col("text"), lit(s" [rev $n]")).as("text"))
         cycle(1, snum < 14).write.mode("append").parquet(src)
         val q = graft.streaming.DocStreams.upsertStream(
           s.readStream.schema(Tables.read(s, src).schema).parquet(src),
@@ -636,7 +633,7 @@ object Pipeline {
           .select(col("doc_id"), col("bucket").cast("long").as("bucket"),
             col("version"), md5(col("text")).as("content_hash"))
           .orderBy("doc_id").localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      }
     }),
 
     // small-file compaction (Layout.compactPartitions) — the maintenance
@@ -648,9 +645,8 @@ object Pipeline {
     // compaction that loses or duplicates a row fails the oracle.
     "q217_compact_table" -> ((s, d) => {
       val docs = Tables(s, d).documents
-      val root = GateTmp.dir("graft_compact")
-      val table = s"$root/table"
-      try {
+      GateTmp.within("graft_compact") { root =>
+        val table = s"$root/table"
         val src = docs.select(col("doc_id"),
           pmod(col("doc_id"), lit(4L)).as("grp"), col("text"))
         for (i <- 0 until 4)
@@ -668,7 +664,7 @@ object Pipeline {
           .select(col("doc_id"), col("grp").cast("long").as("grp"),
             md5(col("text")).as("content_hash"))
           .orderBy("doc_id").localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      }
     }),
 
     // portable rows-CMS frequency gate: per-source sketches (the per-batch
@@ -1454,10 +1450,9 @@ object Pipeline {
     "q187_ivf_index_roundtrip" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
-      val dir = GateTmp.dir("graft_ivfidx")
-      Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
-        centroidMod = 100)
-      try {
+      GateTmp.within("graft_ivfidx") { dir =>
+        Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
+          centroidMod = 100)
         val direct = Similarity.topK(q, Frame(e), "embedding", "vec_id",
           k = 10, IvfMass(centroidMod = 100))
         val stored = Similarity.topK(q, IvfStore(dir.toString), "embedding",
@@ -1470,7 +1465,7 @@ object Pipeline {
             (col("n_rows") === 10).as("store_ok"))
           .orderBy("query_id")
           .localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
     }),
 
     // INCREMENTAL index maintenance (r14): the rolling-crawl shape — an
@@ -1489,8 +1484,7 @@ object Pipeline {
       val h1 = e.filter(col("vec_id") % 3 =!= 0)
       val h2 = e.filter(col("vec_id") % 3 === 0)
       val q = e.filter(col("vec_id") < 5)
-      val dir = GateTmp.dir("graft_ivfapp")
-      try {
+      GateTmp.within("graft_ivfapp") { dir =>
         Similarity.buildIvfIndex(h1, "embedding", "vec_id", dir.toString,
           centroidMod = 100)
         Similarity.appendIvfIndex(s, dir.toString, h2, "embedding", "vec_id")
@@ -1519,7 +1513,7 @@ object Pipeline {
           .crossJoin(ok)
           .orderBy("query_id")
           .localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
     }),
 
     // the IVF lifecycle's missing half (r16): append freezes the centroid
@@ -1555,8 +1549,7 @@ object Pipeline {
       val driftQ = e.filter(col("vec_id") < 3)
         .select(col("vec_id"),
           unitVec(lit(44.8) + col("vec_id") * 0.2).as("embedding"))
-      val dir = GateTmp.dir("graft_ivfdrift")
-      try {
+      GateTmp.within("graft_ivfdrift") { dir =>
         Similarity.buildIvfIndex(base, "embedding", "vec_id", dir.toString,
           centroidMod = 25)
         val r0 = Similarity.ivfRecallCheck(s, dir.toString, baseQ,
@@ -1575,7 +1568,7 @@ object Pipeline {
         Seq((nIdx, r0 >= 0.9, r1 <= 0.7 && rebuilt, recentered, r2 >= 0.9))
           .toDF("n_idx", "healthy_ok", "drift_detected", "recentered",
             "rebuild_restored")
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
     }),
 
     // IVF-PQ composite ANN under the envelope gate: the coarse-quantizer
@@ -1716,17 +1709,16 @@ object Pipeline {
     // oracle as q192 — the store round-trip is provably invisible.
     "q197_sq8_index_roundtrip" -> ((s, d) => {
       val e = Tables(s, d).embeddings
-      val dir = GateTmp.dir("graft_sq8idx")
-      graft.operators.Similarity.buildSq8Index(e, "embedding", "vec_id",
-        dir.toString)
-      try {
+      GateTmp.within("graft_sq8idx") { dir =>
+        graft.operators.Similarity.buildSq8Index(e, "embedding", "vec_id",
+          dir.toString)
         // pinned eagerly so the finally-delete cannot outrun the lazy
         // store read (the q119/q187 pattern)
         Similarity.topK(e.filter(col("vec_id") < 5), Sq8Store(dir.toString),
             "embedding", "vec_id", k = 10, code = Sq8)
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
     }),
 
     // IVF+SQ8 composite (the FAISS IVFx,SQ8 shape) under the envelope
@@ -1792,10 +1784,9 @@ object Pipeline {
     "q238_ivf_index_adaptive" -> ((s, d) => {
       val e = Tables(s, d).embeddings
       val q = e.filter(col("vec_id") < 5)
-      val dir = GateTmp.dir("graft_ivfidx_ad")
-      Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
-        centroidMod = 100)
-      try {
+      GateTmp.within("graft_ivfidx_ad") { dir =>
+        Similarity.buildIvfIndex(e, "embedding", "vec_id", dir.toString,
+          centroidMod = 100)
         val exact = Similarity.topK(q, Frame(e), "embedding", "vec_id", k = 10)
           .select("query_id", "vec_id")
         val stored = Similarity.topK(q, IvfStore(dir.toString), "embedding",
@@ -1809,7 +1800,7 @@ object Pipeline {
           .select(col("n_queries"),
             (col("n_hit") >= 25).as("index_adaptive_ok"))
           .localCheckpoint(true)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
     }),
 
     // cross-source near-dup attribution: the q55 verified pairs rolled up

@@ -731,43 +731,41 @@ object Relational {
       // external tables on the gate temp root (tmpfs when available): the
       // managed warehouse is repo-dir disk, and 7 writes + ANALYZE scans
       // per gate pass measure that disk, not the estimator
-      val root = GateTmp.dir("graft_cbo")
-      try {
-        tables.foreach { case (n, df, cols) =>
-          df.write.mode("overwrite").option("path", s"$root/$n").saveAsTable(n)
-          es.analyzeTable(n, cols) // FOR COLUMNS computes row count + NDVs
-        }
-        def shapeRow(shape: String, sql: String) =
-          graft.SessionDefaults.withConf(s, "spark.sql.cbo.enabled" -> "true") {
-            val df = s.sql(sql)
-            // plan stats read SQLConf.get, the conf of the thread's ACTIVE
-            // session: evaluate them under this gate's session, whichever
-            // session the caller has active
-            val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(
-              s.sessionState.conf)(df.queryExecution.optimizedPlan.stats.rowCount)
-            val exact = df.count()
-            val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
-            (shape, exact, est.isDefined,
-              ratio.exists(r => r >= 0.25 && r <= 4.0))
+      GateTmp.within("graft_cbo") { root =>
+        try {
+          tables.foreach { case (n, df, cols) =>
+            df.write.mode("overwrite").option("path", s"$root/$n").saveAsTable(n)
+            es.analyzeTable(n, cols) // FOR COLUMNS computes row count + NDVs
           }
-        // W1 star: fact ⨝ three PK dims on distinct FKs
-        val star = shapeRow("star",
-          """SELECT * FROM q239_lineitem
-            | JOIN q239_orders ON l_orderkey = o_orderkey
-            | JOIN q239_supplier ON l_suppkey = s_suppkey
-            | JOIN q239_part ON l_partkey = p_partkey""".stripMargin)
-        // W4/W6 line: a 4-relation PK-FK chain
-        val line = shapeRow("line",
-          """SELECT * FROM q239_region
-            | JOIN q239_nation ON n_regionkey = r_regionkey
-            | JOIN q239_customer ON c_nationkey = n_nationkey
-            | JOIN q239_orders ON o_custkey = c_custkey""".stripMargin)
-        Seq(line, star)
-          .toDF("shape", "exact_rows", "est_defined", "within_band")
-          .orderBy("shape")
-      } finally {
-        tables.foreach { case (n, _, _) => s.sql(s"DROP TABLE IF EXISTS $n") }
-        org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+          def shapeRow(shape: String, sql: String) =
+            graft.SessionDefaults.withConf(s, "spark.sql.cbo.enabled" -> "true") {
+              val df = s.sql(sql)
+              // plan stats read SQLConf.get, the conf of the thread's ACTIVE
+              // session: evaluate them under this gate's session, whichever
+              // session the caller has active
+              val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(
+                s.sessionState.conf)(df.queryExecution.optimizedPlan.stats.rowCount)
+              val exact = df.count()
+              val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
+              (shape, exact, est.isDefined,
+                ratio.exists(r => r >= 0.25 && r <= 4.0))
+            }
+          // W1 star: fact ⨝ three PK dims on distinct FKs
+          val star = shapeRow("star",
+            """SELECT * FROM q239_lineitem
+              | JOIN q239_orders ON l_orderkey = o_orderkey
+              | JOIN q239_supplier ON l_suppkey = s_suppkey
+              | JOIN q239_part ON l_partkey = p_partkey""".stripMargin)
+          // W4/W6 line: a 4-relation PK-FK chain
+          val line = shapeRow("line",
+            """SELECT * FROM q239_region
+              | JOIN q239_nation ON n_regionkey = r_regionkey
+              | JOIN q239_customer ON c_nationkey = n_nationkey
+              | JOIN q239_orders ON o_custkey = c_custkey""".stripMargin)
+          Seq(line, star)
+            .toDF("shape", "exact_rows", "est_defined", "within_band")
+            .orderBy("shape")
+        } finally tables.foreach { case (n, _, _) => s.sql(s"DROP TABLE IF EXISTS $n") }
       }
     }),
 

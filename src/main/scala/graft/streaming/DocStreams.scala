@@ -436,8 +436,7 @@ object DocStreams {
         // doing anyway, where localCheckpoint(true) paid a dedicated
         // materialization job per micro-batch (two of them, measured as
         // the dominant share of the q214 gate's wall time)
-        val pinned = batch.persist()
-        try {
+        graft.Pin.cached(batch) { pinned =>
           // an absent store (first batch ever) is an EMPTY store with the
           // batch-derived schema — limit(0) through signatureStore gives
           // exactly the columns a written store would have. Absence ONLY:
@@ -452,9 +451,10 @@ object DocStreams {
             shingle = shingle, portableIds = portableIds)
           // eager inside (batch-bound pin): the band join runs here. Under a
           // trace, a nested one keeps this batch's candidate counts apart
-          // from the other batches' as b<N>_cand_corpus / b<N>_cand_batch:
-          // flat counts + moving time = environmental; moving counts =
-          // band skew
+          // from the other batches' as b<N>_cand_corpus / b<N>_cand_batch
+          // (the unprefixed keys it also reports outward end at the last
+          // batch's): flat counts + moving time = environmental; moving
+          // counts = band skew
           val survivors = span("dedup") {
             if (!graft.QueryTrace.active(spark)) dedup()
             else {
@@ -470,15 +470,13 @@ object DocStreams {
           // below cannot leak back into it, and the output write doubles as
           // the cache-populating action for the signature append that
           // follows (one batch scan feeds both, no checkpoint round-trip)
-          val kept = pinned.join(survivors,
-              pinned(idCol) === survivors("doc_id"), "left_semi")
-            .persist()
-          try {
+          graft.Pin.cached(pinned.join(survivors,
+              pinned(idCol) === survivors("doc_id"), "left_semi")) { kept =>
             span("publish")(kept.write.mode("append").parquet(outPath))
             span("sig_append")(Dedup.signatureStore(kept, textCol, idCol,
               shingle, portableIds).write.mode("append").parquet(storePath))
-          } finally kept.unpersist(false)
-        } finally pinned.unpersist(false)
+          }
+        }
         ()
       }
       .start()

@@ -194,6 +194,10 @@ object EventStreams {
     *     exactly at p = 6, spec-asserted);
     *   - Σ2^−M folds the register array IN ORDER (a fixed order, so the
     *     double sum is deterministic — same contract, different shape).
+    *
+    * The streaming gates use this form at every p: the column form runs
+    * all 2^p conditional maxes per row where this one updates one slot,
+    * and measured 1.46× slower at p = 6 and 2.34× at p = 8 (README.md).
     */
   def windowedDistinctHllArray(events: DataFrame, keyCol: String,
       windowLength: String, watermark: Option[String] = None,
@@ -224,33 +228,6 @@ object EventStreams {
       .otherwise(round(raw, 4))
     agg.select(col("window.start").as("win_start"), col("n_events"),
       est.as("est_distinct"))
-  }
-
-  /** ONE entry point over both register encodings, up to the state
-    * ceiling p ≤ 14. Callers pick precision; the encoding is an
-    * implementation detail this router owns.
-    *
-    * The route is ALWAYS the array-register Aggregator
-    * ([[windowedDistinctHllArray]]), and the choice is measured, not
-    * assumed: the column-per-register form evaluates all 2^p conditional
-    * max aggregates on EVERY input row (O(m) per row — only one register
-    * can change), where the Aggregator computes the row's register index
-    * and updates that one slot (O(1) per row). Interleaved min-of-3 on
-    * the sf0.1 streaming gate shape (2026-08-15, recorded in README.md):
-    * columns 3.27 s vs array 2.24 s at p = 6 (1.46×), 5.04 s vs 2.16 s at
-    * p = 8 (2.34×) — the gap grows with p exactly as the per-row ratio
-    * predicts, so there is no small-p regime where the column form wins.
-    * The column form ([[windowedDistinctHll]]) is retained as the
-    * spec-differential twin: bit-identical at p = 6 (where its pinned α
-    * and the standard m-dependent α coincide — spec-asserted), which is
-    * also what keeps the committed q210 oracle green under this route.
-    */
-  def windowedDistinctHllAuto(events: DataFrame, keyCol: String,
-      windowLength: String, watermark: Option[String] = None,
-      p: Int = 6, mapWidth: Option[Int] = None): DataFrame = {
-    require(p >= 2 && p <= 14, s"p must be in [2, 14], got $p")
-    windowedDistinctHllArray(events, keyCol, windowLength, watermark, p,
-      mapWidth)
   }
 
   /** Gap-based sessionization (batch form): a new session starts when the gap

@@ -130,4 +130,23 @@ class QueryTraceSpec extends SparkSpec {
     QueryTrace.record(spark, "k", "none")
     assert(trace("k") === "outer")
   }
+
+  test("(e) a nested run reports its records and Spark work to every enclosing trace") {
+    var inner: QueryTrace = null
+    val (_, outer) = QueryTrace.run(spark) {
+      val (_, middle) = QueryTrace.run(spark) {
+        inner = QueryTrace.run(spark) {
+          QueryTrace.record(spark, "nested.only", "inner")
+          spark.range(100).repartition(2).count()
+        }._2
+      }
+      assert(middle("nested.only") === "inner")
+      assert(middle.totals.jobs >= inner.totals.jobs)
+    }
+    assert(outer("nested.only") === "inner")
+    val (o, i) = (outer.totals, inner.totals)
+    assert(i.jobs >= 1L && o.jobs >= i.jobs && o.tasks >= i.tasks)
+    assert(o.shuffleBytes >= i.shuffleBytes && i.shuffleBytes > 0L)
+    assert(QueryTrace.registered(spark) === 0)
+  }
 }

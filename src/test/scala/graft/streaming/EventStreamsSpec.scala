@@ -362,24 +362,12 @@ class EventStreamsSpec extends SparkSpec {
     assert(e.getMessage.contains("windowedDistinctHllArray"))
   }
 
-  test("windowedDistinctHllAuto takes the array form at every p and pins the route") {
-    val df = (0 until 400).map(i => (i.toLong, (i % 130).toLong, ts(i / 10)))
-      .toDF("event_id", "user_id", "ts")
-    def rows(out: org.apache.spark.sql.DataFrame) =
-      out.select("win_start", "n_events", "est_distinct")
-        .as[(Timestamp, Long, Double)].collect().toSet
-    // the route is the array Aggregator at EVERY p (O(1) register update
-    // per row vs the column form's O(2^p) conditional maxes per row —
-    // measured 1.46× at p=6, 2.34× at p=8, ProbeHllForms); at p = 6 it
-    // must still coincide exactly with the column form (shared committed
-    // oracle), which the bit-identity test below pins value-for-value
-    val auto6 = rows(EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 6))
-    assert(auto6 === rows(EventStreams.windowedDistinctHll(df, "user_id", "1 hour", p = 6)))
-    val auto10 = rows(EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 10))
-    assert(auto10 === rows(EventStreams.windowedDistinctHllArray(df, "user_id", "1 hour", p = 10)))
-    intercept[IllegalArgumentException] {
-      EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 15)
+  test("windowedDistinctHllArray rejects p past the state ceiling") {
+    val df = Seq((1L, 1L, ts(0))).toDF("event_id", "user_id", "ts")
+    val e = intercept[IllegalArgumentException] {
+      EventStreams.windowedDistinctHllArray(df, "user_id", "1 hour", p = 15)
     }
+    assert(e.getMessage.contains("p must be in [2, 14]"))
   }
 
   test("HLL mapWidth spreads the register map without changing estimates") {

@@ -406,12 +406,12 @@ object StockCompare {
     //     it exists.
     val eventsDf = graft.Tables(spark, sfDir).events
     report("windowed distinct HLL",
-      graft.streaming.EventStreams.windowedDistinctHllAuto(
+      graft.streaming.EventStreams.windowedDistinctHllArray(
         eventsDf, "user_id", "1 hour", p = 6).count(),
       eventsDf.groupBy(window(col("ts"), "1 hour"))
         .agg(approx_count_distinct("user_id").as("nd")).count())
     report("windowed HLL vs DataSketches",
-      graft.streaming.EventStreams.windowedDistinctHllAuto(
+      graft.streaming.EventStreams.windowedDistinctHllArray(
         eventsDf, "user_id", "1 hour", p = 6).count(),
       graft.operators.Sketches.hllMergeEstimate(
         graft.operators.Sketches.hllSketchPerGroup(
