@@ -11,15 +11,19 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * file bytes, and an unknown one reads as Long.MaxValue, the distributed
   * side. Each caller records the route it took under its own
   * [[QueryTrace]] attribute (`prefix.route`, `skew.saltFactor`,
-  * `sim.route`, `sim.cellRoute`).
+  * `sim.route`, `sim.cellRoute`, `wcoj.cells`). The WCOJ join measures
+  * its routed payload instead of estimating it and tests it with [[fits]].
   */
 object Small {
 
   /** The byte cap, default 32 MB. 0 forces every distributed route. */
   val Key = "graft.singleTaskBytes"
 
-  private def cap(spark: SparkSession): Long =
+  private[graft] def cap(spark: SparkSession): Long =
     spark.conf.get(Key, (32L << 20).toString).toLong
+
+  /** Whether a byte count the caller measured is within `cap`; never at 0. */
+  private[graft] def fits(cap: Long, bytes: Long): Boolean = cap > 0 && bytes <= cap
 
   private def estimate(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -46,7 +50,7 @@ object Small {
     if (c <= 0) None
     else if (java.lang.Double.isFinite(expansion) &&
         estimate(estimateFrom).toDouble * expansion.max(1.0) <= c) Some("estimate")
-    else if (measuredBytes(frame) <= c) Some("measured")
+    else if (fits(c, measuredBytes(frame))) Some("measured")
     else None
   }
 

@@ -83,9 +83,9 @@ object MultiwayJoin {
     *   duplicates). Join columns may be any atomic type: integral columns
     *   run on the trie directly (emitted as LongType), everything else is
     *   dictionary-encoded and decoded transparently
-    *   ([[graft.wcoj.WcojJoin.leapfrogAny]]), so a string-keyed cyclic join
+    *   ([[graft.wcoj.WcojJoin.join]]), so a string-keyed cyclic join
     *   keeps the WCOJ speedup instead of silently falling back. Null join
-    *   values are filtered (they can never match a natural inner join).
+    *   values are dropped (they can never match a natural inner join).
     *   Acyclic queries fall back to binary joins unchanged.
     * @param cardinalityOrder order each cyclic bag's WCOJ attributes by
     *   measured cardinality (within equal coverage): the reference's
@@ -128,28 +128,18 @@ object MultiwayJoin {
       val attrSets = relations.map(_._2.toSet)
       !JoinHyperGraph.isAcyclic(attrSets)
     }) {
-      val spark = relations.head._1.sparkSession
       val attrSets = relations.map(_._2.toSet)
       val core = JoinHyperGraph.cyclicCoreIds(attrSets)
 
-      def oneBag(rels: Seq[(DataFrame, Seq[String])]): DataFrame = {
-        val attrs = rels.flatMap(_._2).toSet
-        val order = wcojAttrOrder(rels, attrs, cardinalityOrder)
-        val cleaned = rels.map { case (df, as) =>
-          (as.foldLeft(df)((d, a) => d.filter(col(a).isNotNull)), as)
-        }
-        graft.wcoj.WcojJoin.leapfrogAny(spark, cleaned, order)
-      }
-
       if (core.size == relations.size) {
-        if (wcojEligible(relations)) return oneBag(relations)
+        if (wcojEligible(relations)) return wcojBag(relations, cardinalityOrder)
         // ineligible types: fall through to the GHD route (per-bag checks)
       } else {
         val comps = JoinHyperGraph.connectedComponents(
           core.toSeq.sorted, i => attrSets(i))
         if (comps.forall(c => wcojEligible(c.map(relations)))) {
           val coreDfs = comps.map { ids =>
-            val df = oneBag(ids.map(relations))
+            val df = wcojBag(ids.map(relations), cardinalityOrder)
             (df, df.columns.toSeq)
           }
           val periphery =
@@ -206,14 +196,8 @@ object MultiwayJoin {
     def bagDf(b: JoinHyperGraph.Bag): DataFrame = {
       val rels = b.edgeIds.map(relations(_))
       val cyclic = rels.size >= 2 && !JoinHyperGraph.isAcyclic(rels.map(_._2.toSet))
-      if (wcoj && cyclic && wcojEligible(rels)) {
-        val spark = rels.head._1.sparkSession
-        val order = wcojAttrOrder(rels, b.attrs, cardinalityOrder)
-        val cleaned = rels.map { case (df, attrs) =>
-          (attrs.foldLeft(df)((d, a) => d.filter(col(a).isNotNull)), attrs)
-        }
-        graft.wcoj.WcojJoin.leapfrogAny(spark, cleaned, order)
-      } else joinBag(rels.map(_._1))
+      if (wcoj && cyclic && wcojEligible(rels)) wcojBag(rels, cardinalityOrder)
+      else joinBag(rels.map(_._1))
     }
 
     val bagDfs0 = ghd.bags.map(bagDf)
@@ -241,17 +225,18 @@ object MultiwayJoin {
         arr.toSeq
       }
 
-    // join bags along the GHD tree edges, parent-first; tree edges were
-    // produced in attachment order so each (t, b) has t already joined.
-    if (bagDfs.size == 1) bagDfs.head
-    else {
-      val joined = Array.fill[Option[DataFrame]](bagDfs.size)(None)
-      joined(ghd.treeEdges.headOption.map(_._1).getOrElse(0)) = Some(bagDfs(ghd.treeEdges.headOption.map(_._1).getOrElse(0)))
-      var acc = joined.flatten.head
-      ghd.treeEdges.foreach { case (_, child) => acc = naturalJoin(acc, bagDfs(child)) }
-      acc
+    // join bags along the GHD tree edges, parent-first: the tree grows from
+    // bag 0 in attachment order, so each (t, b) has t already joined.
+    ghd.treeEdges.foldLeft(bagDfs(0)) { case (acc, (_, child)) =>
+      naturalJoin(acc, bagDfs(child))
     }
   }
+
+  /** One cyclic bag through the worst-case-optimal join. */
+  private def wcojBag(rels: Seq[(DataFrame, Seq[String])],
+      cardinalityOrder: Boolean): DataFrame =
+    graft.wcoj.WcojJoin.join(rels.head._1.sparkSession, rels,
+      wcojAttrOrder(rels, rels.flatMap(_._2).toSet, cardinalityOrder))
 
   /** Expose the chosen decomposition (for tests / explain tooling). */
   def plan(relations: Seq[Seq[String]]): JoinHyperGraph.Decomposition =

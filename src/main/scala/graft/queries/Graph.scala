@@ -176,7 +176,7 @@ object Graph {
     // binary-join formulation, different physical algorithm.
     "q47_wcoj_triangle" -> ((s, d) => {
       val e = denseEdges(Tables(s, d))
-      graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
+      graft.wcoj.WcojJoin.join(s, Seq(
           (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
           (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
@@ -190,7 +190,7 @@ object Graph {
     // sf0.1; lazy iterator enumeration, no per-binding allocation).
     "q48_wcoj_4cycle" -> ((s, d) => {
       val e = mediumEdges(Tables(s, d))
-      graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
+      graft.wcoj.WcojJoin.join(s, Seq(
           (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
           (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (e.select(col("src").as("c"), col("dst").as("e")), Seq("c", "e")),
@@ -202,7 +202,7 @@ object Graph {
 
     // the string-keyed WCOJ path under the hard gate: the same dense
     // triangle, but over OPAQUE ENTITY KEYS ('ent-<n>') instead of longs —
-    // an entity-resolution-style cyclic self-join. leapfrogAny
+    // an entity-resolution-style cyclic self-join. WcojJoin.join
     // dictionary-encodes each attribute (distinct values ranked by one
     // range shuffle + zipWithIndex), runs the Catalyst LeapFrogJoin on the
     // dense codes, and decodes the bindings back to strings; the full
@@ -212,7 +212,7 @@ object Graph {
       val e = denseEdges(Tables(s, d)).select(
         concat(lit("ent-"), col("src").cast("string")).as("u"),
         concat(lit("ent-"), col("dst").cast("string")).as("v"))
-      graft.wcoj.WcojJoin.leapfrogAny(s, Seq(
+      graft.wcoj.WcojJoin.join(s, Seq(
           (e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b")),
           (e.select(col("u").as("b"), col("v").as("c")), Seq("b", "c")),
           (e.select(col("v").as("a"), col("u").as("c")), Seq("a", "c"))),
@@ -222,15 +222,15 @@ object Graph {
     }),
 
     // the HyperCube-routed WCOJ under the hard gate: same dense triangle as
-    // q47, with the single-cell collapse disabled
-    // (`graft.wcoj.singleCellBytes=0`) so LeapFrogJoinExec must route
-    // through the Shares grid. The route is read off what actually ran —
+    // q47, with the small-input cap at 0 (`graft.Small.Key`), so
+    // LeapFrogJoinExec never takes one cell and routes through the Shares
+    // grid. The route is read off what actually ran —
     // the executed plan holds the LeapFrogJoin node and the count's own
     // trace saw more than one cell — so a silent fall-back to binary joins
     // or to one cell hash-mismatches the oracle's 'hypercube' literal.
     "q186_wcoj_hypercube" -> ((s, d) => {
       val e = denseEdges(Tables(s, d))
-      val tri = graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
+      val tri = graft.wcoj.WcojJoin.join(s, Seq(
           (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
           (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
@@ -239,7 +239,7 @@ object Graph {
         .agg(count(lit(1)).as("n_triangles"))
       // the exec reads the conf when its routing runs: count under it
       val (n, trace) =
-        graft.SessionDefaults.withConf(s, "graft.wcoj.singleCellBytes" -> "0") {
+        graft.SessionDefaults.withConf(s, graft.Small.Key -> "0") {
           QueryTrace.run(s)(tri.collect()(0).getLong(0)) // one row
         }
       val ran = wcojRouteOf(tri) == "leapfrog"

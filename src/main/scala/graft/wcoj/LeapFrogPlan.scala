@@ -90,7 +90,6 @@ final case class LeapFrogJoinExec(
     */
   @transient private lazy val routed: RDD[(Int, (Int, Array[Long]))] = {
     val sc = sparkContext
-    val cells = sc.defaultParallelism
     val ord = order
 
     // children -> RDD[Array[Long]] in global-order column layout; persisted
@@ -106,57 +105,14 @@ final case class LeapFrogJoinExec(
     }
 
     // one stats pass over the cached inputs (count + per-attribute heavy-
-    // hitter sketches), then memory-budgeted skew-aware share choice: the
-    // grid grows past the parallelism floor whenever the estimated max cell
-    // payload would outgrow the per-task byte budget, up to 4096 cells.
-    val budget = session.conf.get("graft.wcoj.cellBudgetBytes", (64L << 20).toString).toLong
+    // hitter sketches), then the share choice; the output bound, when the
+    // routing computed one, and the cells go to the query's trace
     val stats = SkewStats.relStats(prepped)
-    val cap = math.max(cells, 4096)
-    // measured-small single-cell route: when every relation together fits
-    // comfortably in one task (default 4 MB of routed payload), a
-    // parallelism-floor grid only buys scheduler overhead — free-attribute
-    // replication fans tiny rows into ~32 near-empty cells and the trie
-    // work fragments into sub-millisecond tasks (the S7 capped-graph gate's
-    // fixed ~0.8 s apparatus). One cell = one co-located enumeration, same
-    // machinery. `graft.wcoj.singleCellBytes=0` forces the grid.
-    //
-    // BUT input bytes alone are blind to output cardinality: a cyclic join
-    // with tiny inputs can have AGM-large output (the 4-cycle on the
-    // sf0.1 medium graph routes ~4 MB yet enumerates 27.8M bindings —
-    // serialized into one task that collapse cost ×6.5). So the collapse
-    // additionally requires a small ESTIMATED OUTPUT, bounded two ways and
-    // taking the tighter: (1) the AGM bound Π nᵢ^xᵢ at the optimal
-    // fractional edge cover over the in-hand RelStat counts — free, but
-    // blind to degree caps (capped-graph S6: AGM 5.9e7 vs 1.6e5 actual);
-    // (2) when AGM alone says "too big", one EXACT degree-sequence bound
-    // job over the still-cached inputs — milliseconds by construction,
-    // since this regime already measured ≤ singleCellBytes of payload.
-    // Budget default 16M bindings: one doubling above the largest measured
-    // single-cell WINNER (dense triangle, bound 9.2M / actual 8.3M, beats
-    // the grid 1.27 vs 1.40 s), and 20× under the smallest measured LOSER
-    // (the 4-cycle, bound 3.9e8 — grid 2.3 s vs serial 8.5+ s). At the
-    // budget a worst-case serial tail is ~2.5 s (codegen'd count
-    // enumeration measures ~6M bindings/s/task) — the same order as the
-    // grid's fixed apparatus, so the threshold sits at the break-even.
-    val singleCellBytes =
-      session.conf.get("graft.wcoj.singleCellBytes", (4L << 20).toString).toLong
-    val bindingBudget = session.conf.get(
-      "graft.wcoj.singleCellMaxBindings", (16L << 20).toString).toLong
-    // trace attributes: `wcoj.outputBound` (only when the byte gate let
-    // the estimate run) and `wcoj.cells`
-    val smallOutput = stats.map(_.bytes).sum <= singleCellBytes && {
-        val agm = graft.plans.FractionalEdgeCover.agmBound(
-          ord.toSet, stats.map(s => (s.attrs, s.rows)))
-        val bound =
-          if (agm <= bindingBudget.toDouble) agm
-          else math.min(agm, SkewStats.degreeBound(prepped, ord.toSeq))
-        graft.QueryTrace.record(session, "wcoj.outputBound",
-          math.min(bound, Long.MaxValue.toDouble).toLong)
-        bound <= bindingBudget.toDouble
-      }
-    val sized =
-      if (smallOutput) HyperCube.optimalSharesStat(ord.toSeq, stats, 1)
-      else HyperCube.budgetedShares(ord.toSeq, stats, cells, budget, cap)
+    val (sized, bound) = LeapFrogJoinExec.route(ord.toSeq, stats, sc.defaultParallelism,
+      graft.Small.cap(session), LeapFrogJoinExec.SingleCellMaxBindings,
+      () => SkewStats.degreeBound(prepped, ord.toSeq))
+    bound.foreach(b => graft.QueryTrace.record(session, "wcoj.outputBound",
+      math.min(b, Long.MaxValue.toDouble).toLong))
     graft.QueryTrace.record(session, "wcoj.cells", sized.shares.numCells)
     chosen = Some(sized)
     val shares = sized.shares
@@ -266,6 +222,59 @@ final case class LeapFrogJoinExec(
        |  if (shouldStop()) return;
        |}
      """.stripMargin
+  }
+}
+
+object LeapFrogJoinExec {
+
+  /** Routed payload above which one cell never runs: the r14 break-even,
+    * past which a parallelism-floor grid pays for its scheduling.
+    */
+  private[wcoj] val SingleCellBytes: Long = 4L << 20
+
+  /** Estimated output bindings one cell may enumerate: one doubling above
+    * the largest measured single-cell winner (dense triangle, bound 9.2M /
+    * actual 8.3M, 1.27 vs 1.40 s on the grid) and 20× under the smallest
+    * measured loser (the 4-cycle, bound 3.9e8: grid 2.3 s vs serial 8.5+ s).
+    * At ~6M bindings/s/task a worst-case serial tail is ~2.5 s, the order
+    * of the grid's fixed cost.
+    */
+  private[wcoj] val SingleCellMaxBindings: Long = 16L << 20
+
+  /** The HyperCube route: the chosen shares, and the output bound when one
+    * was computed.
+    *
+    * One cell when the routed payload fits both `cap` (the one small-input
+    * cap, [[graft.Small]]) and [[SingleCellBytes]], and the estimated output
+    * fits `bindingBudget`: a floor-sized grid of tiny inputs only fans rows
+    * into near-empty cells and sub-millisecond tasks. Input bytes alone are
+    * blind to output size (the sf0.1 4-cycle routes ~4 MB yet enumerates
+    * 27.8M bindings: one task cost ×6.5), so the output is bounded two ways,
+    * taking the tighter: the AGM bound at the optimal fractional edge cover
+    * of the RelStat counts, free but blind to degree caps (capped-graph S6:
+    * AGM 5.9e7 vs 1.6e5 actual), and only when AGM is over budget, one
+    * exact `degreeBound` job over inputs already measured small.
+    *
+    * Otherwise the grid grows from `floor` until the estimated max cell
+    * payload fits `cap` (one cell holds at most one task's bytes), up to
+    * 4096 cells; at cap 0 it stays at the floor.
+    */
+  private[wcoj] def route(order: Seq[String], stats: Seq[HyperCube.RelStat], floor: Int,
+      cap: Long, bindingBudget: Long,
+      degreeBound: () => Double): (HyperCube.SizedShares, Option[Double]) = {
+    val payload = stats.map(_.bytes).sum
+    val bound =
+      if (!graft.Small.fits(cap, payload) || payload > SingleCellBytes) None
+      else {
+        val agm = graft.plans.FractionalEdgeCover.agmBound(
+          order.toSet, stats.map(s => (s.attrs, s.rows)))
+        Some(if (agm <= bindingBudget) agm else math.min(agm, degreeBound()))
+      }
+    val sized =
+      if (bound.exists(_ <= bindingBudget)) HyperCube.optimalSharesStat(order, stats, 1)
+      else HyperCube.budgetedShares(order, stats, floor,
+        if (cap > 0) cap else Long.MaxValue, math.max(floor, 4096))
+    (sized, bound)
   }
 }
 

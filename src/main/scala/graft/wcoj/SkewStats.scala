@@ -127,7 +127,7 @@ object SkewStats {
     *
     * Cost: ONE aggregation job whose state is bounded by the input rows —
     * callers only invoke it in the measured-small regime (routed payload
-    * already ≤ `graft.wcoj.singleCellBytes`), so the job is milliseconds by
+    * already ≤ [[LeapFrogJoinExec.SingleCellBytes]]), so the job is milliseconds by
     * construction and the big-input path still pays exactly one stats job.
     * Hash maps keyed by exact prefix tuples (no collision under-counting),
     * so the returned value is a true upper bound.

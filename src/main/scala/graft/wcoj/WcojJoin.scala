@@ -9,60 +9,35 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[LeapFrogJoinExec]] — a HyperCube/Shares shuffle with budgeted,
   * skew-aware shares (or a single co-located cell when inputs and the
   * estimated output are measured small), then LeapFrog enumeration per cell.
-  * Every entry point below builds that node; there is no second executor.
+  * [[WcojJoin.join]] is the one entry point and builds that node; there is
+  * no second executor.
   */
 object WcojJoin {
 
-  /** The Catalyst-native WCOJ path: builds a [[LeapFrogJoinPlan]] logical
-    * node (planned by [[WcojStrategy]] into [[LeapFrogJoinExec]]) so the
-    * operator appears in `.explain()` and composes with downstream Catalyst
-    * optimization like any built-in. Registers the strategy on the session
-    * on first use (also installable via GraftExtensions).
+  /** The worst-case-optimal natural join of `relations` (each a frame and
+    * the attributes it joins on), one output row per distinct binding of
+    * `attrOrder`. It builds a [[LeapFrogJoinPlan]] logical node, planned by
+    * [[WcojStrategy]] into [[LeapFrogJoinExec]], so the operator shows in
+    * `.explain()` and composes with Catalyst like any built-in; the strategy
+    * is registered on the session on first use (also installable via
+    * GraftExtensions).
     *
-    * NULL contract: a WCOJ variable has no NULL binding (every attribute is
-    * a trie level), so rows with NULL in ANY listed attribute are dropped
-    * before the trie build — without that filter the exec's row.getLong
-    * would read NULL as key 0 and emit phantom matches against genuine 0s.
+    * Join attributes may be any atomic type. An attribute whose every
+    * occurrence is integral is cast straight to a trie key (LongType in the
+    * output). Every other attribute goes through one dictionary per key
+    * type: the distinct values across all relations carrying attributes of
+    * that type, ranked by one range shuffle + zipWithIndex (the dedup token
+    * dictionary's shape: no single-task global window, no driver
+    * materialization), so a string-keyed cyclic join keeps the
+    * worst-case-optimal runtime at any scale. Codes are dense 1..|domain|
+    * longs, collision-free, and the bindings are decoded back to the
+    * original values. Attributes whose occurrences fail
+    * [[attrOccurrencesEligible]] are refused.
+    *
+    * A NULL join value never matches: the encode join drops it for a
+    * dictionary attribute, the trie-key filter for an integral one.
     */
-  def leapfrogCatalyst(spark: SparkSession, relations: Seq[(DataFrame, Seq[String])],
-      attrOrder: Seq[String]): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(WcojStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ WcojStrategy
-    }
-    val order = attrOrder.toArray
-    val children = relations.map { case (df, attrs) =>
-      val sortedAttrs = attrs.sortBy(order.indexOf(_))
-      // natural inner-join semantics: a NULL join value can never match.
-      // Without this filter the exec's row.getLong would read NULL fields
-      // as 0 and bind them against genuine 0 keys — phantom join rows.
-      val nonNull = sortedAttrs.map(col(_).isNotNull).reduce(_ && _)
-      val projected = df.filter(nonNull)
-        .select(sortedAttrs.map(c => col(c).cast(LongType)): _*)
-      (org.apache.spark.sql.GraftSqlBridge.logicalPlan(projected), sortedAttrs)
-    }
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-      LeapFrogJoinPlan.create(children.map(_._1), children.map(_._2), attrOrder))
-  }
-
-  /** Leapfrog over ARBITRARY atomic join-attribute types — lifts the
-    * LongType-only restriction of the raw paths by dictionary-encoding every
-    * attribute that is not already integral, running the Catalyst WCOJ node
-    * on the codes, and decoding the bindings back to the original values.
-    *
-    * The dictionary per attribute is the distinct value set across all
-    * relations carrying it, ranked by one range shuffle + zipWithIndex (the
-    * same distributed shape as the dedup token dictionary — no single-task
-    * global window, no driver materialization), so a string-keyed cyclic
-    * join (entity-resolution patterns) keeps the worst-case-optimal runtime
-    * at any scale. Codes are dense 1..|domain| longs: collision-free by
-    * construction, unlike a hash encoding, so no verify pass is needed.
-    *
-    * Null join values are dropped by the encode join itself (a natural
-    * inner join can never match them). Attributes whose every occurrence is
-    * already integral skip the dictionary and cast directly; when NO
-    * attribute needs encoding this is exactly [[leapfrogCatalyst]].
-    */
-  def leapfrogAny(spark: SparkSession, relations: Seq[(DataFrame, Seq[String])],
+  def join(spark: SparkSession, relations: Seq[(DataFrame, Seq[String])],
       attrOrder: Seq[String]): DataFrame = {
     require(relations.nonEmpty)
 
@@ -79,9 +54,9 @@ object WcojJoin {
       attrOrder.filter(a => attrTypes(a).exists(t => !IntegralKeyTypes.contains(t))).toSet
     attrOrder.foreach { a =>
       require(attrOccurrencesEligible(attrTypes(a)),
-        s"leapfrogAny: attribute $a has conflicting or non-atomic types ${attrTypes(a).distinct.mkString(", ")}")
+        s"WcojJoin.join: attribute $a has conflicting or non-atomic types ${attrTypes(a).distinct.mkString(", ")}")
     }
-    if (needDict.isEmpty) return leapfrogCatalyst(spark, relations, attrOrder)
+    if (needDict.isEmpty) return onLongs(spark, relations, attrOrder)
 
     // ONE shared dictionary per key dtype, not one per attribute: codes
     // only need to mean the same value everywhere, so attributes of the
@@ -119,13 +94,35 @@ object WcojJoin {
       (enc.select(attrs.map(col): _*), attrs)
     }
 
-    val joined = leapfrogCatalyst(spark, encoded, attrOrder)
+    val joined = onLongs(spark, encoded, attrOrder)
     val decoded = attrOrder.filter(needDict).foldLeft(joined) { (d, a) =>
       d.join(dicts(a).select(col("__code").as(a), col("__val").as(s"__graft_v_$a")),
           Seq(a), "inner")
         .drop(a).withColumnRenamed(s"__graft_v_$a", a)
     }
     decoded.select(attrOrder.map(col): _*)
+  }
+
+  /** The join node over integral attributes, each cast to a LongType trie
+    * key. A WCOJ variable has no NULL binding, so rows with NULL in any
+    * listed attribute are dropped first: the exec's row.getLong would read
+    * NULL as 0 and bind it against genuine 0 keys.
+    */
+  private def onLongs(spark: SparkSession, relations: Seq[(DataFrame, Seq[String])],
+      attrOrder: Seq[String]): DataFrame = {
+    if (!spark.experimental.extraStrategies.contains(WcojStrategy)) {
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ WcojStrategy
+    }
+    val order = attrOrder.toArray
+    val children = relations.map { case (df, attrs) =>
+      val sortedAttrs = attrs.sortBy(order.indexOf(_))
+      val nonNull = sortedAttrs.map(col(_).isNotNull).reduce(_ && _)
+      val projected = df.filter(nonNull)
+        .select(sortedAttrs.map(c => col(c).cast(LongType)): _*)
+      (org.apache.spark.sql.GraftSqlBridge.logicalPlan(projected), sortedAttrs)
+    }
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      LeapFrogJoinPlan.create(children.map(_._1), children.map(_._2), attrOrder))
   }
 
   /** Integral key types that skip the dictionary and cast straight to trie
@@ -136,7 +133,7 @@ object WcojJoin {
     Set(ByteType, ShortType, IntegerType, LongType)
   }
 
-  /** The ONE attribute-eligibility rule, shared by [[leapfrogAny]]'s
+  /** The ONE attribute-eligibility rule, shared by [[join]]'s
     * requires and MultiwayJoin's planner check so the two can never drift
     * (a planner that approves what the executor rejects turns the graceful
     * binary-join fallback into a runtime error): every occurrence of the

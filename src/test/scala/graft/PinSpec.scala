@@ -13,20 +13,6 @@ class PinSpec extends SparkSpec {
   private lazy val vecs = (0 until 6).map(i => (i.toLong, Seq(i.toFloat, 1f, -i.toFloat, 2f)))
     .toDF("vec_id", "embedding")
 
-  /** Runs `body` and asserts that no RDD it persisted is still stored,
-    * polled like [[storedRdds]] for the async unpersists. Ids, not a count:
-    * a pin an earlier suite leaked, collected by a GC mid-test, would
-    * offset a new leak in the count.
-    */
-  private def releases(what: String)(body: => Unit): Unit = {
-    def stored() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    val baseline = stored()
-    body
-    var tries = 0
-    while ((stored() -- baseline).nonEmpty && tries < 40) { Thread.sleep(100); tries += 1 }
-    assert((stored() -- baseline).isEmpty, s"$what: RDDs still persisted")
-  }
-
   test("Pin.checkpointed and Pin.cached release when the body throws") {
     val df = spark.range(100).toDF("x")
     releases("checkpointed") {

@@ -16,15 +16,15 @@ import graft.wcoj.WcojJoin
 class QueryTraceSpec extends SparkSpec {
   import spark.implicits._
 
-  // A: near-complete digraph on 30 nodes — tiny input, triangle bound
-  // ≈ 25k bindings, so under a 1000-binding budget the exec keeps the grid.
-  // B: one directed 3-cycle — bound ≈ 5, so the exec takes one cell.
+  // A: near-complete digraph on 30 nodes, ~104 KB of routed payload: over
+  // a 16 KB cap, so the exec takes the grid. B: one directed 3-cycle, 360 B
+  // of payload and bound ≈ 5, so the exec takes one cell.
   private lazy val dense = (for { u <- 0 until 30; v <- 0 until 30; if u != v }
     yield (u.toLong, v.toLong)).toDF("src", "dst")
   private lazy val tiny = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
 
   private def triangles(e: DataFrame): DataFrame =
-    WcojJoin.leapfrogCatalyst(spark, Seq(
+    WcojJoin.join(spark, Seq(
         (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
         (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
         (e.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
@@ -39,11 +39,10 @@ class QueryTraceSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[(Long, Long, Long)] =
     df.select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-  private def withBindingBudget[T](f: => T): T =
-    withConf("graft.wcoj.singleCellMaxBindings" -> "1000")(f)
+  private def withSmallCap[T](f: => T): T = withConf(Small.Key -> "16384")(f)
 
   test("(a) a later query on the session does not overwrite a trace") {
-    withBindingBudget {
+    withSmallCap {
       val (_, a) = QueryTrace.run(spark)(triangles(dense).count())
       val (_, b) = QueryTrace.run(spark)(triangles(tiny).count())
       assert(a("wcoj.cells").toInt > 1, "A took the grid")
@@ -52,7 +51,7 @@ class QueryTraceSpec extends SparkSpec {
   }
 
   test("(b) two queries at once on one session keep their own traces") {
-    withBindingBudget {
+    withSmallCap {
       val barrier = new CyclicBarrier(2)
       def traced(name: String, e: DataFrame) = {
         @volatile var out: (Set[(Long, Long, Long)], QueryTrace) = null

@@ -27,13 +27,13 @@ class RandomDifferentialSpec extends SparkSpec {
   private def canon(df: DataFrame, cols: Seq[String]): Set[Seq[Long]] =
     df.select(cols.map(col): _*).collect().map(r => cols.indices.map(r.getLong)).toSet
 
-  /** The LeapFrog exec forced onto its HyperCube grid (single-cell collapse
-    * off), canonicalized; also asserts the run used more than one cell.
+  /** The LeapFrog exec forced onto its HyperCube grid (small-input cap at
+    * 0), canonicalized; also asserts the run used more than one cell.
     */
   private def viaGrid(rels: Seq[(DataFrame, Seq[String])], cols: Seq[String]): Set[Seq[Long]] = {
-    val (got, trace) = withConf("graft.wcoj.singleCellBytes" -> "0")(
+    val (got, trace) = withConf(Small.Key -> "0")(
       QueryTrace.run(spark)(
-        canon(WcojJoin.leapfrogCatalyst(spark, rels, cols), cols)))
+        canon(WcojJoin.join(spark, rels, cols), cols)))
     assert(trace("wcoj.cells").toInt > 1, "grid cells")
     got
   }
@@ -151,8 +151,8 @@ class RandomDifferentialSpec extends SparkSpec {
     }
   }
 
-  test("random string-keyed triangles: dictionary-encoded leapfrogAny == naive") {
-    // the leapfrogAny dictionary path (encode -> WCOJ on codes -> decode)
+  test("random string-keyed triangles: dictionary-encoded WCOJ join == naive") {
+    // the WcojJoin.join dictionary path (encode -> WCOJ on codes -> decode)
     // must agree with binary natural joins on arbitrary string domains,
     // including values that collide after naive numeric coercions
     val rnd = new scala.util.Random(77)
@@ -170,7 +170,7 @@ class RandomDifferentialSpec extends SparkSpec {
         df.select("a", "b", "c").as[(String, String, String)].collect().toSet
       withClue(s"string triangle trial $trial: ") {
         val base = canonS(naive(rels))
-        assert(canonS(WcojJoin.leapfrogAny(spark, rels, Seq("a", "b", "c"))) === base)
+        assert(canonS(WcojJoin.join(spark, rels, Seq("a", "b", "c"))) === base)
         assert(canonS(MultiwayJoin.join(rels, wcoj = true)) === base, "wcoj-routed")
       }
     }

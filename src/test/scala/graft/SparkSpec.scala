@@ -26,13 +26,20 @@ trait SparkSpec extends AnyFunSuite {
   def withConf[A](pairs: (String, String)*)(body: => A): A =
     SessionDefaults.withConf(spark, pairs: _*)(body)
 
-  /** Persisted RDDs in the block store, polled until async unpersists bring
-    * the count to at most `expected` or about 4 s pass.
+  /** Runs `body` and asserts that at most `keep` of the RDDs it persisted
+    * (the pins a test means to hold on to) are still stored, polled for
+    * about 4 s for the async unpersists. Ids, not a count: a pin an earlier
+    * suite leaked, collected by a GC mid-test, would offset a new leak in
+    * the count.
     */
-  def storedRdds(expected: Int): Int = {
-    def n(): Int = spark.sparkContext.getRDDStorageInfo.length
+  def releases[A](what: String, keep: Int = 0)(body: => A): A = {
+    def stored() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val baseline = stored()
+    val out = body
+    def left() = stored() -- baseline
     var tries = 0
-    while (n() > expected && tries < 40) { Thread.sleep(100); tries += 1 }
-    n()
+    while (left().size > keep && tries < 40) { Thread.sleep(100); tries += 1 }
+    assert(left().size <= keep, s"$what: RDDs ${left().mkString(", ")} still persisted")
+    out
   }
 }

@@ -135,14 +135,13 @@ class PropertyGraphSpec extends SparkSpec {
       "kCore" -> (() => chain.kCore(2, maxRounds = 40)),
       "messagePassing" -> (() => chain.messagePassing("1", "sum(msg)", "coalesce(newState, 0)", Some("0"), round = 6)))
     for ((name, loop) <- loops) {
-      val baseline = spark.sparkContext.getRDDStorageInfo.length
-      val (rows, trace) = graft.QueryTrace.run(spark)(loop().collect().length)
+      // the final round's checkpoint (the returned frame's backing) may remain
+      val (rows, trace) = releases(name, keep = 1) {
+        graft.QueryTrace.run(spark)(loop().collect().length)
+      }
       assert(rows === (if (name == "kCore") 0 else 32), name)
       val rounds = trace("rounds").toInt
       assert(rounds >= 6, s"$name ran $rounds rounds")
-      // the final round's checkpoint (the returned frame's backing) may remain
-      assert(storedRdds(baseline + 1) <= baseline + 1,
-        s"$name: persisted RDDs after $rounds rounds (baseline $baseline)")
     }
   }
 
@@ -204,14 +203,13 @@ class PropertyGraphSpec extends SparkSpec {
     // a 12-vertex path peels two endpoints per round: 5 rounds to empty
     // under k=2; a cap of 2 must throw, not silently return extra vertices
     val path = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
-    val baseline = spark.sparkContext.getRDDStorageInfo.length
-    val e = intercept[IllegalStateException] {
-      PropertyGraph.fromEdges(path).kCore(2, maxRounds = 2)
+    // the failed run's last round is released, not left to a later GC
+    val e = releases("a failed kCore") {
+      intercept[IllegalStateException] {
+        PropertyGraph.fromEdges(path).kCore(2, maxRounds = 2)
+      }
     }
     assert(e.getMessage.contains("did not converge"))
-    // the failed run's last round is released, not left to a later GC
-    assert(storedRdds(baseline) <= baseline,
-      s"persisted RDDs after a failed kCore (baseline $baseline)")
     // with enough rounds the true (empty) 2-core comes back
     assert(PropertyGraph.fromEdges(path).kCore(2).count() === 0L)
   }

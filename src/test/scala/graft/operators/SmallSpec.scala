@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{QueryTrace, Small}
+import graft.wcoj.WcojJoin
 import Similarity.{Frame, Ivf}
 
 /** One cap routes every size-routed operator: at `Small.Key` 0 each takes
@@ -22,7 +23,9 @@ class SmallSpec extends graft.SparkSpec {
     .map(i => (i, s"tok${i % 4} tok${i % 6} tok${i % 9} tok${i % 2}"))
     .toDF("doc_id", "text")
 
-  /** (route attribute or plan fact, rows) of each of the five calls. */
+  private lazy val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
+
+  /** (route attribute or plan fact, rows) of each of the six calls. */
   private def routes(cap: String): Seq[(String, Set[Any])] = withConf(Small.Key -> cap) {
     def traced(attr: String)(df: => DataFrame): (String, Set[Any]) = {
       val (out, trace) = QueryTrace.run(spark)(df.collect().map(_.toSeq).toSet[Any])
@@ -41,16 +44,23 @@ class SmallSpec extends graft.SparkSpec {
       traced("sim.route")(Similarity.topK(q, Frame(vecs), "embedding", "vec_id", k = 3)),
       traced("sim.cellRoute")(Similarity.topK(q, Frame(vecs), "embedding", "vec_id",
         k = 3, Ivf(centroidMod = 20, probes = 2))),
-      (spread, shingles.collect().map(_.toSeq).toSet[Any]))
+      (spread, shingles.collect().map(_.toSeq).toSet[Any]), {
+        val (cells, out) = traced("wcoj.cells")(WcojJoin.join(spark, Seq(
+            (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
+            (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
+            (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
+          Seq("a", "b", "c")))
+        (if (cells.toInt > 1) "grid" else "one cell", out)
+      })
   }
 
   test("Small.Key flips every size-routed operator's route; the rows stay identical") {
     val distributed = routes("0")
     val single = routes(Long.MaxValue.toString)
     assert(distributed.map(_._1) ===
-      Seq("distributed", Skew.SaltFactor.toString, "shuffle", "salted", "scan"))
+      Seq("distributed", Skew.SaltFactor.toString, "shuffle", "salted", "scan", "grid"))
     assert(single.map(_._1) ===
-      Seq("window", "1", "broadcast", "broadcast:estimate", "spread"))
+      Seq("window", "1", "broadcast", "broadcast:estimate", "spread", "one cell"))
     distributed.zip(single).foreach { case ((route, a), (_, b)) =>
       withClue(s"$route: ")(assert(a === b))
       assert(a.nonEmpty)

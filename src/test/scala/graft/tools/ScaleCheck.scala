@@ -272,7 +272,7 @@ object ScaleCheck {
               (col("dst") + col("__rep") * 1000L).as("dst")))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.join(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
@@ -303,7 +303,7 @@ object ScaleCheck {
         def r(n1: String, n2: String) =
           (edges.select(col("src").as(n1), col("dst").as(n2)), Seq(n1, n2))
         val t0 = System.nanoTime()
-        val clique = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val clique = graft.wcoj.WcojJoin.join(spark,
           Seq(r("a", "b"), r("b", "c"), r("c", "d"), r("d", "a"), r("b", "d"), r("a", "c")),
           Seq("a", "b", "c", "d"))
         val n = clique.count()
@@ -337,7 +337,7 @@ object ScaleCheck {
           (edges.select(col("src").as(n1), col("dst").as(n2)), Seq(n1, n2))
         val t0 = System.nanoTime()
         // S7: a-b,b-c,c-d,d-e,a-e,a-c,b-d,c-e (subgraphQuery.scala:49-51)
-        val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val n = graft.wcoj.WcojJoin.join(spark,
           Seq(r("a", "b"), r("b", "c"), r("c", "d"), r("d", "e"),
             r("a", "e"), r("a", "c"), r("b", "d"), r("c", "e")),
           Seq("a", "b", "c", "d", "e")).count()
@@ -401,13 +401,12 @@ object ScaleCheck {
     // skewed leading attribute: a planted celebrity vertex would put its
     // whole enumeration in one task under single-attribute hashing. The
     // exec's skew-aware shares give the hot attribute a small share and
-    // grow the grid until the estimated max cell payload fits the budget;
-    // the check prints time and cells for the clean and the hot copy. Run
-    // under an explicit 1 MB cell budget: the grid grows on mass > budget,
-    // so a small budget demonstrates the same mechanism the 64 MB default
-    // applies at 64× the data.
-    {
-      spark.conf.set("graft.wcoj.cellBudgetBytes", (1L << 20).toString)
+    // grow the grid until the estimated max cell payload fits the
+    // small-input cap; the check prints time and cells for the clean and
+    // the hot copy. Run under a 1 MB cap: the grid grows on mass > cap, so
+    // a small cap demonstrates the same mechanism the 32 MB default applies
+    // at 32× the data.
+    graft.SessionDefaults.withConf(spark, graft.Small.Key -> (1L << 20).toString) {
       val base = graft.Tables(spark, sfDir).orders
         .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
@@ -425,7 +424,7 @@ object ScaleCheck {
             (col("id") + 1000000L).as("dst"))))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.join(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
@@ -435,7 +434,6 @@ object ScaleCheck {
           f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs " +
           f"cells=${attr("wcoj.cells")(trace)}")
       }
-      spark.conf.unset("graft.wcoj.cellBudgetBytes")
     }
 
     // small-input / LARGE-OUTPUT cyclic join (the r14 regression shape): a
@@ -443,33 +441,25 @@ object ScaleCheck {
     // 4-cycle output grows ~V^4 — the r14 input-bytes-only single-cell
     // heuristic serialized exactly this into one task (q48: 1.3 → 8.7 s).
     // The output-aware router must KEEP THE GRID as V grows (bound above
-    // the binding budget), and the forced single-cell arm shows the serial
-    // cliff the router is avoiding. Both arms must agree on the count.
+    // the binding budget). The serial cliff it avoids (one forced cell:
+    // 3.2-4.0 s vs 1.1-3.3 s routed at V=100) is in the committed
+    // scalecheck_r15..r18 records; no knob forces one cell any more.
     {
       for (v <- Seq(30, 50, 100)) {
         val edges = spark.range(v.toLong * v)
           .select((col("id") % v).as("src"), (col("id") / v).cast("long").as("dst"))
           .filter(col("src") =!= col("dst")).localCheckpoint(true)
-        def rels() = Seq(
+        val rels = Seq(
           (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
           (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (edges.select(col("src").as("c"), col("dst").as("d")), Seq("c", "d")),
           (edges.select(col("src").as("d"), col("dst").as("a")), Seq("d", "a")))
-        def run(forceSingle: Boolean): (Long, Double, QueryTrace) = {
-          if (forceSingle)
-            spark.conf.set("graft.wcoj.singleCellMaxBindings", Long.MaxValue.toString)
-          val t0 = System.nanoTime()
-          val (n, trace) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.leapfrogCatalyst(
-            spark, rels(), Seq("a", "b", "c", "d")).count())
-          spark.conf.unset("graft.wcoj.singleCellMaxBindings")
-          (n, (System.nanoTime() - t0) / 1e9, trace)
-        }
-        val (nG, tG, routed) = run(forceSingle = false)
-        val (nS, tS, single) = run(forceSingle = true)
-        require(nG == nS, "routing changed the answer")
+        val t0 = System.nanoTime()
+        val (n, routed) = QueryTrace.run(spark)(graft.wcoj.WcojJoin.join(
+          spark, rels, Seq("a", "b", "c", "d")).count())
+        val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_highout_4cycle    V=$v%-4d edges=${v * (v - 1)}%6d " +
-          f"out=$nG%10d routed=${tG}%6.2fs(cells=${attr("wcoj.cells")(routed)}) " +
-          f"forced_single=${tS}%6.2fs(cells=${attr("wcoj.cells")(single)}) " +
+          f"out=$n%10d routed=${secs}%6.2fs(cells=${attr("wcoj.cells")(routed)}) " +
           f"bound=${attr("wcoj.outputBound")(routed)}")
       }
     }

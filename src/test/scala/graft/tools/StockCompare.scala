@@ -655,13 +655,11 @@ object StockCompare {
             .select(col("event_id").as("click_id"),
               col("event_id_r").as("view_id"), col("user_id"),
               col("ts").as("click_ts"), col("ts_r").as("view_ts"))
-          val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", "4")
-          val q =
-            try joined.writeStream.outputMode("append").format("memory")
+          val q = graft.SessionDefaults.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
+            joined.writeStream.outputMode("append").format("memory")
               .option("checkpointLocation", s"$root/ckpt")
               .queryName(name).start()
-            finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
           try {
             q.processAllAvailable()
             val mx = ev.agg(max("ts")).collect()(0).getTimestamp(0)

@@ -231,41 +231,40 @@ class SkewStatsSpec extends SparkSpec {
       Seq("a", "b", "c")) === 0.0)
   }
 
+  /** The triangle over `edges` (src -> dst) as the exec routes it at the
+    * default cap, four cells of floor, under `budget` output bindings.
+    */
+  private def triangleRoute(edges: Seq[(Long, Long)], budget: Long) = {
+    val sc = spark.sparkContext
+    val ab = sc.parallelize(edges.map { case (u, v) => Array(u, v) }, 4)
+    val preps = Seq((Array("a", "b"), ab), (Array("b", "c"), ab),
+      (Array("a", "c"), sc.parallelize(edges.map { case (u, v) => Array(v, u) }, 4)))
+    val (sized, bound) = LeapFrogJoinExec.route(Seq("a", "b", "c"),
+      SkewStats.relStats(preps), 4, 32L << 20, budget,
+      () => SkewStats.degreeBound(preps, Seq("a", "b", "c")))
+    (sized.shares.numCells, bound)
+  }
+
   test("single-cell collapse is output-aware: small input with large estimated output keeps the grid") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // near-complete digraph on 30 nodes: ~870 edges ≈ 35 KB routed (far
     // under the 4 MB payload threshold), but triangle AGM ≈ 870^1.5 ≈ 25.7k
     // and degree bound ≈ 30·29·29 ≈ 25.2k — with the binding budget set
     // below that, the collapse must NOT fire (this is the q48 shape: the
     // r14 input-bytes-only heuristic serialized a 27.8M-binding 4-cycle
     // into one task)
-    val edges = (for { u <- 0 until 30; v <- 0 until 30; if u != v }
-      yield (u.toLong, v.toLong)).toDF("src", "dst")
-    def rels() = Seq(
-      (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-      (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-      (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
-    def countRows(): (Long, QueryTrace) = QueryTrace.run(spark)(
-      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count())
-    val (viaGrid, grid) =
-      withConf("graft.wcoj.singleCellMaxBindings" -> "1000")(countRows())
-    assert(grid("wcoj.cells").toInt > 1,
-      "estimated-large output must keep the parallel grid")
-    assert(grid("wcoj.outputBound").toLong > 1000L)
-    val (viaSingle, single) = withConf(
-      "graft.wcoj.singleCellMaxBindings" -> (16L << 20).toString)(countRows())
-    assert(single("wcoj.cells").toInt === 1)
-    assert(viaGrid === viaSingle) // routing is a pure execution change
-    assert(viaGrid > 0L)
+    val edges = for { u <- 0L until 30L; v <- 0L until 30L; if u != v } yield (u, v)
+    val (gridCells, gridBound) = triangleRoute(edges, budget = 1000L)
+    assert(gridCells > 1, "estimated-large output must keep the parallel grid")
+    assert(gridBound.exists(_ > 1000.0))
+    assert(triangleRoute(edges, budget = 16L << 20)._1 === 1)
   }
 
   test("a trace that skips the byte-gated estimate holds no output bound") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // the bound is only computed inside the byte-gated branch, so a query
-    // routed past it (inputs over singleCellBytes) reports none — never
-    // an earlier query's
+    // routed past it (inputs over the cap) reports none — never an
+    // earlier query's
     val edges = (for { u <- 0 until 20; v <- 0 until 20; if u != v }
       yield (u.toLong, v.toLong)).toDF("src", "dst")
     def rels() = Seq(
@@ -273,37 +272,27 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     def run(): QueryTrace = QueryTrace.run(spark)(
-      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count())._2
+      WcojJoin.join(spark, rels(), Seq("a", "b", "c")).count())._2
     // defaults: byte gate passes, bound computed
     assert(run().get("wcoj.outputBound").isDefined)
-    withConf("graft.wcoj.singleCellBytes" -> "1") { // byte gate fails
+    // a cap under the ~46 KB routed payload fails the byte gate; at 1 byte
+    // the grid would grow to 4096 cells, seconds of tasks for 380 edges
+    withConf(graft.Small.Key -> "32768") {
       assert(run().get("wcoj.outputBound").isEmpty,
         "a bound in a trace whose routing never computed one")
     }
   }
 
   test("degree-capped inputs still collapse to one cell when AGM alone is too loose") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // functional graph i -> (i+1) mod n: AGM for the triangle is n^1.5
     // (≈ 31.6k at n=1000) but the true output cap is n (out-degree 1) —
     // the q227/q228 capped-graph shape. With the budget between the two,
     // only the exact degree-sequence refinement can (and must) keep the
     // single-cell win.
     val n = 1000L
-    val edges = spark.range(n).select(
-      col("id").as("src"), ((col("id") + 1L) % n).as("dst"))
-    val rels = Seq(
-      (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-      (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-      (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
-    withConf("graft.wcoj.singleCellMaxBindings" -> "5000") {
-      val (_, trace) = QueryTrace.run(spark)(
-        WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c")).count())
-      assert(trace("wcoj.cells").toInt === 1,
-        "degree bound (n) is under budget — the collapse must still fire")
-      assert(trace("wcoj.outputBound").toLong <= 5000L)
-    }
+    val (cells, bound) = triangleRoute((0L until n).map(i => (i, (i + 1) % n)), budget = 5000L)
+    assert(cells === 1, "degree bound (n) is under budget — the collapse must still fire")
+    assert(bound.exists(_ <= 5000.0))
   }
 
   test("single-cell route is a pure execution change: results match the forced grid") {
@@ -316,10 +305,10 @@ class SkewStatsSpec extends SparkSpec {
       (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (e.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     def rows(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c"))
+      WcojJoin.join(spark, rels(), Seq("a", "b", "c"))
         .as[(Long, Long, Long)].collect().toSet
-    val viaSingleCell = rows() // tiny input → default 4 MB threshold fires
-    withConf("graft.wcoj.singleCellBytes" -> "0") { // force the grid
+    val viaSingleCell = rows() // tiny input → one cell by default
+    withConf(graft.Small.Key -> "0") { // force the grid
       val viaGrid = rows()
       assert(viaSingleCell === viaGrid)
       assert(viaSingleCell.nonEmpty)
@@ -330,12 +319,12 @@ class SkewStatsSpec extends SparkSpec {
 class WcojJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Runs `f` with the single-cell collapse off, so LeapFrogJoinExec routes
+  /** Runs `f` with the small-input cap at 0, so LeapFrogJoinExec routes
     * through the Shares grid; `f` must execute the join (the exec reads the
-    * conf when its routing runs). Also returns the cells it routed through.
+    * cap when its routing runs). Also returns the cells it routed through.
     */
   private def onGrid[T](f: => T): (T, Int) =
-    withConf("graft.wcoj.singleCellBytes" -> "0") {
+    withConf(graft.Small.Key -> "0") {
       val (out, trace) = QueryTrace.run(spark)(f)
       (out, trace("wcoj.cells").toInt)
     }
@@ -350,7 +339,7 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val (viaWcoj, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
+    val (viaWcoj, cells) = onGrid(WcojJoin.join(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
@@ -364,20 +353,34 @@ class WcojJoinSpec extends SparkSpec {
 
   test("NULL join keys never match: no phantom rows against genuine 0 keys") {
     // nullable integral attrs skip the dictionary (and its null-dropping
-    // encode join); without the catalyst-path null filter, row.getLong
-    // reads NULL as 0 and binds it against real 0 keys
+    // encode join); without the trie-key null filter, row.getLong reads
+    // NULL as 0 and binds it against real 0 keys
     val l = Seq[(java.lang.Long, java.lang.Long)]((0L, 1L), (null, 1L), (2L, 1L))
       .toDF("a", "b")
     val r = Seq[(java.lang.Long, java.lang.Long)]((1L, 0L), (1L, null), (1L, 3L))
       .toDF("b", "c")
     val viaDf = l.join(r, "b" :: Nil).select("a", "b", "c")
       .collect().map(x => (x.get(0), x.get(1), x.get(2))).toSet
-    val viaWcoj = WcojJoin.leapfrogCatalyst(spark, Seq(
+    val viaWcoj = WcojJoin.join(spark, Seq(
         (l, Seq("a", "b")), (r, Seq("b", "c"))), Seq("a", "b", "c"))
       .collect().map(x => (x.get(0), x.get(1), x.get(2))).toSet
     // natural inner join: rows with NULL a or c never appear
     assert(viaWcoj === viaDf.filter(t => t._1 != null && t._3 != null))
     assert(viaWcoj.exists(_._1 == 0L)) // the genuine-0 rows DO join
+  }
+
+  test("Double keys bind by value, never truncated to longs") {
+    // b = 1.2 and b = 1.7 differ, so the triangle has no binding; cast to
+    // longs both read 1 and close the triangle (1, 1, 2)
+    val r = Seq((1.0, 1.2)).toDF("a", "b")
+    val s = Seq((1.7, 2.0)).toDF("b", "c")
+    val t = Seq((1.0, 2.0)).toDF("a", "c")
+    val viaDf = r.join(s, "b").join(t, Seq("a", "c")).collect()
+    val viaWcoj = WcojJoin.join(spark,
+      Seq((r, Seq("a", "b")), (s, Seq("b", "c")), (t, Seq("a", "c"))), Seq("a", "b", "c"))
+    assert(viaWcoj.schema.fields.forall(_.dataType === org.apache.spark.sql.types.DoubleType))
+    assert(viaWcoj.collect() === viaDf)
+    assert(viaDf.isEmpty)
   }
 
   test("celebrity leading vertex gets the smallest hypercube share") {
@@ -394,7 +397,7 @@ class WcojJoinSpec extends SparkSpec {
     val viaDf = ab.join(bc, "b").join(ac, Seq("a", "c"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val out = WcojJoin.leapfrogCatalyst(spark,
+    val out = WcojJoin.join(spark,
       Seq((ab, Seq("a", "b")), (bc, Seq("b", "c")), (ac, Seq("a", "c"))),
       Seq("a", "b", "c"))
     // collect THIS Dataset: its executed plan holds the exec that ran
@@ -422,7 +425,7 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val (viaCube, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, Seq(
+    val (viaCube, cells) = onGrid(WcojJoin.join(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
@@ -434,7 +437,7 @@ class WcojJoinSpec extends SparkSpec {
     assert(viaCube.nonEmpty)
   }
 
-  test("string-keyed triangle via leapfrogAny equals DataFrame 3-way join") {
+  test("string-keyed triangle via the dictionary equals DataFrame 3-way join") {
     // the dictionary path: non-integral join attributes are encoded to
     // dense longs, joined worst-case-optimally, and decoded back — the
     // result must agree with plain binary joins value-for-value
@@ -448,7 +451,7 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(String, String, String)].collect().toSet
 
-    val viaWcoj = WcojJoin.leapfrogAny(spark, Seq(
+    val viaWcoj = WcojJoin.join(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
@@ -459,7 +462,7 @@ class WcojJoinSpec extends SparkSpec {
     assert(viaDf.nonEmpty)
   }
 
-  test("leapfrogAny mixes per-dtype shared dictionaries with direct integral attrs") {
+  test("join mixes per-dtype shared dictionaries with direct integral attrs") {
     // attrs: u (string, dictionary), d (date, its own dictionary — shared
     // per dtype, not per attribute), k (long, direct cast — no dictionary).
     // Chain u -[R]- d -[S]- k must agree with plain binary joins and
@@ -474,7 +477,7 @@ class WcojJoinSpec extends SparkSpec {
       .toDF("d", "k")
     val viaDf = r.join(s, "d" :: Nil).select("u", "d", "k")
       .as[(String, java.sql.Date, Long)].collect().toSet
-    val viaWcoj = WcojJoin.leapfrogAny(spark,
+    val viaWcoj = WcojJoin.join(spark,
         Seq((r, Seq("u", "d")), (s, Seq("d", "k"))), Seq("u", "d", "k"))
       .select("u", "d", "k")
     assert(viaWcoj.schema("u").dataType === org.apache.spark.sql.types.StringType)
@@ -483,9 +486,9 @@ class WcojJoinSpec extends SparkSpec {
     assert(viaDf.size === 5)
   }
 
-  test("leapfrogAny skips the dictionary when every attribute is integral") {
+  test("join skips the dictionary when every attribute is integral") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val out = WcojJoin.leapfrogAny(spark, Seq(
+    val out = WcojJoin.join(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
@@ -520,7 +523,7 @@ class WcojJoinSpec extends SparkSpec {
       (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
       (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c")))
 
-    val viaCatalyst = WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
+    val viaCatalyst = WcojJoin.join(spark, rels, Seq("a", "b", "c"))
     assert(viaCatalyst.queryExecution.executedPlan.toString.contains("LeapFrogJoin"))
 
     val viaDf = edges.select($"src".as("a"), $"dst".as("b"))
@@ -554,7 +557,7 @@ class WcojJoinSpec extends SparkSpec {
 
     // both exec routes: the default (output-aware, may collapse to one
     // cell) and the forced grid
-    def run() = WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c", "d"))
+    def run() = WcojJoin.join(spark, rels, Seq("a", "b", "c", "d"))
       .as[(Long, Long, Long, Long)].collect().toSet
     val viaLf = run()
     val (viaCube, cells) = onGrid(run())
@@ -578,11 +581,12 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    withConf("graft.wcoj.cellBudgetBytes" -> "16384") {
-      // the floor is defaultParallelism; budget growth kicks in past it
-      val (cube, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
+    withConf(graft.Small.Key -> "16384") {
+      // the floor is defaultParallelism; the grid grows past it until the
+      // estimated max cell payload fits the cap
+      val (cube, trace) = QueryTrace.run(spark)(WcojJoin.join(spark, rels, Seq("a", "b", "c"))
         .as[(Long, Long, Long)].collect().toSet)
-      assert(cells > spark.sparkContext.defaultParallelism)
+      assert(trace("wcoj.cells").toInt > spark.sparkContext.defaultParallelism)
       assert(cube === viaDf)
     }
   }
@@ -637,7 +641,7 @@ class WcojJoinSpec extends SparkSpec {
   test("hypercube disconnected join degenerates to a partitioned cross product") {
     val x = Seq(1L, 2L).toDF("x")
     val y = Seq(10L, 20L, 30L).toDF("y")
-    val (got, cells) = onGrid(WcojJoin.leapfrogCatalyst(spark,
+    val (got, cells) = onGrid(WcojJoin.join(spark,
         Seq((x, Seq("x")), (y, Seq("y"))), Seq("x", "y"))
       .as[(Long, Long)].collect().toSet)
     assert(cells > 1)
