@@ -34,13 +34,37 @@ import org.apache.spark.sql.SparkSession
   *     correctness-bearing (oracle comparisons are UTC; one testdata
   *     generation writes TIMESTAMP(NANOS) parquet that Spark cannot read
   *     natively).
+  *   - [[localFs]], the `file:` filesystem ([[graft.LocalFs]]): Hadoop's
+  *     local filesystem starts a shell process for every permission it
+  *     sets (`chmod`), every FileContext rename (`readlink` on source and
+  *     destination) and every permission it reads (`ls -ld`, once per file
+  *     `listFiles` returns), because Spark's stock jars carry no native
+  *     Hadoop library. A JFR `jdk.ProcessStart` census counted about 780
+  *     per q212 run (600 `readlink`, 180 `chmod`, all from the stream's
+  *     checkpoint, offset-log and state-store commits), 36-45 `ls -ld`
+  *     per benchmark pass (the [[Tables.read]] listing), and 14,550
+  *     (4,746 `chmod`, 8,472 `readlink`, 1,332 `ls`) in one Bench run of
+  *     the 15 stream and write gates at sf0.01. graft's filesystem does
+  *     these through java.nio system calls, and the same census reads no
+  *     `chmod`, `readlink` or `ls`. It is scale-general because it
+  *     replaces `file:` only: hdfs, s3a and every other scheme keep their
+  *     own filesystem.
   */
 object SessionDefaults {
-  /** Static SQL confs — only effective when set BEFORE the first
+  /** The `file:` filesystem for both Hadoop APIs: `fs.file.impl` is the
+    * FileSystem API, `fs.AbstractFileSystem.file.impl` the FileContext API.
+    * Hadoop's FileSystem cache ignores the conf, so these take effect only
+    * when no `file:` filesystem was created before the SparkContext.
+    */
+  val localFs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystemApi].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.FileContextApi].getName)
+
+  /** Static confs — only effective when set BEFORE the first
     * SparkSession of the JVM is created (builder time).
     */
   val static: Seq[(String, String)] = Seq(
-    "spark.sql.codegen.cache.maxEntries" -> "5000")
+    "spark.sql.codegen.cache.maxEntries" -> "5000") ++ localFs
 
   /** Runtime SQL confs — applied builder-time by [[apply]]; an embedding
     * application with an existing session can set them via `spark.conf`.

@@ -84,6 +84,22 @@ object Tables {
         }
     }
 
+  /** The schema Spark's parquet writer recorded in `file`'s footer, read
+    * in this JVM without a Spark job; None for a file another writer
+    * produced. Spark's own inference returns this recorded schema when it
+    * is present, so a caller that knows its files came from a Spark writer
+    * can read them with it instead of inferring.
+    */
+  def writtenSchema(spark: SparkSession, file: String): Option[StructType] = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new Path(file), spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
+    finally reader.close()
+  }
+
   /** Session confs that change the schema parquet inference returns. */
   private val InferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",

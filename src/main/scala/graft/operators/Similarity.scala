@@ -849,7 +849,11 @@ object Similarity {
             .exists(seg => seg.startsWith("_") || seg.startsWith("."))
           if (!hidden && !exData.contains(rel)) files += s"$path/$rel"
         }
-        spark.read.option("basePath", path).parquet(files.toSeq: _*)
+        // the schema the store's writer recorded, read from one footer in
+        // this JVM: inference would start a Spark job per open
+        val read = files.headOption.flatMap(graft.Tables.writtenSchema(spark, _))
+          .fold(spark.read)(spark.read.schema(_))
+        read.option("basePath", path).parquet(files.toSeq: _*)
       }
     require(idx.columns.contains("ivf_centroid_mod"),
       s"$caller: $path is not a graft IVF index (no scheme column)")
@@ -1124,7 +1128,7 @@ object Similarity {
       path: String, newVecs: DataFrame, vecCol: String, idCol: String,
       heartbeat: () => Unit): Unit = {
     healAppends(spark, path) // roll back any interrupted prior append FIRST
-    val (_, mod) = openIvfIndex(spark, path, "appendIvfIndex")
+    val (store, mod) = openIvfIndex(spark, path, "appendIvfIndex")
     val sidecar = new org.apache.hadoop.fs.Path(s"$path/_centroids")
     val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(sidecar),
@@ -1187,12 +1191,13 @@ object Similarity {
     }
     heartbeat()
     // sizes delta from the moved files themselves (read back by name +
-    // basePath, so cent_id is still partition-inferred): the sidecar can
-    // never disagree with what actually landed. One plain delta file,
-    // published by atomic rename (writeCellSizesFile), so readers either
-    // see a complete delta or none.
+    // basePath, so cent_id is still a partition column; with the store's
+    // schema, so no inference job): the sidecar can never disagree with
+    // what actually landed. One plain delta file, published by atomic
+    // rename (writeCellSizesFile), so readers either see a complete delta
+    // or none.
     val deltaSizes = if (staged.isEmpty) Seq.empty[(Long, Long)]
-      else spark.read.option("basePath", path)
+      else spark.read.schema(store.schema).option("basePath", path)
         .parquet(staged.map { case (cell, f) =>
           s"$path/$cell/${f.getName}" }.toSeq: _*)
         .groupBy(col("cent_id").cast("long").as("cent_id"))

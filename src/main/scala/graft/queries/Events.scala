@@ -352,8 +352,8 @@ object Events {
           col("ts").as("click_ts"), col("ts_r").as("view_ts"))
       // a stream-stream join spins up FOUR state stores per partition —
       // 32×4 HDFS-backed stores is pure per-micro-batch overhead at gate
-      // scale (measured 10.2 s → 3.0 s at 4). A production deployment
-      // sizes this to state volume, not compute parallelism.
+      // scale. A production deployment sizes this to state volume, not
+      // compute parallelism.
       EventStreams.drain(s, "stream_ivj") { name =>
         EventStreams.withStatePartitions(s, 4) {
           joined.writeStream.outputMode("append").format("memory")

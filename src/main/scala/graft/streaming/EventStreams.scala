@@ -23,10 +23,10 @@ object EventStreams {
     * to size the number of state stores to state VOLUME instead of compute
     * parallelism: a stream-stream join spins up four stores per partition,
     * and at small state sizes the per-micro-batch store commit overhead of
-    * partitions × stores dominates (q212 measured 10.2 s → 3.0 s at n = 4).
-    * NOT a universal win — a single-store query whose state traffic already
-    * commits in parallel across cores can get SLOWER when serialized onto
-    * fewer stores (q100 measured 35% slower at n = 8); measure per query.
+    * partitions × stores dominates. NOT a universal win — a single-store
+    * query whose state traffic already commits in parallel across cores
+    * can get SLOWER when serialized onto fewer stores (q100 measured 35%
+    * slower at n = 8); measure per query.
     */
   def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
     graft.SessionDefaults.withConf(spark,

@@ -29,9 +29,9 @@ package graft.wcoj
   *
   *   - '''Memory-budgeted cell sizing.''' [[budgetedShares]] doubles the cell
   *     count from a parallelism floor until the estimated max cell payload
-  *     fits a per-task byte budget (or a hard cap is reached) — at 100× the
-  *     data the grid grows with the data instead of a fixed-size cell
-  *     outgrowing task heap.
+  *     fits a per-task byte budget — at 100× the data the grid grows with
+  *     the data instead of a fixed-size cell outgrowing task heap. A budget
+  *     no grid up to the hard cap can meet keeps the floor.
   */
 object HyperCube {
 
@@ -164,17 +164,20 @@ object HyperCube {
 
   /** Memory-budgeted share choice: start at `minCells` (the parallelism
     * floor) and double the grid until the estimated max cell payload fits
-    * `budgetBytes`, capped at `cellCap` (skew can floor the achievable load —
-    * a heavy value is indivisible — so the cap guarantees termination).
+    * `budgetBytes`, capped at `cellCap`. When not even the cap's grid fits
+    * (skew floors the achievable load, since a heavy value is indivisible,
+    * or the budget is below a row's bytes), growth buys no fitting cell, so
+    * the floor's grid is kept instead of the cap's thousands of tasks.
     */
   def budgetedShares(attrs: Seq[String], stats: Seq[RelStat], minCells: Int,
       budgetBytes: Long, cellCap: Int): SizedShares = {
     var cells = math.max(1, minCells)
-    var best = optimalSharesStat(attrs, stats, cells)
+    val floor = optimalSharesStat(attrs, stats, cells)
+    var best = floor
     while (best.estMaxCellBytes > budgetBytes && cells < cellCap) {
       cells = math.min(cellCap.toLong, cells.toLong * 2).toInt
       best = optimalSharesStat(attrs, stats, cells)
     }
-    best
+    if (best.estMaxCellBytes > budgetBytes) floor else best
   }
 }

@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared suite base: one lazy local session per suite (mirrors the
-  * reference's SeccoFunSuite role, src/test/scala/util/SeccoFunSuite.scala:24).
+  * reference's SeccoFunSuite role, src/test/scala/util/SeccoFunSuite.scala:24),
+  * on the `file:` filesystem the engine ships ([[SessionDefaults.localFs]]).
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
+    .config(SessionDefaults.localFs.toMap)
     .master("local[4]")
     .appName(getClass.getSimpleName)
     .config("spark.sql.shuffle.partitions", "4")

@@ -1469,6 +1469,24 @@ class MutualKnnSpec extends graft.SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("an append runs a pinned number of Spark jobs (q241's shape)") {
+    // the delta-size read-back takes the store's schema from the open, so
+    // it starts no inference job (one fewer per append than before). The
+    // open still infers once per append, because the append changed the
+    // store's listing; the first append also infers `_centroids`.
+    val e = graft.Tables(spark, sf0001).embeddings
+    val dir = java.nio.file.Files.createTempDirectory("ivfidx_jobs")
+    try {
+      Similarity.buildIvfIndex(e.filter($"vec_id" % 3 =!= 0), "embedding", "vec_id",
+        dir.toString, centroidMod = 100)
+      val jobs = (0 until 2).map { i =>
+        graft.QueryTrace.run(spark)(Similarity.appendIvfIndex(spark, dir.toString,
+          e.filter($"vec_id" % 3 === i), "embedding", "vec_id"))._2.totals.jobs
+      }
+      assert(jobs === Seq(9L, 8L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("cellsizes sidecar: build + append keep it equal to a recount; legacy stores recount") {
     val all = (0L until 90L).map { i =>
       (i, Seq((i % 7).toFloat, (i % 5).toFloat, 1.0f))

@@ -119,14 +119,15 @@ class HyperCubeSpec extends AnyFunSuite {
     assert(small.shares.numCells <= 4)
   }
 
-  test("budgeted sizing terminates at the cap when skew floors the load") {
+  test("budgeted sizing keeps the floor grid when skew puts the budget out of reach") {
     // heaviest value holds 50% of a 1 GB relation: no grid can push the max
-    // cell below ~250 MB (both attrs at f=0.5), so the loop must stop at cap
+    // cell below ~250 MB (both attrs at f=0.5), so growing to the cap buys
+    // no fitting cell and the floor's grid is kept
     val stats = Seq(HyperCube.RelStat(Set("a", "b"), 100000000L, 1000000000L,
       heavyFrac = Map("a" -> 0.5, "b" -> 0.5)))
     val sized = HyperCube.budgetedShares(Seq("a", "b"), stats,
       minCells = 4, budgetBytes = 1000000L, cellCap = 256)
-    assert(sized.shares.numCells <= 256)
+    assert(sized.shares.numCells <= 4)
     assert(sized.estMaxCellBytes > 1000000.0) // honestly reports the miss
   }
 
@@ -275,11 +276,29 @@ class SkewStatsSpec extends SparkSpec {
       WcojJoin.join(spark, rels(), Seq("a", "b", "c")).count())._2
     // defaults: byte gate passes, bound computed
     assert(run().get("wcoj.outputBound").isDefined)
-    // a cap under the ~46 KB routed payload fails the byte gate; at 1 byte
-    // the grid would grow to 4096 cells, seconds of tasks for 380 edges
+    // a cap under the ~46 KB routed payload fails the byte gate
     withConf(graft.Small.Key -> "32768") {
       assert(run().get("wcoj.outputBound").isEmpty,
         "a bound in a trace whose routing never computed one")
+    }
+  }
+
+  test("a cap below one row's bytes keeps the floor grid, not 4096 cells") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // 380 edges: at a 1-byte cap no grid fits, and growing to the 4096-cell
+    // cap would run 4096 tasks for a join one task finishes
+    val edges = (for { u <- 0 until 20; v <- 0 until 20; if u != v }
+      yield (u.toLong, v.toLong)).toDF("src", "dst")
+    val rels = Seq(
+      (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
+      (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
+      (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
+    withConf(graft.Small.Key -> "1") {
+      val (n, trace) = QueryTrace.run(spark)(
+        WcojJoin.join(spark, rels, Seq("a", "b", "c")).count())
+      assert(n === 20L * 19 * 18)
+      assert(trace("wcoj.cells").toInt <= spark.sparkContext.defaultParallelism)
     }
   }
 
