@@ -119,16 +119,23 @@ class HyperCubeSpec extends AnyFunSuite {
     assert(small.shares.numCells <= 4)
   }
 
+  // heaviest value holds 50% of a 1 GB relation: no grid can push the max
+  // cell below ~250 MB (both attrs at f=0.5)
+  private val halfHeavy = Seq(HyperCube.RelStat(Set("a", "b"), 100000000L,
+    1000000000L, heavyFrac = Map("a" -> 0.5, "b" -> 0.5)))
+
+  test("budgeted sizing terminates at the cap when skew floors the load") {
+    val sized = HyperCube.budgetedShares(Seq("a", "b"), halfHeavy,
+      minCells = 4, budgetBytes = 1000000L, cellCap = 256)
+    assert(sized.shares.numCells <= 256)
+    assert(sized.estMaxCellBytes > 1000000.0) // honestly reports the miss
+  }
+
   test("budgeted sizing keeps the floor grid when skew puts the budget out of reach") {
-    // heaviest value holds 50% of a 1 GB relation: no grid can push the max
-    // cell below ~250 MB (both attrs at f=0.5), so growing to the cap buys
-    // no fitting cell and the floor's grid is kept
-    val stats = Seq(HyperCube.RelStat(Set("a", "b"), 100000000L, 1000000000L,
-      heavyFrac = Map("a" -> 0.5, "b" -> 0.5)))
-    val sized = HyperCube.budgetedShares(Seq("a", "b"), stats,
+    // growing to the cap buys no fitting cell, so the floor's grid is kept
+    val sized = HyperCube.budgetedShares(Seq("a", "b"), halfHeavy,
       minCells = 4, budgetBytes = 1000000L, cellCap = 256)
     assert(sized.shares.numCells <= 4)
-    assert(sized.estMaxCellBytes > 1000000.0) // honestly reports the miss
   }
 
   test("skewed attribute gets less share; skew-aware max load beats uniform") {
