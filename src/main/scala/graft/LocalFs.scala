@@ -1,6 +1,6 @@
 package graft
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException, UncheckedIOException}
 import java.net.URI
 import java.nio.file.{FileSystems, Files, LinkOption, NoSuchFileException, Paths}
 import java.nio.file.attribute.{GroupPrincipal, UserPrincipal}
@@ -82,7 +82,8 @@ object LocalFs {
   /** A status whose permission, owner and group are read through java.nio
     * on first use, as Hadoop reads them on first use with `ls -ld`: of the
     * path itself, not a link's target. A path gone by then keeps the
-    * defaults, as Hadoop's does.
+    * defaults, as Hadoop's does; any other I/O error is thrown unchecked,
+    * as Hadoop wraps a failed `ls` in a `RuntimeException`.
     */
   private final class NioStatus(s: FileStatus, local: String) extends FileStatus(
       s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
@@ -97,7 +98,11 @@ object LocalFs {
           setPermission(new FsPermission((a.get("mode").asInstanceOf[Integer] & ModeBits).toShort))
           setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
           setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
-        } catch { case _: NoSuchFileException => }
+        } catch {
+          case _: NoSuchFileException =>
+          case e: IOException =>
+            throw new UncheckedIOException(s"Error reading the permissions of $local", e)
+        }
         loaded = true
       }
     }

@@ -30,8 +30,9 @@ package graft.wcoj
   *   - '''Memory-budgeted cell sizing.''' [[budgetedShares]] doubles the cell
   *     count from a parallelism floor until the estimated max cell payload
   *     fits a per-task byte budget — at 100× the data the grid grows with
-  *     the data instead of a fixed-size cell outgrowing task heap. A budget
-  *     no grid up to the hard cap can meet keeps the floor.
+  *     the data instead of a fixed-size cell outgrowing task heap. Growth
+  *     stops where it no longer shrinks the max cell (skew), and a budget
+  *     below one row of every relation keeps the floor.
   */
 object HyperCube {
 
@@ -164,20 +165,25 @@ object HyperCube {
 
   /** Memory-budgeted share choice: start at `minCells` (the parallelism
     * floor) and double the grid until the estimated max cell payload fits
-    * `budgetBytes`, capped at `cellCap`. When not even the cap's grid fits
-    * (skew floors the achievable load, since a heavy value is indivisible,
-    * or the budget is below a row's bytes), growth buys no fitting cell, so
-    * the floor's grid is kept instead of the cap's thousands of tasks.
+    * `budgetBytes`, capped at `cellCap`. Growth stops early, keeping the
+    * last grid that shrank the payload, when a doubling no longer shrinks
+    * it: skew floors the achievable load, since a heavy value is
+    * indivisible. A budget below one row of every relation (the least a
+    * cell that yields output holds) is out of reach of any grid, so it
+    * keeps the floor instead of the cap's thousands of near-empty cells.
     */
   def budgetedShares(attrs: Seq[String], stats: Seq[RelStat], minCells: Int,
       budgetBytes: Long, cellCap: Int): SizedShares = {
     var cells = math.max(1, minCells)
-    val floor = optimalSharesStat(attrs, stats, cells)
-    var best = floor
-    while (best.estMaxCellBytes > budgetBytes && cells < cellCap) {
+    var best = optimalSharesStat(attrs, stats, cells)
+    val rowBytes = stats.map(s => if (s.rows > 0) s.bytes.toDouble / s.rows else 0.0).sum
+    var shrinks = budgetBytes >= rowBytes
+    while (shrinks && best.estMaxCellBytes > budgetBytes && cells < cellCap) {
       cells = math.min(cellCap.toLong, cells.toLong * 2).toInt
-      best = optimalSharesStat(attrs, stats, cells)
+      val grown = optimalSharesStat(attrs, stats, cells)
+      shrinks = grown.estMaxCellBytes < best.estMaxCellBytes * (1 - 1e-9)
+      if (shrinks) best = grown
     }
-    if (best.estMaxCellBytes > budgetBytes) floor else best
+    best
   }
 }

@@ -257,8 +257,8 @@ object LeapFrogJoinExec {
     *
     * Otherwise the grid grows from `floor` until the estimated max cell
     * payload fits `cap` (one cell holds at most one task's bytes), up to
-    * 4096 cells; at cap 0, or when no grid up to 4096 cells fits `cap`, it
-    * stays at the floor.
+    * 4096 cells and while growth still shrinks that payload; at cap 0, or a
+    * cap below one row of every relation, it stays at the floor.
     */
   private[wcoj] def route(order: Seq[String], stats: Seq[HyperCube.RelStat], floor: Int,
       cap: Long, bindingBudget: Long,

@@ -155,4 +155,15 @@ class LocalFsSpec extends SparkSpec {
       intercept[FileNotFoundException](fs.getFileLinkStatus(missing))
     }
   }
+
+  test("a permission read that fails with other than a missing path throws unchecked") {
+    withDir { dir =>
+      val f = new Path(s"$dir/d/f")
+      fs.create(f).close()
+      val st = fs.getFileStatus(f) // permission not read yet
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.resolve("d").toFile)
+      Files.createFile(dir.resolve("d")) // the parent is now a file: ENOTDIR
+      intercept[java.io.UncheckedIOException](st.getPermission)
+    }
+  }
 }

@@ -119,23 +119,43 @@ class HyperCubeSpec extends AnyFunSuite {
     assert(small.shares.numCells <= 4)
   }
 
-  // heaviest value holds 50% of a 1 GB relation: no grid can push the max
-  // cell below ~250 MB (both attrs at f=0.5)
-  private val halfHeavy = Seq(HyperCube.RelStat(Set("a", "b"), 100000000L,
-    1000000000L, heavyFrac = Map("a" -> 0.5, "b" -> 0.5)))
-
   test("budgeted sizing terminates at the cap when skew floors the load") {
+    // heaviest value holds 50% of a 1 GB relation: no grid can push the max
+    // cell below ~250 MB (both attrs at f=0.5), but every doubling still
+    // shrinks it (562 MB at 2×2, 282 MB at 16×16), so the grid grows to the cap
+    val halfHeavy = Seq(HyperCube.RelStat(Set("a", "b"), 100000000L,
+      1000000000L, heavyFrac = Map("a" -> 0.5, "b" -> 0.5)))
     val sized = HyperCube.budgetedShares(Seq("a", "b"), halfHeavy,
       minCells = 4, budgetBytes = 1000000L, cellCap = 256)
-    assert(sized.shares.numCells <= 256)
+    assert(sized.shares.numCells === 256)
     assert(sized.estMaxCellBytes > 1000000.0) // honestly reports the miss
+    // one value holding every row: no doubling shrinks the cell, the floor stays
+    val allHeavy = Seq(HyperCube.RelStat(Set("a", "b"), 100000000L,
+      1000000000L, heavyFrac = Map("a" -> 1.0, "b" -> 1.0)))
+    assert(HyperCube.budgetedShares(Seq("a", "b"), allHeavy,
+      minCells = 4, budgetBytes = 1000000L, cellCap = 256).shares.numCells <= 4)
   }
 
-  test("budgeted sizing keeps the floor grid when skew puts the budget out of reach") {
-    // growing to the cap buys no fitting cell, so the floor's grid is kept
-    val sized = HyperCube.budgetedShares(Seq("a", "b"), halfHeavy,
-      minCells = 4, budgetBytes = 1000000L, cellCap = 256)
-    assert(sized.shares.numCells <= 4)
+  test("budgeted sizing keeps the cap's grid for uniform inputs too large for it") {
+    // three 10 GB relations, 32 MB budget: even 16×16×16 cells hold ~117 MB
+    // each, far below the floor's GBs, so the largest grid is kept
+    val tri = Seq(Set("a", "b"), Set("b", "c"), Set("c", "a"))
+      .map(HyperCube.RelStat(_, 250000000L, 10000000000L))
+    val sized = HyperCube.budgetedShares(Seq("a", "b", "c"), tri,
+      minCells = 4, budgetBytes = 32L << 20, cellCap = 4096)
+    assert(sized.shares.numCells === 4096)
+    assert(sized.estMaxCellBytes < 120e6)
+  }
+
+  test("budgeted sizing keeps the floor when the budget is below one row of every relation") {
+    // 380 rows of 40 bytes per relation: a cell that yields output holds at
+    // least 120 bytes, so a 1-byte budget is out of any grid's reach
+    val tri = Seq(Set("a", "b"), Set("b", "c"), Set("c", "a"))
+      .map(HyperCube.RelStat(_, 380L, 380L * 40))
+    def cells(budget: Long) = HyperCube.budgetedShares(Seq("a", "b", "c"), tri,
+      minCells = 4, budgetBytes = budget, cellCap = 4096).shares.numCells
+    assert(cells(1L) <= 4)
+    assert(cells(1000L) > 4) // a reachable budget still grows the grid
   }
 
   test("skewed attribute gets less share; skew-aware max load beats uniform") {
@@ -293,8 +313,9 @@ class SkewStatsSpec extends SparkSpec {
   test("a cap below one row's bytes keeps the floor grid, not 4096 cells") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    // 380 edges: at a 1-byte cap no grid fits, and growing to the 4096-cell
-    // cap would run 4096 tasks for a join one task finishes
+    // 380 edges: a 1-byte cap is below one row of every relation, so no
+    // grid fits it, and growing to the 4096-cell cap would run 4096 tasks
+    // for a join one task finishes
     val edges = (for { u <- 0 until 20; v <- 0 until 20; if u != v }
       yield (u.toLong, v.toLong)).toDF("src", "dst")
     val rels = Seq(
