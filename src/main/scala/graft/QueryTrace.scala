@@ -21,10 +21,10 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
   * }}}
   *
   * Attributes are strings, like the confs they replace; each is documented
-  * where it is recorded (`wcoj.cells`, `wcoj.outputBound`, `sim.ann`,
-  * `sim.route`, `sim.cellRoute`, `skew.saltFactor`, `prefix.route`,
-  * `cand_corpus`, `cand_batch`, `rounds`). A key recorded twice keeps the
-  * later value.
+  * where it is recorded (`wcoj.cells`, `wcoj.shares`, `wcoj.outputBound`,
+  * `sim.ann`, `sim.route`, `sim.cellRoute`, `skew.saltFactor`,
+  * `prefix.route`, `cand_corpus`, `cand_batch`, `rounds`). A key recorded
+  * twice keeps the later value.
   *
   * A [[QueryTrace.run]] inside another also reports to every enclosing
   * trace still open: its Spark work counts there too and its records land

@@ -49,6 +49,19 @@ import org.apache.spark.sql.SparkSession
   *     `chmod`, `readlink` or `ls`. It is scale-general because it
   *     replaces `file:` only: hdfs, s3a and every other scheme keep their
   *     own filesystem.
+  *
+  * These are session-wide. A setting that one query needs and the other
+  * queries on its session must not see travels with that query instead,
+  * so two queries can run at once on one session:
+  *   - graft's small-input cap: [[Small.withCap]], a SparkContext local
+  *     property of the calling thread (q186, q200);
+  *   - a Spark join choice: a join hint (q230's `merge`);
+  *   - a plan statistic read under other settings: a cloned `SQLConf`
+  *     under `SQLConf.withExistingConf` (q239's CBO estimate);
+  *   - a setting the plan must be built and run with: the plan rebound
+  *     onto a clone of its session (`GraftSqlBridge.onClone`), as
+  *     `EventStreams.drain` does for a stream's state partitions and
+  *     `DocStreams.upsertBatch` for its AQE-off merge.
   */
 object SessionDefaults {
   /** The `file:` filesystem for both Hadoop APIs: `fs.file.impl` is the
@@ -80,22 +93,4 @@ object SessionDefaults {
   /** Apply every engine default to a session builder. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     all.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
-  /** Runs `body` with each (key, value) set on the session, then gives
-    * each key back its prior value, or unsets it if it had none. A key
-    * "had none" when it was not set explicitly: `spark.conf.get` would
-    * return a registered key's default, and writing that back would turn
-    * an unset key into a set one.
-    */
-  def withConf[A](spark: SparkSession, pairs: (String, String)*)(body: => A): A = {
-    val set = spark.conf.getAll
-    val prior = pairs.map { case (k, _) => k -> set.get(k) }
-    try {
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

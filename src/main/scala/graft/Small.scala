@@ -19,8 +19,22 @@ object Small {
   /** The byte cap, default 32 MB. 0 forces every distributed route. */
   val Key = "graft.singleTaskBytes"
 
+  /** The calling thread's cap from [[withCap]], else the session's. */
   private[graft] def cap(spark: SparkSession): Long =
-    spark.conf.get(Key, (32L << 20).toString).toLong
+    Option(spark.sparkContext.getLocalProperty(Key))
+      .getOrElse(spark.conf.get(Key, (32L << 20).toString)).toLong
+
+  /** Runs `body` with the cap at `bytes` for the queries the calling
+    * thread runs, and for no other query on the session. The cap rides a
+    * SparkContext local property, which Spark copies into the threads it
+    * starts for those queries, as [[QueryTrace.run]] does with its trace.
+    */
+  private[graft] def withCap[T](spark: SparkSession, bytes: Long)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(Key)
+    sc.setLocalProperty(Key, bytes.toString)
+    try body finally sc.setLocalProperty(Key, outer)
+  }
 
   /** Whether a byte count the caller measured is within `cap`; never at 0. */
   private[graft] def fits(cap: Long, bytes: Long): Boolean = cap > 0 && bytes <= cap

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** GHD-guided n-ary natural join planner — the Spark-first rendition of the
   * reference's MultiwayJoin operator (multiwayOperators.scala:57-154) +
@@ -18,25 +17,11 @@ import org.apache.spark.sql.functions.col
 object MultiwayJoin {
 
   /** Attribute order for a cyclic WCOJ bag: most-covered attributes first
-    * (tightest intersections early); with `cardinality`, ascending measured
-    * distinct-count within equal coverage (smaller trie levels bind first,
-    * pruning the search highest up — the reference's fullCardinality-driven
-    * ordering); attribute name last for determinism. Cardinalities are
-    * exact per-attribute distinct counts over the union of carrying
-    * relations — bounded plan-time jobs whose results never affect
-    * correctness, only the enumeration order.
+    * (tightest intersections early), attribute name next for determinism.
     */
   private[graft] def wcojAttrOrder(rels: Seq[(DataFrame, Seq[String])],
-      attrs: Set[String], cardinality: Boolean): Seq[String] = {
-    val card: Map[String, Long] =
-      if (!cardinality) Map.empty[String, Long].withDefaultValue(0L)
-      else attrs.toSeq.map { a =>
-        a -> rels.collect { case (df, as) if as.contains(a) =>
-          df.select(col(a).as("__v")).filter(col("__v").isNotNull)
-        }.reduce(_ union _).distinct().count()
-      }.toMap.withDefaultValue(0L)
-    attrs.toSeq.sortBy(a => (-rels.count(_._2.contains(a)), card(a), a))
-  }
+      attrs: Set[String]): Seq[String] =
+    attrs.toSeq.sortBy(a => (-rels.count(_._2.contains(a)), a))
 
   /** Every column a join attribute, and every attribute's occurrences pass
     * the ONE shared eligibility rule (WcojJoin.attrOccurrencesEligible) —
@@ -87,17 +72,9 @@ object MultiwayJoin {
     *   keeps the WCOJ speedup instead of silently falling back. Null join
     *   values are dropped (they can never match a natural inner join).
     *   Acyclic queries fall back to binary joins unchanged.
-    * @param cardinalityOrder order each cyclic bag's WCOJ attributes by
-    *   measured cardinality (within equal coverage): the reference's
-    *   `Statistics.fullCardinality`-driven attribute ordering
-    *   (optimization/statsEstimation/Statistics.scala:27-70). Costs one
-    *   exact distinct-count job per bag attribute at PLAN time — the same
-    *   eager-stats trade the reference's Statistics layer makes — so it
-    *   pays off when the join itself dominates (big data, selective small
-    *   domains early), not on micro-queries. Off by default.
     */
   def join(relations: Seq[(DataFrame, Seq[String])], reduce: Boolean = false,
-      wcoj: Boolean = false, cardinalityOrder: Boolean = false): DataFrame = {
+      wcoj: Boolean = false): DataFrame = {
     require(relations.nonEmpty, "no relations to join")
     if (relations.size == 1) return relations.head._1
 
@@ -132,20 +109,19 @@ object MultiwayJoin {
       val core = JoinHyperGraph.cyclicCoreIds(attrSets)
 
       if (core.size == relations.size) {
-        if (wcojEligible(relations)) return wcojBag(relations, cardinalityOrder)
+        if (wcojEligible(relations)) return wcojBag(relations)
         // ineligible types: fall through to the GHD route (per-bag checks)
       } else {
         val comps = JoinHyperGraph.connectedComponents(
           core.toSeq.sorted, i => attrSets(i))
         if (comps.forall(c => wcojEligible(c.map(relations)))) {
           val coreDfs = comps.map { ids =>
-            val df = wcojBag(ids.map(relations), cardinalityOrder)
+            val df = wcojBag(ids.map(relations))
             (df, df.columns.toSeq)
           }
           val periphery =
             relations.indices.filterNot(core).map(relations)
-          return join(coreDfs ++ periphery, reduce, wcoj = false,
-            cardinalityOrder)
+          return join(coreDfs ++ periphery, reduce, wcoj = false)
         }
         // an ineligible core component: GHD route below still WCOJs the
         // cyclic bags whose types qualify
@@ -196,7 +172,7 @@ object MultiwayJoin {
     def bagDf(b: JoinHyperGraph.Bag): DataFrame = {
       val rels = b.edgeIds.map(relations(_))
       val cyclic = rels.size >= 2 && !JoinHyperGraph.isAcyclic(rels.map(_._2.toSet))
-      if (wcoj && cyclic && wcojEligible(rels)) wcojBag(rels, cardinalityOrder)
+      if (wcoj && cyclic && wcojEligible(rels)) wcojBag(rels)
       else joinBag(rels.map(_._1))
     }
 
@@ -233,10 +209,9 @@ object MultiwayJoin {
   }
 
   /** One cyclic bag through the worst-case-optimal join. */
-  private def wcojBag(rels: Seq[(DataFrame, Seq[String])],
-      cardinalityOrder: Boolean): DataFrame =
+  private def wcojBag(rels: Seq[(DataFrame, Seq[String])]): DataFrame =
     graft.wcoj.WcojJoin.join(rels.head._1.sparkSession, rels,
-      wcojAttrOrder(rels, rels.flatMap(_._2).toSet, cardinalityOrder))
+      wcojAttrOrder(rels, rels.flatMap(_._2).toSet))
 
   /** Expose the chosen decomposition (for tests / explain tooling). */
   def plan(relations: Seq[Seq[String]]): JoinHyperGraph.Decomposition =

@@ -28,14 +28,10 @@ object Events {
       import s.implicits._
       val evts = EventStreams.eventsSource(s, d)
         .select("event_id", "user_id", "ts", "value").as[EventStreams.Evt]
-      EventStreams.drain(s, "stream_sessionize") { name =>
-        EventStreams.withStatePartitions(s, 4) {
-          EventStreams.sessionizeStateful(evts, gapSeconds = 1800)
-            .select("user_id", "session_idx", "n_events", "start", "end")
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name).start()
-        }
-      }(_.orderBy("user_id", "session_idx"))
+      EventStreams.drain(EventStreams.sessionizeStateful(evts, gapSeconds = 1800)
+          .select("user_id", "session_idx", "n_events", "start", "end"),
+        "stream_sessionize", statePartitions = Some(4))(
+        _.orderBy("user_id", "session_idx"))
     }),
     // WATERMARKED streaming tumbling-window aggregation in APPEND mode
     // under the driver gate: only windows the watermark has passed emit,
@@ -53,12 +49,8 @@ object Events {
           sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("sum_micros"))
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"), col("sum_micros"))
-      EventStreams.drain(s, "stream_windowed") { name =>
-        EventStreams.withStatePartitions(s, 4) {
-          agg.writeStream.outputMode("append").format("memory")
-            .queryName(name).start()
-        }
-      }(_.orderBy("win_start", "event_type"))
+      EventStreams.drain(agg, "stream_windowed", statePartitions = Some(4))(
+        _.orderBy("win_start", "event_type"))
     }),
 
     // hourly tumbling-window aggregate (streaming twin: EventStreams.windowedAgg
@@ -292,13 +284,8 @@ object Events {
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
       GateTmp.within("graft_ckpt_hll") { ckpt =>
-        EventStreams.drain(s, "stream_hll") { name =>
-          EventStreams.withStatePartitions(s, 4) {
-            agg.writeStream.outputMode("append").format("memory")
-              .option("checkpointLocation", ckpt.toString)
-              .queryName(name).start()
-          }
-        }(_.orderBy("win_start"))
+        EventStreams.drain(agg, "stream_hll", statePartitions = Some(4),
+          checkpoint = Some(ckpt.toString))(_.orderBy("win_start"))
       }
     }),
 
@@ -317,13 +304,8 @@ object Events {
       // rationale: the implicit temp checkpoint measures the box's /tmp
       // disk, not the stream)
       GateTmp.within("graft_ckpt_hll") { ckpt =>
-        EventStreams.drain(s, "stream_hllp10") { name =>
-          EventStreams.withStatePartitions(s, 4) {
-            agg.writeStream.outputMode("append").format("memory")
-              .option("checkpointLocation", ckpt.toString)
-              .queryName(name).start()
-          }
-        }(_.orderBy("win_start"))
+        EventStreams.drain(agg, "stream_hllp10", statePartitions = Some(4),
+          checkpoint = Some(ckpt.toString))(_.orderBy("win_start"))
       }
     }),
 
@@ -354,12 +336,8 @@ object Events {
       // 32×4 HDFS-backed stores is pure per-micro-batch overhead at gate
       // scale. A production deployment sizes this to state volume, not
       // compute parallelism.
-      EventStreams.drain(s, "stream_ivj") { name =>
-        EventStreams.withStatePartitions(s, 4) {
-          joined.writeStream.outputMode("append").format("memory")
-            .queryName(name).start()
-        }
-      }(_.orderBy("click_id", "view_id"))
+      EventStreams.drain(joined, "stream_ivj", statePartitions = Some(4))(
+        _.orderBy("click_id", "view_id"))
     }),
 
     // stream-static enrichment: each event decorated from the customer
@@ -372,11 +350,8 @@ object Events {
       val dim = graft.Tables(s, d).customer
         .select(col("c_custkey").as("user_id"), col("c_name"),
           col("c_mktsegment"))
-      EventStreams.drain(s, "stream_enrich") { name =>
-        EventStreams.enrich(stream, dim, Seq("user_id"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }(_.orderBy("event_id"))
+      EventStreams.drain(EventStreams.enrich(stream, dim, Seq("user_id")),
+        "stream_enrich")(_.orderBy("event_id"))
     }),
 
     // stream-stream LEFT OUTER interval join — the semantics q212's inner
@@ -446,14 +421,6 @@ object Events {
           .select(col("event_id").as("click_id"),
             col("event_id_r").as("view_id"), col("user_id"),
             col("ts").as("click_ts"), col("ts_r").as("view_ts"))
-        def start(name: String) = EventStreams.withStatePartitions(s, 4) {
-          // explicit checkpoint on the gate's (tmpfs-preferring) root: the
-          // memory sink's implicit temp checkpoint lands on java.io.tmpdir,
-          // which on a contended-disk box measures the disk, not the join
-          joined.writeStream.outputMode("append").format("memory")
-            .option("checkpointLocation", s"$root/ckpt")
-            .queryName(name).start()
-        }
         def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
           q.processAllAvailable()
           val mx = ev.agg(max("ts")).collect()(0).getTimestamp(0) // one row
@@ -496,7 +463,11 @@ object Events {
           }
           if (!evictionBatchRan) writeSentinel(96)
         }
-        EventStreams.drain(s, "stream_oivj", run)(start)(
+        // explicit checkpoint on the gate's (tmpfs-preferring) root: the
+        // memory sink's implicit temp checkpoint lands on java.io.tmpdir,
+        // which on a contended-disk box measures the disk, not the join
+        EventStreams.drain(joined, "stream_oivj", statePartitions = Some(4),
+            checkpoint = Some(s"$root/ckpt"), run = run)(
           _.filter(col("user_id") >= 0).orderBy("click_id", "view_id"))
       }
     })

@@ -222,7 +222,7 @@ object Graph {
     }),
 
     // the HyperCube-routed WCOJ under the hard gate: same dense triangle as
-    // q47, with the small-input cap at 0 (`graft.Small.Key`), so
+    // q47, with the small-input cap at 0 (`graft.Small.withCap`), so
     // LeapFrogJoinExec never takes one cell and routes through the Shares
     // grid. The route is read off what actually ran —
     // the executed plan holds the LeapFrogJoin node and the count's own
@@ -237,11 +237,10 @@ object Graph {
         Seq("a", "b", "c"))
         .filter(col("a") < col("b") && col("a") < col("c"))
         .agg(count(lit(1)).as("n_triangles"))
-      // the exec reads the conf when its routing runs: count under it
-      val (n, trace) =
-        graft.SessionDefaults.withConf(s, graft.Small.Key -> "0") {
-          QueryTrace.run(s)(tri.collect()(0).getLong(0)) // one row
-        }
+      // the exec reads the cap when its routing runs: count under it
+      val (n, trace) = graft.Small.withCap(s, 0) {
+        QueryTrace.run(s)(tri.collect()(0).getLong(0)) // one row
+      }
       val ran = wcojRouteOf(tri) == "leapfrog"
       val cells = trace.get("wcoj.cells").fold(0)(_.toInt)
       val route = if (!ran) "binary" else if (cells > 1) "hypercube" else "single-cell"

@@ -1206,10 +1206,8 @@ object Pipeline {
       // the same state file traffic and benched 35% slower)
       val curated = graft.streaming.DocStreams.curateStream(stream, minQuality = 0.2)
         .select("fp")
-      graft.streaming.EventStreams.drain(s, "stream_curation") { name =>
-        curated.writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }(_.select("fp").distinct().orderBy("fp"))
+      graft.streaming.EventStreams.drain(curated, "stream_curation")(
+        _.select("fp").distinct().orderBy("fp"))
     }),
 
     // END-TO-END curation pipeline, composed from the operators above:
@@ -1677,13 +1675,13 @@ object Pipeline {
     }),
 
     // the byte-budget broadcast guard under the hard gate: same ranking as
-    // q58, but with the small-input cap (graft.Small.Key) at 0 so the query side
+    // q58, but with the small-input cap (graft.Small.withCap) at 0 so the query side
     // CANNOT be broadcast — budgetedCross must take the shuffle-replicated
     // nested-loop route, and the route actually taken is emitted as a
     // column so a silent fall-back to broadcast hash-mismatches the
     // oracle's 'shuffle' literal (the q186 pattern).
     "q200_ann_shuffle_route" -> ((s, d) => {
-      graft.SessionDefaults.withConf(s, graft.Small.Key -> "0") {
+      graft.Small.withCap(s, 0) {
         val e = Tables(s, d).embeddings
         // routing happens eagerly inside budgetedCross (the side is
         // sized at plan build), so the trace holds the route on return
@@ -1892,12 +1890,8 @@ object Pipeline {
         .withColumn("ts", expr("timestamp_seconds(1704067200 + doc_id % 300)"))
       val deduped = graft.streaming.DocStreams.simhashDedupStream(stream)
         .select("simhash")
-      graft.streaming.EventStreams.drain(s, "stream_near_dedup") { name =>
-        graft.streaming.EventStreams.withStatePartitions(s, 4) {
-          deduped.writeStream.outputMode("append").format("memory")
-            .queryName(name).start()
-        }
-      }(_.select("simhash").distinct().orderBy("simhash"))
+      graft.streaming.EventStreams.drain(deduped, "stream_near_dedup",
+        statePartitions = Some(4))(_.select("simhash").distinct().orderBy("simhash"))
     }),
 
     // cluster-outlier pruning (the LAION/DataComp far-from-centroid noise

@@ -686,17 +686,16 @@ object Relational {
         col("o_totalprice")), "cb_orders", Seq("o_custkey"), 8)
       es.writeBucketed(t.customer.select(col("c_custkey"), col("c_mktsegment")),
         "cb_customer", Seq("c_custkey"), 8)
-      graft.SessionDefaults.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val j = s.table("cb_orders")
-          .join(s.table("cb_customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy("c_custkey")
-          .agg(count(lit(1)).as("n_orders"),
-            sum(floor(col("o_totalprice") * 100).cast("long")).as("total_cents"))
-        val layout =
-          if (j.queryExecution.executedPlan.toString.contains("Exchange")) "shuffled"
-          else "colocated"
-        j.withColumn("layout", lit(layout)).localCheckpoint(true)
-      }
+      // the merge hint keeps either side from being broadcast
+      val j = s.table("cb_orders").hint("merge")
+        .join(s.table("cb_customer"), col("o_custkey") === col("c_custkey"))
+        .groupBy("c_custkey")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(floor(col("o_totalprice") * 100).cast("long")).as("total_cents"))
+      val layout =
+        if (j.queryExecution.executedPlan.toString.contains("Exchange")) "shuffled"
+        else "colocated"
+      j.withColumn("layout", lit(layout)).localCheckpoint(true)
     }),
 
     // CBO estimation ACCURACY on the reference's controlled-cardinality
@@ -737,19 +736,20 @@ object Relational {
             df.write.mode("overwrite").option("path", s"$root/$n").saveAsTable(n)
             es.analyzeTable(n, cols) // FOR COLUMNS computes row count + NDVs
           }
-          def shapeRow(shape: String, sql: String) =
-            graft.SessionDefaults.withConf(s, "spark.sql.cbo.enabled" -> "true") {
-              val df = s.sql(sql)
-              // plan stats read SQLConf.get, the conf of the thread's ACTIVE
-              // session: evaluate them under this gate's session, whichever
-              // session the caller has active
-              val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(
-                s.sessionState.conf)(df.queryExecution.optimizedPlan.stats.rowCount)
-              val exact = df.count()
-              val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
-              (shape, exact, est.isDefined,
-                ratio.exists(r => r >= 0.25 && r <= 4.0))
-            }
+          // plan stats read SQLConf.get: evaluate them under a copy of
+          // this gate's session conf with CBO on, whichever session the
+          // caller has active and without turning CBO on for the session
+          val cbo = s.sessionState.conf.clone()
+          cbo.setConfString("spark.sql.cbo.enabled", "true")
+          def shapeRow(shape: String, sql: String) = {
+            val df = s.sql(sql)
+            val est = org.apache.spark.sql.internal.SQLConf.withExistingConf(cbo)(
+              df.queryExecution.optimizedPlan.stats.rowCount)
+            val exact = df.count()
+            val ratio = est.map(_.toDouble / math.max(exact, 1L).toDouble)
+            (shape, exact, est.isDefined,
+              ratio.exists(r => r >= 0.25 && r <= 4.0))
+          }
           // W1 star: fact ⨝ three PK dims on distinct FKs
           val star = shapeRow("star",
             """SELECT * FROM q239_lineitem

@@ -181,12 +181,11 @@ object DocStreams {
 
   def upsertBatch(batch: DataFrame, tablePath: String, keyCol: String,
       versionCol: String, buckets: Int): Unit = {
-    val spark = batch.sparkSession
     // the publish loop below does its OWN per-bucket aside/rename swap
     // with a marker-gated heal — the same custom-protocol class as the
     // IVF store's, with the same undeclared-on-object-stores hazard
     // (r17): refuse schemes without atomic create-exclusive + rename
-    graft.FsContract.requireAtomicScheme(spark, tablePath, "upsertBatch",
+    graft.FsContract.requireAtomicScheme(batch.sparkSession, tablePath, "upsertBatch",
       "the upsert publish protocol (per-bucket aside/rename swap + " +
         "marker-gated heal)")
     // AQE is pure overhead for this merge: it turns each exchange into its
@@ -195,32 +194,12 @@ object DocStreams {
     // `buckets` longs; the merge width is pinned to the affected-bucket
     // count for the one-file-per-dir contract) — measured at gate scale:
     // 4 jobs → 2 and ~40% off the per-refresh wall (A/B in README.md).
-    // Session-conf save/restore, SERIALIZED per session (ADVICE r16): the
-    // streaming path runs on its own cloned session, but a caller sharing
-    // one session across concurrent upserts to DIFFERENT tables would race
-    // the toggle — one batch's finally restoring "false" mid-flight for
-    // the other, or clobbering a conf set elsewhere in the window. The
-    // session's monitor makes the whole toggle window exclusive per
-    // session (different sessions still run fully in parallel): a comment
-    // documented this contract before, nothing enforced it.
-    aqeLockFor(spark).synchronized {
-      graft.SessionDefaults.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-        upsertBatchNoAqe(batch, tablePath, keyCol, versionCol, buckets)
-      }
-    }
-  }
-
-  // weak keys: a dedicated monitor per session (locking the session object
-  // itself could collide with Spark-internal synchronization), dropped
-  // when the session is collected
-  private val aqeLocks =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, Object]()
-  private def aqeLockFor(s: org.apache.spark.sql.SparkSession): Object =
-    aqeLocks.synchronized { aqeLocks.computeIfAbsent(s, _ => new Object) }
-
-  private def upsertBatchNoAqe(batch: DataFrame, tablePath: String,
-      keyCol: String, versionCol: String, buckets: Int): Unit = {
-    val spark = batch.sparkSession
+    // It runs on a clone of the batch's session with AQE off, so the
+    // caller's session, and any query planned on it meanwhile, keeps AQE;
+    // its table reads go through the clone too.
+    val noAqe = org.apache.spark.sql.GraftSqlBridge.onClone(batch,
+      "spark.sql.adaptive.enabled" -> "false")
+    val spark = noAqe.sparkSession
     val bucket = pmod(
       conv(substring(md5(col(keyCol).cast("string")), 1, 8), 16, 10)
         .cast("long"), lit(buckets.toLong))
@@ -235,7 +214,7 @@ object DocStreams {
     // that narrow re-read measured ~15% SLOWER per refresh (A/B recorded
     // in README.md). The FIRST batch has nothing to read back: no
     // discovery job at all — the initial load is ONE job + publish.
-    val keyed = batch.withColumn("bucket", bucket)
+    val keyed = noAqe.withColumn("bucket", bucket)
     // Heal a crashed prior publish BEFORE discovery. The publish loop below
     // drops an in-progress marker while it renames; if the marker survives,
     // some bucket may sit ASIDE (.bucket=N.__old) with its dest missing —

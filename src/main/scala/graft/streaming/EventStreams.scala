@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -17,21 +17,6 @@ import org.apache.spark.sql.types.StructType
   */
 object EventStreams {
 
-  /** Pin `spark.sql.shuffle.partitions` to `n` for the duration of `body`
-    * (restore after). State partitioning of a streaming query is FIXED at
-    * query start from this conf, so call this around `.writeStream...start()`
-    * to size the number of state stores to state VOLUME instead of compute
-    * parallelism: a stream-stream join spins up four stores per partition,
-    * and at small state sizes the per-micro-batch store commit overhead of
-    * partitions × stores dominates. NOT a universal win — a single-store
-    * query whose state traffic already commits in parallel across cores
-    * can get SLOWER when serialized onto fewer stores (q100 measured 35%
-    * slower at n = 8); measure per query.
-    */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    graft.SessionDefaults.withConf(spark,
-      "spark.sql.shuffle.partitions" -> n.toString)(body)
-
   /** The events table under `d` as a file stream: the sf directory,
     * glob-filtered to `events.parquet` (the file source wants a
     * directory), read with the batch table's schema and its `ts`
@@ -44,25 +29,46 @@ object EventStreams {
 
   private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Runs a memory-sink stream and returns what it wrote, pinned.
-    * `start(name)` starts the query into the memory sink `name` (unique per
-    * call, `<prefix>_<n>`); `run` drives it (default: everything available
-    * now); the query stops; `readBack` shapes the sink's table, which a
-    * local checkpoint pins. The query stops and the sink's temp view is
-    * dropped however `run` ends, so a failed stream leaves nothing
-    * registered on the session and repeated passes pin no earlier pass's
-    * rows.
+  /** Runs `stream` into a memory sink and returns what it wrote, pinned.
+    * The query appends into the sink `<prefix>_<n>` (unique per call),
+    * checkpointing under `checkpoint` when given; `run` drives it
+    * (default: everything available now); the query stops; `readBack`
+    * shapes the sink's table, which a local checkpoint pins. The query
+    * stops and the sink's temp view is dropped however `run` ends, so a
+    * failed stream leaves nothing registered and repeated passes pin no
+    * earlier pass's rows.
+    *
+    * `statePartitions` fixes the query's state partitioning, which Spark
+    * takes from `spark.sql.shuffle.partitions` once, at the query's first
+    * start, and records in its checkpoint. The stream runs on a clone of
+    * its session that has that value, so the session itself and every
+    * other query on it keep theirs. It sizes state stores to state volume
+    * instead of compute parallelism: a stream-stream join spins up four
+    * stores per partition, and at small state sizes the per-micro-batch
+    * commit of partitions × stores dominates. Not a universal win: a
+    * single-store query whose state traffic already commits in parallel
+    * across cores can get slower on fewer stores (q100 measured 35%
+    * slower at 8); measure per query.
     */
-  def drain(s: SparkSession, prefix: String,
+  def drain(stream: DataFrame, prefix: String, statePartitions: Option[Int] = None,
+      checkpoint: Option[String] = None,
       run: StreamingQuery => Unit = _.processAllAvailable())(
-      start: String => StreamingQuery)(
       readBack: DataFrame => DataFrame): DataFrame = {
+    val df = statePartitions.fold(stream)(n =>
+      GraftSqlBridge.onClone(stream, "spark.sql.shuffle.partitions" -> n.toString))
     val name = s"${prefix}_${sinkCounter.incrementAndGet()}"
     try {
-      val q = start(name)
+      val w = df.writeStream.outputMode("append").format("memory").queryName(name)
+      val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
       try run(q) finally q.stop()
-      readBack(s.table(name)).localCheckpoint(true)
-    } finally s.catalog.dropTempView(name): Unit
+      // the sink's view lives on the session that started the query; the
+      // rows are read back on the caller's
+      readBack(GraftSqlBridge.ofRows(stream.sparkSession,
+        GraftSqlBridge.logicalPlan(df.sparkSession.table(name)))).localCheckpoint(true)
+    } finally {
+      df.sparkSession.catalog.dropTempView(name)
+      if (statePartitions.isDefined) GraftSqlBridge.releaseStreamListener(df.sparkSession)
+    }
   }
 
   /** Streaming reader over a parquet directory with the events schema. */

@@ -73,14 +73,6 @@ object HyperCube {
   private def bucketFrac(f: Double, p: Int): Double =
     if (p <= 1) 1.0 else f + (1.0 - f) / p
 
-  /** Rows-only signature (uniform data, bytes ∝ rows) — kept as the simple
-    * entry point; delegates to the stats form.
-    */
-  def optimalShares(attrs: Seq[String], relations: Seq[(Set[String], Long)],
-      maxCells: Int): Shares =
-    optimalSharesStat(attrs,
-      relations.map { case (a, n) => RelStat(a, n, n) }, maxCells).shares
-
   /** Enumerate share vectors with Π p_a ≤ maxCells and pick the one
     * minimizing the estimated MAX per-cell input payload (skew-aware; see
     * object doc). Ties: lower total communication Σ_R bytes_R · Π_{a∉R} p_a,

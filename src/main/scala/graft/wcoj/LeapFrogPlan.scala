@@ -79,11 +79,6 @@ final case class LeapFrogJoinExec(
   @transient private lazy val attrsByIdx: Array[Array[String]] =
     childAttrs.map(_.sortBy(order.indexOf(_)).toArray).toArray
 
-  /** The share vector the optimizer actually chose (observability + specs);
-    * populated when the routing pipeline first materializes.
-    */
-  @transient @volatile var chosen: Option[HyperCube.SizedShares] = None
-
   /** HyperCube routing pipeline: children → global-order long arrays →
     * share-optimized cell replication → one partition per cell. Shared by
     * the interpreted and whole-stage-codegen paths.
@@ -106,16 +101,18 @@ final case class LeapFrogJoinExec(
 
     // one stats pass over the cached inputs (count + per-attribute heavy-
     // hitter sketches), then the share choice; the output bound, when the
-    // routing computed one, and the cells go to the query's trace
+    // routing computed one, the cells and the shares (`a=1,b=2,c=2`) go to
+    // the query's trace
     val stats = SkewStats.relStats(prepped)
     val (sized, bound) = LeapFrogJoinExec.route(ord.toSeq, stats, sc.defaultParallelism,
       graft.Small.cap(session), LeapFrogJoinExec.SingleCellMaxBindings,
       () => SkewStats.degreeBound(prepped, ord.toSeq))
     bound.foreach(b => graft.QueryTrace.record(session, "wcoj.outputBound",
       math.min(b, Long.MaxValue.toDouble).toLong))
-    graft.QueryTrace.record(session, "wcoj.cells", sized.shares.numCells)
-    chosen = Some(sized)
     val shares = sized.shares
+    graft.QueryTrace.record(session, "wcoj.cells", shares.numCells)
+    graft.QueryTrace.record(session, "wcoj.shares",
+      shares.attrs.zip(shares.p).map { case (a, p) => s"$a=$p" }.mkString(","))
     val bcShares = sc.broadcast(shares)
     val nCells = shares.numCells
 

@@ -13,6 +13,33 @@ object GraftSqlBridge {
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
+  /** `df`'s plan on a clone of its session that has `confs` set: a
+    * setting that only this query's planning and execution see (AQE, a
+    * stream's state partitions), while `df`'s own session keeps its conf.
+    * The clone carries the session's conf, temp views and functions.
+    */
+  def onClone(df: DataFrame, confs: (String, String)*): DataFrame = {
+    val clone = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
+    confs.foreach { case (k, v) => clone.conf.set(k, v) }
+    ofRows(clone, logicalPlan(df))
+  }
+
+  /** Unregisters the listener bus that `session` put on its SparkContext
+    * when it started its first stream: Spark registers one per session
+    * that starts a stream and never removes it, so every clone from
+    * [[onClone]] that ran a stream would leave one behind, and each
+    * SparkContext event would reach them all. Only for a session none of
+    * whose streams runs any more.
+    */
+  def releaseStreamListener(session: SparkSession): Unit = {
+    val streams = session.asInstanceOf[classic.SparkSession].streams
+    scala.util.Try(streams.getClass.getDeclaredField("listenerBus")).foreach { f =>
+      f.setAccessible(true)
+      session.sparkContext.listenerBus.removeListener(
+        f.get(streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+    }
+  }
+
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 

@@ -23,10 +23,46 @@ trait SparkSpec extends AnyFunSuite {
   /** Runs `body` with each (key, value) set on the session, then gives each
     * key back its prior value, or unsets it if it had none. Every suite
     * shares one session in one JVM, so a conf a spec leaves set would leak
-    * into every later suite.
+    * into every later suite. A key "had none" when it was not set
+    * explicitly: `spark.conf.get` would return a registered key's default,
+    * and writing that back would turn an unset key into a set one. This
+    * writes the shared session conf, so it is for specs that run one query
+    * at a time; the engine scopes a per-query setting to its query.
     */
-  def withConf[A](pairs: (String, String)*)(body: => A): A =
-    SessionDefaults.withConf(spark, pairs: _*)(body)
+  def withConf[A](pairs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prior = pairs.map { case (k, _) => k -> set.get(k) }
+    try {
+      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `body` on this thread while a second thread evaluates `sample`
+    * over and over, at least once, until `body` returns. Gives `body`'s
+    * result and the distinct samples; a failed sample fails the call.
+    */
+  def alongside[A, B](sample: => B)(body: => A): (A, Set[B]) = {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[B]()
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    @volatile var done = false
+    val sampler = new Thread(() =>
+      try {
+        do { seen.add(sample); Thread.sleep(1) } while (!done)
+      } catch { case t: Throwable => failed.set(t) })
+    sampler.start()
+    val out = try body finally { done = true; sampler.join() }
+    Option(failed.get).foreach(t => throw t)
+    import scala.jdk.CollectionConverters._
+    (out, seen.asScala.toSet)
+  }
+
+  /** [[alongside]], sampling the session's value of each key (None: unset). */
+  def sampledConf[A](keys: String*)(body: => A): (A, Set[Map[String, Option[String]]]) =
+    alongside(keys.map(k => k -> spark.conf.getOption(k)).toMap)(body)
 
   /** Runs `body` and asserts that at most `keep` of the RDDs it persisted
     * (the pins a test means to hold on to) are still stored, polled for

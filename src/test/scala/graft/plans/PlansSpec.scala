@@ -193,8 +193,8 @@ class CardinalityOrderSpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
 
   // triangle over attributes with very different domains: a tiny (3
-  // values), b medium (40), c large (200) — coverage is equal (2 relations
-  // each), so only cardinality can separate them
+  // values), b medium (40), c large (200); coverage is equal (2 relations
+  // each)
   private lazy val rels = {
     val rnd = new scala.util.Random(31)
     val ab = (1 to 300).map(_ => (rnd.nextInt(3).toLong, rnd.nextInt(40).toLong))
@@ -206,21 +206,15 @@ class CardinalityOrderSpec extends SparkSpec {
     Seq((ab, Seq("a", "b")), (bc, Seq("b", "c")), (ac, Seq("a", "c")))
   }
 
-  test("cardinality order binds the smallest domain first, name order without stats") {
-    val static = MultiwayJoin.wcojAttrOrder(rels, Set("a", "b", "c"), cardinality = false)
-    assert(static === Seq("a", "b", "c")) // equal coverage -> name tie-break
-    val stats = MultiwayJoin.wcojAttrOrder(rels, Set("c", "b", "a"), cardinality = true)
-    assert(stats === Seq("a", "b", "c")) // |dom(a)|=3 < |dom(b)|=40 < |dom(c)|<=200
+  test("equal coverage orders WCOJ attributes by name") {
+    val static = MultiwayJoin.wcojAttrOrder(rels, Set("c", "b", "a"))
+    assert(static === Seq("a", "b", "c"))
   }
 
-  test("cardinality order is a pure plan choice: identical WCOJ result") {
+  test("a cyclic bag through WCOJ equals the binary-join formulation") {
     val plain = MultiwayJoin.join(rels, wcoj = true)
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
-    val carded = MultiwayJoin.join(rels, wcoj = true, cardinalityOrder = true)
-      .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
-    assert(carded === plain)
-    assert(plain.nonEmpty) // the differential must compare real bindings
-    // and both agree with the binary-join formulation
+    assert(plain.nonEmpty) // the comparison must see real bindings
     val binary = rels(0)._1.join(rels(1)._1, "b").join(rels(2)._1, Seq("a", "c"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
     assert(plain === binary)
@@ -287,14 +281,14 @@ class CardinalityOrderSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("coverage still dominates cardinality across unequal coverage") {
-    // d appears in ONE relation with a tiny domain; b in two with a large
-    // one — most-covered-first must still put b ahead of d
+  test("coverage orders WCOJ attributes before the name tie-break") {
+    // b appears in all three relations, a, c and d in one each:
+    // most-covered-first puts b ahead of a
     val r = Seq(
       (Seq((1L, 1L)).toDF("b", "d"), Seq("b", "d")),
       (Seq((1L, 2L)).toDF("a", "b"), Seq("a", "b")),
       (Seq((2L, 1L)).toDF("b", "c"), Seq("b", "c")))
-    val order = MultiwayJoin.wcojAttrOrder(r, Set("a", "b", "c", "d"), cardinality = true)
+    val order = MultiwayJoin.wcojAttrOrder(r, Set("a", "b", "c", "d"))
     assert(order.head === "b")
   }
 }

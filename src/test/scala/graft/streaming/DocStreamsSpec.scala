@@ -421,6 +421,50 @@ class DocStreamsSpec extends SparkSpec {
     }
   }
 
+  test("an upsert runs 1 Spark job to load and 2 to refresh; the session keeps AQE on") {
+    val root = Files.createTempDirectory("upsert_jobs").toString
+    try {
+      def jobs(batch: org.apache.spark.sql.DataFrame): Long =
+        graft.QueryTrace.run(spark)(DocStreams.upsertBatch(batch, s"$root/t",
+          "doc_id", "version", buckets = 8))._2.totals.jobs
+      val aqe = "spark.sql.adaptive.enabled"
+      val (counts, seen) = sampledConf(aqe) {
+        (jobs(upds((1L, 1, "a1"), (2L, 1, "b1"), (3L, 1, "c1"))),
+          jobs(upds((2L, 2, "b2"), (4L, 1, "d1"))))
+      }
+      // the load is the write alone; a refresh adds the affected-bucket
+      // collect. With AQE on, each exchange is a job of its own (4 a refresh).
+      assert(counts === ((1L, 2L)))
+      assert(seen === Set(Map(aqe -> Some("true"))))
+      assert(tableRows(s"$root/t") ===
+        Set((1L, 1, "a1"), (2L, 2, "b2"), (3L, 1, "c1"), (4L, 1, "d1")))
+    } finally FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("two upserts to different tables at once leave what sequential runs leave") {
+    val root = Files.createTempDirectory("upsert_concurrent").toString
+    try {
+      val cycles = Map(
+        "a" -> Seq(upds((1L, 1, "a1"), (2L, 1, "b1"), (3L, 1, "c1")),
+          upds((2L, 2, "b2"), (4L, 1, "d1")), upds((1L, 3, "a3"))),
+        "b" -> Seq(upds((10L, 1, "j1"), (11L, 1, "k1")),
+          upds((11L, 2, "k2"), (12L, 1, "l1"), (13L, 1, "m1")), upds((10L, 2, "j2"))))
+      def run(name: String, table: String): Unit = cycles(name).foreach(
+        DocStreams.upsertBatch(_, s"$root/$table", "doc_id", "version", buckets = 4))
+      run("a", "seq_a"); run("b", "seq_b")
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val other = Future(run("b", "par_b"))
+      run("a", "par_a")
+      Await.result(other, scala.concurrent.duration.Duration(5, "min"))
+      for (t <- Seq("a", "b")) {
+        assert(tableRows(s"$root/par_$t") === tableRows(s"$root/seq_$t"), t)
+        assert(bucketFiles(s"$root/par_$t").keySet === bucketFiles(s"$root/seq_$t").keySet, t)
+      }
+      assert(tableRows(s"$root/par_a").contains((1L, 3, "a3")))
+    } finally FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("upsert merge writes ONE file per bucket dir however wide the batch plan") {
     val root = Files.createTempDirectory("upsert_files").toString
     try {

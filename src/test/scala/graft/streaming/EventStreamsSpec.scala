@@ -478,11 +478,8 @@ class EventStreamsSpec extends SparkSpec {
       i
     }
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      EventStreams.drain(spark, "stream_boom") { name =>
-        in.toDF().select(boom(col("value")).as("v"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      }(identity)
+      EventStreams.drain(in.toDF().select(boom(col("value")).as("v")), "stream_boom")(
+        identity)
     }
     assert(!spark.catalog.listTables().collect()
       .exists(t => t.isTemporary && t.name.startsWith("stream_boom")))
@@ -490,11 +487,73 @@ class EventStreamsSpec extends SparkSpec {
     // and a stream that succeeds returns its rows, pinned, with its view gone
     val ok = memoryStream()
     ok.addData(3, 1, 2)
-    val out = EventStreams.drain(spark, "stream_ok") { name =>
-      ok.toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-    }(_.orderBy("value"))
+    val out = EventStreams.drain(ok.toDF(), "stream_ok")(_.orderBy("value"))
     assert(out.as[Int].collect().toSeq === Seq(1, 2, 3))
     assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("stream_ok")))
+  }
+
+  /** The shuffle-partition count a stream's first offset log recorded. */
+  private def recordedPartitions(ckpt: java.nio.file.Path): String = {
+    val log = new String(java.nio.file.Files.readAllBytes(ckpt.resolve("offsets/0")), "UTF-8")
+    "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r
+      .findFirstMatchIn(log).map(_.group(1)).getOrElse(s"none in $log")
+  }
+
+  /** Streaming listener buses on the SparkContext's listener bus: one per
+    * session that has started a stream, unless released.
+    */
+  private def streamListenerBuses(): Int = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[AnyRef]]
+      .toArray.count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+  }
+
+  private def withCheckpoint[A](body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("drain_ckpt")
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("drain's state-partition pin reaches a stateful stream's checkpoint, not the session") {
+    withConf("spark.sql.shuffle.partitions" -> "6") {
+      // q212's shape: a stream-stream interval join over one events source
+      val src = EventStreams.eventsSource(spark, sf0001)
+      def side(tpe: String) = src.filter(col("event_type") === tpe)
+        .select("event_id", "user_id", "ts")
+      val joined = EventStreams.intervalJoin(side("click"), side("view"), "user_id",
+        toleranceSeconds = 1800, watermark = "0 seconds")
+      /** Pairs drained, the recorded partitions, and the listener buses added. */
+      def run(pin: Option[Int]): (Long, String, Int) = withCheckpoint { ckpt =>
+        val buses = streamListenerBuses()
+        val n = EventStreams.drain(joined, "stream_pin", statePartitions = pin,
+          checkpoint = Some(ckpt.toString))(identity).count()
+        (n, recordedPartitions(ckpt), streamListenerBuses() - buses)
+      }
+      val unpinned = run(None)
+      val ((n, recorded, buses), seen) =
+        sampledConf("spark.sql.shuffle.partitions")(run(Some(4)))
+      assert(n > 0 && n === unpinned._1)
+      assert(recorded === "4" && unpinned._2 === "6")
+      assert(seen === Set(Map("spark.sql.shuffle.partitions" -> Some("6"))))
+      // the session clone the pinned stream ran on leaves no listener
+      // behind: it adds what the same stream adds on the session itself
+      assert(buses === unpinned._3)
+    }
+  }
+
+  test("an unpinned drain records the session's shuffle partitions") {
+    withConf("spark.sql.shuffle.partitions" -> "6") {
+      // q100's shape: curation fingerprints of a documents file stream
+      val schema = graft.Tables.read(spark, s"$sf0001/documents.parquet").schema
+      val stream = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet").parquet(sf0001)
+        .withColumn("ts", expr("timestamp_seconds(1704067200 + doc_id % 300)"))
+      val curated = DocStreams.curateStream(stream, minQuality = 0.2).select("fp")
+      withCheckpoint { ckpt =>
+        EventStreams.drain(curated, "stream_unpinned", checkpoint = Some(ckpt.toString))(
+          identity)
+        assert(recordedPartitions(ckpt) === "6")
+      }
+    }
   }
 }

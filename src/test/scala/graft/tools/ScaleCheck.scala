@@ -26,13 +26,11 @@ import graft.operators.Similarity
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
+    val spark = graft.SessionDefaults(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .appName("scale-check")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", 5000)
-      .config("spark.ui.enabled", false)
+      .config("spark.ui.enabled", false))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -233,7 +231,7 @@ object ScaleCheck {
       val t0 = System.nanoTime()
       // the salted route at every factor; the PQ top-k below keeps the
       // default cap
-      val (n, knn) = graft.SessionDefaults.withConf(spark, graft.Small.Key -> "0") {
+      val (n, knn) = graft.Small.withCap(spark, 0) {
         QueryTrace.run(spark)(graft.operators.Similarity.mutualKnnIvf(
           emb, "embedding", "vec_id", k = 5, centroidMod = 100, probes = 2,
           maxCell = cap).count())
@@ -406,7 +404,7 @@ object ScaleCheck {
     // the hot copy. Run under a 1 MB cap: the grid grows on mass > cap, so
     // a small cap demonstrates the same mechanism the 32 MB default applies
     // at 32× the data.
-    graft.SessionDefaults.withConf(spark, graft.Small.Key -> (1L << 20).toString) {
+    graft.Small.withCap(spark, 1L << 20) {
       val base = graft.Tables(spark, sfDir).orders
         .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
         .filter(col("src") =!= col("dst")).distinct()

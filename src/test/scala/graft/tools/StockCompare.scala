@@ -71,13 +71,11 @@ object StockCompare {
     // optional 2nd arg: substring filter on row names, for iterating on
     // one comparison without the full ~8-minute pass
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
+    val spark = graft.SessionDefaults(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .appName("stock-compare")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", 5000)
-      .config("spark.ui.enabled", false)
+      .config("spark.ui.enabled", false))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -617,17 +615,16 @@ object StockCompare {
     //     LEFT OUTER interval join written in RAW Spark Structured
     //     Streaming — readStream file sources, withWatermark on both
     //     sides, one expr-range left_outer join, memory sink, the same
-    //     sentinel protocol to flush evictions. No graft code in the
-    //     measured path: the ratio isolates what the ENGINE adds on top of
-    //     Spark's own streaming apparatus (expected ~1×). Comparator 18
-    //     remains as context — it prices the apparatus itself against a
-    //     toy batch join, which no streaming engine can match on a bounded
-    //     replay.
+    //     sentinel protocol to flush evictions. No graft operator in the
+    //     measured path (EventStreams.drain only starts the memory sink
+    //     with q215's 4 state partitions): the ratio isolates what the
+    //     ENGINE adds on top of Spark's own streaming apparatus (expected
+    //     ~1×). Comparator 18 remains as context — it prices the apparatus
+    //     itself against a toy batch join, which no streaming engine can
+    //     match on a bounded replay.
     {
       import org.apache.commons.io.FileUtils
-      val stockStreamCounter = new java.util.concurrent.atomic.AtomicLong()
       def stockStreamOuter(): Long = {
-        val name = s"sc_oivj_${stockStreamCounter.incrementAndGet()}"
         val root = graft.queries.GateTmp.dir("sc_oivj")
         val sent = s"$root/sent"
         try {
@@ -655,12 +652,7 @@ object StockCompare {
             .select(col("event_id").as("click_id"),
               col("event_id_r").as("view_id"), col("user_id"),
               col("ts").as("click_ts"), col("ts_r").as("view_ts"))
-          val q = graft.SessionDefaults.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
-            joined.writeStream.outputMode("append").format("memory")
-              .option("checkpointLocation", s"$root/ckpt")
-              .queryName(name).start()
-          }
-          try {
+          def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
             q.processAllAvailable()
             val mx = ev.agg(max("ts")).collect()(0).getTimestamp(0)
             import spark.implicits._
@@ -682,10 +674,10 @@ object StockCompare {
               q.processAllAvailable()
             }
             if (!evictionBatchRan) writeSentinel(96)
-          } finally q.stop()
-          val n = spark.table(name).filter(col("user_id") >= 0).count()
-          spark.catalog.dropTempView(name)
-          n
+          }
+          graft.streaming.EventStreams.drain(joined, "sc_oivj", statePartitions = Some(4),
+            checkpoint = Some(s"$root/ckpt"), run = run)(
+            _.filter(col("user_id") >= 0)).count()
         } finally FileUtils.deleteDirectory(root.toFile)
       }
       report("stream outer vs stock stream",

@@ -85,16 +85,18 @@ class LeapFrogSpec extends AnyFunSuite {
 class HyperCubeSpec extends AnyFunSuite {
 
   test("triangle with symmetric sizes gets a balanced cube") {
-    val s = HyperCube.optimalShares(Seq("a", "b", "c"),
-      Seq((Set("a", "b"), 1000L), (Set("b", "c"), 1000L), (Set("a", "c"), 1000L)), maxCells = 27)
+    val s = HyperCube.optimalSharesStat(Seq("a", "b", "c"),
+      Seq(Set("a", "b"), Set("b", "c"), Set("a", "c")).map(HyperCube.RelStat(_, 1000L, 1000L)),
+      maxCells = 27).shares
     assert(s.p.toSeq === Seq(3, 3, 3))
   }
 
   test("shared attribute absorbs the whole budget when it splits all relations") {
     // R(a,b) huge, S(b,c) tiny: partitioning on the shared b splits both
     // relations with ZERO replication — p_b takes everything
-    val s = HyperCube.optimalShares(Seq("a", "b", "c"),
-      Seq((Set("a", "b"), 1000000L), (Set("b", "c"), 10L)), maxCells = 16)
+    val s = HyperCube.optimalSharesStat(Seq("a", "b", "c"),
+      Seq(HyperCube.RelStat(Set("a", "b"), 1000000L, 1000000L),
+        HyperCube.RelStat(Set("b", "c"), 10L, 10L)), maxCells = 16).shares
     assert(s.p.toSeq === Seq(1, 16, 1))
   }
 
@@ -447,19 +449,20 @@ class WcojJoinSpec extends SparkSpec {
     val out = WcojJoin.join(spark,
       Seq((ab, Seq("a", "b")), (bc, Seq("b", "c")), (ac, Seq("a", "c"))),
       Seq("a", "b", "c"))
-    // collect THIS Dataset: its executed plan holds the exec that ran
-    val (collected, cells) = onGrid(out.collect())
+    val (collected, trace) =
+      withConf(graft.Small.Key -> "0")(QueryTrace.run(spark)(out.collect()))
     val viaWcoj = collected.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaWcoj === viaDf)
     assert(viaWcoj.nonEmpty)
 
-    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val shares = Aqe.collect(out.queryExecution.executedPlan) {
-      case e: LeapFrogJoinExec => e.chosen
-    }.flatten.head.shares
-    def p(attr: String) = shares.p(shares.attrs.indexOf(attr))
-    assert(shares.numCells === cells && cells > 1)
-    assert(p("a") < p("b") && p("a") < p("c"), shares.p.mkString(","))
+    // the shares the exec chose, as its trace records them: "a=1,b=2,c=2"
+    val shares = trace("wcoj.shares")
+    val p = shares.split(",").map { kv =>
+      val Array(a, n) = kv.split("="); a -> n.toInt
+    }.toMap
+    assert(p.keySet === Set("a", "b", "c"))
+    assert(p.values.product === trace("wcoj.cells").toInt && p.values.product > 1)
+    assert(p("a") < p("b") && p("a") < p("c"), shares)
   }
 
   test("hypercube triangle equals DataFrame 3-way join (no broadcast side)") {
