@@ -1,11 +1,13 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming surface over the `events` table shape
@@ -49,6 +51,12 @@ object EventStreams {
     * single-store query whose state traffic already commits in parallel
     * across cores can get slower on fewer stores (q100 measured 35%
     * slower at 8); measure per query.
+    *
+    * Spark reports a stream's events only to the listeners of the session
+    * that started it, so the clone takes on the calling session's
+    * streaming listeners: they see a pinned stream's progress as they see
+    * any other. The clone's listener bus is released once it has passed on
+    * the query's terminated event, which follows all its progress events.
     */
   def drain(stream: DataFrame, prefix: String, statePartitions: Option[Int] = None,
       checkpoint: Option[String] = None,
@@ -56,18 +64,32 @@ object EventStreams {
       readBack: DataFrame => DataFrame): DataFrame = {
     val df = statePartitions.fold(stream)(n =>
       GraftSqlBridge.onClone(stream, "spark.sql.shuffle.partitions" -> n.toString))
+    val pinned = df.sparkSession ne stream.sparkSession
+    val ended = new CountDownLatch(1)
+    if (pinned) {
+      stream.sparkSession.streams.listListeners().foreach(df.sparkSession.streams.addListener)
+      df.sparkSession.streams.addListener(new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+          ended.countDown()
+      })
+    }
     val name = s"${prefix}_${sinkCounter.incrementAndGet()}"
     try {
       val w = df.writeStream.outputMode("append").format("memory").queryName(name)
       val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
-      try run(q) finally q.stop()
+      try run(q) finally {
+        q.stop()
+        if (pinned) ended.await(30, TimeUnit.SECONDS)
+      }
       // the sink's view lives on the session that started the query; the
       // rows are read back on the caller's
       readBack(GraftSqlBridge.ofRows(stream.sparkSession,
         GraftSqlBridge.logicalPlan(df.sparkSession.table(name)))).localCheckpoint(true)
     } finally {
       df.sparkSession.catalog.dropTempView(name)
-      if (statePartitions.isDefined) GraftSqlBridge.releaseStreamListener(df.sparkSession)
+      if (pinned) GraftSqlBridge.releaseStreamListener(df.sparkSession)
     }
   }
 

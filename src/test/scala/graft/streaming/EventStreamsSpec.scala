@@ -541,6 +541,33 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
+  test("a pinned drain reports its progress to the calling session's listeners") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // what a tracing harness records: each batch's addBatch duration
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = seen.add("started")
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.durationMs.containsKey("addBatch")) seen.add("batch")
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = seen.add("terminated")
+    }
+    spark.streams.addListener(listener)
+    try {
+      val in = MemoryStream[Int](org.apache.spark.sql.Encoders.scalaInt, spark.sqlContext)
+      in.addData(3, 1, 2)
+      val out = EventStreams.drain(in.toDF(), "stream_heard", statePartitions = Some(2))(
+        _.orderBy("value"))
+      assert(out.as[Int].collect().toSeq === Seq(1, 2, 3))
+      // drain returns after the clone's bus passed the last event on, so
+      // nothing is still in flight
+      val events = seen.toArray.toSeq
+      assert(events.head === "started" && events.last === "terminated")
+      assert(events.count(_ == "batch") >= 1)
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("an unpinned drain records the session's shuffle partitions") {
     withConf("spark.sql.shuffle.partitions" -> "6") {
       // q100's shape: curation fingerprints of a documents file stream
